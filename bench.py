@@ -197,13 +197,10 @@ def main() -> int:
                           if k not in ("queries_warm", "warm_total_sec")}))
     # the sidecar is the round-over-round regression BASELINE
     # (tools/cold_report.py): only a recorded-semantics run may refresh
-    # it — a no-warmup run has no cold column, a keepcache A/B cell
-    # has cache-riding (dishonest) cold values, and a fan-out-off A/B
-    # cell (SPARK_GRAFT_FANOUT=0) times plans the recorded bench never
-    # runs; any of them would clobber the baseline and turn the >1.5x
-    # gate vacuous
-    fanout_off = os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0"
-    if cold and not keepcache and not fanout_off:
+    # it — a no-warmup run has no cold column and a keepcache A/B cell
+    # has cache-riding (dishonest) cold values; either would clobber
+    # the baseline and turn the >1.5x gate vacuous
+    if cold and not keepcache:
         try:
             with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                    "bench_cold.json"), "w") as f:

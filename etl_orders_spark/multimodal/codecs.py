@@ -1209,6 +1209,18 @@ def resize_nearest(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return np.ascontiguousarray(arr[ys][:, xs])
 
 
+def dhash64(gray: np.ndarray) -> tuple[int, int]:
+    """Difference hash of an integer gray/luma plane: resize to 9x8,
+    compare each pixel to its right neighbor, and return the 64 bits
+    (bit i = y*8 + x) as two non-negative 32-bit halves (rows 0-3,
+    rows 4-7)."""
+    g = resize_nearest(gray, 9, 8)
+    bits = (g[:, 1:] > g[:, :-1]).flatten()
+    hi = sum(int(b) << i for i, b in enumerate(bits[:32]))
+    lo = sum(int(b) << i for i, b in enumerate(bits[32:]))
+    return hi, lo
+
+
 try:  # pragma: no cover — exercised implicitly by every worker-side decode
     from pyspark import cloudpickle as _cloudpickle
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_orders_spark.multimodal.codecs import decode_image as _decode_image
+from etl_orders_spark.multimodal.codecs import dhash64 as _dhash64
 from etl_orders_spark.multimodal.codecs import resize_nearest as _resize_nearest
 from etl_orders_spark.multimodal.codecs import sniff_format as _sniff_format
 
@@ -270,7 +271,6 @@ def dhash_images(media: DataFrame) -> DataFrame:
     every bit from the generator's pixel law."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
         import pandas as pd
 
         for pdf in it:
@@ -278,10 +278,7 @@ def dhash_images(media: DataFrame) -> DataFrame:
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 arr = _decode_image(bytes(content))
                 gray = arr.astype("int64").sum(axis=2) // 3
-                g = _resize_nearest(gray, 9, 8)
-                bits = (g[:, 1:] > g[:, :-1]).flatten()  # i = y*8 + x
-                hi = sum(int(b) << i for i, b in enumerate(bits[:32]))
-                lo = sum(int(b) << i for i, b in enumerate(bits[32:]))
+                hi, lo = _dhash64(gray)
                 rows.append((mid, hi, lo))
             yield pd.DataFrame(rows, columns=["media_id", "dhash_hi", "dhash_lo"])
 
@@ -306,7 +303,6 @@ def dhash_pixel_stats(media: DataFrame) -> DataFrame:
     gate mirrors into SQL with no FP."""
 
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
         import pandas as pd
 
         for pdf in it:
@@ -314,10 +310,7 @@ def dhash_pixel_stats(media: DataFrame) -> DataFrame:
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 arr = _decode_image(bytes(content))
                 gray = arr.astype("int64").sum(axis=2) // 3
-                g = _resize_nearest(gray, 9, 8)
-                bits = (g[:, 1:] > g[:, :-1]).flatten()  # i = y*8 + x
-                hi = sum(int(b) << i for i, b in enumerate(bits[:32]))
-                lo = sum(int(b) << i for i, b in enumerate(bits[32:]))
+                hi, lo = _dhash64(gray)
                 rows.append(
                     (mid, hi, lo, int(gray.size), int(gray.sum()),
                      int((gray * gray).sum()))
@@ -364,10 +357,7 @@ def video_frame_dhash_stats(
                 nf = frames.shape[0]
                 for idx in list(range(0, nf, every_n))[:max_frames]:
                     luma = frames[idx].astype("int64")
-                    g = _resize_nearest(luma, 9, 8)
-                    bits = (g[:, 1:] > g[:, :-1]).flatten()  # i = y*8 + x
-                    hi = sum(int(b) << i for i, b in enumerate(bits[:32]))
-                    lo = sum(int(b) << i for i, b in enumerate(bits[32:]))
+                    hi, lo = _dhash64(luma)
                     rows.append(
                         (mid, idx, hi, lo, int(luma.size), int(luma.sum()),
                          int((luma * luma).sum()))
@@ -405,10 +395,7 @@ def video_frame_dhash(
                 frames, _ = _decode_y4m(bytes(content))
                 nf = frames.shape[0]
                 for idx in list(range(0, nf, every_n))[:max_frames]:
-                    g = _resize_nearest(frames[idx].astype("int64"), 9, 8)
-                    bits = (g[:, 1:] > g[:, :-1]).flatten()  # i = y*8 + x
-                    hi = sum(int(b) << i for i, b in enumerate(bits[:32]))
-                    lo = sum(int(b) << i for i, b in enumerate(bits[32:]))
+                    hi, lo = _dhash64(frames[idx].astype("int64"))
                     rows.append((mid, idx, hi, lo))
             yield pd.DataFrame(
                 rows, columns=["media_id", "frame_idx", "dhash_hi", "dhash_lo"]

@@ -6,12 +6,14 @@ kind + format + dimensions without ever touching content bytes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # top-level (not lazy inside jpeg_media_bytes): that helper runs on
-# WORKERS via the gen_jpeg_media batches body, where the package is
+# WORKERS via the _jpeg_rows batches body, where the package is
 # not importable — the module-level binding lets cloudpickle's
 # by-value registration carry the jpeg module along with this one
 from etl_orders_spark.multimodal.jpeg import encode_jpeg as _encode_jpeg
@@ -165,33 +167,17 @@ def gen_pixel_media(spark: SparkSession, n: int = 120) -> DataFrame:
 WAV_RATE = 16000  # fixed sample rate shared with the SQL oracle
 
 
-def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
-    """Deterministic REAL 16-bit PCM WAV rows: every sample is a
-    closed-form function of (media_id, t) —
-
-        n_samples(id) = 800 + (id % 8) * 100   (mono, 16 kHz)
-        s(id, t) = (((id*1009 + t*2399) * 2654435761 mod 2^32)
-                     >> 16) - 32768             (full int16 range)
-
-    — so the DuckDB oracle re-derives every sample with
-    generate_series, and a value-hash match on the audio features
-    certifies the RIFF chunk walk, PCM decode, and the integer
-    feature arithmetic end to end."""
+def _wav_rows(
+    spark: SparkSession, n: int, content_for: Callable[[int], tuple[bytes, int]]
+) -> DataFrame:
+    """Audio rows for ids [0, n) from ``content_for(mid) -> (wav
+    bytes, n_samples)`` at WAV_RATE."""
     from collections.abc import Iterator
 
     import pandas as pd
 
-    from etl_orders_spark.multimodal.codecs import encode_wav
-
     def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
         import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int]:
-            ns = 800 + (mid % 8) * 100
-            t = np.arange(ns, dtype=np.int64)
-            s = ((((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 16) - 32768
-            return encode_wav(s.astype(np.int16), WAV_RATE), ns
 
         for pdf in it:
             rows = []
@@ -208,6 +194,31 @@ def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
             yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
 
     return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+
+
+def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
+    """Deterministic REAL 16-bit PCM WAV rows: every sample is a
+    closed-form function of (media_id, t) —
+
+        n_samples(id) = 800 + (id % 8) * 100   (mono, 16 kHz)
+        s(id, t) = (((id*1009 + t*2399) * 2654435761 mod 2^32)
+                     >> 16) - 32768             (full int16 range)
+
+    — so the DuckDB oracle re-derives every sample with
+    generate_series, and a value-hash match on the audio features
+    certifies the RIFF chunk walk, PCM decode, and the integer
+    feature arithmetic end to end."""
+    from etl_orders_spark.multimodal.codecs import encode_wav
+
+    def content_for(mid: int) -> tuple[bytes, int]:
+        import numpy as np
+
+        ns = 800 + (mid % 8) * 100
+        t = np.arange(ns, dtype=np.int64)
+        s = ((((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 16) - 32768
+        return encode_wav(s.astype(np.int16), WAV_RATE), ns
+
+    return _wav_rows(spark, n, content_for)
 
 
 Y4M_W, Y4M_H, Y4M_FPS = 16, 12, 10  # fixed geometry shared with the SQL oracle
@@ -467,6 +478,38 @@ def gen_flat_media(spark: SparkSession, n: int = 10, start: int = 5000) -> DataF
     return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
 
 
+def _jpeg_rows(
+    spark: SparkSession,
+    start: int,
+    n: int,
+    content_for: Callable[[int], tuple[bytes, int, int]],
+) -> DataFrame:
+    """Image rows for ids [start, start + n) from ``content_for(mid) ->
+    (jpeg bytes, width, height)``."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = []
+            for mid in pdf["id"]:
+                content, w, h = content_for(int(mid))
+                meta = {
+                    "format": "jpeg",
+                    "width": w,
+                    "height": h,
+                    "sample_rate": None,
+                    "duration_ms": None,
+                }
+                rows.append((int(mid), "image", content, meta))
+            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
+
+    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+
+
 def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
     """Deterministic REAL baseline-JPEG rows with a closed-form pixel
     law a LOSSY codec can still satisfy exactly: all-ones quantization
@@ -495,30 +538,7 @@ def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
     the color convert bit for bit (hand-built vectors in
     tests/test_jpeg.py additionally pin the decoder independent of
     the encoder)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        content_for = jpeg_media_bytes
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "jpeg",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _jpeg_rows(spark, start, n, jpeg_media_bytes)
 
 
 def jpeg_progressive_media_bytes(mid: int) -> tuple[bytes, int, int]:
@@ -561,30 +581,7 @@ def gen_jpeg_progressive_media(
     rasters, and in-scan restart markers (shape 3). Hand-built vectors
     in tests/test_jpeg_progressive.py pin the decoder independently of
     our encoder."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        content_for = jpeg_progressive_media_bytes
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "jpeg",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _jpeg_rows(spark, start, n, jpeg_progressive_media_bytes)
 
 
 def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
@@ -723,37 +720,17 @@ def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
     arithmetically (codecs.mulaw_decode docstring). A value-hash match
     on the audio features therefore certifies the RIFF tag-7 chunk
     walk AND the mu-law expansion branch bit for bit."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from etl_orders_spark.multimodal.codecs import encode_wav_mulaw
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def content_for(mid: int) -> tuple[bytes, int]:
         import numpy as np
-        import pandas as pd
 
-        def content_for(mid: int) -> tuple[bytes, int]:
-            ns = 800 + (mid % 8) * 100
-            t = np.arange(ns, dtype=np.int64)
-            b = (((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 24
-            return encode_wav_mulaw(b.astype(np.uint8), WAV_RATE), ns
+        ns = 800 + (mid % 8) * 100
+        t = np.arange(ns, dtype=np.int64)
+        b = (((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 24
+        return encode_wav_mulaw(b.astype(np.uint8), WAV_RATE), ns
 
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, ns = content_for(int(mid))
-                meta = {
-                    "format": "wav",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": WAV_RATE,
-                    "duration_ms": ns * 1000 // WAV_RATE,
-                }
-                rows.append((int(mid), "audio", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _wav_rows(spark, n, content_for)
 
 
 VNOISE_FRAMES = 6  # frames per clip, shared with the SQL oracle

@@ -51,6 +51,10 @@ def const_rows(
     literals — same rows, same types, same semantics as the
     createDataFrame form. Constant-size tables only (every row is an
     expression in the plan)."""
+    if not rows:
+        # F.array() of no structs types as array<null>; the _r.<name>
+        # selects would then fail later with an opaque analysis error
+        raise ValueError("const_rows: rows is empty; pass at least one row")
     # the when(id >= 0, ...) wrapper keeps each field NULLABLE,
     # matching the createDataFrame schema this replaces (bare literals
     # would flip nullability and change the declared output schema of
@@ -165,7 +169,11 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
     return out
 
 
-def fan_out_narrow(df: DataFrame, key: str, max_bytes: int = 1 << 30) -> DataFrame:
+# fan_out_narrow's scan-size gate: inputs above this stay untouched
+_FAN_OUT_MAX_BYTES = 1 << 30
+
+
+def fan_out_narrow(df: DataFrame, key: str) -> DataFrame:
     """Redistribute a NARROW file-scan input across the session's full
     parallelism so CPU-heavy per-row chains above it use every core.
 
@@ -190,16 +198,9 @@ def fan_out_narrow(df: DataFrame, key: str, max_bytes: int = 1 << 30) -> DataFra
     gates keep it honest: the input must already be NARROW (fewer
     partitions than half the session parallelism — a real corpus
     scans as thousands of splits), and its total scan bytes must be
-    known and bounded (``max_bytes``, default 1 GiB). When either
+    known and bounded (``_FAN_OUT_MAX_BYTES``, 1 GiB). When either
     gate fails the input is returned untouched, making this a no-op
     exactly where the cluster's natural parallelism already exists."""
-    import os as _os
-
-    # measurement/ops kill switch (SCALE.md round-8 warm A/B): lets a
-    # bench cell or an operator compare fan-out-on vs -off under
-    # otherwise identical conditions without a code edit
-    if _os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
@@ -222,6 +223,6 @@ def fan_out_narrow(df: DataFrame, key: str, max_bytes: int = 1 << 30) -> DataFra
             total += os.path.getsize(path)
     except Exception:  # noqa: BLE001 — non-local / unknown source: do not widen blind
         return df
-    if not files or total > max_bytes:
+    if not files or total > _FAN_OUT_MAX_BYTES:
         return df
     return cache_stage(df.repartition(target), f"fan_out_narrow.{key}")

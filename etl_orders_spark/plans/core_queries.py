@@ -2339,6 +2339,33 @@ def incremental_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD2 history of customer balances in integer cents: the seed
+    dimension valid from 2024-01-01, +1000 for custkey % 7 == 0 applied
+    2024-02-01, then +500 for custkey % 5 == 0 applied 2024-03-01."""
+    from datetime import datetime
+
+    from etl_orders_spark.operators.merge import scd2_apply
+
+    base = T(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("bal_cents"),
+    )
+    dim = (
+        base.withColumn("valid_from", F.lit("2024-01-01 00:00:00").cast("timestamp"))
+        .withColumn("valid_to", F.lit(None).cast("timestamp"))
+        .withColumn("is_current", F.lit(True))
+    )
+    upd1 = base.filter(F.col("c_custkey") % 7 == 0).withColumn(
+        "bal_cents", F.col("bal_cents") + 1000
+    )
+    upd2 = base.filter(F.col("c_custkey") % 5 == 0).withColumn(
+        "bal_cents", F.col("bal_cents") + 500
+    )
+    hist = scd2_apply(dim, upd1, ["c_custkey"], datetime(2024, 2, 1))
+    return scd2_apply(hist, upd2, ["c_custkey"], datetime(2024, 3, 1))
+
+
 @register(
     "scd2_point_in_time",
     """
@@ -2370,25 +2397,9 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild the dimension from source inside the query."""
     from datetime import datetime
 
-    from etl_orders_spark.operators.merge import scd2_apply, snapshot_as_of
+    from etl_orders_spark.operators.merge import snapshot_as_of
 
-    base = T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("bal_cents"),
-    )
-    dim = (
-        base.withColumn("valid_from", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-        .withColumn("valid_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
-    )
-    upd1 = base.filter(F.col("c_custkey") % 7 == 0).withColumn(
-        "bal_cents", F.col("bal_cents") + 1000
-    )
-    upd2 = base.filter(F.col("c_custkey") % 5 == 0).withColumn(
-        "bal_cents", F.col("bal_cents") + 500
-    )
-    hist = scd2_apply(dim, upd1, ["c_custkey"], datetime(2024, 2, 1))
-    hist = scd2_apply(hist, upd2, ["c_custkey"], datetime(2024, 3, 1))
+    hist = _scd2_customer_history(spark, sf_dir)
     return snapshot_as_of(hist, datetime(2024, 2, 15)).select(
         "c_custkey",
         "bal_cents",
@@ -2441,27 +2452,7 @@ def scd2_enrich_orders_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     scd2_point_in_time: a real deployment reads the persisted history
     table, it doesn't rebuild the dimension from source inside the
     query."""
-    from datetime import datetime
-
-    from etl_orders_spark.operators.merge import scd2_apply
-
-    base = T(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long").alias("bal_cents"),
-    )
-    dim = (
-        base.withColumn("valid_from", F.lit("2024-01-01 00:00:00").cast("timestamp"))
-        .withColumn("valid_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
-    )
-    upd1 = base.filter(F.col("c_custkey") % 7 == 0).withColumn(
-        "bal_cents", F.col("bal_cents") + 1000
-    )
-    upd2 = base.filter(F.col("c_custkey") % 5 == 0).withColumn(
-        "bal_cents", F.col("bal_cents") + 500
-    )
-    hist = scd2_apply(dim, upd1, ["c_custkey"], datetime(2024, 2, 1))
-    hist = scd2_apply(hist, upd2, ["c_custkey"], datetime(2024, 3, 1))
+    hist = _scd2_customer_history(spark, sf_dir)
 
     facts = T(spark, sf_dir, "orders").select(
         "o_orderkey",

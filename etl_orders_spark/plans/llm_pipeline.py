@@ -14,7 +14,7 @@ gated end-to-end, not just per-stage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_orders_spark.functions.text import (
@@ -325,6 +325,15 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TEMP_ALPHA_MILLI = 300  # alpha = 0.3, the mT5/XLM-R default
 
 
+def _temp_scaled_weight() -> Column:
+    """A source's temperature-scaled weight in integer micro-units:
+    floor(n_chars ** alpha * 1e6)."""
+    return F.floor(
+        F.pow(F.col("n_chars").cast("double"), F.lit(_TEMP_ALPHA_MILLI / 1000.0))
+        * F.lit(1000000.0)
+    ).cast("long")
+
+
 @register(
     "temperature_mixture_weights",
     f"""
@@ -367,13 +376,8 @@ def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars"),
     )
-    w = s.withColumn(
-        "w_scaled",
-        F.floor(
-            F.pow(F.col("n_chars").cast("double"), F.lit(_TEMP_ALPHA_MILLI / 1000.0))
-            * F.lit(1000000.0)
-        ).cast("long"),
-    ).localCheckpoint(eager=True)  # source grain; feeds the total AND the shares
+    # source grain; feeds the total AND the shares
+    w = s.withColumn("w_scaled", _temp_scaled_weight()).localCheckpoint(eager=True)
     t = w.agg(
         F.sum("w_scaled").cast("long").alias("tw"),
         F.sum("n_chars").cast("long").alias("tc"),
@@ -442,13 +446,8 @@ def temperature_resample_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = T(spark, sf_dir, "documents").groupBy("source").agg(
         F.sum("n_chars").cast("long").alias("n_chars")
     )
-    w = s.withColumn(
-        "w_scaled",
-        F.floor(
-            F.pow(F.col("n_chars").cast("double"), F.lit(_TEMP_ALPHA_MILLI / 1000.0))
-            * F.lit(1000000.0)
-        ).cast("long"),
-    ).localCheckpoint(eager=True)  # source grain; feeds totals AND the ratio rows
+    # source grain; feeds totals AND the ratio rows
+    w = s.withColumn("w_scaled", _temp_scaled_weight()).localCheckpoint(eager=True)
     t = w.agg(
         F.sum("w_scaled").cast("long").alias("tw"),
         F.sum("n_chars").cast("long").alias("tc"),

@@ -168,9 +168,9 @@ def _jpeg_law_sql(start: int, n: int) -> str:
       )"""
 
 
-@register(
-    "media_jpeg_pixel_stats",
-    f"""
+# per-image pixel sums of the JPEG fixture law (media_jpeg_pixel_stats
+# and the binaryFile ingest of the same bytes)
+_JPEG_STATS_ORACLE = f"""
     WITH {_jpeg_law_sql(_JPEG_ID_START, _N_JPEG)}
     SELECT media_id, 'jpeg' AS fmt,
            CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
@@ -179,7 +179,12 @@ def _jpeg_law_sql(start: int, n: int) -> str:
            CAST(sb AS BIGINT) AS sum_b,
            CAST((sr + sg + sb) * 1000 // (3 * n) AS BIGINT) AS mean_rgb_milli
     FROM jpeg_agg
-    """,
+    """
+
+
+@register(
+    "media_jpeg_pixel_stats",
+    _JPEG_STATS_ORACLE,
     tags=("media", "pixel", "jpeg", "pandas-udf"),
     bench=True,
 )
@@ -478,16 +483,7 @@ def _ensure_jpeg_files() -> str:
 
 @register(
     "media_binaryfile_ingest",
-    f"""
-    WITH {_jpeg_law_sql(_JPEG_ID_START, _N_JPEG)}
-    SELECT media_id, 'jpeg' AS fmt,
-           CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-           CAST(n AS BIGINT) AS n_pixels,
-           CAST(sr AS BIGINT) AS sum_r, CAST(sg AS BIGINT) AS sum_g,
-           CAST(sb AS BIGINT) AS sum_b,
-           CAST((sr + sg + sb) * 1000 // (3 * n) AS BIGINT) AS mean_rgb_milli
-    FROM jpeg_agg
-    """,
+    _JPEG_STATS_ORACLE,
     tags=("source", "media", "pixel", "jpeg", "pandas-udf"),
 )
 def media_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,19 +634,11 @@ def media_thumbnail_pixel_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _N_WAV = 100
-
-
-@register(
-    "media_wav_features",
-    f"""
-    WITH ids AS (SELECT UNNEST(generate_series(0, {_N_WAV - 1})) AS media_id),
-    dims AS (SELECT media_id, 800 + (media_id % 8) * 100 AS ns FROM ids),
-    s AS (
-      SELECT d.media_id, t.i AS t,
-             ((d.media_id*1009 + t.i*2399) * 2654435761 % 4294967296) // 65536 - 32768 AS v
-      FROM dims d, UNNEST(generate_series(0, d.ns - 1)) AS t(i)
-    ),
-    lagged AS (
+# clip ids and sample counts of the WAV fixture law, and the feature
+# select over its decoded samples s(media_id, t, v)
+_WAV_DIMS_SQL = f"""WITH ids AS (SELECT UNNEST(generate_series(0, {_N_WAV - 1})) AS media_id),
+    dims AS (SELECT media_id, 800 + (media_id % 8) * 100 AS ns FROM ids),"""
+_WAV_FEATURES_SQL = """    lagged AS (
       SELECT media_id, v,
              LAG(v) OVER (PARTITION BY media_id ORDER BY t) AS pv
       FROM s
@@ -664,7 +652,19 @@ _N_WAV = 100
                          THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
     FROM lagged
     GROUP BY media_id
-    """,
+    """
+
+
+@register(
+    "media_wav_features",
+    f"""
+    {_WAV_DIMS_SQL}
+    s AS (
+      SELECT d.media_id, t.i AS t,
+             ((d.media_id*1009 + t.i*2399) * 2654435761 % 4294967296) // 65536 - 32768 AS v
+      FROM dims d, UNNEST(generate_series(0, d.ns - 1)) AS t(i)
+    ),
+{_WAV_FEATURES_SQL}""",
     tags=("media", "audio", "pandas-udf"),
 )
 def media_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -687,8 +687,7 @@ def media_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "media_mulaw_wav_features",
     f"""
-    WITH ids AS (SELECT UNNEST(generate_series(0, {_N_WAV - 1})) AS media_id),
-    dims AS (SELECT media_id, 800 + (media_id % 8) * 100 AS ns FROM ids),
+    {_WAV_DIMS_SQL}
     codes AS (
       SELECT d.media_id, t.i AS t,
              ((d.media_id*1009 + t.i*2399) * 2654435761 % 4294967296) // 16777216 AS b
@@ -707,21 +706,7 @@ def media_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
              END AS v
       FROM codes
     ),
-    lagged AS (
-      SELECT media_id, v,
-             LAG(v) OVER (PARTITION BY media_id ORDER BY t) AS pv
-      FROM s
-    )
-    SELECT media_id,
-           CAST(16000 AS BIGINT) AS sample_rate,
-           CAST(COUNT(*) AS BIGINT) AS n_samples,
-           CAST(SUM(ABS(v)) AS BIGINT) AS sum_abs,
-           CAST(MAX(ABS(v)) AS BIGINT) AS peak,
-           CAST(SUM(CASE WHEN pv IS NOT NULL AND (v < 0) <> (pv < 0)
-                         THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
-    FROM lagged
-    GROUP BY media_id
-    """,
+{_WAV_FEATURES_SQL}""",
     tags=("media", "audio", "pandas-udf"),
 )
 def media_mulaw_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1154,6 +1139,64 @@ def media_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# 9x8 resized luma grid px of every sampled frame fr(media_id, b,
+# pert, f), straight from the generator law, and its dHash bits
+_VND_DHASH_BITS_SQL = f"""    px AS (
+      SELECT media_id, f, dy.i AS y, dx.i AS x,
+             CASE WHEN (dx.i * {_VND_W}) // 9 = 0 AND (dy.i * {_VND_H}) // 8 = 0
+                       AND pert = 1
+                  THEN (((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
+                          + ((dy.i*{_VND_H})//8)*101)
+                         * 2654435761 % 4294967296) // 16777216 + 128) % 256
+                  ELSE ((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
+                         + ((dy.i*{_VND_H})//8)*101)
+                        * 2654435761 % 4294967296) // 16777216
+             END AS v
+      FROM fr,
+           UNNEST(generate_series(0, 8)) AS dx(i),
+           UNNEST(generate_series(0, 7)) AS dy(i)
+    ),
+    bits AS (
+      SELECT a.media_id, a.f, (a.y * 8 + a.x) AS i,
+             CASE WHEN r.v > a.v THEN 1 ELSE 0 END AS bit
+      FROM px a
+      JOIN px r ON r.media_id = a.media_id AND r.f = a.f
+                AND r.y = a.y AND r.x = a.x + 1
+      WHERE a.x < 8
+    ),"""
+
+
+def _frame_band_pairs(h: DataFrame) -> DataFrame:
+    """Frame-grain pigeonhole candidates of per-frame dHashes ``h``
+    (media_id, frame_idx, dhash_hi, dhash_lo): clip pairs sharing a
+    16-bit band slice on the same sampled frame, joined to both sides'
+    hashes as (id_b, id_a, f, hi_a, lo_a, hi_b, lo_b)."""
+    slices = F.array(
+        F.struct(F.lit(0).alias("bidx"), F.expr("dhash_hi & 65535").alias("s")),
+        F.struct(F.lit(1).alias("bidx"), F.expr("shiftright(dhash_hi, 16) & 65535").alias("s")),
+        F.struct(F.lit(2).alias("bidx"), F.expr("dhash_lo & 65535").alias("s")),
+        F.struct(F.lit(3).alias("bidx"), F.expr("shiftright(dhash_lo, 16) & 65535").alias("s")),
+    )
+    bands = h.select(
+        "media_id", "frame_idx", F.explode(slices).alias("band")
+    ).select("media_id", "frame_idx", "band.bidx", "band.s")
+    cand = (
+        bands.toDF("id_a", "f", "bidx", "s")
+        .join(
+            bands.toDF("id_b", "f2", "bidx2", "s2"),
+            (F.col("f") == F.col("f2"))
+            & (F.col("bidx") == F.col("bidx2"))
+            & (F.col("s") == F.col("s2"))
+            & (F.col("id_a") < F.col("id_b")),
+        )
+        .select("id_a", "id_b", "f")
+        .distinct()
+    )
+    ha = h.toDF("id_a", "f", "hi_a", "lo_a")
+    hb = h.toDF("id_b", "f", "hi_b", "lo_b")
+    return cand.join(ha, ["id_a", "f"]).join(hb, ["id_b", "f"])
+
+
 @register(
     "media_video_near_dup",
     f"""
@@ -1177,29 +1220,7 @@ def media_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- map from the fixture dims); clone perturbation where the map
     -- lands on source pixel (0, 0) — every constant interpolated from
     -- schemas.py so a knob change can never silently drift the pair
-    px AS (
-      SELECT media_id, f, dy.i AS y, dx.i AS x,
-             CASE WHEN (dx.i * {_VND_W}) // 9 = 0 AND (dy.i * {_VND_H}) // 8 = 0
-                       AND pert = 1
-                  THEN (((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
-                          + ((dy.i*{_VND_H})//8)*101)
-                         * 2654435761 % 4294967296) // 16777216 + 128) % 256
-                  ELSE ((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
-                         + ((dy.i*{_VND_H})//8)*101)
-                        * 2654435761 % 4294967296) // 16777216
-             END AS v
-      FROM fr,
-           UNNEST(generate_series(0, 8)) AS dx(i),
-           UNNEST(generate_series(0, 7)) AS dy(i)
-    ),
-    bits AS (
-      SELECT a.media_id, a.f, (a.y * 8 + a.x) AS i,
-             CASE WHEN r.v > a.v THEN 1 ELSE 0 END AS bit
-      FROM px a
-      JOIN px r ON r.media_id = a.media_id AND r.f = a.f
-                AND r.y = a.y AND r.x = a.x + 1
-      WHERE a.x < 8
-    ),
+{_VND_DHASH_BITS_SQL}
     h AS (
       SELECT media_id, f,
              SUM(CASE WHEN i < 32 THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END) AS hi,
@@ -1253,33 +1274,9 @@ def media_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "media_video_near_dup.h",
     )
-    slices = F.array(
-        F.struct(F.lit(0).alias("bidx"), F.expr("dhash_hi & 65535").alias("s")),
-        F.struct(F.lit(1).alias("bidx"), F.expr("shiftright(dhash_hi, 16) & 65535").alias("s")),
-        F.struct(F.lit(2).alias("bidx"), F.expr("dhash_lo & 65535").alias("s")),
-        F.struct(F.lit(3).alias("bidx"), F.expr("shiftright(dhash_lo, 16) & 65535").alias("s")),
-    )
-    bands = h.select(
-        "media_id", "frame_idx", F.explode(slices).alias("band")
-    ).select("media_id", "frame_idx", "band.bidx", "band.s")
-    cand = (
-        bands.toDF("id_a", "f", "bidx", "s")
-        .join(
-            bands.toDF("id_b", "f2", "bidx2", "s2"),
-            (F.col("f") == F.col("f2"))
-            & (F.col("bidx") == F.col("bidx2"))
-            & (F.col("s") == F.col("s2"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", "f")
-        .distinct()
-    )
-    ha = h.toDF("id_a", "f", "hi_a", "lo_a")
-    hb = h.toDF("id_b", "f", "hi_b", "lo_b")
     hamming = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)").cast("long")
     return (
-        cand.join(ha, ["id_a", "f"])
-        .join(hb, ["id_b", "f"])
+        _frame_band_pairs(h)
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= _DHASH_HAMMING)
         .groupBy("id_a", "id_b")
@@ -1465,29 +1462,7 @@ _VPREP_FLAT_START, _VPREP_N_FLAT = 6100, 10
     ),
     q AS (SELECT * FROM clip WHERE var_min > 0),
     -- 9x8 dHash bits per sampled frame (near-dup oracle's resize law)
-    px AS (
-      SELECT media_id, f, dy.i AS y, dx.i AS x,
-             CASE WHEN (dx.i * {_VND_W}) // 9 = 0 AND (dy.i * {_VND_H}) // 8 = 0
-                       AND pert = 1
-                  THEN (((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
-                          + ((dy.i*{_VND_H})//8)*101)
-                         * 2654435761 % 4294967296) // 16777216 + 128) % 256
-                  ELSE ((b*73 + f*29 + ((dx.i*{_VND_W})//9)*37
-                         + ((dy.i*{_VND_H})//8)*101)
-                        * 2654435761 % 4294967296) // 16777216
-             END AS v
-      FROM fr,
-           UNNEST(generate_series(0, 8)) AS dx(i),
-           UNNEST(generate_series(0, 7)) AS dy(i)
-    ),
-    bits AS (
-      SELECT a.media_id, a.f, (a.y * 8 + a.x) AS i,
-             CASE WHEN r.v > a.v THEN 1 ELSE 0 END AS bit
-      FROM px a
-      JOIN px r ON r.media_id = a.media_id AND r.f = a.f
-                AND r.y = a.y AND r.x = a.x + 1
-      WHERE a.x < 8
-    ),
+{_VND_DHASH_BITS_SQL}
     h AS (
       SELECT media_id, f,
              SUM(CASE WHEN i < 32 THEN bit * (CAST(1 AS BIGINT) << i) ELSE 0 END) AS hi,
@@ -1577,33 +1552,9 @@ def video_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     qf = st.join(q.select("media_id"), "media_id").select(
         "media_id", "frame_idx", "dhash_hi", "dhash_lo"
     )
-    slices = F.array(
-        F.struct(F.lit(0).alias("bidx"), F.expr("dhash_hi & 65535").alias("s")),
-        F.struct(F.lit(1).alias("bidx"), F.expr("shiftright(dhash_hi, 16) & 65535").alias("s")),
-        F.struct(F.lit(2).alias("bidx"), F.expr("dhash_lo & 65535").alias("s")),
-        F.struct(F.lit(3).alias("bidx"), F.expr("shiftright(dhash_lo, 16) & 65535").alias("s")),
-    )
-    bands = qf.select(
-        "media_id", "frame_idx", F.explode(slices).alias("band")
-    ).select("media_id", "frame_idx", "band.bidx", "band.s")
-    cand = (
-        bands.toDF("id_a", "f", "bidx", "s")
-        .join(
-            bands.toDF("id_b", "f2", "bidx2", "s2"),
-            (F.col("f") == F.col("f2"))
-            & (F.col("bidx") == F.col("bidx2"))
-            & (F.col("s") == F.col("s2"))
-            & (F.col("id_a") < F.col("id_b")),
-        )
-        .select("id_a", "id_b", "f")
-        .distinct()
-    )
-    ha = qf.toDF("id_a", "f", "hi_a", "lo_a")
-    hb = qf.toDF("id_b", "f", "hi_b", "lo_b")
     hamming = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)").cast("long")
     dropped = (
-        cand.join(ha, ["id_a", "f"])
-        .join(hb, ["id_b", "f"])
+        _frame_band_pairs(qf)
         .filter(hamming <= _DHASH_HAMMING)
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("_fm"))

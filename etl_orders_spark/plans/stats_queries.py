@@ -1912,6 +1912,23 @@ def weighted_median_price_by_priority(spark: SparkSession, sf_dir: str) -> DataF
 # --- two-sample Kolmogorov-Smirnov ------------------------------------------
 
 
+def _urgent_low_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-value grain of URGENT (group 1) vs LOW (group 2) order
+    values: (cents, d1, d2) occurrence counts per group."""
+    s = (
+        T(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
+        .select(
+            F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(2).alias("grp"),
+            _cents(F.col("o_totalprice")).alias("cents"),
+        )
+    )
+    return s.groupBy("cents").agg(
+        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("long").alias("d1"),
+        F.sum(F.when(F.col("grp") == 2, 1).otherwise(0)).cast("long").alias("d2"),
+    )
+
+
 @register(
     "ks_price_urgent_vs_low",
     """
@@ -1958,18 +1975,7 @@ def ks_price_urgent_vs_low(spark: SparkSession, sf_dir: str) -> DataFrame:
     approaches row cardinality; the binned ECDF (value histogram)
     remains the documented approximation when even the value grain
     must shrink."""
-    s = (
-        T(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(2).alias("grp"),
-            _cents(F.col("o_totalprice")).alias("cents"),
-        )
-    )
-    v = s.groupBy("cents").agg(
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("long").alias("d1"),
-        F.sum(F.when(F.col("grp") == 2, 1).otherwise(0)).cast("long").alias("d2"),
-    )
+    v = _urgent_low_value_counts(spark, sf_dir)
     c = two_pass_rank(
         v, [F.col("cents")], rank_col=None, cumsum={"c1": F.col("d1"), "c2": F.col("d2")}
     ).select("c1", "c2")
@@ -2033,18 +2039,7 @@ def mannwhitney_price_urgent_vs_low(spark: SparkSession, sf_dir: str) -> DataFra
     grain aggregate, the ordered cumsum via the two-pass
     range-partitioned rank (operators/rank.py), a constant-size final
     reduction; same binned-ECDF fallback."""
-    s = (
-        T(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select(
-            F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(2).alias("grp"),
-            _cents(F.col("o_totalprice")).alias("cents"),
-        )
-    )
-    v = s.groupBy("cents").agg(
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast("long").alias("d1"),
-        F.sum(F.when(F.col("grp") == 2, 1).otherwise(0)).cast("long").alias("d2"),
-    )
+    v = _urgent_low_value_counts(spark, sf_dir)
     c = two_pass_rank(
         v, [F.col("cents")], rank_col=None, cumsum={"cum": F.col("d1") + F.col("d2")}
     ).select("d1", "d2", "cum")

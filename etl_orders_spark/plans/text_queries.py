@@ -14,7 +14,7 @@ engine-specific ops (approximate sketches, streaming state).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_orders_spark.functions.text import (
@@ -595,34 +595,40 @@ def dedup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_N = 16
 _BANDS, _ROWS_PER_BAND = 4, 4
 _MINHASH_TAU = 0.2
+# the portable-hash MinHash signature as DuckDB list elements
+_SQL_SIG_EXPRS = ", ".join(
+    f"list_min(list_transform(shingles, s -> {_sql_hash(i, 's')}))" for i in range(_MINHASH_N)
+)
 
 
-def _minhash_oracle(table: str = "documents", tau: float | None = None) -> str:
-    tau = _MINHASH_TAU if tau is None else tau
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(shingles, s -> {_sql_hash(i, 's')}))" for i in range(_MINHASH_N)
-    )
-    band_conds = " OR ".join(
+def _sql_band_match(x: str, y: str) -> str:
+    """LSH candidate predicate: every row of at least one band agrees
+    between the signatures of aliases ``x`` and ``y``."""
+    return " OR ".join(
         "("
         + " AND ".join(
-            f"x.signature[{b * _ROWS_PER_BAND + r + 1}] = y.signature[{b * _ROWS_PER_BAND + r + 1}]"
+            f"{x}.signature[{b * _ROWS_PER_BAND + r + 1}] = {y}.signature[{b * _ROWS_PER_BAND + r + 1}]"
             for r in range(_ROWS_PER_BAND)
         )
         + ")"
         for b in range(_BANDS)
     )
+
+
+def _minhash_oracle(table: str = "documents", tau: float | None = None) -> str:
+    tau = _MINHASH_TAU if tau is None else tau
     return f"""
     WITH sh AS (
       SELECT doc_id, {_SHINGLES} AS shingles FROM {table}
     ), sig AS (
-      SELECT doc_id, shingles, [{sig_exprs}] AS signature
+      SELECT doc_id, shingles, [{_SQL_SIG_EXPRS}] AS signature
       FROM sh WHERE len(shingles) > 0
     ), cand AS (
       SELECT x.doc_id AS id_a, y.doc_id AS id_b,
              len(list_intersect(x.shingles, y.shingles)) AS n_inter,
              len(x.shingles) AS n_a, len(y.shingles) AS n_b
       FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-      WHERE {band_conds}
+      WHERE {_sql_band_match("x", "y")}
     )
     SELECT id_a, id_b,
            ROUND(CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE), 6) AS jaccard
@@ -694,19 +700,6 @@ _INC_CLONE_SRC = (1, 2, 3, 7, 11)
 
 def _incremental_dedup_oracle() -> str:
     clone_src = ", ".join(str(i) for i in _INC_CLONE_SRC)
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(shingles, s -> {_sql_hash(i, 's')}))"
-        for i in range(_MINHASH_N)
-    )
-    band_conds = " OR ".join(
-        "("
-        + " AND ".join(
-            f"i.signature[{b * _ROWS_PER_BAND + r + 1}] = h.signature[{b * _ROWS_PER_BAND + r + 1}]"
-            for r in range(_ROWS_PER_BAND)
-        )
-        + ")"
-        for b in range(_BANDS)
-    )
     return f"""
     WITH hist AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 10 != 0
@@ -720,16 +713,16 @@ def _incremental_dedup_oracle() -> str:
     ), ifp AS (
       SELECT doc_id, md5({_NORM}) AS f FROM inc
     ), hsig AS (
-      SELECT doc_id, shingles, [{sig_exprs}] AS signature
+      SELECT doc_id, shingles, [{_SQL_SIG_EXPRS}] AS signature
       FROM (SELECT doc_id, {_SHINGLES} AS shingles FROM hist)
       WHERE len(shingles) > 0
     ), isig AS (
-      SELECT doc_id, shingles, [{sig_exprs}] AS signature
+      SELECT doc_id, shingles, [{_SQL_SIG_EXPRS}] AS signature
       FROM (SELECT doc_id, {_SHINGLES} AS shingles FROM inc)
       WHERE len(shingles) > 0
     ), near AS (
       SELECT DISTINCT i.doc_id
-      FROM isig i JOIN hsig h ON ({band_conds})
+      FROM isig i JOIN hsig h ON ({_sql_band_match("i", "h")})
       WHERE ROUND(
         CAST(len(list_intersect(i.shingles, h.shingles)) AS DOUBLE)
         / CAST(len(i.shingles) + len(h.shingles)
@@ -1633,11 +1626,7 @@ _DUP_GRAMS = (
     + " || ' ' || ".join(f"{_NORM_TOKENS}[i+{j}]" for j in range(_DUP_K))
     + ")"
 ).replace("[i+0]", "[i]")
-
-
-@register(
-    "dup_ngram_rate_docs",
-    f"""
+_DUP_RATE_ORACLE = f"""
     WITH g AS (
       SELECT doc_id, unnest({_DUP_GRAMS}) AS gram FROM documents
     ),
@@ -1654,7 +1643,31 @@ _DUP_GRAMS = (
                 // SUM(n_pos) AS BIGINT) AS dup_permille
     FROM per_pair JOIN per_gram USING (gram)
     GROUP BY doc_id
-    """,
+    """
+
+
+def _dup_rate(g: DataFrame, key: str) -> DataFrame:
+    """Per-doc (n_grams, dup_grams, dup_permille) from the positional
+    gram stream ``g`` (doc_id, <key>): the (doc, gram) partial
+    aggregate, then the gram's document frequency from a key-partitioned
+    COUNT window over that same aggregate."""
+    per_pair = g.groupBy("doc_id", key).agg(F.count(F.lit(1)).alias("n_pos"))
+    w = Window.partitionBy(key)
+    dup_pos = F.sum(F.when(F.col("n_docs") >= 2, F.col("n_pos")).otherwise(F.lit(0)))
+    return (
+        per_pair.withColumn("n_docs", F.count(F.lit(1)).over(w))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n_pos").cast("long").alias("n_grams"),
+            dup_pos.cast("long").alias("dup_grams"),
+        )
+        .withColumn("dup_permille", F.expr("dup_grams * 1000 div n_grams"))
+    )
+
+
+@register(
+    "dup_ngram_rate_docs",
+    _DUP_RATE_ORACLE,
     tags=("text", "dedup", "curation", "llm"),
 )
 def dup_ngram_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,29 +1698,14 @@ def dup_ngram_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents")
     g = docs.select("doc_id", F.explode(ordered_shingles("text", _DUP_K)).alias("gram"))
-    per_pair = g.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("n_pos"))
-    w = Window.partitionBy("gram")
-    dup_pos = F.sum(F.when(F.col("n_docs") >= 2, F.col("n_pos")).otherwise(F.lit(0)))
-    return (
-        per_pair.withColumn("n_docs", F.count(F.lit(1)).over(w))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pos").cast("long").alias("n_grams"),
-            dup_pos.cast("long").alias("dup_grams"),
-        )
-        .withColumn("dup_permille", F.expr("dup_grams * 1000 div n_grams"))
-    )
+    return _dup_rate(g, "gram")
 
 
 # add-one-smoothed corpus bigram LM: the NLL unit is micro-nats,
 # floored per DISTINCT (doc, gram) so the per-doc sum is a sum of
 # exact integers (order-free cross-engine)
 _LM_NLL = "FLOOR(LN((c_ctx + vsz) * 1.0 / (c_bg + 1)) * 1000000.0)"
-
-
-@register(
-    "bigram_perplexity_docs",
-    f"""
+_PPL_ORACLE = f"""
     WITH bg AS (
       SELECT doc_id, UNNEST({_sql_ordered_grams(2)}) AS g FROM documents
     ),
@@ -1732,7 +1730,77 @@ _LM_NLL = "FLOOR(LN((c_ctx + vsz) * 1.0 / (c_bg + 1)) * 1000000.0)"
              AS avg_nll_micro
     FROM m CROSS JOIN v
     GROUP BY doc_id
-    """,
+    """
+
+
+def _window_model(per_pair: DataFrame, gram: str, ctx: str, vsz: DataFrame) -> DataFrame:
+    """Attach both model counts to the (doc, gram) aggregate through
+    keyed SUM windows — C(bigram) over ``gram``, C(context) over
+    ``ctx`` — plus the 1-row vocabulary size."""
+    return (
+        per_pair.withColumn("c_bg", F.sum("n_pos").over(Window.partitionBy(gram)))
+        .withColumn("c_ctx", F.sum("n_pos").over(Window.partitionBy(ctx)))
+        .crossJoin(F.broadcast(vsz))
+    )
+
+
+def _lm_nll_score(m: DataFrame) -> DataFrame:
+    """Per-doc integer micro-nat NLL under the add-one-smoothed bigram
+    LM, from (doc, gram) rows carrying n_pos, c_bg, c_ctx and vsz."""
+    nll = F.floor(
+        F.log(
+            (F.col("c_ctx") + F.col("vsz")).cast("double")
+            / (F.col("c_bg") + F.lit(1)).cast("double")
+        )
+        * F.lit(1000000.0)
+    ).cast("long")
+    return (
+        m.withColumn("_nll", nll)
+        .groupBy("doc_id")
+        .agg(
+            F.sum("n_pos").cast("long").alias("n_bigrams"),
+            F.sum(F.col("n_pos") * F.col("_nll")).cast("long").alias("total_nll_micro"),
+        )
+        .withColumn("avg_nll_micro", F.expr("total_nll_micro div n_bigrams"))
+    )
+
+
+def _hashed_bigrams(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The hashed bigram stream (doc_id, gh, w1h) — one row per bigram
+    position, gh = xxhash64(w1, w2) and w1h = xxhash64(w1) — and the
+    1-row vocabulary size over distinct token hashes."""
+    from etl_orders_spark.functions.text import normalize_text, tokens
+
+    docs = TW(spark, sf_dir, "documents")
+    d = docs.withColumn("_t", tokens(normalize_text(F.col("text"))))
+    pairs = F.transform(
+        F.sequence(F.lit(1), F.size("_t") - 1),
+        lambda i: F.struct(
+            F.xxhash64(F.element_at("_t", i), F.element_at("_t", i + 1)).alias("gh"),
+            F.xxhash64(F.element_at("_t", i)).alias("w1h"),
+        ),
+    )
+    g = (
+        d.select(
+            "doc_id",
+            F.explode(
+                F.when(F.size("_t") >= 2, pairs).otherwise(
+                    F.array().cast("array<struct<gh:long,w1h:long>>")
+                )
+            ).alias("p"),
+        )
+        .select("doc_id", "p.gh", "p.w1h")
+    )
+    vsz = (
+        d.select(F.explode("_t").alias("t"))
+        .agg(F.countDistinct(F.xxhash64("t")).cast("long").alias("vsz"))
+    )
+    return g, vsz
+
+
+@register(
+    "bigram_perplexity_docs",
+    _PPL_ORACLE,
     tags=("text", "quality", "llm"),
 )
 def bigram_perplexity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1777,27 +1845,7 @@ def bigram_perplexity_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(_tokens(normalize_text(F.col("text")))).alias("t"))
         .agg(F.countDistinct("t").cast("long").alias("vsz"))
     )
-    m = (
-        per_pair.withColumn("c_bg", F.sum("n_pos").over(Window.partitionBy("g")))
-        .withColumn("c_ctx", F.sum("n_pos").over(Window.partitionBy("w1")))
-        .crossJoin(F.broadcast(vsz))
-    )
-    nll = F.floor(
-        F.log(
-            (F.col("c_ctx") + F.col("vsz")).cast("double")
-            / (F.col("c_bg") + F.lit(1)).cast("double")
-        )
-        * F.lit(1000000.0)
-    ).cast("long")
-    return (
-        m.withColumn("_nll", nll)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pos").cast("long").alias("n_bigrams"),
-            F.sum(F.col("n_pos") * F.col("_nll")).cast("long").alias("total_nll_micro"),
-        )
-        .withColumn("avg_nll_micro", F.expr("total_nll_micro div n_bigrams"))
-    )
+    return _lm_nll_score(_window_model(per_pair, "g", "w1", vsz))
 
 
 @register(
@@ -1864,24 +1912,7 @@ def ccnet_perplexity_buckets_docs(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "dup_ngram_rate_docs_fast",
-    f"""
-    WITH g AS (
-      SELECT doc_id, unnest({_DUP_GRAMS}) AS gram FROM documents
-    ),
-    per_pair AS (
-      SELECT doc_id, gram, COUNT(*) AS n_pos FROM g GROUP BY 1, 2
-    ),
-    per_gram AS (
-      SELECT gram, COUNT(*) AS n_docs FROM per_pair GROUP BY 1
-    )
-    SELECT doc_id,
-           CAST(SUM(n_pos) AS BIGINT) AS n_grams,
-           CAST(SUM(CASE WHEN n_docs >= 2 THEN n_pos ELSE 0 END) AS BIGINT) AS dup_grams,
-           CAST(SUM(CASE WHEN n_docs >= 2 THEN n_pos ELSE 0 END) * 1000
-                // SUM(n_pos) AS BIGINT) AS dup_permille
-    FROM per_pair JOIN per_gram USING (gram)
-    GROUP BY doc_id
-    """,
+    _DUP_RATE_ORACLE,
     tags=("text", "dedup", "curation", "llm"),
     bench=True,
 )
@@ -1909,48 +1940,12 @@ def dup_ngram_rate_docs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("_toks", _tokens(normalize_text(F.col("text"))))
         .select("doc_id", F.explode(hashed_ordered_shingles("_toks", _DUP_K)).alias("gh"))
     )
-    per_pair = g.groupBy("doc_id", "gh").agg(F.count(F.lit(1)).alias("n_pos"))
-    w = Window.partitionBy("gh")
-    dup_pos = F.sum(F.when(F.col("n_docs") >= 2, F.col("n_pos")).otherwise(F.lit(0)))
-    return (
-        per_pair.withColumn("n_docs", F.count(F.lit(1)).over(w))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pos").cast("long").alias("n_grams"),
-            dup_pos.cast("long").alias("dup_grams"),
-        )
-        .withColumn("dup_permille", F.expr("dup_grams * 1000 div n_grams"))
-    )
+    return _dup_rate(g, "gh")
 
 
 @register(
     "bigram_perplexity_docs_fast",
-    f"""
-    WITH bg AS (
-      SELECT doc_id, UNNEST({_sql_ordered_grams(2)}) AS g FROM documents
-    ),
-    per_pair AS (
-      SELECT doc_id, g, split_part(g, ' ', 1) AS w1, CAST(COUNT(*) AS BIGINT) AS n_pos
-      FROM bg GROUP BY 1, 2, 3
-    ),
-    m AS (
-      SELECT doc_id, n_pos,
-             SUM(n_pos) OVER (PARTITION BY g) AS c_bg,
-             SUM(n_pos) OVER (PARTITION BY w1) AS c_ctx
-      FROM per_pair
-    ),
-    v AS (
-      SELECT CAST(COUNT(DISTINCT t) AS BIGINT) AS vsz
-      FROM (SELECT UNNEST({_NORM_TOKENS}) AS t FROM documents)
-    )
-    SELECT doc_id,
-           CAST(SUM(n_pos) AS BIGINT) AS n_bigrams,
-           CAST(SUM(n_pos * CAST({_LM_NLL} AS BIGINT)) AS BIGINT) AS total_nll_micro,
-           CAST(SUM(n_pos * CAST({_LM_NLL} AS BIGINT)) // SUM(n_pos) AS BIGINT)
-             AS avg_nll_micro
-    FROM m CROSS JOIN v
-    GROUP BY doc_id
-    """,
+    _PPL_ORACLE,
     tags=("text", "quality", "llm"),
     bench=True,
 )
@@ -1967,86 +1962,16 @@ def bigram_perplexity_docs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly unless two distinct grams/tokens collide in 64 bits
     (P ≈ q²/2⁶⁵). The string form stays registered as the
     collision-free reference."""
-    from etl_orders_spark.functions.text import normalize_text, tokens
-
-    docs = TW(spark, sf_dir, "documents")
-    d = docs.withColumn("_t", tokens(normalize_text(F.col("text"))))
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size("_t") - 1),
-        lambda i: F.struct(
-            F.xxhash64(F.element_at("_t", i), F.element_at("_t", i + 1)).alias("gh"),
-            F.xxhash64(F.element_at("_t", i)).alias("w1h"),
-        ),
-    )
-    g = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.when(F.size("_t") >= 2, pairs).otherwise(
-                    F.array().cast("array<struct<gh:long,w1h:long>>")
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", "p.gh", "p.w1h")
-    )
+    g, vsz = _hashed_bigrams(spark, sf_dir)
     per_pair = g.groupBy("doc_id", "gh", "w1h").agg(
         F.count(F.lit(1)).cast("long").alias("n_pos")
     )
-    vsz = (
-        d.select(F.explode("_t").alias("t"))
-        .agg(F.countDistinct(F.xxhash64("t")).cast("long").alias("vsz"))
-    )
-    m = (
-        per_pair.withColumn("c_bg", F.sum("n_pos").over(Window.partitionBy("gh")))
-        .withColumn("c_ctx", F.sum("n_pos").over(Window.partitionBy("w1h")))
-        .crossJoin(F.broadcast(vsz))
-    )
-    nll = F.floor(
-        F.log(
-            (F.col("c_ctx") + F.col("vsz")).cast("double")
-            / (F.col("c_bg") + F.lit(1)).cast("double")
-        )
-        * F.lit(1000000.0)
-    ).cast("long")
-    return (
-        m.withColumn("_nll", nll)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pos").cast("long").alias("n_bigrams"),
-            F.sum(F.col("n_pos") * F.col("_nll")).cast("long").alias("total_nll_micro"),
-        )
-        .withColumn("avg_nll_micro", F.expr("total_nll_micro div n_bigrams"))
-    )
+    return _lm_nll_score(_window_model(per_pair, "gh", "w1h", vsz))
 
 
 @register(
     "bigram_perplexity_docs_bcast",
-    f"""
-    WITH bg AS (
-      SELECT doc_id, UNNEST({_sql_ordered_grams(2)}) AS g FROM documents
-    ),
-    per_pair AS (
-      SELECT doc_id, g, split_part(g, ' ', 1) AS w1, CAST(COUNT(*) AS BIGINT) AS n_pos
-      FROM bg GROUP BY 1, 2, 3
-    ),
-    m AS (
-      SELECT doc_id, n_pos,
-             SUM(n_pos) OVER (PARTITION BY g) AS c_bg,
-             SUM(n_pos) OVER (PARTITION BY w1) AS c_ctx
-      FROM per_pair
-    ),
-    v AS (
-      SELECT CAST(COUNT(DISTINCT t) AS BIGINT) AS vsz
-      FROM (SELECT UNNEST({_NORM_TOKENS}) AS t FROM documents)
-    )
-    SELECT doc_id,
-           CAST(SUM(n_pos) AS BIGINT) AS n_bigrams,
-           CAST(SUM(n_pos * CAST({_LM_NLL} AS BIGINT)) AS BIGINT) AS total_nll_micro,
-           CAST(SUM(n_pos * CAST({_LM_NLL} AS BIGINT)) // SUM(n_pos) AS BIGINT)
-             AS avg_nll_micro
-    FROM m CROSS JOIN v
-    GROUP BY doc_id
-    """,
+    _PPL_ORACLE,
     tags=("text", "quality", "llm"),
     bench=True,
 )
@@ -2088,28 +2013,7 @@ def bigram_perplexity_docs_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     gracefully: drop the broadcast hints and the joins run as shuffle
     joins on 8-byte keys — still strictly cheaper than shuffling the
     corpus by a skewed key."""
-    from etl_orders_spark.functions.text import normalize_text, tokens
-
-    docs = TW(spark, sf_dir, "documents")
-    d = docs.withColumn("_t", tokens(normalize_text(F.col("text"))))
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size("_t") - 1),
-        lambda i: F.struct(
-            F.xxhash64(F.element_at("_t", i), F.element_at("_t", i + 1)).alias("gh"),
-            F.xxhash64(F.element_at("_t", i)).alias("w1h"),
-        ),
-    )
-    g = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.when(F.size("_t") >= 2, pairs).otherwise(
-                    F.array().cast("array<struct<gh:long,w1h:long>>")
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", "p.gh", "p.w1h")
-    )
+    g, vsz = _hashed_bigrams(spark, sf_dir)
     # model branch: bigram-vocab grain, map-side combined (tiny exchange);
     # cached (keyed lazy persist) because BOTH model tables derive from it —
     # without the cache the scan+explode replays once per derivation
@@ -2128,10 +2032,6 @@ def bigram_perplexity_docs_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_pair = g.groupBy("doc_id", "gh", "w1h").agg(
         F.count(F.lit(1)).cast("long").alias("n_pos")
     )
-    vsz = (
-        d.select(F.explode("_t").alias("t"))
-        .agg(F.countDistinct(F.xxhash64("t")).cast("long").alias("vsz"))
-    )
     m = (
         per_pair.join(F.broadcast(model_bg), "gh", "left")
         .withColumn("c_bg", F.coalesce("c_bg", F.lit(1)))
@@ -2141,22 +2041,7 @@ def bigram_perplexity_docs_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(model_ctx), "w1h")
         .crossJoin(F.broadcast(vsz))
     )
-    nll = F.floor(
-        F.log(
-            (F.col("c_ctx") + F.col("vsz")).cast("double")
-            / (F.col("c_bg") + F.lit(1)).cast("double")
-        )
-        * F.lit(1000000.0)
-    ).cast("long")
-    return (
-        m.withColumn("_nll", nll)
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_pos").cast("long").alias("n_bigrams"),
-            F.sum(F.col("n_pos") * F.col("_nll")).cast("long").alias("total_nll_micro"),
-        )
-        .withColumn("avg_nll_micro", F.expr("total_nll_micro div n_bigrams"))
-    )
+    return _lm_nll_score(m)
 
 
 _BPE_TOP = 50  # merge candidates reported per training iteration
@@ -2714,7 +2599,8 @@ def dup_span_detection_docs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams over space-free tokens are injective, so the twin KEEPS the
     string form's SQL oracle — equality holds exactly unless xxhash64
     collides, which the static fixture makes a deterministic check.
-    100x replica probe (tools/probe_r8_late_lanes.py): the replica
+    100x replica probe (tools/probe_lane.py dup_span_detection_docs_fast
+    --sf <1x> <10x> <100x> --reps 2): the replica
     corpus is the df-screen worst case (every interior gram recurs
     across replicas), and the hashed key is what keeps the full-volume
     exchange affordable there."""
@@ -2735,14 +2621,10 @@ _BPE_TRAIN_ITERS = 3
 _BPE_EOW = "</w>"  # end-of-word terminal, per the paper
 
 
-def _bpe_rounds_sql() -> str:
-    """Shared WITH-body running the k unrolled training rounds:
-    vocabulary collapse -> symbol rows -> per-round (top pair,
-    island merge, rebuild). Both the train oracle (which reads the
-    per-round tops + vocab checksums) and the encode oracle (which
-    reads the FINAL symbol table rows_k) append onto this prefix,
-    so the two lanes cannot drift."""
-    sql = f"""
+# Round-0 symbol rows for the BPE and WordPiece training oracles: the
+# corpus collapses to its word vocabulary, and every form explodes to
+# one row per character plus the end-of-word terminal.
+_SYMBOL_ROWS_SQL = f"""
     WITH tok AS (
       SELECT UNNEST({_LOWER_TOKENS}) AS w FROM documents
     ), vocab AS (
@@ -2754,16 +2636,18 @@ def _bpe_rounds_sql() -> str:
       UNION ALL
       SELECT w, c, length(w) + 1, '{_BPE_EOW}' FROM vocab
     )"""
-    for i in range(1, _BPE_TRAIN_ITERS + 1):
-        sql += f""", nx{i} AS MATERIALIZED (
+
+
+def _merge_round_sql(i: int, pick: str) -> str:
+    """One unrolled training round: next-symbol rows nx{i}, the
+    trainer's own pair-selection CTEs ``pick`` (which must define the
+    1-row top{i} with columns a, b), then the island merge of that
+    pair and the rebuilt symbol table rows{i}."""
+    return f""", nx{i} AS MATERIALIZED (
       SELECT word, freq, pos, sym,
              LEAD(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
       FROM rows{i - 1}
-    ), top{i} AS MATERIALIZED (
-      SELECT sym AS a, nxt AS b, CAST(SUM(freq) AS BIGINT) AS w
-      FROM nx{i} WHERE nxt IS NOT NULL GROUP BY sym, nxt
-      ORDER BY w DESC, a, b LIMIT 1
-    ), isl{i} AS (
+    ){pick}, isl{i} AS (
       SELECT word, pos,
              pos - ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS grp
       FROM nx{i} n CROSS JOIN top{i} t
@@ -2787,6 +2671,32 @@ def _bpe_rounds_sql() -> str:
         WHERE k2.pos IS NULL
       )
     )"""
+
+
+def _vocab_checksum_sql(seed: int, i: int) -> str:
+    """Scalar subquery: BIGINT sum of the portable hashes of every word
+    form's space-joined segmentation after round i."""
+    h = _sql_hash(seed, "word || '#' || s")
+    return f"""(SELECT CAST(SUM({h}) AS BIGINT) FROM (
+                SELECT word, string_agg(sym, ' ' ORDER BY pos) AS s
+                FROM rows{i} GROUP BY word
+             )) AS vocab_checksum"""
+
+
+def _bpe_rounds_sql() -> str:
+    """Shared WITH-body running the k unrolled training rounds:
+    vocabulary collapse -> symbol rows -> per-round (top pair,
+    island merge, rebuild). Both the train oracle (which reads the
+    per-round tops + vocab checksums) and the encode oracle (which
+    reads the FINAL symbol table rows_k) append onto this prefix,
+    so the two lanes cannot drift."""
+    sql = _SYMBOL_ROWS_SQL
+    for i in range(1, _BPE_TRAIN_ITERS + 1):
+        sql += _merge_round_sql(i, f""", top{i} AS MATERIALIZED (
+      SELECT sym AS a, nxt AS b, CAST(SUM(freq) AS BIGINT) AS w
+      FROM nx{i} WHERE nxt IS NOT NULL GROUP BY sym, nxt
+      ORDER BY w DESC, a, b LIMIT 1
+    )""")
     return sql
 
 
@@ -2794,16 +2704,12 @@ def _bpe_train_oracle() -> str:
     """Unrolled k-iteration BPE training twin. Every quantity is an
     integer (frequencies, positions, 32-bit word-form hashes summed to
     a BIGINT checksum), so the value hash has no FP surface at all."""
-    h = _sql_hash(77, "word || '#' || s")
     sql = _bpe_rounds_sql()
     for i in range(1, _BPE_TRAIN_ITERS + 1):
         sql += f""", out{i} AS (
       SELECT CAST({i} AS BIGINT) AS it, t.a || '+' || t.b AS pair,
              t.w AS weight,
-             (SELECT CAST(SUM({h}) AS BIGINT) FROM (
-                SELECT word, string_agg(sym, ' ' ORDER BY pos) AS s
-                FROM rows{i} GROUP BY word
-             )) AS vocab_checksum
+             {_vocab_checksum_sql(77, i)}
       FROM top{i} t
     )"""
     picks = " UNION ALL ".join(
@@ -2812,12 +2718,27 @@ def _bpe_train_oracle() -> str:
     return sql + "\n    " + picks
 
 
-def _bpe_run_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
-    """Execute the {K}-round BPE training loop; returns the FINAL
-    word-form symbol table (word, freq, pos, sym) and the per-round
-    train outputs (it, pair, weight, vocab_checksum). Shared by the
-    train lane and the encode lane so the merge semantics cannot
-    drift between learning and applying the tokenizer."""
+def _seg_hash(seed: int, seg: str) -> Column:
+    """Spark twin of ``_sql_hash(seed, "word || '#' || <seg>")``."""
+    return (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit(f"{seed}|"), F.col("word"), F.lit("#"), F.col(seg))),
+                1,
+                8,
+            ),
+            16,
+            10,
+        )
+        .cast("long")
+    )
+
+
+def _symbol_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Round-0 symbol table (word, freq, pos, sym) of the BPE and
+    WordPiece trainers, eagerly checkpointed: the vocabulary of word
+    forms with >= 2 chars, one row per character plus the end-of-word
+    terminal."""
     docs = T(spark, sf_dir, "documents")
     words = docs.select(
         F.explode(tokens(F.lower(F.col("text")))).alias("w")
@@ -2834,8 +2755,76 @@ def _bpe_run_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[D
         (F.length("w") + 1).cast("int").alias("pos"),
         F.lit(_BPE_EOW).alias("sym"),
     )
-    rows = chars.unionByName(term).localCheckpoint(eager=True)
+    return chars.unionByName(term).localCheckpoint(eager=True)
 
+
+def _merge_top_pair(nx: DataFrame, top: DataFrame) -> DataFrame:
+    """Merge the 1-row ``top`` pair (a, b) into every word of ``nx``
+    (symbol rows plus their next symbol): matching positions form
+    islands per word, exactly the even offsets of an island merge, and
+    the rebuilt symbol table is renumbered and eagerly checkpointed."""
+    wv = Window.partitionBy("word").orderBy("pos")
+    mk = nx.crossJoin(F.broadcast(top))
+    isl = mk.where((F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b"))).select(
+        "word", "pos", (F.col("pos") - F.row_number().over(wv)).alias("grp")
+    )
+    keep = (
+        isl.withColumn(
+            "stp", F.min("pos").over(Window.partitionBy("word", "grp"))
+        )
+        .where((F.col("pos") - F.col("stp")) % 2 == 0)
+        .select("word", "pos")
+    )
+    k1 = keep.select(F.col("word").alias("w1"), F.col("pos").alias("p1"))
+    k2 = keep.select(F.col("word").alias("w2"), F.col("pos").alias("p2"))
+    rebuilt = (
+        mk.join(
+            k1, (F.col("word") == F.col("w1")) & (F.col("pos") == F.col("p1")), "left"
+        )
+        .join(
+            k2,
+            (F.col("word") == F.col("w2")) & (F.col("pos") == F.col("p2") + 1),
+            "left",
+        )
+        .where(F.col("p2").isNull())
+        .select(
+            "word",
+            "freq",
+            "pos",
+            F.when(
+                F.col("p1").isNotNull(), F.concat("sym", "nxt")
+            ).otherwise(F.col("sym")).alias("sym"),
+        )
+    )
+    return rebuilt.select(
+        "word", "freq", F.row_number().over(wv).alias("pos"), "sym"
+    ).localCheckpoint(eager=True)
+
+
+def _vocab_checksum(rows: DataFrame, seed: int) -> DataFrame:
+    """1-row (vocab_checksum): the sum of the portable hashes of every
+    word form's space-joined segmentation in ``rows``."""
+    wordform = rows.groupBy("word").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "sym"))),
+                lambda s: s["sym"],
+            ),
+            " ",
+        ).alias("s")
+    )
+    return wordform.select(_seg_hash(seed, "s").alias("h")).agg(
+        F.sum("h").cast("long").alias("vocab_checksum")
+    )
+
+
+def _bpe_run_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
+    """Execute the {K}-round BPE training loop; returns the FINAL
+    word-form symbol table (word, freq, pos, sym) and the per-round
+    train outputs (it, pair, weight, vocab_checksum). Shared by the
+    train lane and the encode lane so the merge semantics cannot
+    drift between learning and applying the tokenizer."""
+    rows = _symbol_rows(spark, sf_dir)
     wv = Window.partitionBy("word").orderBy("pos")
     outs = []
     for i in range(1, _BPE_TRAIN_ITERS + 1):
@@ -2850,65 +2839,9 @@ def _bpe_run_rounds(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[D
             .limit(1)
             .select(F.col("sym").alias("a"), F.col("nxt").alias("b"), "w")
         )
-        mk = nx.crossJoin(F.broadcast(top))
-        isl = mk.where((F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b"))).select(
-            "word", "pos", (F.col("pos") - F.row_number().over(wv)).alias("grp")
-        )
-        keep = (
-            isl.withColumn(
-                "stp", F.min("pos").over(Window.partitionBy("word", "grp"))
-            )
-            .where((F.col("pos") - F.col("stp")) % 2 == 0)
-            .select("word", "pos")
-        )
-        k1 = keep.select(F.col("word").alias("w1"), F.col("pos").alias("p1"))
-        k2 = keep.select(F.col("word").alias("w2"), F.col("pos").alias("p2"))
-        rebuilt = (
-            mk.join(
-                k1, (F.col("word") == F.col("w1")) & (F.col("pos") == F.col("p1")), "left"
-            )
-            .join(
-                k2,
-                (F.col("word") == F.col("w2")) & (F.col("pos") == F.col("p2") + 1),
-                "left",
-            )
-            .where(F.col("p2").isNull())
-            .select(
-                "word",
-                "freq",
-                "pos",
-                F.when(
-                    F.col("p1").isNotNull(), F.concat("sym", "nxt")
-                ).otherwise(F.col("sym")).alias("sym"),
-            )
-        )
-        rows = rebuilt.select(
-            "word", "freq", F.row_number().over(wv).alias("pos"), "sym"
-        ).localCheckpoint(eager=True)
-        wordform = rows.groupBy("word").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "sym"))),
-                    lambda s: s["sym"],
-                ),
-                " ",
-            ).alias("s")
-        )
-        chk = wordform.select(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("77|"), F.col("word"), F.lit("#"), F.col("s"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h")
-        ).agg(F.sum("h").cast("long").alias("vocab_checksum"))
+        rows = _merge_top_pair(nx, top)
         outs.append(
-            top.crossJoin(chk).select(
+            top.crossJoin(_vocab_checksum(rows, 77)).select(
                 F.lit(i).cast("long").alias("it"),
                 F.concat("a", F.lit("+"), "b").alias("pair"),
                 F.col("w").cast("long").alias("weight"),
@@ -3021,21 +2954,7 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s"),
         F.count(F.lit(1)).cast("long").alias("n_sym"),
     )
-    wordseg = wordform.select(
-        "word",
-        "n_sym",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("78|"), F.col("word"), F.lit("#"), F.col("s"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
-    )
+    wordseg = wordform.select("word", "n_sym", _seg_hash(78, "s").alias("h"))
     docs = T(spark, sf_dir, "documents")
     docw = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
@@ -3281,32 +3200,16 @@ _WP_VOCAB_TOP = 200  # multi-char pieces kept, by (weight DESC, cls, piece)
 
 
 def _wp_rounds_sql() -> str:
-    """The unrolled WordPiece training rounds: same vocabulary collapse
-    / symbol rows / island merge as _bpe_rounds_sql (deliberately NOT
-    shared code — the BPE oracles' bytes are frozen driver-facing
-    contracts), with top{i} selecting by the likelihood ratio
-    w / (u(a)*u(b)) over the CURRENT symbol unigram counts. The ratio
-    compares as IEEE doubles built from identical integers in both
-    engines (division and multiplication are correctly rounded, so
-    equal inputs give bit-equal doubles); ties break (a, b) ASC."""
-    sql = f"""
-    WITH tok AS (
-      SELECT UNNEST({_LOWER_TOKENS}) AS w FROM documents
-    ), vocab AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM tok
-      WHERE length(w) >= 2 GROUP BY w
-    ), rows0 AS (
-      SELECT w AS word, c AS freq, i AS pos, substr(w, i, 1) AS sym
-      FROM vocab, UNNEST(generate_series(1, length(w))) t(i)
-      UNION ALL
-      SELECT w, c, length(w) + 1, '{_BPE_EOW}' FROM vocab
-    )"""
+    """The unrolled WordPiece training rounds: the same symbol rows and
+    island merge as _bpe_rounds_sql, with top{i} selecting by the
+    likelihood ratio w / (u(a)*u(b)) over the CURRENT symbol unigram
+    counts. The ratio compares as IEEE doubles built from identical
+    integers in both engines (division and multiplication are
+    correctly rounded, so equal inputs give bit-equal doubles); ties
+    break (a, b) ASC."""
+    sql = _SYMBOL_ROWS_SQL
     for i in range(1, _WP_TRAIN_ITERS + 1):
-        sql += f""", nx{i} AS MATERIALIZED (
-      SELECT word, freq, pos, sym,
-             LEAD(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-      FROM rows{i - 1}
-    ), ucnt{i} AS MATERIALIZED (
+        sql += _merge_round_sql(i, f""", ucnt{i} AS MATERIALIZED (
       SELECT sym, CAST(SUM(freq) AS BIGINT) AS u FROM rows{i - 1} GROUP BY sym
     ), top{i} AS MATERIALIZED (
       SELECT pc.a, pc.b, pc.w, ca.u AS ua, cb.u AS ub
@@ -3319,30 +3222,7 @@ def _wp_rounds_sql() -> str:
       ORDER BY CAST(pc.w AS DOUBLE) / (CAST(ca.u AS DOUBLE) * CAST(cb.u AS DOUBLE)) DESC,
                pc.a, pc.b
       LIMIT 1
-    ), isl{i} AS (
-      SELECT word, pos,
-             pos - ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS grp
-      FROM nx{i} n CROSS JOIN top{i} t
-      WHERE n.sym = t.a AND n.nxt = t.b
-    ), keep{i} AS MATERIALIZED (
-      SELECT word, pos FROM (
-        SELECT word, pos,
-               MIN(pos) OVER (PARTITION BY word, grp) AS stp
-        FROM isl{i}
-      ) WHERE (pos - stp) % 2 = 0
-    ), rows{i} AS MATERIALIZED (
-      SELECT word, freq,
-             ROW_NUMBER() OVER (PARTITION BY word ORDER BY pos) AS pos, sym
-      FROM (
-        SELECT m.word, m.freq, m.pos,
-               CASE WHEN k1.pos IS NOT NULL THEN m.sym || m.nxt
-                    ELSE m.sym END AS sym
-        FROM nx{i} m
-        LEFT JOIN keep{i} k1 ON m.word = k1.word AND m.pos = k1.pos
-        LEFT JOIN keep{i} k2 ON m.word = k2.word AND m.pos = k2.pos + 1
-        WHERE k2.pos IS NULL
-      )
-    )"""
+    )""")
     return sql
 
 
@@ -3352,16 +3232,12 @@ def _wp_train_oracle() -> str:
     integer numerator/denominator — emitted instead of the double
     ratio so the value hash has no FP surface), and the same
     vocabulary-segmentation checksum convention as the BPE twin."""
-    h = _sql_hash(79, "word || '#' || s")
     sql = _wp_rounds_sql()
     for i in range(1, _WP_TRAIN_ITERS + 1):
         sql += f""", wout{i} AS (
       SELECT CAST({i} AS BIGINT) AS it, t.a || '+' || t.b AS pair,
              t.w AS pair_weight, t.ua AS left_weight, t.ub AS right_weight,
-             (SELECT CAST(SUM({h}) AS BIGINT) FROM (
-                SELECT word, string_agg(sym, ' ' ORDER BY pos) AS s
-                FROM rows{i} GROUP BY word
-             )) AS vocab_checksum
+             {_vocab_checksum_sql(79, i)}
       FROM top{i} t
     )"""
     picks = " UNION ALL ".join(
@@ -3379,24 +3255,7 @@ def _wp_run_rounds(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     eager checkpoint per round — plus one extra alphabet-bounded
     aggregate per round (the unigram symbol counts the score divides
     by)."""
-    docs = T(spark, sf_dir, "documents")
-    words = docs.select(
-        F.explode(tokens(F.lower(F.col("text")))).alias("w")
-    ).filter(F.length("w") >= 2)
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    chars = vocab.select(
-        F.col("w").alias("word"),
-        F.col("c").alias("freq"),
-        F.explode(F.sequence(F.lit(1), F.length("w"))).alias("pos"),
-    ).select("word", "freq", "pos", F.expr("substring(word, pos, 1)").alias("sym"))
-    term = vocab.select(
-        F.col("w").alias("word"),
-        F.col("c").alias("freq"),
-        (F.length("w") + 1).cast("int").alias("pos"),
-        F.lit(_BPE_EOW).alias("sym"),
-    )
-    rows = chars.unionByName(term).localCheckpoint(eager=True)
-
+    rows = _symbol_rows(spark, sf_dir)
     wv = Window.partitionBy("word").orderBy("pos")
     outs = []
     for i in range(1, _WP_TRAIN_ITERS + 1):
@@ -3424,65 +3283,9 @@ def _wp_run_rounds(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             .limit(1)
             .select("a", "b", "w", "ua", "ub")
         )
-        mk = nx.crossJoin(F.broadcast(top))
-        isl = mk.where((F.col("sym") == F.col("a")) & (F.col("nxt") == F.col("b"))).select(
-            "word", "pos", (F.col("pos") - F.row_number().over(wv)).alias("grp")
-        )
-        keep = (
-            isl.withColumn(
-                "stp", F.min("pos").over(Window.partitionBy("word", "grp"))
-            )
-            .where((F.col("pos") - F.col("stp")) % 2 == 0)
-            .select("word", "pos")
-        )
-        k1 = keep.select(F.col("word").alias("w1"), F.col("pos").alias("p1"))
-        k2 = keep.select(F.col("word").alias("w2"), F.col("pos").alias("p2"))
-        rebuilt = (
-            mk.join(
-                k1, (F.col("word") == F.col("w1")) & (F.col("pos") == F.col("p1")), "left"
-            )
-            .join(
-                k2,
-                (F.col("word") == F.col("w2")) & (F.col("pos") == F.col("p2") + 1),
-                "left",
-            )
-            .where(F.col("p2").isNull())
-            .select(
-                "word",
-                "freq",
-                "pos",
-                F.when(
-                    F.col("p1").isNotNull(), F.concat("sym", "nxt")
-                ).otherwise(F.col("sym")).alias("sym"),
-            )
-        )
-        rows = rebuilt.select(
-            "word", "freq", F.row_number().over(wv).alias("pos"), "sym"
-        ).localCheckpoint(eager=True)
-        wordform = rows.groupBy("word").agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "sym"))),
-                    lambda s: s["sym"],
-                ),
-                " ",
-            ).alias("s")
-        )
-        chk = wordform.select(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("79|"), F.col("word"), F.lit("#"), F.col("s"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("h")
-        ).agg(F.sum("h").cast("long").alias("vocab_checksum"))
+        rows = _merge_top_pair(nx, top)
         outs.append(
-            top.crossJoin(chk).select(
+            top.crossJoin(_vocab_checksum(rows, 79)).select(
                 F.lit(i).cast("long").alias("it"),
                 F.concat("a", F.lit("+"), "b").alias("pair"),
                 F.col("w").cast("long").alias("pair_weight"),
@@ -3724,17 +3527,7 @@ def wordpiece_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "word",
         "seg",
         (F.size(F.split("seg", " "))).cast("long").alias("ntok"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("81|"), F.col("word"), F.lit("#"), F.col("seg"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+        _seg_hash(81, "seg").alias("h"),
     )
     docw = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
@@ -3953,17 +3746,7 @@ def unigram_lm_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded = segs.select(
         "word",
         F.size(F.split("seg", " ")).cast("long").alias("ntok"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("83|"), F.col("word"), F.lit("#"), F.col("seg"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h"),
+        _seg_hash(83, "seg").alias("h"),
     )
     docw = docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("w")
@@ -4451,21 +4234,9 @@ _ED_PLANT_MOD = 25  # every k-th doc donates a 3-char-prefix edit clone
 _ED_TAU = 0.9  # verified pairs must have edit similarity >= tau
 
 
-def _editdist_oracle() -> str:
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(shingles, s -> {_sql_hash(i, 's')}))"
-        for i in range(_MINHASH_N)
-    )
-    band_conds = " OR ".join(
-        "("
-        + " AND ".join(
-            f"x.signature[{b * _ROWS_PER_BAND + r + 1}] = y.signature[{b * _ROWS_PER_BAND + r + 1}]"
-            for r in range(_ROWS_PER_BAND)
-        )
-        + ")"
-        for b in range(_BANDS)
-    )
-    return f"""
+# the planted corpus and its portable MinHash signatures, shared by
+# the edit-distance oracles
+_ED_SIG_SQL = f"""
     WITH corpus AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -4474,21 +4245,64 @@ def _editdist_oracle() -> str:
     ), sh AS (
       SELECT doc_id, text, {_SHINGLES} AS shingles FROM corpus
     ), sig AS (
-      SELECT doc_id, text, [{sig_exprs}] AS signature
+      SELECT doc_id, text, [{_SQL_SIG_EXPRS}] AS signature
       FROM sh WHERE len(shingles) > 0
-    ), cand AS (
+    )"""
+
+
+def _ed_keep_sql(src: str) -> str:
+    """Final select of the edit-distance oracles: pairs of ``src``
+    (id_a, id_b, lev, max_len) whose edit similarity reaches tau."""
+    return f"""
+    SELECT id_a, id_b, CAST(lev AS BIGINT) AS lev,
+           ROUND(1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE), 6)
+             AS edit_sim
+    FROM {src}
+    WHERE 1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE) >= {_ED_TAU}
+    """
+
+
+def _editdist_oracle() -> str:
+    return _ED_SIG_SQL + f""", cand AS (
       SELECT x.doc_id AS id_a, y.doc_id AS id_b,
              levenshtein(x.text, y.text) AS lev,
              GREATEST(length(x.text), length(y.text)) AS max_len
       FROM sig x JOIN sig y ON x.doc_id < y.doc_id
-      WHERE {band_conds}
+      WHERE {_sql_band_match("x", "y")}
+    )""" + _ed_keep_sql("cand")
+
+
+def _planted_corpus(docs: DataFrame, key: str) -> DataFrame:
+    """``docs`` (doc_id, text) plus a 'zq '-prefixed clone of every
+    _ED_PLANT_MOD-th doc at id + 2,000,000, staged under ``key``."""
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    planted = docs.where(F.col("doc_id") % _ED_PLANT_MOD == 0).select(
+        (F.col("doc_id") + 2000000).alias("doc_id"),
+        F.concat(F.lit("zq "), F.col("text")).alias("text"),
     )
-    SELECT id_a, id_b, CAST(lev AS BIGINT) AS lev,
-           ROUND(1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE), 6)
-             AS edit_sim
-    FROM cand
-    WHERE 1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE) >= {_ED_TAU}
-    """
+    return cache_stage(docs.unionByName(planted), key)
+
+
+def _verify_edit_sim(cands: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Levenshtein verifier: candidate pairs (id_a, id_b) join their
+    texts and keep (lev, edit_sim) where 1 - lev/max_len >= tau."""
+    a = corpus.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
+    b = corpus.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
+    lev = F.levenshtein("_ta", "_tb")
+    max_len = F.greatest(F.length("_ta"), F.length("_tb"))
+    sim = 1.0 - lev.cast("double") / max_len.cast("double")
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .where(sim >= _ED_TAU)
+        .select(
+            "id_a",
+            "id_b",
+            lev.cast("long").alias("lev"),
+            F.round(sim, 6).alias("edit_sim"),
+        )
+    )
 
 
 @register(
@@ -4519,32 +4333,13 @@ def editdist_verified_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFra
     from etl_orders_spark.operators.materialize import cache_stage
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.where(F.col("doc_id") % _ED_PLANT_MOD == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.lit("zq "), F.col("text")).alias("text"),
-    )
-    corpus = cache_stage(docs.unionByName(planted), "editdist_near_dup.corpus")
+    corpus = _planted_corpus(docs, "editdist_near_dup.corpus")
     sigs = cache_stage(
         minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=True),
         "editdist_near_dup.sigs",
     )
     cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
-    a = corpus.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
-    b = corpus.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
-    lev = F.levenshtein("_ta", "_tb")
-    max_len = F.greatest(F.length("_ta"), F.length("_tb"))
-    sim = 1.0 - lev.cast("double") / max_len.cast("double")
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .where(sim >= _ED_TAU)
-        .select(
-            "id_a",
-            "id_b",
-            lev.cast("long").alias("lev"),
-            F.round(sim, 6).alias("edit_sim"),
-        )
-    )
+    return _verify_edit_sim(cands, corpus)
 
 
 editdist_verified_near_dup_docs.__doc__ = editdist_verified_near_dup_docs.__doc__.format(
@@ -4572,32 +4367,13 @@ def editdist_verified_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFra
     from etl_orders_spark.operators.materialize import cache_stage
 
     docs = TW(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.where(F.col("doc_id") % _ED_PLANT_MOD == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.lit("zq "), F.col("text")).alias("text"),
-    )
-    corpus = cache_stage(docs.unionByName(planted), "editdist_near_dup_fast.corpus")
+    corpus = _planted_corpus(docs, "editdist_near_dup_fast.corpus")
     sigs = cache_stage(
         minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=False),
         "editdist_near_dup_fast.sigs",
     )
     cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
-    a = corpus.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
-    b = corpus.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
-    lev = F.levenshtein("_ta", "_tb")
-    max_len = F.greatest(F.length("_ta"), F.length("_tb"))
-    sim = 1.0 - lev.cast("double") / max_len.cast("double")
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .where(sim >= _ED_TAU)
-        .select(
-            "id_a",
-            "id_b",
-            lev.cast("long").alias("lev"),
-            F.round(sim, 6).alias("edit_sim"),
-        )
-    )
+    return _verify_edit_sim(cands, corpus)
 
 
 # --- content-defined chunking (CDC) dedup ------------------------------------
@@ -5091,10 +4867,6 @@ _ED_BUCKET_CAP = 8  # keep the 8 lowest ids per band bucket before pairing
 
 
 def _editdist_capped_oracle() -> str:
-    sig_exprs = ", ".join(
-        f"list_min(list_transform(shingles, s -> {_sql_hash(i, 's')}))"
-        for i in range(_MINHASH_N)
-    )
     band_keys = ", ".join(
         "("
         + " || ',' || ".join(
@@ -5114,18 +4886,7 @@ def _editdist_capped_oracle() -> str:
         f"QUALIFY ROW_NUMBER() OVER (PARTITION BY bk{b} ORDER BY doc_id) <= {_ED_BUCKET_CAP})"
         for b in range(_BANDS)
     )
-    return f"""
-    WITH corpus AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 2000000 AS doc_id, 'zq ' || text AS text
-      FROM documents WHERE doc_id % {_ED_PLANT_MOD} = 0
-    ), sh AS (
-      SELECT doc_id, text, {_SHINGLES} AS shingles FROM corpus
-    ), sig AS (
-      SELECT doc_id, text, [{sig_exprs}] AS signature
-      FROM sh WHERE len(shingles) > 0
-    ), banded AS (
+    return _ED_SIG_SQL + f""", banded AS (
       SELECT doc_id, {band_keys} FROM sig
     ),
     {kept_ctes},
@@ -5138,13 +4899,7 @@ def _editdist_capped_oracle() -> str:
              levenshtein(a.text, b.text) AS lev,
              GREATEST(length(a.text), length(b.text)) AS max_len
       FROM cand JOIN sig a ON a.doc_id = id_a JOIN sig b ON b.doc_id = id_b
-    )
-    SELECT id_a, id_b, CAST(lev AS BIGINT) AS lev,
-           ROUND(1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE), 6)
-             AS edit_sim
-    FROM verified
-    WHERE 1.0 - CAST(lev AS DOUBLE) / CAST(max_len AS DOUBLE) >= {_ED_TAU}
-    """
+    )""" + _ed_keep_sql("verified")
 
 
 @register(
@@ -5169,11 +4924,7 @@ def editdist_verified_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataF
     from etl_orders_spark.operators.materialize import cache_stage
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    planted = docs.where(F.col("doc_id") % _ED_PLANT_MOD == 0).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.lit("zq "), F.col("text")).alias("text"),
-    )
-    corpus = cache_stage(docs.unionByName(planted), "editdist_capped.corpus")
+    corpus = _planted_corpus(docs, "editdist_capped.corpus")
     sigs = cache_stage(
         minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=True),
         "editdist_capped.sigs",
@@ -5181,22 +4932,7 @@ def editdist_verified_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataF
     cands = minhash_lsh_candidates(
         sigs, "doc_id", _BANDS, _ROWS_PER_BAND, bucket_cap=_ED_BUCKET_CAP
     )
-    a = corpus.select(F.col("doc_id").alias("id_a"), F.col("text").alias("_ta"))
-    b = corpus.select(F.col("doc_id").alias("id_b"), F.col("text").alias("_tb"))
-    lev = F.levenshtein("_ta", "_tb")
-    max_len = F.greatest(F.length("_ta"), F.length("_tb"))
-    sim = 1.0 - lev.cast("double") / max_len.cast("double")
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .where(sim >= _ED_TAU)
-        .select(
-            "id_a",
-            "id_b",
-            lev.cast("long").alias("lev"),
-            F.round(sim, 6).alias("edit_sim"),
-        )
-    )
+    return _verify_edit_sim(cands, corpus)
 
 
 editdist_verified_near_dup_capped.__doc__ = (

@@ -8,13 +8,28 @@ etl_orders_spark/streaming/ and reuse the same aggregation logic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_orders_spark.operators.asof import asof_join, range_join
 from etl_orders_spark.operators.sessionize import session_stats
 from etl_orders_spark.plans.registry import register
 from etl_orders_spark.sources.readers import load_table as T
+
+
+def _k_stats_by_event_type(spark: SparkSession, sf_dir: str, k: Column) -> DataFrame:
+    """Per event_type: event count, and the sum and 2-decimal mean of
+    the extracted props value ``k``."""
+    return (
+        T(spark, sf_dir, "events")
+        .select("event_type", k.alias("k"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("k").alias("sum_k"),
+            F.round(F.avg("k"), 2).alias("avg_k"),
+        )
+    )
 
 
 @register(
@@ -34,16 +49,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     etl.py:34-40): `get_json_object` extracts JVM-side, no UDF, then a
     plain aggregate."""
     k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        T(spark, sf_dir, "events")
-        .select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.round(F.avg("k"), 2).alias("avg_k"),
-        )
-    )
+    return _k_stats_by_event_type(spark, sf_dir, k)
 
 
 @register(
@@ -91,9 +97,9 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_counts(T(spark, sf_dir, "events"), "30 minutes", "10 minutes")
 
 
-@register(
-    "session_stats_events",
-    """
+# events flagged is_new where a user's session starts (first event, or
+# a gap over 30 minutes), ordered by (ts, event_id)
+_SESSION_FLAG_SQL = """
     WITH ev AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
     ), flagged AS (
@@ -103,7 +109,13 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                   THEN 1 ELSE 0 END AS is_new
       FROM ev
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
+    )"""
+
+
+@register(
+    "session_stats_events",
+    _SESSION_FLAG_SQL
+    + """, sessions AS (
       SELECT user_id, ts,
              SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx
@@ -406,17 +418,8 @@ def activity_streaks_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "concurrent_sessions_peak",
-    """
-    WITH ev AS (
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
-    ), flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
-                  THEN 1 ELSE 0 END AS is_new
-      FROM ev
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
+    _SESSION_FLAG_SQL
+    + """, numbered AS (
       -- (ts, event_id) ordering, matching the lag window: ts alone
       -- ties on same-timestamp events and the running sum would
       -- nondeterministically reassign session boundaries
@@ -1234,16 +1237,7 @@ def variant_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the legacy cost this type removes."""
     v = F.parse_json("props")
     k = F.variant_get(v, "$.k", "long")
-    return (
-        T(spark, sf_dir, "events")
-        .select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.round(F.avg("k"), 2).alias("avg_k"),
-        )
-    )
+    return _k_stats_by_event_type(spark, sf_dir, k)
 
 
 # --- interval-overlap join (no equality key) --------------------------------

@@ -1475,14 +1475,12 @@ kcenter_coreset_embeddings.__doc__ = kcenter_coreset_embeddings.__doc__.format(
 # is clipped before it can compound across rounds.
 _PCA_ITERS = 3
 _PCA_DIM = 64
-
-
-def _pca_oracle() -> str:
-    d = _PCA_DIM
-    sql = f"""
+# centered covariance (6-decimal clipped) and the constant start vector
+# v0 of both PCA oracles
+_PCA_COV_SQL = f"""
     WITH x AS (
       SELECT vec_id, t.i AS dim, CAST(embedding[t.i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, {d})) t(i)
+      FROM embeddings, UNNEST(generate_series(1, {_PCA_DIM})) t(i)
     ), mu AS (
       SELECT dim, ROUND(AVG(val), 6) AS m FROM x GROUP BY dim
     ), xc AS (
@@ -1491,8 +1489,12 @@ def _pca_oracle() -> str:
       SELECT a.dim AS i, b.dim AS j, ROUND(AVG(a.cv * b.cv), 6) AS c
       FROM xc a JOIN xc b ON a.vec_id = b.vec_id GROUP BY a.dim, b.dim
     ), v0 AS (
-      SELECT UNNEST(generate_series(1, {d})) AS dim, CAST(0.125 AS DOUBLE) AS v
+      SELECT UNNEST(generate_series(1, {_PCA_DIM})) AS dim, CAST(0.125 AS DOUBLE) AS v
     )"""
+
+
+def _pca_oracle() -> str:
+    sql = _PCA_COV_SQL
     for t in range(1, _PCA_ITERS + 1):
         sql += f""", u{t} AS (
       SELECT cov.i AS dim, SUM(cov.c * p.v) AS u
@@ -1720,21 +1722,7 @@ def _pca2_oracle() -> str:
     """Two components: the component-1 prefix is _pca_oracle's chain
     verbatim (same CTE names), then deflation C2 = C - l1 v1 v1^T
     (clipped to 6) and a second unrolled power iteration on C2."""
-    d = _PCA_DIM
-    sql = f"""
-    WITH x AS (
-      SELECT vec_id, t.i AS dim, CAST(embedding[t.i] AS DOUBLE) AS val
-      FROM embeddings, UNNEST(generate_series(1, {d})) t(i)
-    ), mu AS (
-      SELECT dim, ROUND(AVG(val), 6) AS m FROM x GROUP BY dim
-    ), xc AS (
-      SELECT vec_id, x.dim AS dim, val - m AS cv FROM x JOIN mu ON x.dim = mu.dim
-    ), cov AS MATERIALIZED (
-      SELECT a.dim AS i, b.dim AS j, ROUND(AVG(a.cv * b.cv), 6) AS c
-      FROM xc a JOIN xc b ON a.vec_id = b.vec_id GROUP BY a.dim, b.dim
-    ), v0 AS (
-      SELECT UNNEST(generate_series(1, {d})) AS dim, CAST(0.125 AS DOUBLE) AS v
-    )"""
+    sql = _PCA_COV_SQL
     for t in range(1, _PCA_ITERS + 1):
         sql += f""", u{t} AS (
       SELECT cov.i AS dim, SUM(cov.c * p.v) AS u
@@ -1752,7 +1740,7 @@ def _pca2_oracle() -> str:
       SELECT c.i AS i, c.j AS j, ROUND(c.c - lam1.ev * a.v * b.v, 6) AS c
       FROM cov c JOIN v{k} a ON c.i = a.dim JOIN v{k} b ON c.j = b.dim, lam1
     ), w0 AS (
-      SELECT UNNEST(generate_series(1, {d})) AS dim, CAST(0.125 AS DOUBLE) AS v
+      SELECT UNNEST(generate_series(1, {_PCA_DIM})) AS dim, CAST(0.125 AS DOUBLE) AS v
     )"""
     for t in range(1, _PCA_ITERS + 1):
         sql += f""", uw{t} AS (

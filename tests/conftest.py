@@ -16,3 +16,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark, sf_dir):
+    """Every registered lane built once per session: name -> (output
+    fields, executed-plan string), for the registry-wide plan and
+    schema tests. Earlier tests may leave cached relations
+    (operator-internal .cache()/localCheckpoint) whose
+    InMemoryRelation stats flip broadcast decisions, and may touch the
+    broadcast threshold — both are reset before the build so the
+    plans are deterministic."""
+    from etl_orders_spark.plans.registry import query_map
+
+    spark.catalog.clearCache()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    built = {}
+    for name, builder in query_map().items():
+        df = builder(spark, sf_dir)
+        built[name] = (df.schema.fields, df._jdf.queryExecution().executedPlan().toString())
+    yield built

@@ -4,6 +4,8 @@ audit's live-scan counter on synthetic plan text."""
 
 from __future__ import annotations
 
+import pytest
+
 from etl_orders_spark.operators.materialize import _STAGE_CACHE, cache_stage
 
 
@@ -149,3 +151,12 @@ def test_const_rows_values_and_sameresult_stability(spark):
         spark.createDataFrame(rows, "name string, n long"),
     )  # documents WHY const_rows exists; if this ever starts passing,
     #    createDataFrame became canonicalizable and const_rows can go
+
+
+def test_const_rows_rejects_empty_rows(spark):
+    """An empty ``rows`` list raises a clear ValueError up front
+    instead of a later analysis error on the empty array."""
+    from etl_orders_spark.operators.materialize import const_rows
+
+    with pytest.raises(ValueError, match="rows is empty"):
+        const_rows(spark, [], [("name", "string")])

@@ -204,28 +204,17 @@ _BNLJ_ALLOWED = {
 }
 
 
-def test_no_query_plans_an_unvetted_nested_loop(spark, sf_dir):
+def test_no_query_plans_an_unvetted_nested_loop(registry_plans):
     """Fleet-wide scale net: every registered query's physical plan is
     free of CartesianProduct, and BroadcastNestedLoopJoin appears only
     in the audited constant-side cases above (and never more of them).
     A new query that accidentally plans an input x input nested loop
     fails here instead of at 100 TB."""
-    from etl_orders_spark.plans.registry import query_map
-
-    # self-sufficient plan environment: earlier tests may leave cached
-    # relations (operator-internal .cache()/localCheckpoint) whose
-    # InMemoryRelation stats flip broadcast decisions, and may touch
-    # the broadcast threshold — reset both so plans are deterministic
-    spark.catalog.clearCache()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
     from pyspark.sql import types as T
 
     offenders = {}
     nonscalar = {}
-    for name, builder in query_map().items():
-        df = builder(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+    for name, (fields, plan) in registry_plans.items():
         cart = plan.count("CartesianProduct")
         bnlj = plan.count("BroadcastNestedLoopJoin")
         if cart or bnlj > _BNLJ_ALLOWED.get(name, 0):
@@ -235,7 +224,7 @@ def test_no_query_plans_an_unvetted_nested_loop(spark, sf_dir):
         # cannot sort them (round-2 lost two window slots to this)
         cols = [
             f.name
-            for f in df.schema.fields
+            for f in fields
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.BinaryType))
         ]
         if cols:
@@ -256,21 +245,16 @@ def test_no_query_plans_an_unvetted_nested_loop(spark, sf_dir):
 _GLOBAL_WINDOW_ALLOWED: dict[str, int] = {}
 
 
-def test_no_query_plans_an_unvetted_global_window(spark, sf_dir):
+def test_no_query_plans_an_unvetted_global_window(registry_plans):
     """Fleet-wide scale net #2: no registered query funnels a
     data-growing grain through a single-partition Window. Every
     partition-less window spec must either order by the two-pass
     rank's _tpr_pid (a P-row offsets table) or appear in the audited
     bounded-grain allowlist above — and never more of them."""
-    from etl_orders_spark.plans.registry import query_map
     from etl_orders_spark.sql import count_global_windows
 
-    spark.catalog.clearCache()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
     offenders = {}
-    for name, builder in query_map().items():
-        plan = builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, (_, plan) in registry_plans.items():
         n = count_global_windows(plan)
         if n > _GLOBAL_WINDOW_ALLOWED.get(name, 0):
             offenders[name] = n

@@ -90,14 +90,13 @@ def test_bench_set_nonempty_and_registered():
     assert set(benched) <= set(query_map())
 
 
-def test_spark_and_oracle_schemas_agree(spark, sf_dir, duck):
+def test_spark_and_oracle_schemas_agree(registry_plans, duck):
     """Analysis-time check: Spark plan columns == oracle columns for
     every SQL-paired query (the driver sorts by name before hashing)."""
-    q = query_map()
     o = oracle_map()
     mismatches = {}
     for name, sql in o.items():
-        spark_cols = sorted(q[name](spark, sf_dir).columns)
+        spark_cols = sorted(f.name for f in registry_plans[name][0])
         cur = duck.execute(f"SELECT * FROM ({sql}) LIMIT 0")
         oracle_cols = sorted(d[0] for d in cur.description)
         if spark_cols != oracle_cols:
@@ -105,10 +104,10 @@ def test_spark_and_oracle_schemas_agree(spark, sf_dir, duck):
     assert not mismatches, f"schema drift: {mismatches}"
 
 
-def test_no_duplicate_output_columns(spark, sf_dir):
+def test_no_duplicate_output_columns(registry_plans):
     dupes = {}
-    for name, builder in query_map().items():
-        cols = builder(spark, sf_dir).columns
+    for name, (fields, _) in registry_plans.items():
+        cols = [f.name for f in fields]
         if len(cols) != len(set(cols)):
             dupes[name] = cols
     assert not dupes, f"ambiguous output columns: {dupes}"

@@ -1,15 +1,18 @@
-"""Single-lane optimization probe (round 11): time one or more
-registered lanes in isolation through the noop sink (guide §1.4) and
+"""Lane probe: time one or more registered lanes in isolation through
+the noop sink (guide §1.4) at one or more scale-factor directories
+(e.g. the RI-preserving replicas from tools/make_replica.py), and
 optionally dump .explain("formatted") to a file — the measure-first
-loop for the optimization rounds.
+loop for the optimization rounds and the replica scale probes.
 
 Usage:
-    python tools/probe_lane.py LANE [LANE ...] [--sf DIR] [--reps N]
-        [--explain-dir DIR] [--suffix before|after] [--cold-only]
+    python tools/probe_lane.py LANE [LANE ...] --sf DIR [DIR ...]
+        [--reps N] [--explain-dir DIR] [--suffix before|after]
+        [--explain-only]
 
-Prints per lane: cold (first run, caches cleared) and warm
-(best-of-reps after cold). clearCache before the cold run keeps the
-stage caches honest, mirroring bench.py's recorded semantics.
+Prints per directory and lane: cold (first run, caches cleared), warm
+(best-of-reps after cold) and the output row count (one untimed
+count() after the timed runs). clearCache before the cold run keeps
+the stage caches honest, mirroring bench.py's recorded semantics.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ sys.path.insert(0, REPO)
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("lanes", nargs="+")
-    ap.add_argument("--sf", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf", nargs="+", required=True, metavar="DIR")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--explain-dir", default=None)
     ap.add_argument("--suffix", default=None)
@@ -37,37 +40,44 @@ def main() -> int:
     from etl_orders_spark.session import get_spark
 
     spark = get_spark("probe_lane")
-    spark.read.parquet(os.path.join(args.sf, "region.parquet")).count()
     q = query_map()
-    for lane in args.lanes:
-        builder = q[lane]
-        if args.explain_dir:
-            os.makedirs(args.explain_dir, exist_ok=True)
-            tag = f"_{args.suffix}" if args.suffix else ""
-            path = os.path.join(args.explain_dir, f"{lane}{tag}.txt")
-            plan = builder(spark, args.sf)._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+    for sf_dir in args.sf:
+        spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+        for lane in args.lanes:
+            builder = q[lane]
+            if args.explain_dir:
+                os.makedirs(args.explain_dir, exist_ok=True)
+                tag = f"_{args.suffix}" if args.suffix else ""
+                path = os.path.join(args.explain_dir, f"{lane}{tag}.txt")
+                plan = builder(spark, sf_dir)._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
                 )
-            )
-            with open(path, "w") as f:
-                f.write(plan)
-            print(f"# explain -> {path}", file=sys.stderr)
-        if args.explain_only:
-            continue
-        spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"probe:{lane}:cold")
-        t0 = time.time()
-        builder(spark, args.sf).write.format("noop").mode("overwrite").save()
-        cold = time.time() - t0
-        best = None
-        for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"probe:{lane}:warm{i}")
+                with open(path, "w") as f:
+                    f.write(plan)
+                print(f"# explain -> {path}", file=sys.stderr)
+            if args.explain_only:
+                continue
+            spark.catalog.clearCache()
+            spark.sparkContext.setJobDescription(f"probe:{lane}:cold")
             t0 = time.time()
-            builder(spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        print(f"{lane}: cold={cold:.3f}s warm={best:.3f}s")
+            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            cold = time.time() - t0
+            best = None
+            for i in range(args.reps):
+                spark.sparkContext.setJobDescription(f"probe:{lane}:warm{i}")
+                t0 = time.time()
+                builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
+                best = dt if best is None else min(best, dt)
+            spark.sparkContext.setJobDescription(f"probe:{lane}:rows")
+            rows = builder(spark, sf_dir).count()
+            print(
+                f"{os.path.basename(sf_dir)} {lane}: cold={cold:.3f}s warm={best:.3f}s"
+                f" rows={rows}",
+                flush=True,
+            )
     return 0
 
 

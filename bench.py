@@ -14,7 +14,8 @@ the driver unable to compare per-query round-over-round (PERF_r11
 per_query: {}, VERDICT r11 #2). The resolution: the final line folds
 the map back in at 2-DECIMAL precision with compact separators
 (61 lanes ≈ 1.86 KB < 2 KB) behind an explicit byte-budget guard that
-degrades precision rather than overflowing; full 3-decimal values
+degrades precision, and as a last resort drops the map, rather than
+overflowing (``final_line``); full 3-decimal values
 stay on their own preceding line and in the ``bench_cold.json``
 sidecar. Existing queries are never removed or renamed.
 
@@ -38,6 +39,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+
+# The final line is parsed from a 2000 B tail capture; it stays inside it.
+LINE_BUDGET = 1985
 
 # Lanes with a STANDING isolation record (VERDICT r8 #2): re-measured
 # in isolation at the end of every recorded run regardless of ratios,
@@ -70,6 +74,42 @@ def _calibration_probe(spark) -> float:
     return round(min(run() for _ in range(3)), 3)
 
 
+def final_line(timings: dict[str, float], total: float, sf: float) -> str:
+    """The FINAL line, parsed from the run's output tail. Its declared
+    contract is ONE JSON line {"metric", "value", "unit", "queries":
+    {name: sec}, "sf"} — round 11's layout kept the per-lane map on a
+    preceding line and the record came out per_query: {} / n_common: 0
+    (PERF_r11.json), so round-over-round per-lane comparison was
+    impossible (VERDICT r11 #2). Folded back in COMPACTLY: 2-decimal
+    values, ascending by time, compact separators — 61 lanes ≈ 1.86
+    KB, inside the ~2 KB tail capture that round 5's full-precision
+    combined line blew (VERDICT r5 #1). Budget-guarded: while the line
+    outgrows LINE_BUDGET, values >= 10 s, then >= 1 s, then all
+    degrade to 1 decimal; if even that does not fit, the last tier
+    drops the queries map and keeps the headline (metric, value, unit,
+    sf, lanes), warning loudly. Measurement semantics are unchanged —
+    the full 3-decimal values stay on the warm line and in
+    bench_cold.json."""
+    head = {"metric": "bench_total_sec", "value": total, "unit": "sec", "sf": sf,
+            "lanes": len(timings)}
+    ordered = sorted(timings.items(), key=lambda kv: kv[1])
+    for degrade in (None, 10.0, 1.0, 0.0):
+        q = {
+            k: (round(v, 1) if degrade is not None and v >= degrade else round(v, 2))
+            for k, v in ordered
+        }
+        line = json.dumps({**head, "queries": q}, separators=(",", ":"))
+        if len(line) <= LINE_BUDGET:
+            return line
+    print(
+        f"WARNING: final line {len(line)}B exceeds the ~2KB tail "
+        "capture even at 1-decimal precision; the queries map is dropped "
+        "from it (the warm line and bench_cold.json keep every lane)",
+        file=sys.stderr,
+    )
+    return json.dumps(head, separators=(",", ":"))
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -98,11 +138,6 @@ def main() -> int:
     # convergence tail that best-of-2 kept landing on
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
-    # A/B knob (SCALE.md round-8 warm A/B): "1" restores the pre-r7
-    # semantics where a lane's cold rep rides caches earlier lanes
-    # built. NEVER set for recorded benches — cold stops meaning cold.
-    keepcache = os.environ.get("SPARK_GRAFT_BENCH_KEEPCACHE", "0") == "1"
-
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name, builder in bench_queries().items():
@@ -113,8 +148,7 @@ def main() -> int:
             # earlier lane pre-fills a later lane's input cache and the
             # recorded cold silently measures warm-cache reads. Clearing
             # here keeps cold honest; the warm reps below repopulate.
-            if not keepcache:
-                spark.catalog.clearCache()
+            spark.catalog.clearCache()
             t0 = time.time()
             builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold[name] = round(time.time() - t0, 3)
@@ -136,7 +170,7 @@ def main() -> int:
     # neighborhood has settled; a flagged lane whose isolated number
     # sits at baseline is box/JIT weather, not a plan change.
     isolation: dict[str, float] = {}
-    if warmup and not keepcache:
+    if warmup:
         flagged = set(n for n in STANDING_ISOLATION if n in timings)
         try:
             import subprocess
@@ -197,10 +231,9 @@ def main() -> int:
                           if k not in ("queries_warm", "warm_total_sec")}))
     # the sidecar is the round-over-round regression BASELINE
     # (tools/cold_report.py): only a recorded-semantics run may refresh
-    # it — a no-warmup run has no cold column and a keepcache A/B cell
-    # has cache-riding (dishonest) cold values; either would clobber
-    # the baseline and turn the >1.5x gate vacuous
-    if cold and not keepcache:
+    # it — a no-warmup run has no cold column, which would clobber the
+    # baseline and turn the >1.5x gate vacuous
+    if cold:
         try:
             with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                    "bench_cold.json"), "w") as f:
@@ -226,45 +259,7 @@ def main() -> int:
         {"metric": "bench_meta", "calibration_sec": calibration,
          "isolation_warm": isolation}
     ))
-    # FINAL line: the declared driver contract is ONE JSON line
-    # {"metric", "value", "unit", "queries": {name: sec}, "sf"} — round
-    # 11's layout kept the per-lane map on a preceding line and the
-    # driver recorded per_query: {} / n_common: 0 (PERF_r11.json), so
-    # round-over-round per-lane comparison was impossible (VERDICT r11
-    # #2). Folded back in COMPACTLY: 2-decimal values, ascending by
-    # time, compact separators — 61 lanes ≈ 1.86 KB, inside the ~2 KB
-    # tail capture that round 5's full-precision combined line blew
-    # (VERDICT r5 #1). Budget-guarded: if the line ever outgrows
-    # 1985 B (the capture is 2000 B), values >= 1 s degrade to 1
-    # decimal before any precision is taken from the sub-second lanes,
-    # and the overflow is warned loudly. Measurement semantics are
-    # unchanged — same timings dict, the full 3-decimal values stay on
-    # the warm line above and in bench_cold.json.
-    line = None
-    for degrade in (None, 10.0, 1.0, 0.0):
-        q = {
-            k: (round(v, 1) if degrade is not None and v >= degrade else round(v, 2))
-            for k, v in sorted(timings.items(), key=lambda kv: kv[1])
-        }
-        out = {
-            "metric": "bench_total_sec",
-            "value": total,
-            "unit": "sec",
-            "sf": sf,
-            "lanes": len(timings),
-            "queries": q,
-        }
-        line = json.dumps(out, separators=(",", ":"))
-        if len(line) <= 1985:
-            break
-    if len(line) > 1985:
-        print(
-            f"WARNING: final line {len(line)}B exceeds the ~2KB driver tail "
-            "capture even at 1-decimal precision; the parsed line will clip — "
-            "shrink the queries map",
-            file=sys.stderr,
-        )
-    print(line)
+    print(final_line(timings, total, sf))
     return 0
 
 

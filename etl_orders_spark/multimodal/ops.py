@@ -20,19 +20,18 @@ so the closures below may call it on bare-session workers.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_orders_spark.multimodal.codecs import decode_image as _decode_image
+from etl_orders_spark.multimodal.codecs import decode_wav as _decode_wav
+from etl_orders_spark.multimodal.codecs import decode_y4m as _decode_y4m
 from etl_orders_spark.multimodal.codecs import dhash64 as _dhash64
 from etl_orders_spark.multimodal.codecs import resize_nearest as _resize_nearest
 from etl_orders_spark.multimodal.codecs import sniff_format as _sniff_format
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from etl_orders_spark.operators.grouped_map import map_rows
 
 
 MEDIA_STATS_SCHEMA = (
@@ -45,26 +44,16 @@ def media_stats(media: DataFrame) -> DataFrame:
     value, Shannon entropy of the byte histogram. Deterministic and
     codec-free — the feature-store stage of a media pipeline."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def row(mid, kind, content):
+        arr = np.frombuffer(content, dtype=np.uint8)
+        if arr.size == 0:
+            return [(mid, kind, 0, 0.0, 0.0)]
+        hist = np.bincount(arr, minlength=256).astype(np.float64)
+        p = hist[hist > 0] / arr.size
+        entropy = float(-(p * np.log2(p)).sum())
+        return [(mid, kind, int(arr.size), float(arr.mean()), entropy)]
 
-        for pdf in it:
-            out = []
-            for mid, kind, content in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                arr = np.frombuffer(content, dtype=np.uint8)
-                if arr.size == 0:
-                    out.append((mid, kind, 0, 0.0, 0.0))
-                    continue
-                hist = np.bincount(arr, minlength=256).astype(np.float64)
-                p = hist[hist > 0] / arr.size
-                entropy = float(-(p * np.log2(p)).sum())
-                out.append((mid, kind, int(arr.size), float(arr.mean()), entropy))
-            yield pd.DataFrame(
-                out, columns=["media_id", "kind", "n_bytes", "mean_byte", "byte_entropy"]
-            )
-
-    return media.select("media_id", "kind", "content").mapInPandas(batches, MEDIA_STATS_SCHEMA)
+    return map_rows(media.select("media_id", "kind", "content"), row, MEDIA_STATS_SCHEMA)
 
 
 def media_fingerprints(media: DataFrame) -> DataFrame:
@@ -89,30 +78,19 @@ def decode_images(media: DataFrame, strict: bool = False) -> DataFrame:
     metadata-derived shape rows with decoded=false — keeping
     downstream plumbing exercisable on undecodable payloads."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content, w, h in zip(
-                pdf["media_id"], pdf["content"], pdf["width"], pdf["height"]
-            ):
-                if strict:
-                    arr = _decode_image(bytes(content))  # by-value pickled module
-                    ah, aw = arr.shape[:2]
-                    rows.append((mid, aw, ah, aw * ah, True))
-                    continue
-                w = int(w) if pd.notna(w) else 0
-                h = int(h) if pd.notna(h) else 0
-                rows.append((mid, w, h, w * h, False))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "width", "height", "n_pixels", "decoded"]
-            )
+    def row(mid, content, w, h):
+        if strict:
+            arr = _decode_image(bytes(content))  # by-value pickled module
+            ah, aw = arr.shape[:2]
+            return [(mid, aw, ah, aw * ah, True)]
+        w = int(w) if pd.notna(w) else 0
+        h = int(h) if pd.notna(h) else 0
+        return [(mid, w, h, w * h, False)]
 
     imgs = media.filter(F.col("kind") == "image").select(
         "media_id", "content", F.col("meta.width").alias("width"), F.col("meta.height").alias("height")
     )
-    return imgs.mapInPandas(batches, DECODED_SCHEMA)
+    return map_rows(imgs, row, DECODED_SCHEMA)
 
 
 PIXEL_FEATURES_SCHEMA = (
@@ -130,31 +108,17 @@ def pixel_features(media: DataFrame) -> DataFrame:
     channel sums happen per Arrow batch; only the narrow feature row
     crosses back."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                raw = bytes(content)
-                arr = _decode_image(raw)  # by-value pickled module
-                h, w = arr.shape[:2]
-                s = arr.astype("int64").sum(axis=(0, 1))  # (sum_r, sum_g, sum_b)
-                n = w * h
-                mean_milli = int(s.sum()) * 1000 // (3 * n)
-                rows.append(
-                    (mid, _sniff_format(raw), w, h, n, int(s[0]), int(s[1]), int(s[2]), mean_milli)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "fmt", "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "mean_rgb_milli",
-                ],
-            )
+    def row(mid, content):
+        raw = bytes(content)
+        arr = _decode_image(raw)  # by-value pickled module
+        h, w = arr.shape[:2]
+        s = arr.astype("int64").sum(axis=(0, 1))  # (sum_r, sum_g, sum_b)
+        n = w * h
+        mean_milli = int(s.sum()) * 1000 // (3 * n)
+        return [(mid, _sniff_format(raw), w, h, n, int(s[0]), int(s[1]), int(s[2]), mean_milli)]
 
     imgs = media.filter(F.col("kind") == "image").select("media_id", "content")
-    return imgs.mapInPandas(batches, PIXEL_FEATURES_SCHEMA)
+    return map_rows(imgs, row, PIXEL_FEATURES_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -175,41 +139,17 @@ def audio_features(media: DataFrame) -> DataFrame:
     boundary between unrelated channels would register phantom
     crossings (ADVICE r4). Amplitude sums/peaks flatten across
     channels (order-free, so interleaving is irrelevant there)."""
-    from etl_orders_spark.multimodal.codecs import decode_wav as _decode_wav
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, rate = _decode_wav(bytes(content))  # (n, channels)
-                flat = samples.reshape(-1).astype(np.int64)
-                neg = samples < 0  # (n, channels)
-                zc = (
-                    int((neg[1:] != neg[:-1]).sum()) if samples.shape[0] > 1 else 0
-                )
-                rows.append(
-                    (
-                        mid,
-                        rate,
-                        int(flat.size),
-                        int(np.abs(flat).sum()),
-                        int(np.abs(flat).max()) if flat.size else 0,
-                        zc,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "n_samples", "sum_abs",
-                    "peak", "zero_crossings",
-                ],
-            )
+    def row(mid, content):
+        samples, rate = _decode_wav(bytes(content))  # (n, channels)
+        flat = samples.reshape(-1).astype(np.int64)
+        neg = samples < 0  # (n, channels)
+        zc = int((neg[1:] != neg[:-1]).sum()) if samples.shape[0] > 1 else 0
+        peak = int(np.abs(flat).max()) if flat.size else 0
+        return [(mid, rate, int(flat.size), int(np.abs(flat).sum()), peak, zc)]
 
     clips = media.filter(F.col("kind") == "audio").select("media_id", "content")
-    return clips.mapInPandas(batches, AUDIO_FEATURES_SCHEMA)
+    return map_rows(clips, row, AUDIO_FEATURES_SCHEMA)
 
 
 FRAME_STATS_SCHEMA = (
@@ -227,30 +167,18 @@ def video_frame_stats(media: DataFrame, every_n: int = 2, max_frames: int = 8) -
     ceil(n_frames / every_n) output rows, streamed through Arrow
     batches, never the driver. Compressed containers raise the honest
     codec gate from decode_y4m."""
-    from etl_orders_spark.multimodal.codecs import decode_y4m as _decode_y4m
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                frames, _ = _decode_y4m(bytes(content))
-                nf, h, w = frames.shape
-                for idx in list(range(0, nf, every_n))[:max_frames]:
-                    luma = frames[idx].astype("int64")
-                    s = int(luma.sum())
-                    rows.append((mid, idx, nf, w, h, s, s * 1000 // (w * h)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames", "width", "height",
-                    "sum_luma", "mean_luma_milli",
-                ],
-            )
+    def row(mid, content):
+        frames, _ = _decode_y4m(bytes(content))
+        nf, h, w = frames.shape
+        rows = []
+        for idx in list(range(0, nf, every_n))[:max_frames]:
+            s = int(frames[idx].astype("int64").sum())
+            rows.append((mid, idx, nf, w, h, s, s * 1000 // (w * h)))
+        return rows
 
     vids = media.filter(F.col("kind") == "video").select("media_id", "content")
-    return vids.mapInPandas(batches, FRAME_STATS_SCHEMA)
+    return map_rows(vids, row, FRAME_STATS_SCHEMA)
 
 
 DHASH_SCHEMA = "media_id long, dhash_hi long, dhash_lo long"
@@ -270,20 +198,12 @@ def dhash_images(media: DataFrame) -> DataFrame:
     per-pixel maps — which is what lets the DuckDB oracle re-derive
     every bit from the generator's pixel law."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = _decode_image(bytes(content))
-                gray = arr.astype("int64").sum(axis=2) // 3
-                hi, lo = _dhash64(gray)
-                rows.append((mid, hi, lo))
-            yield pd.DataFrame(rows, columns=["media_id", "dhash_hi", "dhash_lo"])
+    def row(mid, content):
+        gray = _decode_image(bytes(content)).astype("int64").sum(axis=2) // 3
+        return [(mid, *_dhash64(gray))]
 
     imgs = media.filter(F.col("kind") == "image").select("media_id", "content")
-    return imgs.mapInPandas(batches, DHASH_SCHEMA)
+    return map_rows(imgs, row, DHASH_SCHEMA)
 
 
 DHASH_STATS_SCHEMA = (
@@ -302,27 +222,13 @@ def dhash_pixel_stats(media: DataFrame) -> DataFrame:
     downstream is all-integer (n*sumsq - sum^2 > 0), so the quality
     gate mirrors into SQL with no FP."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                arr = _decode_image(bytes(content))
-                gray = arr.astype("int64").sum(axis=2) // 3
-                hi, lo = _dhash64(gray)
-                rows.append(
-                    (mid, hi, lo, int(gray.size), int(gray.sum()),
-                     int((gray * gray).sum()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "dhash_hi", "dhash_lo",
-                         "n_pixels", "sum_gray", "sumsq_gray"],
-            )
+    def row(mid, content):
+        gray = _decode_image(bytes(content)).astype("int64").sum(axis=2) // 3
+        hi, lo = _dhash64(gray)
+        return [(mid, hi, lo, int(gray.size), int(gray.sum()), int((gray * gray).sum()))]
 
     imgs = media.filter(F.col("kind") == "image").select("media_id", "content")
-    return imgs.mapInPandas(batches, DHASH_STATS_SCHEMA)
+    return map_rows(imgs, row, DHASH_STATS_SCHEMA)
 
 
 FRAME_DHASH_SCHEMA = "media_id long, frame_idx long, dhash_hi long, dhash_lo long"
@@ -345,31 +251,20 @@ def video_frame_dhash_stats(
     the all-integer static-clip gate (min over frames of
     n*sumsq - sum^2 > 0), so the whole quality semantics mirror into
     SQL with no FP."""
-    from etl_orders_spark.multimodal.codecs import decode_y4m as _decode_y4m
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                frames, _ = _decode_y4m(bytes(content))
-                nf = frames.shape[0]
-                for idx in list(range(0, nf, every_n))[:max_frames]:
-                    luma = frames[idx].astype("int64")
-                    hi, lo = _dhash64(luma)
-                    rows.append(
-                        (mid, idx, hi, lo, int(luma.size), int(luma.sum()),
-                         int((luma * luma).sum()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "dhash_hi", "dhash_lo",
-                         "n_pixels", "sum_luma", "sumsq_luma"],
+    def row(mid, content):
+        frames, _ = _decode_y4m(bytes(content))
+        rows = []
+        for idx in list(range(0, frames.shape[0], every_n))[:max_frames]:
+            luma = frames[idx].astype("int64")
+            hi, lo = _dhash64(luma)
+            rows.append(
+                (mid, idx, hi, lo, int(luma.size), int(luma.sum()), int((luma * luma).sum()))
             )
+        return rows
 
     vids = media.filter(F.col("kind") == "video").select("media_id", "content")
-    return vids.mapInPandas(batches, FRAME_DHASH_STATS_SCHEMA)
+    return map_rows(vids, row, FRAME_DHASH_STATS_SCHEMA)
 
 
 def video_frame_dhash(
@@ -384,25 +279,16 @@ def video_frame_dhash(
     stage of video near-dup — one row per sampled frame, 2 longs each,
     streamed through Arrow batches; a billion-video corpus's dedup
     state is a few hundred GB spread over the fleet, never pixels."""
-    from etl_orders_spark.multimodal.codecs import decode_y4m as _decode_y4m
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                frames, _ = _decode_y4m(bytes(content))
-                nf = frames.shape[0]
-                for idx in list(range(0, nf, every_n))[:max_frames]:
-                    hi, lo = _dhash64(frames[idx].astype("int64"))
-                    rows.append((mid, idx, hi, lo))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "dhash_hi", "dhash_lo"]
-            )
+    def row(mid, content):
+        frames, _ = _decode_y4m(bytes(content))
+        return [
+            (mid, idx, *_dhash64(frames[idx].astype("int64")))
+            for idx in list(range(0, frames.shape[0], every_n))[:max_frames]
+        ]
 
     vids = media.filter(F.col("kind") == "video").select("media_id", "content")
-    return vids.mapInPandas(batches, FRAME_DHASH_SCHEMA)
+    return map_rows(vids, row, FRAME_DHASH_SCHEMA)
 
 
 FRAME_SCHEMA = "media_id long, frame_idx int, frame_ms long, frame_bytes binary"
@@ -416,23 +302,17 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 32) 
     scale, so it must stream through Arrow batches, never the driver).
     """
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content, dur in zip(pdf["media_id"], pdf["content"], pdf["duration_ms"]):
-                n = min(int(dur) // every_ms + 1, max_frames) if pd.notna(dur) else 0
-                step = max(1, len(content) // max(n, 1))
-                for i in range(n):
-                    sl = content[i * step : i * step + 16]
-                    rows.append((mid, i, i * every_ms, bytes(sl)))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_ms", "frame_bytes"])
+    def row(mid, content, dur):
+        n = min(int(dur) // every_ms + 1, max_frames) if pd.notna(dur) else 0
+        step = max(1, len(content) // max(n, 1))
+        return [
+            (mid, i, i * every_ms, bytes(content[i * step : i * step + 16])) for i in range(n)
+        ]
 
     vids = media.filter(F.col("kind") == "video").select(
         "media_id", "content", F.col("meta.duration_ms").alias("duration_ms")
     )
-    return vids.mapInPandas(batches, FRAME_SCHEMA)
+    return map_rows(vids, row, FRAME_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -460,45 +340,32 @@ def resize_images(media: DataFrame, max_side: int = 64, strict: bool = False) ->
     target pixel count (clearly fake pixels, real Arrow batch shape
     and memory profile), resized=false."""
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def geometry(w: int, h: int) -> tuple[int, int]:
+        if max(w, h) <= max_side:
+            return w, h
+        if w >= h:
+            return max_side, max(1, (h * max_side) // w)
+        return max(1, (w * max_side) // h), max_side
 
-        def geometry(w: int, h: int) -> tuple[int, int]:
-            if max(w, h) <= max_side:
-                return w, h
-            if w >= h:
-                return max_side, max(1, (h * max_side) // w)
-            return max(1, (w * max_side) // h), max_side
-
-        for pdf in it:
-            rows = []
-            for mid, content, w, h in zip(
-                pdf["media_id"], pdf["content"], pdf["width"], pdf["height"]
-            ):
-                if strict:
-                    arr = _decode_image(bytes(content))  # by-value pickled module
-                    ah, aw = arr.shape[:2]
-                    ow, oh = geometry(aw, ah)
-                    thumb = _resize_nearest(arr, ow, oh)
-                    rows.append((mid, aw, ah, ow, oh, True, thumb.tobytes()))
-                    continue
-                # null metadata dims plan as 0x0 (same pd.notna guard
-                # as decode_images — int(NaN) would kill the worker)
-                w = int(w) if pd.notna(w) else 0
-                h = int(h) if pd.notna(h) else 0
-                ow, oh = geometry(w, h)
-                arr = np.frombuffer(content, dtype=np.uint8)
-                n_out = max(1, ow * oh)
-                idx = (np.arange(n_out, dtype=np.int64) * max(arr.size, 1)) // n_out
-                thumb = arr[np.minimum(idx, max(arr.size - 1, 0))] if arr.size else np.zeros(
-                    n_out, dtype=np.uint8
-                )
-                rows.append((mid, w, h, ow, oh, False, thumb.tobytes()))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "src_w", "src_h", "out_w", "out_h", "resized", "thumb"],
-            )
+    def row(mid, content, w, h):
+        if strict:
+            arr = _decode_image(bytes(content))  # by-value pickled module
+            ah, aw = arr.shape[:2]
+            ow, oh = geometry(aw, ah)
+            thumb = _resize_nearest(arr, ow, oh)
+            return [(mid, aw, ah, ow, oh, True, thumb.tobytes())]
+        # null metadata dims plan as 0x0 (same pd.notna guard
+        # as decode_images — int(NaN) would kill the worker)
+        w = int(w) if pd.notna(w) else 0
+        h = int(h) if pd.notna(h) else 0
+        ow, oh = geometry(w, h)
+        arr = np.frombuffer(content, dtype=np.uint8)
+        n_out = max(1, ow * oh)
+        idx = (np.arange(n_out, dtype=np.int64) * max(arr.size, 1)) // n_out
+        thumb = arr[np.minimum(idx, max(arr.size - 1, 0))] if arr.size else np.zeros(
+            n_out, dtype=np.uint8
+        )
+        return [(mid, w, h, ow, oh, False, thumb.tobytes())]
 
     imgs = media.filter(F.col("kind") == "image").select(
         "media_id",
@@ -506,7 +373,7 @@ def resize_images(media: DataFrame, max_side: int = 64, strict: bool = False) ->
         F.col("meta.width").alias("width"),
         F.col("meta.height").alias("height"),
     )
-    return imgs.mapInPandas(batches, RESIZED_SCHEMA)
+    return map_rows(imgs, row, RESIZED_SCHEMA)
 
 SPECTRAL_SCHEMA = "media_id long, n_fft long, n_frames long, dominant_bin long"
 
@@ -524,27 +391,16 @@ def audio_spectral_features(media: DataFrame, n_fft: int = 256) -> DataFrame:
     the answer in closed form without computing an FFT). Clips shorter
     than one window emit n_frames = 0 and dominant_bin = -1 rather
     than a worker error."""
-    from etl_orders_spark.multimodal.codecs import decode_wav as _decode_wav
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                samples, _ = _decode_wav(bytes(content))  # (n, channels)
-                ch0 = samples[:, 0].astype(np.float64)
-                n_frames = ch0.size // n_fft
-                if n_frames == 0:
-                    rows.append((mid, n_fft, 0, -1))
-                    continue
-                frames = ch0[: n_frames * n_fft].reshape(n_frames, n_fft)
-                mag = np.abs(np.fft.rfft(frames, axis=1)).sum(axis=0)
-                rows.append((mid, n_fft, n_frames, int(mag.argmax())))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "n_fft", "n_frames", "dominant_bin"]
-            )
+    def row(mid, content):
+        samples, _ = _decode_wav(bytes(content))  # (n, channels)
+        ch0 = samples[:, 0].astype(np.float64)
+        n_frames = ch0.size // n_fft
+        if n_frames == 0:
+            return [(mid, n_fft, 0, -1)]
+        frames = ch0[: n_frames * n_fft].reshape(n_frames, n_fft)
+        mag = np.abs(np.fft.rfft(frames, axis=1)).sum(axis=0)
+        return [(mid, n_fft, n_frames, int(mag.argmax()))]
 
     clips = media.filter(F.col("kind") == "audio").select("media_id", "content")
-    return clips.mapInPandas(batches, SPECTRAL_SCHEMA)
+    return map_rows(clips, row, SPECTRAL_SCHEMA)

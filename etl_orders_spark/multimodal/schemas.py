@@ -8,18 +8,33 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# top-level (not lazy inside jpeg_media_bytes): that helper runs on
-# WORKERS via the _jpeg_rows batches body, where the package is
-# not importable — the module-level binding lets cloudpickle's
-# by-value registration carry the jpeg module along with this one
+# top-level (not lazy inside the generator bodies): those run on
+# WORKERS via the _media_rows row body, where the package is not
+# importable — the module-level bindings let cloudpickle's by-value
+# registration carry the codec modules along with this one
+from etl_orders_spark.multimodal.codecs import (
+    encode_bmp,
+    encode_gif,
+    encode_pgm,
+    encode_png,
+    encode_png_subbyte,
+    encode_ppm,
+    encode_wav,
+    encode_wav_adpcm_mono,
+    encode_wav_mulaw,
+    encode_y4m,
+)
 from etl_orders_spark.multimodal.jpeg import encode_jpeg as _encode_jpeg
 from etl_orders_spark.multimodal.jpeg import (
     encode_jpeg_progressive as _encode_jpeg_progressive,
 )
+from etl_orders_spark.multimodal.vp8l import encode_webp_lossless
+from etl_orders_spark.operators.grouped_map import map_rows
 
 MEDIA_META = T.StructType(
     [
@@ -55,6 +70,27 @@ def _gen_range(spark: SparkSession, start: int, n: int) -> DataFrame:
     parts = max(1, min(spark.sparkContext.defaultParallelism,
                        -(-n // _GEN_ROWS_PER_TASK)))
     return spark.range(start, start + n, numPartitions=parts)
+
+
+def _media_rows(
+    spark: SparkSession,
+    start: int,
+    n: int,
+    kind: str,
+    row_for: Callable[[int], tuple],
+) -> DataFrame:
+    """``kind`` rows for ids [start, start + n) from ``row_for(mid) ->
+    (content, format, width, height, sample_rate, duration_ms)``, built
+    per partition (a pure function of the id, so the output is
+    partition-invariant)."""
+    fields = MEDIA_META.names
+
+    def row(mid):
+        content, *meta = row_for(int(mid))
+        return [(int(mid), kind, content, dict(zip(fields, meta)))]
+
+    return map_rows(_gen_range(spark, start, n), row, MEDIA_SCHEMA)
+
 
 _KINDS = ("image", "audio", "video")
 _FORMATS = {"image": "png", "audio": "wav", "video": "mp4"}
@@ -106,6 +142,20 @@ def pixel_media_dims(media_id: int) -> tuple[int, int]:
     return 16 + media_id % 16, 12 + media_id % 8
 
 
+def _pixel_law(mid: int) -> tuple[np.ndarray, int, int]:
+    """(v, w, h): v = (7*id + 3*x + 5*y) % 256 as int64 over the
+    pixel_media_dims grid (rows y, columns x)."""
+    w, h = pixel_media_dims(mid)
+    y = np.arange(h, dtype=np.int64)[:, None]
+    x = np.arange(w, dtype=np.int64)[None, :]
+    return (7 * mid + 3 * x + 5 * y) % 256, w, h
+
+
+def _law_rgb(v: np.ndarray) -> np.ndarray:
+    """The distinct-channel RGB form of a pixel law v in 0..255."""
+    return np.stack([v, (v + 85) % 256, (v + 170) % 256], axis=-1).astype(np.uint8)
+
+
 def gen_pixel_media(spark: SparkSession, n: int = 120) -> DataFrame:
     """Deterministic DECODABLE media rows: real encoded images rotating
     through the three pure-Python containers (PPM / PGM / BMP,
@@ -126,74 +176,20 @@ def gen_pixel_media(spark: SparkSession, n: int = 120) -> DataFrame:
     mapInPandas (pure function of the id, so the output is partition-
     invariant); the codecs module pickles by value, so this runs on
     bare-session workers."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        v, w, h = _pixel_law(mid)
+        fmt = _PIXEL_FORMATS[mid % 3]
+        if fmt == "pgm":
+            content = encode_pgm(v.astype(np.uint8))
+        else:
+            content = (encode_ppm if fmt == "ppm" else encode_bmp)(_law_rgb(v))
+        return content, fmt, w, h, None, None
 
-    from etl_orders_spark.multimodal.codecs import encode_bmp, encode_pgm, encode_ppm
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, str, int, int]:
-            w, h = 16 + mid % 16, 12 + mid % 8  # pixel_media_dims, inlined
-            y = np.arange(h, dtype=np.int64)[:, None]
-            x = np.arange(w, dtype=np.int64)[None, :]
-            v = ((7 * mid + 3 * x + 5 * y) % 256).astype(np.uint8)
-            fmt = _PIXEL_FORMATS[mid % 3]
-            if fmt == "pgm":
-                return encode_pgm(v), fmt, w, h
-            rgb = np.stack([v, (v.astype(np.int64) + 85) % 256, (v.astype(np.int64) + 170) % 256], axis=2).astype(np.uint8)
-            return (encode_ppm(rgb) if fmt == "ppm" else encode_bmp(rgb)), fmt, w, h
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, fmt, w, h = content_for(int(mid))
-                meta = {
-                    "format": fmt,
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "image", row_for)
 
 
 WAV_RATE = 16000  # fixed sample rate shared with the SQL oracle
-
-
-def _wav_rows(
-    spark: SparkSession, n: int, content_for: Callable[[int], tuple[bytes, int]]
-) -> DataFrame:
-    """Audio rows for ids [0, n) from ``content_for(mid) -> (wav
-    bytes, n_samples)`` at WAV_RATE."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, ns = content_for(int(mid))
-                meta = {
-                    "format": "wav",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": WAV_RATE,
-                    "duration_ms": ns * 1000 // WAV_RATE,
-                }
-                rows.append((int(mid), "audio", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
 
 
 def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
@@ -208,17 +204,15 @@ def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
     generate_series, and a value-hash match on the audio features
     certifies the RIFF chunk walk, PCM decode, and the integer
     feature arithmetic end to end."""
-    from etl_orders_spark.multimodal.codecs import encode_wav
 
-    def content_for(mid: int) -> tuple[bytes, int]:
-        import numpy as np
-
+    def row_for(mid: int) -> tuple:
         ns = 800 + (mid % 8) * 100
         t = np.arange(ns, dtype=np.int64)
         s = ((((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 16) - 32768
-        return encode_wav(s.astype(np.int16), WAV_RATE), ns
+        content = encode_wav(s.astype(np.int16), WAV_RATE)
+        return content, "wav", None, None, WAV_RATE, ns * 1000 // WAV_RATE
 
-    return _wav_rows(spark, n, content_for)
+    return _media_rows(spark, 0, n, "audio", row_for)
 
 
 Y4M_W, Y4M_H, Y4M_FPS = 16, 12, 10  # fixed geometry shared with the SQL oracle
@@ -237,39 +231,17 @@ def gen_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
     with generate_series and a value-hash match certifies the stream
     parse (header tokens, FRAME markers, plane sizes) plus the
     per-frame feature arithmetic."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        nf = 4 + mid % 5
+        f = np.arange(nf, dtype=np.int64)[:, None, None]
+        y = np.arange(Y4M_H, dtype=np.int64)[None, :, None]
+        x = np.arange(Y4M_W, dtype=np.int64)[None, None, :]
+        v = (((mid * 53 + f * 17 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
+        content = encode_y4m(v.astype(np.uint8), (Y4M_FPS, 1))
+        return content, "y4m", Y4M_W, Y4M_H, None, nf * 1000 // Y4M_FPS
 
-    from etl_orders_spark.multimodal.codecs import encode_y4m
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int]:
-            nf = 4 + mid % 5
-            f = np.arange(nf, dtype=np.int64)[:, None, None]
-            y = np.arange(Y4M_H, dtype=np.int64)[None, :, None]
-            x = np.arange(Y4M_W, dtype=np.int64)[None, None, :]
-            v = (((mid * 53 + f * 17 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
-            return encode_y4m(v.astype(np.uint8), (Y4M_FPS, 1)), nf
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, nf = content_for(int(mid))
-                meta = {
-                    "format": "y4m",
-                    "width": Y4M_W,
-                    "height": Y4M_H,
-                    "sample_rate": None,
-                    "duration_ms": nf * 1000 // Y4M_FPS,
-                }
-                rows.append((int(mid), "video", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "video", row_for)
 
 
 NOISE_W, NOISE_H = 32, 24  # fixed dims shared with the SQL oracle
@@ -292,41 +264,20 @@ def gen_noise_media(spark: SparkSession, n: int = 100) -> DataFrame:
     Exact 64-bit integer arithmetic, closed form — the DuckDB oracle
     re-derives every pixel (and therefore every dHash bit) from this
     law. Fixed 32x24 PPM payloads."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        base = mid - 1 if mid % NOISE_CLONE_EVERY == NOISE_CLONE_EVERY - 1 else mid
+        y = np.arange(NOISE_H, dtype=np.int64)[:, None]
+        x = np.arange(NOISE_W, dtype=np.int64)[None, :]
+        v = (((base * 73 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
+        v = v.astype(np.int64)
+        if base != mid:  # planted clone: one perturbed pixel
+            v[0, 0] = (v[0, 0] + 128) % 256
+        g = v.astype(np.uint8)
+        content = encode_ppm(np.repeat(g[:, :, None], 3, axis=2))
+        return content, "ppm", NOISE_W, NOISE_H, None, None
 
-    from etl_orders_spark.multimodal.codecs import encode_ppm
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> bytes:
-            base = mid - 1 if mid % NOISE_CLONE_EVERY == NOISE_CLONE_EVERY - 1 else mid
-            y = np.arange(NOISE_H, dtype=np.int64)[:, None]
-            x = np.arange(NOISE_W, dtype=np.int64)[None, :]
-            v = (((base * 73 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
-            v = v.astype(np.int64)
-            if base != mid:  # planted clone: one perturbed pixel
-                v[0, 0] = (v[0, 0] + 128) % 256
-            g = v.astype(np.uint8)
-            return encode_ppm(np.repeat(g[:, :, None], 3, axis=2))
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                meta = {
-                    "format": "ppm",
-                    "width": NOISE_W,
-                    "height": NOISE_H,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content_for(int(mid)), meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "image", row_for)
 
 def gen_png_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
     """Deterministic REAL PNG rows: the gen_pixel_media RGB law
@@ -365,56 +316,29 @@ def gen_png_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFram
     Same dims law as gen_pixel_media (w 16..31, h 12..19); ``start``
     offsets the id range so a consumer can pool this family with
     others without key collisions."""
-    from collections.abc import Iterator
 
-    import pandas as pd
-
-    from etl_orders_spark.multimodal.codecs import encode_png, encode_png_subbyte
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int, int]:
-            w, h = 16 + mid % 16, 12 + mid % 8  # pixel_media_dims, inlined
-            y = np.arange(h, dtype=np.int64)[:, None]
-            x = np.arange(w, dtype=np.int64)[None, :]
-            v = (7 * mid + 3 * x + 5 * y) % 256
-            shape = mid % 9
-            if shape >= 4:
-                depth = {4: 4, 5: 2, 6: 1, 7: 4, 8: 2}[shape]
-                nc = 1 << depth
-                k = 255 // (nc - 1)
-                s = (v % nc).astype(np.uint8)
-                if shape == 8:  # sub-byte grayscale: no PLTE, color 0
-                    return encode_png_subbyte(s, depth), w, h
-                i = np.arange(nc, dtype=np.int64) * k
-                pal = np.stack([i, (i + 85) % 256, (i + 170) % 256], axis=1)
+    def row_for(mid: int) -> tuple:
+        v, w, h = _pixel_law(mid)
+        shape = mid % 9
+        if shape >= 4:
+            depth = {4: 4, 5: 2, 6: 1, 7: 4, 8: 2}[shape]
+            nc = 1 << depth
+            k = 255 // (nc - 1)
+            s = (v % nc).astype(np.uint8)
+            if shape == 8:  # sub-byte grayscale: no PLTE, color 0
+                png = encode_png_subbyte(s, depth)
+            else:
+                pal = _law_rgb(np.arange(nc, dtype=np.int64) * k)
                 png = encode_png_subbyte(
-                    s, depth, palette=pal.astype(np.uint8),
-                    interlace=1 if shape == 7 else 0,
+                    s, depth, palette=pal, interlace=1 if shape == 7 else 0
                 )
-                return png, w, h
-            rgb = np.stack([v, (v + 85) % 256, (v + 170) % 256], axis=2).astype(np.uint8)
+        else:
             depth = 16 if shape in (1, 3) else 8
             interlace = 1 if shape in (2, 3) else 0
-            return encode_png(rgb, depth=depth, interlace=interlace), w, h
+            png = encode_png(_law_rgb(v), depth=depth, interlace=interlace)
+        return png, "png", w, h, None, None
 
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "png",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "image", row_for)
 
 
 def jpeg_media_bytes(mid: int) -> tuple[bytes, int, int]:
@@ -422,8 +346,6 @@ def jpeg_media_bytes(mid: int) -> tuple[bytes, int, int]:
     Module-level so the in-memory generator and the file-staging
     binaryFile ingest lane (plans/media_queries.py) serve IDENTICAL
     bytes from one definition."""
-    import numpy as np
-
     encode_jpeg = _encode_jpeg  # module-top import; see header comment
 
     w, h = 16 + 8 * (mid % 3), 8 + 8 * (mid % 2)
@@ -449,65 +371,13 @@ def gen_flat_media(spark: SparkSession, n: int = 10, start: int = 5000) -> DataF
     pipeline must drop before perceptual dedup (flat images all dHash
     to 0 and would otherwise flood the band join with phantom
     near-dup pairs)."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        g = np.full((NOISE_H, NOISE_W), (mid * 37) % 256, np.uint8)
+        content = encode_ppm(np.repeat(g[:, :, None], 3, axis=2))
+        return content, "ppm", NOISE_W, NOISE_H, None, None
 
-    from etl_orders_spark.multimodal.codecs import encode_ppm
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                c = (int(mid) * 37) % 256
-                g = np.full((NOISE_H, NOISE_W), c, np.uint8)
-                content = encode_ppm(np.repeat(g[:, :, None], 3, axis=2))
-                meta = {
-                    "format": "ppm",
-                    "width": NOISE_W,
-                    "height": NOISE_H,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
-
-
-def _jpeg_rows(
-    spark: SparkSession,
-    start: int,
-    n: int,
-    content_for: Callable[[int], tuple[bytes, int, int]],
-) -> DataFrame:
-    """Image rows for ids [start, start + n) from ``content_for(mid) ->
-    (jpeg bytes, width, height)``."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "jpeg",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "image", row_for)
 
 
 def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
@@ -538,7 +408,12 @@ def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
     the color convert bit for bit (hand-built vectors in
     tests/test_jpeg.py additionally pin the decoder independent of
     the encoder)."""
-    return _jpeg_rows(spark, start, n, jpeg_media_bytes)
+
+    def row_for(mid: int) -> tuple:
+        content, w, h = jpeg_media_bytes(mid)
+        return content, "jpeg", w, h, None, None
+
+    return _media_rows(spark, start, n, "image", row_for)
 
 
 def jpeg_progressive_media_bytes(mid: int) -> tuple[bytes, int, int]:
@@ -547,8 +422,6 @@ def jpeg_progressive_media_bytes(mid: int) -> tuple[bytes, int, int]:
     one oracle CTE), but encoded as progressive SOF2 streams with the
     default spectral-selection + successive-approximation scan script
     — the web's dominant JPEG flavor (VERDICT r9 #2)."""
-    import numpy as np
-
     encode = _encode_jpeg_progressive  # module-top import; see header comment
 
     w, h = 16 + 8 * (mid % 3), 8 + 8 * (mid % 2)
@@ -581,7 +454,12 @@ def gen_jpeg_progressive_media(
     rasters, and in-scan restart markers (shape 3). Hand-built vectors
     in tests/test_jpeg_progressive.py pin the decoder independently of
     our encoder."""
-    return _jpeg_rows(spark, start, n, jpeg_progressive_media_bytes)
+
+    def row_for(mid: int) -> tuple:
+        content, w, h = jpeg_progressive_media_bytes(mid)
+        return content, "jpeg", w, h, None, None
+
+    return _media_rows(spark, start, n, "image", row_for)
 
 
 def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
@@ -607,48 +485,20 @@ def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
     vectors in tests/test_vp8l.py additionally pin the decoder
     independent of the encoder). Same dims law as gen_pixel_media
     (w 16..31, h 12..19); ``start`` offsets the ids for pooling."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        v, w, h = _pixel_law(mid)
+        kw = [
+            {},
+            {"subtract_green": True},
+            {"palette": True},
+            {"cache_bits": 8, "use_runs": True},
+            {"fixed_predictor": 11},
+            {"fixed_cte": (35, 210, 17)},
+        ][mid % 6]
+        return encode_webp_lossless(_law_rgb(v), **kw), "webp", w, h, None, None
 
-    from etl_orders_spark.multimodal.vp8l import encode_webp_lossless
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int, int]:
-            w, h = 16 + mid % 16, 12 + mid % 8
-            y = np.arange(h, dtype=np.int64)[:, None]
-            x = np.arange(w, dtype=np.int64)[None, :]
-            v = (7 * mid + 3 * x + 5 * y) % 256
-            rgb = np.stack([v, (v + 85) % 256, (v + 170) % 256], axis=2).astype(np.uint8)
-            shape = mid % 6
-            kw = [
-                {},
-                {"subtract_green": True},
-                {"palette": True},
-                {"cache_bits": 8, "use_runs": True},
-                {"fixed_predictor": 11},
-                {"fixed_cte": (35, 210, 17)},
-            ][shape]
-            return encode_webp_lossless(rgb, **kw), w, h
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "webp",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "image", row_for)
 
 
 def gen_adpcm_wav_media(spark: SparkSession, n: int = 40, start: int = 0) -> DataFrame:
@@ -668,43 +518,17 @@ def gen_adpcm_wav_media(spark: SparkSession, n: int = 40, start: int = 0) -> Dat
     reconstruction, both clamps, the low-nibble-first unpacking, and
     the header-sample emission against the public IMA spec with no
     shared code path."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        nn = 400 + (mid % 4) * 80
+        t = np.arange(nn, dtype=np.int64)
+        nib = (7 * mid + 11 * t) % 16
+        content = encode_wav_adpcm_mono(
+            nib, 8000, init_pred=(97 * mid) % 1024 - 512, init_index=(13 * mid) % 89
+        )
+        return content, "wav", None, None, 8000, (nn + 1) * 1000 // 8000
 
-    from etl_orders_spark.multimodal.codecs import encode_wav_adpcm_mono
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int]:
-            nn = 400 + (mid % 4) * 80
-            t = np.arange(nn, dtype=np.int64)
-            nib = (7 * mid + 11 * t) % 16
-            return (
-                encode_wav_adpcm_mono(
-                    nib, 8000, init_pred=(97 * mid) % 1024 - 512,
-                    init_index=(13 * mid) % 89,
-                ),
-                nn + 1,
-            )
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, ns = content_for(int(mid))
-                meta = {
-                    "format": "wav",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": 8000,
-                    "duration_ms": ns * 1000 // 8000,
-                }
-                rows.append((int(mid), "audio", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "audio", row_for)
 
 
 def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
@@ -720,17 +544,15 @@ def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
     arithmetically (codecs.mulaw_decode docstring). A value-hash match
     on the audio features therefore certifies the RIFF tag-7 chunk
     walk AND the mu-law expansion branch bit for bit."""
-    from etl_orders_spark.multimodal.codecs import encode_wav_mulaw
 
-    def content_for(mid: int) -> tuple[bytes, int]:
-        import numpy as np
-
+    def row_for(mid: int) -> tuple:
         ns = 800 + (mid % 8) * 100
         t = np.arange(ns, dtype=np.int64)
         b = (((mid * 1009 + t * 2399) * 2654435761) % (2**32)) >> 24
-        return encode_wav_mulaw(b.astype(np.uint8), WAV_RATE), ns
+        content = encode_wav_mulaw(b.astype(np.uint8), WAV_RATE)
+        return content, "wav", None, None, WAV_RATE, ns * 1000 // WAV_RATE
 
-    return _wav_rows(spark, n, content_for)
+    return _media_rows(spark, 0, n, "audio", row_for)
 
 
 VNOISE_FRAMES = 6  # frames per clip, shared with the SQL oracle
@@ -751,40 +573,19 @@ def gen_noise_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
     frames sit ~32 bits apart per frame (coin-flip neighbor bits).
     Exact 64-bit integer arithmetic, closed form: the DuckDB oracle
     re-derives every sampled frame's dHash bits from this law."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        base = mid - 1 if mid % NOISE_CLONE_EVERY == NOISE_CLONE_EVERY - 1 else mid
+        f = np.arange(VNOISE_FRAMES, dtype=np.int64)[:, None, None]
+        y = np.arange(NOISE_H, dtype=np.int64)[None, :, None]
+        x = np.arange(NOISE_W, dtype=np.int64)[None, None, :]
+        v = (((base * 73 + f * 29 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
+        if base != mid:  # planted clone: one perturbed pixel per frame
+            v[:, 0, 0] = (v[:, 0, 0] + 128) % 256
+        content = encode_y4m(v.astype(np.uint8))
+        return content, "y4m", NOISE_W, NOISE_H, None, VNOISE_FRAMES * 1000 // 30
 
-    from etl_orders_spark.multimodal.codecs import encode_y4m
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> bytes:
-            base = mid - 1 if mid % NOISE_CLONE_EVERY == NOISE_CLONE_EVERY - 1 else mid
-            f = np.arange(VNOISE_FRAMES, dtype=np.int64)[:, None, None]
-            y = np.arange(NOISE_H, dtype=np.int64)[None, :, None]
-            x = np.arange(NOISE_W, dtype=np.int64)[None, None, :]
-            v = (((base * 73 + f * 29 + x * 37 + y * 101) * 2654435761) % (2**32)) >> 24
-            if base != mid:  # planted clone: one perturbed pixel per frame
-                v[:, 0, 0] = (v[:, 0, 0] + 128) % 256
-            return encode_y4m(v.astype(np.uint8))
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                meta = {
-                    "format": "y4m",
-                    "width": NOISE_W,
-                    "height": NOISE_H,
-                    "sample_rate": None,
-                    "duration_ms": VNOISE_FRAMES * 1000 // 30,
-                }
-                rows.append((int(mid), "video", content_for(int(mid)), meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "video", row_for)
 
 
 def gen_flat_y4m_media(spark: SparkSession, n: int = 10, start: int = 6100) -> DataFrame:
@@ -794,34 +595,12 @@ def gen_flat_y4m_media(spark: SparkSession, n: int = 10, start: int = 6100) -> D
     — zero variance in every frame (the integer static-clip law
     n*sumsq - sum^2 == 0) and an all-zero dHash, the video analog of
     gen_flat_media's blank images."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        v = np.full((VNOISE_FRAMES, NOISE_H, NOISE_W), (mid * 37) % 256, np.uint8)
+        return encode_y4m(v), "y4m", NOISE_W, NOISE_H, None, VNOISE_FRAMES * 1000 // 30
 
-    from etl_orders_spark.multimodal.codecs import encode_y4m
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for rid in pdf["id"]:
-                mid = int(rid) + start
-                v = np.full(
-                    (VNOISE_FRAMES, NOISE_H, NOISE_W), (mid * 37) % 256, np.uint8
-                )
-                meta = {
-                    "format": "y4m",
-                    "width": NOISE_W,
-                    "height": NOISE_H,
-                    "sample_rate": None,
-                    "duration_ms": VNOISE_FRAMES * 1000 // 30,
-                }
-                rows.append((mid, "video", encode_y4m(v), meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "video", row_for)
 
 
 def gen_gif_media(spark: SparkSession, n: int = 100) -> DataFrame:
@@ -834,38 +613,13 @@ def gen_gif_media(spark: SparkSession, n: int = 100) -> DataFrame:
     exercises the decoder's reset path), ODD ids written INTERLACED so
     the 4-pass unweave is under the oracle too. Same dims law as
     gen_pixel_media."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        v, w, h = _pixel_law(mid)
+        content = encode_gif(v.astype(np.uint8), interlaced=bool(mid % 2))
+        return content, "gif", w, h, None, None
 
-    from etl_orders_spark.multimodal.codecs import encode_gif
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> tuple[bytes, int, int]:
-            w, h = 16 + mid % 16, 12 + mid % 8  # pixel_media_dims, inlined
-            y = np.arange(h, dtype=np.int64)[:, None]
-            x = np.arange(w, dtype=np.int64)[None, :]
-            v = ((7 * mid + 3 * x + 5 * y) % 256).astype(np.uint8)
-            return encode_gif(v, interlaced=bool(mid % 2)), w, h
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content, w, h = content_for(int(mid))
-                meta = {
-                    "format": "gif",
-                    "width": w,
-                    "height": h,
-                    "sample_rate": None,
-                    "duration_ms": None,
-                }
-                rows.append((int(mid), "image", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "image", row_for)
 
 TONE_N_FFT = 256  # analysis window, shared with the SQL oracle
 TONE_N_SAMPLES = 1024  # 4 full windows per clip
@@ -882,36 +636,15 @@ def gen_tone_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
     by construction (int16 quantization spreads only a ~-60 dB noise
     floor), which gives the FFT feature extractor a closed-form
     integer oracle without the oracle engine ever computing an FFT."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        k = 3 + mid % 40
+        t = np.arange(TONE_N_SAMPLES, dtype=np.float64)
+        s = np.round(18000.0 * np.sin(2.0 * np.pi * k * t / TONE_N_FFT))
+        content = encode_wav(s.astype(np.int16), WAV_RATE)
+        return content, "wav", None, None, WAV_RATE, TONE_N_SAMPLES * 1000 // WAV_RATE
 
-    from etl_orders_spark.multimodal.codecs import encode_wav
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        def content_for(mid: int) -> bytes:
-            k = 3 + mid % 40
-            t = np.arange(TONE_N_SAMPLES, dtype=np.float64)
-            s = np.round(18000.0 * np.sin(2.0 * np.pi * k * t / TONE_N_FFT))
-            return encode_wav(s.astype(np.int16), WAV_RATE)
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                meta = {
-                    "format": "wav",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": WAV_RATE,
-                    "duration_ms": TONE_N_SAMPLES * 1000 // WAV_RATE,
-                }
-                rows.append((int(mid), "audio", content_for(int(mid)), meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, 0, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, 0, n, "audio", row_for)
 
 
 def gen_silent_wav_media(spark: SparkSession, n: int = 10, start: int = 6000) -> DataFrame:
@@ -919,31 +652,12 @@ def gen_silent_wav_media(spark: SparkSession, n: int = 10, start: int = 6000) ->
     16-bit PCM (800 samples, mono 16 kHz) — the dead-air artifacts an
     audio-prep pipeline drops before spectral fingerprinting (a silent
     clip has no dominant bin; its spectrum argmax is meaningless)."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def row_for(mid: int) -> tuple:
+        content = encode_wav(np.zeros(800, np.int16), WAV_RATE)
+        return content, "wav", None, None, WAV_RATE, 800 * 1000 // WAV_RATE
 
-    from etl_orders_spark.multimodal.codecs import encode_wav
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["id"]:
-                content = encode_wav(np.zeros(800, np.int16), WAV_RATE)
-                meta = {
-                    "format": "wav",
-                    "width": None,
-                    "height": None,
-                    "sample_rate": WAV_RATE,
-                    "duration_ms": 800 * 1000 // WAV_RATE,
-                }
-                rows.append((int(mid), "audio", content, meta))
-            yield pd.DataFrame(rows, columns=["media_id", "kind", "content", "meta"])
-
-    return _gen_range(spark, start, n).mapInPandas(batches, MEDIA_SCHEMA)
+    return _media_rows(spark, start, n, "audio", row_for)
 
 
 try:  # pragma: no cover — exercised implicitly by worker-side generators

@@ -1,7 +1,9 @@
-"""Grouped-map pandas operators (`applyInPandas`): whole-group pandas
-functions — the literal Spark equivalent of the reference's
-whole-table pandas transforms (reference: dags/etl.py:48-66), scoped
-to one group per call so no single task ever holds the full table.
+"""Pandas operators: whole-group pandas functions (`applyInPandas`) —
+the literal Spark equivalent of the reference's whole-table pandas
+transforms (reference: dags/etl.py:48-66), scoped to one group per
+call so no single task ever holds the full table — and ``map_rows``,
+the one row-at-a-time `mapInPandas` batch loop the engine's Python
+row bodies share.
 
 Used only where group-local semantics genuinely need pandas; the
 native-expression twin should exist whenever the math is expressible
@@ -9,10 +11,12 @@ native-expression twin should exist whenever the math is expressible
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -55,3 +59,28 @@ def zscore_by_group_native(docs: DataFrame) -> DataFrame:
         "n_chars",
         F.when(sd == 0, F.lit(0.0)).otherwise((F.col("n_chars") - mu) / sd).alias("z"),
     )
+
+
+def map_rows(
+    df: DataFrame,
+    row_fn: Callable[..., Iterable[tuple]],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """Row-at-a-time Python over Arrow batches: ``row_fn(*row)`` gets
+    one input row's values in ``df``'s column order and returns the
+    list of output tuples for it (zero, one or many), laid out as
+    ``schema`` (a StructType or a DDL string, whose field names name
+    the output columns). The batch loop is a closure, so it pickles by
+    value with ``row_fn`` and the workers never import this package."""
+    names = (T.StructType.fromDDL(schema) if isinstance(schema, str) else schema).names
+
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import pandas as pd
+
+        for pdf in it:
+            rows = []
+            for row in zip(*(col for _, col in pdf.items())):
+                rows.extend(row_fn(*row))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema)

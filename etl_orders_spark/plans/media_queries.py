@@ -18,9 +18,7 @@ mapped nearest-neighbor resample, and the integer feature math).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,11 +30,9 @@ from etl_orders_spark.multimodal.ops import (
     sample_frames,
 )
 from etl_orders_spark.multimodal.schemas import gen_media, gen_pixel_media
+from etl_orders_spark.operators.grouped_map import map_rows
 from etl_orders_spark.plans.registry import register
 from etl_orders_spark.sources.readers import load_table as T
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 _N_PIXEL_MEDIA = 120  # fixture count shared by the Spark and SQL sides
 
@@ -611,23 +607,13 @@ def media_thumbnail_pixel_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_pixel_media(spark, _N_PIXEL_MEDIA), max_side=_THUMB_SIDE, strict=True
     )
 
-    def sums(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def sums(mid, ow, oh, thumb):
+        arr = np.frombuffer(bytes(thumb), dtype=np.uint8).reshape(-1, 3)
+        s = arr.astype("int64").sum(axis=0)
+        return [(mid, int(ow), int(oh), int(s[0]), int(s[1]), int(s[2]))]
 
-        for pdf in it:
-            rows = []
-            for mid, ow, oh, thumb in zip(
-                pdf["media_id"], pdf["out_w"], pdf["out_h"], pdf["thumb"]
-            ):
-                arr = np.frombuffer(bytes(thumb), dtype=np.uint8).reshape(-1, 3)
-                s = arr.astype("int64").sum(axis=0)
-                rows.append((mid, int(ow), int(oh), int(s[0]), int(s[1]), int(s[2])))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "out_w", "out_h", "sum_r", "sum_g", "sum_b"]
-            )
-
-    return thumbs.select("media_id", "out_w", "out_h", "thumb").mapInPandas(
+    return map_rows(
+        thumbs.select("media_id", "out_w", "out_h", "thumb"),
         sums,
         "media_id long, out_w int, out_h int, sum_r long, sum_g long, sum_b long",
     )

@@ -35,6 +35,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_orders_spark.operators.grouped_map import map_rows
+
 
 def _list_parquet_files(root: str) -> list[str]:
     """Leaf .parquet data files under root (a file, a flat directory,
@@ -74,34 +76,22 @@ def validate_parquet_files(spark: SparkSession, root: str) -> DataFrame:
         min(len(files), 64)
     )
 
-    def check(batches):  # closure: pickled by value
-        import os as _os
+    import pyarrow.parquet as pq
 
-        import pandas as pd
-        import pyarrow.parquet as pq
+    def check(p):  # closure: pickled by value
+        try:
+            size = os.path.getsize(p)
+        except OSError:
+            size = 0
+        try:
+            md = pq.ParquetFile(p).metadata  # footer parse only
+            if md is not None:
+                return [(p, True, None, None, size)]
+            return [(p, False, "no metadata", "NoMetadata", size)]
+        except Exception as e:  # noqa: BLE001 — the point is to report
+            return [(p, False, f"{type(e).__name__}: {e}"[:200], type(e).__name__, size)]
 
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                try:
-                    size = _os.path.getsize(p)
-                except OSError:
-                    size = 0
-                try:
-                    md = pq.ParquetFile(p).metadata  # footer parse only
-                    if md is not None:
-                        rows.append((p, True, None, None, size))
-                    else:
-                        rows.append((p, False, "no metadata", "NoMetadata", size))
-                except Exception as e:  # noqa: BLE001 — the point is to report
-                    rows.append(
-                        (p, False, f"{type(e).__name__}: {e}"[:200], type(e).__name__, size)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["path", "ok", "error", "error_class", "bytes"]
-            )
-
-    return fdf.mapInPandas(check, _AUDIT_SCHEMA)
+    return map_rows(fdf, check, _AUDIT_SCHEMA)
 
 
 def dead_letter_metrics(report: DataFrame) -> DataFrame:

@@ -60,6 +60,34 @@ def test_media_stats_survives_repartition(media):
     assert a == b
 
 
+def test_map_rows_fans_out_and_names_columns_from_schema(spark):
+    """map_rows emits 0, 1 or many rows per input row, names the output
+    columns from the DDL schema, and copes with a partition that
+    produces no rows at all."""
+    from etl_orders_spark.operators.grouped_map import map_rows
+
+    schema = "id long, copy int"
+
+    def fan(i):  # closure: i % 3 copies of the row
+        return [(i, c) for c in range(i % 3)]
+
+    # 3 partitions over ids 0..29 (10 ids per residue), plus one
+    # partition of multiples of 3 that emits nothing
+    df = spark.range(0, 30, 1, 3).union(spark.range(0, 9, 3, 1))
+    out = map_rows(df, fan, schema)
+    assert out.columns == ["id", "copy"]
+    assert out.schema.simpleString() == "struct<id:bigint,copy:int>"
+    rows = out.collect()
+    assert len(rows) == 10 * (0 + 1 + 2)
+    assert sorted((r["id"], r["copy"]) for r in rows) == sorted(
+        (i, c) for i in range(30) for c in range(i % 3)
+    )
+
+    empty = map_rows(spark.range(0, 9, 3, 1), fan, schema)
+    assert empty.columns == ["id", "copy"]
+    assert empty.count() == 0
+
+
 def test_media_fingerprints_pure_jvm_dedup_key(spark, media):
     fp = media_fingerprints(media)
     assert fp.count() == 60
@@ -320,10 +348,10 @@ def test_pixel_features_partition_invariance(spark):
 
 
 def test_pixel_media_dims_is_the_single_source_of_truth(spark):
-    """The generator closure inlines the dims law (it must pickle by
-    value for bare-session workers); this guard pins inline == helper
-    so the two copies — and the SQL oracle derived from the helper's
-    law — cannot drift apart silently."""
+    """The pixel generators call pixel_media_dims for their geometry;
+    this guard pins the emitted metadata to the helper so the rows —
+    and the SQL oracle derived from the helper's law — cannot drift
+    apart silently."""
     from etl_orders_spark.multimodal.schemas import gen_pixel_media, pixel_media_dims
 
     rows = gen_pixel_media(spark, 40).select(

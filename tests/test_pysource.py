@@ -163,6 +163,9 @@ def test_firehose_to_windowed_merge_end_to_end(synth, tmp_path):
         if read_published(synth, table) is not None:
             break
         time.sleep(0.5)
+    else:
+        q.stop()
+        pytest.fail("no micro-batch published within 180 s: stream wedged")
     q.stop()
     q.awaitTermination(60)
 

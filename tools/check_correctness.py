@@ -7,7 +7,9 @@ schema + an order-insensitive value hash. Usage:
     python tools/check_correctness.py [sf_dir] [query ...]
 
 Exit code 0 iff every checked query matches (rows-only queries need
-only rows >= 0).
+only rows >= 0); a query name the registry does not know is listed and
+exits 2 before anything runs. The summary counts only this run's
+queries.
 """
 
 from __future__ import annotations
@@ -64,6 +66,10 @@ def main() -> int:
 
     qmap = query_map()
     omap = oracle_map()
+    unknown = sorted(only - qmap.keys())
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     spark = get_spark("check_correctness", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
     con = duckdb.connect()
@@ -126,6 +132,8 @@ def main() -> int:
             f"schema={rec['schema_match']} hash={rec['hash_match']} ({time.time()-t0:.1f}s)"
         )
 
+    n_ok = sum(1 for r in results.values() if r.get("ok"))
+    print(f"\n{n_ok}/{len(results)} ok; failed: {failed}")
     out = os.path.join(REPO, "tools", "correctness_local.json")
     if only and os.path.exists(out):
         # subset runs refresh their own entries inside the last full
@@ -136,8 +144,6 @@ def main() -> int:
         results = merged
     with open(out, "w") as f:
         json.dump(results, f, indent=1, default=str)
-    n_ok = sum(1 for r in results.values() if r.get("ok"))
-    print(f"\n{n_ok}/{len(results)} ok; failed: {failed}")
     return 0 if not failed else 1
 
 

@@ -232,10 +232,8 @@ def ngram_jaccard_pairs(
     The exploded shingle table feeds three consumers (per-doc sizes
     and both join sides — four with the df-cap's hot-key scan), so it
     caches via the keyed stage cache (operators/materialize.cache_stage:
-    optimizer-transparent lazy persist whose predecessor blocks are
-    released on the next invocation, so repeated calls in a long-lived
-    session never accumulate — the leak a bare .persist() had, without
-    the pruning/pushdown barrier an RDD checkpoint would add). Without
+    bounded per call site, so repeated calls in a long-lived session
+    never accumulate the blocks a bare .persist() leaked). Without
     the cache each consumer replays the full tokenize+shingle of every
     document.
     """
@@ -305,8 +303,7 @@ def prefix_filter_jaccard_pairs(
     The shingle-array table and the prefix index each feed multiple
     consumers (df-count + rank + both verify sides; both candidate
     join sides), so both cache via the keyed stage cache
-    (cache_stage: lazy persist, predecessor blocks released on the
-    next invocation — no accumulation, no checkpoint pruning barrier)
+    (cache_stage: bounded per call site, no accumulation)
     — without them the full tokenize+shingle replays six times
     (measured: 17.6s -> cached at sf0.1, the dominant cost was
     recompute, not the join).
@@ -477,11 +474,13 @@ def simhash_near_pairs(
         raise ValueError("4-band pigeonhole completeness requires max_hamming <= 3")
     band_bits = num_bits // 4
     mask = (1 << band_bits) - 1
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # the signature table feeds BOTH sides of the band self-join;
     # without materialization the explode + 32-aggregate signature
     # stage runs twice (2 document scans measured). It is doc-grain —
-    # (id, long) — so the checkpoint is tiny next to the corpus.
-    sh = simhash(df, id_col, text_col, num_bits, portable).localCheckpoint(eager=True)
+    # (id, long) — so the stage is tiny next to the corpus.
+    sh = cache_stage(simhash(df, id_col, text_col, num_bits, portable), "simhash_near_pairs.sh")
     bands = sh.select(
         F.col(id_col).alias("_id"),
         F.col("simhash"),

@@ -1,4 +1,4 @@
-"""Materialize a small multi-consumer frame exactly once.
+"""Materialize a multi-consumer frame exactly once.
 
 The trap this exists for: a DataFrame consumed by two or more
 downstream subtrees is not "computed once and shared" — Catalyst
@@ -9,14 +9,19 @@ like spark_partition_id disqualify outright). The runtime scan audit
 (tools/scan_audit.py) caught a dozen plans silently paying 3-8 full
 fact scans this way.
 
-``materialize_small`` is the decision marker: call it ONLY on frames
-that are provably small at any scale (cell tables bounded by category
-cardinalities, day/month-grain series bounded by the calendar,
-per-type sketch tables) — materializing something that grows with the
-data (an explode output, a fact projection) can cost more than the
-re-scan it saves, which is why this is an explicit opt-in and not a
-blanket rule. Eager local checkpoint: computed now, lineage
-truncated, every consumer reads the stored blocks.
+One rule: a frame built once per builder call and read by several
+consumers goes through ``cache_stage(df, key)``, which fills it on a
+miss and hands back the live cache on a hit, so a warm re-run of the
+same plan runs no job for it.
+
+A direct ``localCheckpoint(eager=True)`` is used only where the lineage
+cut or per-call freshness is the point: frames rebuilt or read inside
+a Python loop (the plan would otherwise grow with the rounds),
+nondeterministic ids, streaming micro-batches, call-time file checks,
+and float sums a cached plan would reorder (a cache keeps its shuffle
+partitioning; AQE does not coalesce it). ``materialize_small`` is that
+checkpoint for frames that are provably small at any scale.
+tests/test_materialize.py lists every checkpoint site with its reason.
 """
 
 from __future__ import annotations
@@ -26,7 +31,9 @@ from pyspark.sql import functions as F
 
 
 def materialize_small(df: DataFrame) -> DataFrame:
-    """Eagerly materialize a PROVABLY-SMALL multi-consumer frame."""
+    """Eagerly checkpoint a PROVABLY-SMALL multi-consumer frame (cell
+    tables bounded by category cardinalities, calendar-grain series,
+    per-type sketch tables): computed now, lineage truncated."""
     return df.localCheckpoint(eager=True)
 
 
@@ -89,49 +96,29 @@ _STAGE_CACHE: dict[str, list[DataFrame]] = {}
 
 
 def cache_stage(df: DataFrame, key: str) -> DataFrame:
-    """Lazily persist a LARGE multi-consumer stage, releasing the
-    PREVIOUS invocation's cache for the same key first.
+    """Materialize a multi-consumer stage exactly once under ``key``.
 
-    Why not localCheckpoint here: a checkpoint is an opaque RDD scan
-    barrier — Catalyst can neither prune columns nor push filters
-    through it, and the eager materialization is paid even for rows a
-    downstream filter would drop. For corpus-sized stages that
-    difference is brutal (measured: llm_prep_corpus 1.8s -> 9.9s when
-    its two cached stages were converted to eager checkpoints).
-    ``persist`` keeps the InMemoryRelation optimizer-transparent and
-    populates lazily inside the query's own action.
+    Miss: the frame is persisted and filled with one action before it
+    is returned, so every stage is filled once before its consumers
+    fork, whatever schedules them. Hit: the same call site rebuilt a
+    ``sameResult``-equal plan (a re-run in one session: the bench's
+    reps, an analyst iterating), and the live cached frame comes back
+    with no job run. A checkpoint can never hit: each one is unique to
+    its call.
 
-    Why not bare persist: DataFrame caches live in the CacheManager,
-    which holds its own reference — they are NOT reclaimed when the
-    Python handle is GC'd (unlike localCheckpoint blocks, which the
-    ContextCleaner frees), so repeated invocations in a long-lived
-    session accumulate cached blocks without bound. The keyed registry
-    bounds that at _STAGE_SLOTS live caches per call site: a new plan
-    evicts (unpersists, non-blocking) the oldest entry beyond the cap.
+    Bounded: a cache is held by the CacheManager, not by the Python
+    handle, so it is not freed when the handle drops (a checkpoint's
+    blocks are). Each key keeps at most _STAGE_SLOTS live caches; a
+    new plan evicts (unpersists, non-blocking) the least recently used.
+    Builders run serially (registry, bench, entry point); a racing
+    rebuild would at worst fill twice, never corrupt results.
 
-    Warm reuse: when the same call site rebuilds the SAME logical plan
-    (re-running a query in one session — the bench's repeated reps,
-    an analyst iterating), the existing cached frame is returned
-    as-is, so later runs read the already-populated cache instead of
-    recomputing (this matches what CacheManager's plan-keyed dedupe
-    did for bare persist, minus its unbounded handle growth). Only
-    when the plan actually CHANGED (new data dir, new params) is the
-    predecessor unpersisted and replaced.
-
-    Single-threaded builders assumed (the registry/bench/driver all
-    build serially); a racing rebuild would at worst re-cache, never
-    corrupt results.
-
-    Freshness contract (ADVICE r11 #3): input parquet dirs are
-    IMMUTABLE for the life of a session — the warm-reuse path returns
-    cached blocks for an identical logical plan, so rewriting files
-    under an sf_dir mid-session would serve stale data that a
-    per-call checkpoint would have re-read. Every harness here
-    honors it (testdata is generated once; bench/driver sessions
-    never rewrite inputs). After regenerating test data in a live
-    session, call ``spark.catalog.clearCache()`` (bench.py already
-    does per lane), which these handles detect via storageLevel and
-    re-persist."""
+    Freshness contract: input parquet dirs are IMMUTABLE for the life
+    of a session — a hit returns cached blocks for an identical logical
+    plan, so rewriting files under an sf_dir mid-session would serve
+    stale data. After regenerating inputs in a live session, call
+    ``spark.catalog.clearCache()`` (bench.py does per lane); the
+    handles detect it via storageLevel and refill."""
     slots = _STAGE_CACHE.setdefault(key, [])
     keep: list[DataFrame] = []
     hit: DataFrame | None = None
@@ -157,14 +144,19 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
         keep.append(hit)
         _STAGE_CACHE[key] = keep
         return hit
-    out = df.persist()
-    keep.append(out)
-    while len(keep) > _STAGE_SLOTS:
+    while len(keep) >= _STAGE_SLOTS:
         evicted = keep.pop(0)
         try:
             evicted.unpersist(blocking=False)
         except Exception:  # noqa: BLE001 — a dead session's handle is already free
             pass
+    out = df.persist()
+    try:
+        out.count()
+    except BaseException:
+        out.unpersist()  # a failed fill leaves no registered cache behind
+        raise
+    keep.append(out)
     _STAGE_CACHE[key] = keep
     return out
 
@@ -187,11 +179,10 @@ def fan_out_narrow(df: DataFrame, key: str) -> DataFrame:
     evaluation, not a cache-rebuild pathology.
 
     The fix: shuffle the RAW rows to ``defaultParallelism`` partitions
-    and pin them behind a keyed lazy cache (``cache_stage``). An
+    and pin them behind a keyed cache (``cache_stage``). An
     InMemoryRelation is a predicate-pushdown barrier, so the heavy
-    chain stays ABOVE the exchange and parallelizes even on its first
-    (cache-filling) execution, while column pruning still works at
-    scan time (cached batches are columnar).
+    chain stays ABOVE the exchange and parallelizes, while column
+    pruning still works at scan time (cached batches are columnar).
 
     100 TB posture: this must NEVER fire on a real corpus — caching a
     redistributed 100 TB table would be catastrophic. Two driver-side

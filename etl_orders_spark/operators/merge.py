@@ -46,11 +46,13 @@ def scd2_apply(
     to latest-per-key first (max_by on their own ordering column); this
     operator cannot pick for them, so it fails loudly instead.
     """
+    from etl_orders_spark.operators.materialize import cache_stage
+
     eff = F.lit(effective_ts).cast("timestamp")
     # one materialization serves the precondition check AND the merge's
     # two consumers (upd_keys, fresh) — without it the full updates
     # lineage (often a join/agg pipeline) executes three times
-    updates = updates.localCheckpoint(eager=True)
+    updates = cache_stage(updates, "scd2_apply.updates")
     dup = (
         updates.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_n"))

@@ -266,7 +266,10 @@ def ivf_topk(
         )
     # one assignment pass: every vector's nprobe nearest cells; its top-1
     # cell is its inverted-file home, so `cells` is a rank-1 filter of the
-    # same result rather than a second scoring job
+    # same result rather than a second scoring job. A checkpoint, not a
+    # stage: a cached plan keeps its shuffle partitioning (AQE does not
+    # coalesce it), which reorders the float sums of the refined
+    # centroids above and moves the rounded cosines
     near = _assign_nearest(df, seeds, id_col, vec_col, nprobe).localCheckpoint(eager=True)
     home = topk_per_group(near, ["_vid"], [F.desc("_cos"), F.asc("cluster")], 1)
     # toDF re-aliases every column (fresh exprIds) so the probes/cells
@@ -633,10 +636,13 @@ def lsh_bucketed_topk(
     Output: query_id, neighbor_id, cos — the approximate top-k per
     vector. Recall measured against `brute_force_topk` in tests.
     """
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # both cogroup sides read the assignment table: materialize it once
     # or the Arrow bucket-id pass runs twice
-    buckets = _bucket_assign(df, id_col, vec_col, num_planes, num_tables, seed, dim).localCheckpoint(
-        eager=True
+    buckets = cache_stage(
+        _bucket_assign(df, id_col, vec_col, num_planes, num_tables, seed, dim),
+        "lsh_bucketed_topk.buckets",
     )
     # one GEMM per (table, bucket) cogroup replaces the pair-explosion
     # join + per-pair interpreted dot: each bucket's cosine sub-matrix is

@@ -126,14 +126,16 @@ def unigram_surprisal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle for tf, one term shuffle for the LM, one term-keyed join
     back — no broadcast of the unbounded vocabulary, and the 1-row
     total joins as a broadcast literal."""
+    from etl_orders_spark.operators.materialize import cache_stage
+
     d = T(spark, sf_dir, "documents").select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("toks")
     )
-    tf = (
+    tf = cache_stage(  # read by the LM branch and the scoring join
         d.select("doc_id", F.explode("toks").alias("term"))
         .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("long").alias("tf"))
-        .localCheckpoint(eager=True)  # read by the LM branch and the scoring join
+        .agg(F.count("*").cast("long").alias("tf")),
+        "unigram_surprisal_docs.tf",
     )
     freq = tf.groupBy("term").agg(F.sum("tf").cast("long").alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("double").alias("n"))
@@ -287,13 +289,14 @@ def pmi_bigrams_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens(F.lower(F.col("text"))).alias("t")
     )
     from etl_orders_spark.functions.text import word_bigrams
+    from etl_orders_spark.operators.materialize import cache_stage
 
     bg = toks.select(F.explode(word_bigrams(F.col("t"))).alias("bigram"))
     uni = toks.select(F.explode("t").alias("term"))
     cb = bg.groupBy("bigram").agg(F.count("*").cast("long").alias("c_ab"))
-    cu = uni.groupBy("term").agg(F.count("*").cast("long").alias("c")).localCheckpoint(
-        eager=True
-    )  # probed twice (left + right component of each bigram)
+    cu = cache_stage(  # probed twice (left + right component of each bigram)
+        uni.groupBy("term").agg(F.count("*").cast("long").alias("c")), "pmi_bigrams_docs.cu"
+    )
     tb = cb.agg(F.sum("c_ab").cast("double").alias("t"))
     tu = cu.agg(F.sum("c").cast("double").alias("u"))
 
@@ -838,15 +841,17 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % _DSIR_B
     )
-    tf = (
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    tf = cache_stage(  # read by both LM branches + scoring
         d.select("doc_id", "lang", F.explode("toks").alias("term"))
         .select("doc_id", "lang", bucket.alias("b"))
         .groupBy("doc_id", "b")
         .agg(
             F.any_value("lang").alias("lang"),
             F.count("*").cast("long").alias("tf"),
-        )
-        .localCheckpoint(eager=True)  # read by both LM branches + scoring
+        ),
+        "dsir_importance_resample.tf",
     )
     raw = tf.groupBy("b").agg(F.sum("tf").cast("long").alias("cnt_r"))
     tgt = (

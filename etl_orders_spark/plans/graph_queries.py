@@ -288,12 +288,15 @@ def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _MEGA_BASKET_CAP,
         distinct=True,
     )
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # basket-grain (= order count, ≤ cap parts each); feeds the degree
     # aggregate AND the pair expansion — materialized once
-    baskets = (
-        li.groupBy(F.col("l_orderkey").alias("ok"))
-        .agg(F.array_sort(F.collect_list("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=True)
+    baskets = cache_stage(
+        li.groupBy(F.col("l_orderkey").alias("ok")).agg(
+            F.array_sort(F.collect_list("l_partkey")).alias("ps")
+        ),
+        "item_item_cosine_topk.baskets",
     )
     deg = (
         baskets.select(F.explode("ps").alias("pk"))
@@ -405,13 +408,18 @@ def pmi_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     _MEGA_BASKET_CAP parts per basket — never fires on the fixtures),
     degrees broadcast, and the single ln evaluates one identical
     expression from exact integers both engines."""
-    li = cap_group_fanout(
-        T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-        "l_partkey",
-        _MEGA_BASKET_CAP,
-        distinct=True,
-    ).localCheckpoint(eager=True)  # edge set feeds degree/total AND both join sides
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    li = cache_stage(  # edge set feeds degree/total AND both join sides
+        cap_group_fanout(
+            T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
+            "l_orderkey",
+            "l_partkey",
+            _MEGA_BASKET_CAP,
+            distinct=True,
+        ),
+        "pmi_copurchase_parts.li",
+    )
     deg = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )

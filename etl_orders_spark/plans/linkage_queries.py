@@ -119,7 +119,7 @@ def fuzzy_match_customers_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.materialize import cache_stage
 
     # the variant index feeds BOTH self-join sides — cache it so the
-    # explode computes once (keyed lazy cache, optimizer-transparent)
+    # explode computes once (keyed stage cache, optimizer-transparent)
     ex = cache_stage(
         c.select(
             F.col("c_custkey").alias("id"),

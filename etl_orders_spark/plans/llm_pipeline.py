@@ -76,11 +76,8 @@ def prep_corpus(docs: DataFrame, min_quality: float = _MIN_QUALITY, lang: str = 
         .agg(F.min("doc_id").alias("doc_id"))
     )
     # uniq feeds three consumers (signatures, verify, survivors); keyed
-    # lazy cache so the quality/lang expression chain evaluates once
-    # while staying optimizer-transparent (an eager checkpoint here
-    # blocks pruning/pushdown and measured 1.8s -> 9.9s; cache_stage
-    # releases the previous invocation's blocks, so nothing leaks; at
-    # 100 TB this is the natural stage-to-parquet boundary)
+    # stage cache so the quality/lang expression chain evaluates once
+    # (at 100 TB this is the natural stage-to-parquet boundary)
     from etl_orders_spark.operators.materialize import cache_stage
 
     uniq = cache_stage(
@@ -376,8 +373,12 @@ def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("n_chars"),
     )
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # source grain; feeds the total AND the shares
-    w = s.withColumn("w_scaled", _temp_scaled_weight()).localCheckpoint(eager=True)
+    w = cache_stage(
+        s.withColumn("w_scaled", _temp_scaled_weight()), "temperature_mixture_weights.w"
+    )
     t = w.agg(
         F.sum("w_scaled").cast("long").alias("tw"),
         F.sum("n_chars").cast("long").alias("tc"),
@@ -446,23 +447,32 @@ def temperature_resample_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = T(spark, sf_dir, "documents").groupBy("source").agg(
         F.sum("n_chars").cast("long").alias("n_chars")
     )
+    from etl_orders_spark.operators.materialize import cache_stage, materialize_small
+
     # source grain; feeds totals AND the ratio rows
-    w = s.withColumn("w_scaled", _temp_scaled_weight()).localCheckpoint(eager=True)
+    w = cache_stage(
+        s.withColumn("w_scaled", _temp_scaled_weight()), "temperature_resample_corpus.w"
+    )
     t = w.agg(
         F.sum("w_scaled").cast("long").alias("tw"),
         F.sum("n_chars").cast("long").alias("tc"),
     )
-    r0 = w.crossJoin(F.broadcast(t)).select(
-        "source",
-        F.floor(
-            F.col("w_scaled").cast("double")
-            * F.col("tc")
-            / (F.col("n_chars").cast("double") * F.col("tw"))
-            * F.lit(1000000.0)
+    # source grain, feeds the max AND the normalized rates; a small
+    # checkpoint rather than a stage: a staged copy would show its
+    # 1-row nested-loop join to each consumer's plan
+    r0 = materialize_small(
+        w.crossJoin(F.broadcast(t)).select(
+            "source",
+            F.floor(
+                F.col("w_scaled").cast("double")
+                * F.col("tc")
+                / (F.col("n_chars").cast("double") * F.col("tw"))
+                * F.lit(1000000.0)
+            )
+            .cast("long")
+            .alias("ratio_micro"),
         )
-        .cast("long")
-        .alias("ratio_micro"),
-    ).localCheckpoint(eager=True)  # feeds the max AND the normalized rates
+    )
     mx = r0.agg(F.max("ratio_micro").alias("mr"))
     r = r0.crossJoin(F.broadcast(mx)).select(
         "source", F.expr("ratio_micro * 1000000 div mr").cast("long").alias("keep_ppm")

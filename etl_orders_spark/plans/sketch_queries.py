@@ -130,13 +130,14 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     upstream partition; the 20 probes broadcast against the matrix."""
     from etl_orders_spark.functions.text import tokens
     from etl_orders_spark.operators.countmin import countmin_build, countmin_estimate
+    from etl_orders_spark.operators.materialize import cache_stage
 
-    tf = (
+    tf = cache_stage(  # read by the sketch build AND the probe top-k
         T(spark, sf_dir, "documents")
         .select(F.explode(tokens(F.lower(F.col("text")))).alias("term"))
         .groupBy("term")
-        .agg(F.count("*").cast("long").alias("exact"))
-        .localCheckpoint(eager=True)  # read by the sketch build AND the probe top-k
+        .agg(F.count("*").cast("long").alias("exact")),
+        "countmin_heavy_hitters.tf",
     )
     sketch = countmin_build(tf, "term", "exact", depth=_CMS_DEPTH, width=_CMS_WIDTH)
     top = tf.orderBy(F.desc("exact"), F.asc("term")).limit(_CMS_TOPK)
@@ -165,7 +166,7 @@ def hll_event_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     error envelope scales with est(A∪B), pinned in
     tests/test_sketch.py."""
     ev = T(spark, sf_dir, "events").select("event_type", "user_id")
-    from etl_orders_spark.operators.materialize import materialize_small
+    from etl_orders_spark.operators.materialize import cache_stage, materialize_small
 
     # |types| rows (category-bounded); feeds BOTH theta-join sides
     per_type = materialize_small(
@@ -186,7 +187,8 @@ def hll_event_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "est_overlap",
         F.greatest(F.lit(0), F.col("est_a") + F.col("est_b") - F.col("est_union")).cast("long"),
     )
-    tu = ev.distinct().localCheckpoint(eager=True)  # (type,user) grain; both self-join sides
+    # (type,user) grain; both self-join sides
+    tu = cache_stage(ev.distinct(), "hll_event_type_overlap.tu")
     exact = (
         tu.toDF("type_a", "u")
         .join(tu.toDF("type_b", "u2"), (F.col("u") == F.col("u2")) & (F.col("type_a") < F.col("type_b")))

@@ -283,7 +283,12 @@ def alloc_nation_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scaled product rev_cents*10000 stays far inside int64 until
     global revenue exceeds ~9·10^14 cents per slot-unit — at which
     point the same plan runs on a coarser money unit."""
-    n = (
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    # 25 rows out, but the fact join below feeds FOUR consumers
+    # (total, base/rem, shortfall, final select): staged so the orders
+    # scan runs once, not once per consumer
+    n = cache_stage(
         T(spark, sf_dir, "orders")
         .join(
             T(spark, sf_dir, "customer").select("c_custkey", "c_nationkey"),
@@ -294,12 +299,8 @@ def alloc_nation_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .groupBy("n_nationkey", "n_name")
-        .agg(F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("rev_cents"))
-        # 25 rows out, but the fact join above feeds FOUR consumers
-        # (total, base/rem, shortfall, final select) — eager
-        # localCheckpoint (ContextCleaner-reclaimed) so the orders scan
-        # runs once, not once per consumer
-        .localCheckpoint(eager=True)
+        .agg(F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("rev_cents")),
+        "alloc_nation_budget.n",
     )
     total = n.agg(F.sum("rev_cents").cast("long").alias("_total"))
     b = (
@@ -1063,14 +1064,12 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("week", "o_orderdate").cast("date").alias("wk"),
         _cents(F.col("o_totalprice")).alias("cents"),
     )
-    # customer-grain (one row per customer — far below fact scale but
-    # not constant-bounded, so plain checkpoint rather than
-    # materialize_small): feeds cohort sizes AND the revenue join;
-    # without it the orders scan + first-order aggregate replays twice
-    firsts = (
-        o.groupBy("o_custkey")
-        .agg(F.min("wk").alias("cohort_week"))
-        .localCheckpoint(eager=True)
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    # customer-grain: feeds cohort sizes AND the revenue join; without
+    # it the orders scan + first-order aggregate replays twice
+    firsts = cache_stage(
+        o.groupBy("o_custkey").agg(F.min("wk").alias("cohort_week")), "cohort_ltv_curve.firsts"
     )
     sizes = firsts.groupBy("cohort_week").agg(
         F.count(F.lit(1)).cast("long").alias("n_customers")
@@ -1393,9 +1392,11 @@ def growth_accounting_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("rev_cents"))
     )
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # customer-month grain; feeds the max-month anchor AND the window
-    # pass — checkpoint so the fact aggregate runs once
-    cm = cm.localCheckpoint(eager=True)
+    # pass — staged so the fact aggregate runs once
+    cm = cache_stage(cm, "growth_accounting_monthly.cm")
     mx = cm.agg(F.max("month").alias("max_month"))
     wc = Window.partitionBy("o_custkey")
     wo = wc.orderBy("month")
@@ -1409,7 +1410,7 @@ def growth_accounting_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # consumed by BOTH the active and churn branches — without this
     # the three window functions replay per branch
-    flagged = flagged.localCheckpoint(eager=True)
+    flagged = cache_stage(flagged, "growth_accounting_monthly.flagged")
     active = flagged.select(
         "month",
         F.when(F.col("month") == F.col("first_month"), "new")
@@ -2103,16 +2104,18 @@ def autocorr_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: day-grain reduction then a calendar-bounded self-join and
     one constant-size aggregate; the final r is one identical double
     expression floored to micro-units."""
-    d = (
+    from etl_orders_spark.operators.materialize import cache_stage
+
+    # both sides of the lag-7 self-join read this day-grain table:
+    # materialize the full-orders aggregate once (reuse=2 — the scan
+    # audit flagged the replayed fact scan)
+    d = cache_stage(
         T(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.expr(
             "CAST(sum(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) div 1000 AS BIGINT)"
-        ).alias("y"))
-        # both sides of the lag-7 self-join read this day-grain table:
-        # materialize the full-orders aggregate once (reuse=2 — the
-        # scan audit flagged the replayed fact scan)
-        .localCheckpoint(eager=True)
+        ).alias("y")),
+        "autocorr_weekly_revenue.d",
     )
     b = d.select(F.date_add("day", 7).alias("day"), F.col("y").alias("z"))
     p = d.join(b, "day").select(F.col("y").alias("x"), "z")

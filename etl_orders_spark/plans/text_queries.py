@@ -454,13 +454,13 @@ def contamination_screen_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the eval corpus stays tiny relative to training data, so
     the scan side never shuffles; a high fraction is a leakage flag."""
     from etl_orders_spark.functions.text import shingles
+    from etl_orders_spark.operators.materialize import cache_stage
 
     docs = T(spark, sf_dir, "documents")
-    # three consumers (bench grams, train sizes, train hits): eager
-    # checkpoint so the shingle explode computes once (lazy persist
-    # fills too late for concurrently-scheduled branches)
-    sh = docs.select("doc_id", F.explode(shingles("text", _CONTAM_K)).alias("g")).localCheckpoint(
-        eager=True
+    # three consumers (bench grams, train sizes, train hits)
+    sh = cache_stage(
+        docs.select("doc_id", F.explode(shingles("text", _CONTAM_K)).alias("g")),
+        "contamination_screen_docs.sh",
     )
     is_bench = F.col("doc_id") % _BENCH_MOD == 0
     bench = sh.filter(is_bench).select("g").distinct()
@@ -650,9 +650,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     production/bench path is `minhash_lsh_pairs_fast` (xxhash64)."""
     docs = T(spark, sf_dir, "documents")
     # signatures fan out to the band join AND the verify join; keyed
-    # lazy cache so the lineage isn't recomputed 3x while staying
-    # optimizer-transparent — cache_stage releases the previous
-    # invocation's blocks (at 100 TB: stage to parquet instead)
+    # stage cache so the lineage isn't recomputed 3x (at 100 TB: stage
+    # to parquet instead)
     from etl_orders_spark.operators.materialize import cache_stage
 
     sigs = cache_stage(
@@ -1229,14 +1228,8 @@ def bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet ONCE and shares across query batches; for a single ad-hoc
     # batch, filtering first is strictly less work.
     tok = d.select("doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term"))
-    # match-grain, read by df + scoring. Keyed cache instead of the
-    # eager checkpoint: a checkpoint mints a fresh RDD per builder
-    # call, making the plan invocation-unique — re-running the lane
-    # (or the hybrid arm above it) re-paid the whole tf build every
-    # rep, and no downstream cache could ever match. The lazy keyed
-    # cache keeps the materialize-once property within a run AND
-    # lets identical re-invocations reuse it (cold runs still pay the
-    # full build — bench clearCache drops it).
+    # match-grain, read by df + scoring; the keyed stage lets identical
+    # re-invocations (and the hybrid arm above it) reuse the tf build
     tf = cache_stage(
         tok.join(F.broadcast(q.select("term").distinct()), "term")
         .groupBy("doc_id", "term")
@@ -1517,13 +1510,14 @@ def doc_keywords_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is never broadcast (vocabulary is unbounded); the rank
     window partitions by doc."""
     from etl_orders_spark.functions.text import tokens as _tokens
+    from etl_orders_spark.operators.materialize import cache_stage
 
     docs = T(spark, sf_dir, "documents")
-    tf = (
+    tf = cache_stage(  # feeds the df aggregate AND the scoring join
         docs.select("doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term"))
         .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)  # feeds the df aggregate AND the scoring join
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        "doc_keywords_tfidf.tf",
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
     n = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -1586,16 +1580,17 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_per_group pattern) rather than the full corpus."""
     from etl_orders_spark.functions.text import shingles as _shingles
     from etl_orders_spark.operators.dedup import _parallelism_floor
+    from etl_orders_spark.operators.materialize import cache_stage
 
-    # three consumers (sizes + both self-join sides): EAGER checkpoint —
-    # a lazy persist fills mid-job, after concurrent branches have
-    # already replayed the tokenize+shingle+explode (scan audit measured
-    # 8 document scans with persist, 1 with the checkpoint); at 100 TB
-    # this is the parquet-staging boundary of the sweep
-    sh = _parallelism_floor(
-        T(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(_shingles("text", 3)).alias("sh"))
-    ).localCheckpoint(eager=True)
+    # three consumers (sizes + both self-join sides); at 100 TB this is
+    # the parquet-staging boundary of the sweep
+    sh = cache_stage(
+        _parallelism_floor(
+            T(spark, sf_dir, "documents")
+            .select("doc_id", F.explode(_shingles("text", 3)).alias("sh"))
+        ),
+        "dedup_threshold_sweep.sh",
+    )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.toDF("id_a", "sh")
     b = sh.toDF("id_b", "sh")
@@ -2015,7 +2010,7 @@ def bigram_perplexity_docs_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus by a skewed key."""
     g, vsz = _hashed_bigrams(spark, sf_dir)
     # model branch: bigram-vocab grain, map-side combined (tiny exchange);
-    # cached (keyed lazy persist) because BOTH model tables derive from it —
+    # staged (keyed cache) because BOTH model tables derive from it —
     # without the cache the scan+explode replays once per derivation
     from etl_orders_spark.operators.materialize import cache_stage
 
@@ -2493,9 +2488,9 @@ def _dup_span_frame(spark: SparkSession, sf_dir: str, hashed: bool) -> DataFrame
                 lambda i: F.xxhash64(F.array_join(F.slice(F.col("t"), i, _SPAN_N), " ")),
             ),
         ).otherwise(F.array().cast("array<long>"))
-        ghm = toks.select("doc_id", gram_arr.alias("_ghs")).localCheckpoint(
-            eager=True
-        )
+        from etl_orders_spark.operators.materialize import cache_stage
+
+        ghm = cache_stage(toks.select("doc_id", gram_arr.alias("_ghs")), "_dup_span_frame.ghm")
         grams = ghm.select(
             "doc_id", F.posexplode("_ghs").alias("p0", "gram")
         ).select("doc_id", (F.col("p0") + 1).alias("pos"), "gram")
@@ -3448,9 +3443,8 @@ def wordpiece_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.length("w").between(2, _WP_MAX_WORD))
     # form-grain (Heaps'-law bounded) and consumed TWICE — by the
     # vocab collect below and by the `encoded` branch of the final
-    # plan; the keyed lazy cache (not a per-call checkpoint) also
-    # lets warm re-invocations skip the corpus explode + aggregate
-    # entirely (the _ulm_em_rounds pattern)
+    # plan; the keyed stage also lets warm re-invocations skip the
+    # corpus explode + aggregate entirely (the _ulm_em_rounds pattern)
     from etl_orders_spark.operators.materialize import cache_stage
 
     forms = cache_stage(
@@ -3782,13 +3776,10 @@ def _ulm_em_rounds(
         F.explode(tokens(F.lower(F.col("text")))).alias("w")
     ).filter(F.length("w").between(2, _ULM_MAX_WORD))
     forms = words.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    # keyed lazy cache, NOT a per-call localCheckpoint: the form table
-    # is reused by every round + the M-step WITHIN a call, and the
-    # checkpoint's fresh-RDD barrier made every downstream plan
-    # invocation-unique — which blocked the per-round M-step vocab
-    # caches below from ever matching across invocations (warm runs
-    # re-ran the whole EM build: measured 4.25 s build vs 0.67 s final
-    # plan). Heaps'-law bounded, so the cache is small by construction.
+    # the form table is reused by every round + the M-step WITHIN a
+    # call; keyed, so the per-round M-step vocab caches below match
+    # across invocations. Heaps'-law bounded, so the cache is small by
+    # construction.
     forms = cache_stage(forms, "ulm.forms")
 
     sub = forms.select(

@@ -237,25 +237,27 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stage tables shrink monotonically, so every join after the
     first is small-side broadcastable at scale; nothing ever pays an
     unkeyed pairwise comparison."""
+    from etl_orders_spark.operators.materialize import cache_stage
+
     ev = T(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     # v feeds the click join AND its own count, c feeds the purchase
     # join AND its count — materialize each user-grain stage table
     # once (the chained lineage otherwise re-runs earlier stages per
     # consumer: 6 event scans measured in the runtime plan for what
     # is logically 3 filtered passes)
-    v = (
+    v = cache_stage(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("ts").alias("t_view")),
+        "funnel_view_click_purchase.v",
     )
-    c = (
+    c = cache_stage(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("ts").alias("t_click")),
+        "funnel_view_click_purchase.c",
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -681,10 +683,12 @@ def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
     )
+    from etl_orders_spark.operators.materialize import cache_stage
+
     # user-day grain (the bounded intermediate); feeds the day spine,
-    # the DAU count, AND the 28-day explode — checkpoint so the event
+    # the DAU count, AND the 28-day explode — staged so the event
     # scan + distinct run once instead of three times
-    ud = ud.localCheckpoint(eager=True)
+    ud = cache_stage(ud, "dau_mau_stickiness.ud")
     days = ud.select("day").distinct()
     mau = (
         ud.select(
@@ -744,16 +748,18 @@ def signup_to_purchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two event-scale aggregates keyed by user; the curve itself
     is a 5-row broadcast join against the per-user delay table —
     cost is horizons × users, with horizons a constant."""
+    from etl_orders_spark.operators.materialize import cache_stage
+
     ev = T(spark, sf_dir, "events")
     # su feeds the purchase join AND the censoring join; delay feeds
     # the total count AND the horizon fan-out — materialize each
     # user-grain table once (the chained lineage otherwise replays
     # earlier stages per consumer: 4 event scans measured)
-    su = (
+    su = cache_stage(
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("signup_ts"))
-        .localCheckpoint(eager=True)
+        .agg(F.min("ts").alias("signup_ts")),
+        "signup_to_purchase_survival.su",
     )
     fp = (
         ev.filter(F.col("event_type") == "purchase")
@@ -762,15 +768,14 @@ def signup_to_purchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("purchase_ts"))
     )
-    delay = (
-        su.join(fp, "user_id", "left")
-        .select(
+    delay = cache_stage(
+        su.join(fp, "user_id", "left").select(
             "user_id",
             F.datediff(F.to_date("purchase_ts"), F.to_date("signup_ts"))
             .cast("long")
             .alias("days"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "signup_to_purchase_survival.delay",
     )
     t = delay.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     weeks = spark.range(0, 5).select(F.col("id").cast("long").alias("week"))

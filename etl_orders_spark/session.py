@@ -22,18 +22,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-# Shuffle-partition override (VERDICT r11 #8). Default: the core count
-# — at bench scale (sf0.1, <100 MB of parquet) every shuffle is
-# overhead-dominated and AQE coalesces small partitions anyway, so
-# tracking cores keeps the driver's c8/c32 scaling runs comparable. On
-# a real cluster this should be sized from DATA, not cores: shuffled
-# bytes / ~128-256 MB target partition (guide §2.2), e.g.
-# SPARK_GRAFT_SHUFFLE_PARTITIONS=4000 for a ~1 TB shuffle. Erring high
-# is safe (AQE coalesces down); the constant-per-core default is NOT a
-# production setting, just the comparable local one.
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get(
-    "SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_CPUS
-)
+
+
+def shuffle_partitions(cpus: str | int | None = None) -> str:
+    """The one shuffle-partition rule, shared by ``get_spark`` and
+    ``pin_session_defaults``: ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` when
+    set, else the core count (``cpus``, else ``SPARK_GRAFT_CPUS``).
+
+    Tracking cores keeps the c8/c32 scaling runs comparable at bench
+    scale (sf0.1, <100 MB of parquet), where every shuffle is
+    overhead-dominated and AQE coalesces small partitions anyway. On a
+    real cluster size it from DATA instead: shuffled bytes / ~128-256
+    MB target partition, e.g. SPARK_GRAFT_SHUFFLE_PARTITIONS=4000 for
+    a ~1 TB shuffle. Erring high is safe (AQE coalesces down)."""
+    return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or str(cpus or DEFAULT_CPUS)
 
 
 def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None) -> SparkSession:
@@ -46,7 +48,7 @@ def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None)
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS if cpus is None else n)
+        .config("spark.sql.shuffle.partitions", shuffle_partitions(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -75,6 +77,6 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
     # a default-conf session carries 200 shuffle partitions — far too
     # many tasks for local test scales (AQE coalesces, but task-launch
     # overhead remains); arrow speeds any toPandas the caller does
-    spark.conf.set("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions())
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark

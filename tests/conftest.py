@@ -26,13 +26,18 @@ def registry_plans(spark, sf_dir):
     (operator-internal .cache()/localCheckpoint) whose
     InMemoryRelation stats flip broadcast decisions, and may touch the
     broadcast threshold — both are reset before the build so the
-    plans are deterministic."""
+    plans are deterministic. The plan string leaves out AQE's
+    "Initial Plan" copies: a stage cache is filled while the lane
+    builds, and a filled cache prints its already-run plan twice (final
+    and initial), so an operator inside it would count double."""
     from etl_orders_spark.plans.registry import query_map
+    from tools.scan_audit import drop_initial_plans
 
     spark.catalog.clearCache()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     built = {}
     for name, builder in query_map().items():
         df = builder(spark, sf_dir)
-        built[name] = (df.schema.fields, df._jdf.queryExecution().executedPlan().toString())
+        plan = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+        built[name] = (df.schema.fields, plan)
     yield built

@@ -27,3 +27,26 @@ def test_contract_shapes(spark):
 def test_one_query_through_contract(spark, sf_dir):
     df = E.queries()["q1_pricing_summary"](spark, sf_dir)
     assert df.count() > 0
+
+
+def test_shuffle_partition_precedence_is_shared(spark, monkeypatch):
+    """get_spark and pin_session_defaults size shuffle partitions by
+    the same rule: the env override when set, else the core count."""
+    from etl_orders_spark.session import DEFAULT_CPUS, pin_session_defaults, shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+        assert shuffle_partitions(8) == "8"  # get_spark(cpus=8)
+        assert shuffle_partitions() == DEFAULT_CPUS  # get_spark() and the pin
+        pin_session_defaults(spark)
+        assert spark.conf.get(key) == DEFAULT_CPUS
+
+        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
+        assert shuffle_partitions(8) == "7"
+        assert shuffle_partitions() == "7"
+        pin_session_defaults(spark)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, before)

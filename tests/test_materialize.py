@@ -1,8 +1,12 @@
 """Unit contract of the materialize-once helpers: cache_stage's
-warm reuse / invalidation / external-clear recovery, and the scan
-audit's live-scan counter on synthetic plan text."""
+fill-on-miss / warm reuse / invalidation / external-clear recovery,
+the allowlist of direct checkpoint sites, and the scan audit's
+live-scan counter on synthetic plan text."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import pytest
 
@@ -14,16 +18,46 @@ def _is_cached(df) -> bool:
     return lvl.useMemory or lvl.useDisk
 
 
+def _is_filled(spark, df) -> bool:
+    """The frame's cache holds its column buffers (an action filled it)."""
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    return cached.isDefined() and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+def _jobs_under(spark, group: str, call):
+    """Run ``call`` under job group ``group``: (its result, jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_cache_stage_warm_reuse_and_bounded_eviction(spark):
     key = "test.cache_stage.unit"
     _STAGE_CACHE.pop(key, None)
 
-    a = cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key)
-    assert a.count() == 10 and _is_cached(a)
+    # a miss persists AND fills: jobs run inside the call, and the
+    # frame is cached before any action on it
+    a, jobs = _jobs_under(
+        spark, "test.cache_stage.miss",
+        lambda: cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key),
+    )
+    assert jobs >= 1
+    assert _is_cached(a) and _is_filled(spark, a)
+    assert a.count() == 10
 
-    # identical plan -> the SAME cached frame comes back (warm reuse)
-    b = cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key)
-    assert b is a
+    # identical plan -> the SAME cached frame comes back (warm reuse),
+    # and no job runs
+    b, jobs = _jobs_under(
+        spark, "test.cache_stage.hit",
+        lambda: cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key),
+    )
+    assert b is a and jobs == 0
 
     # a SECOND distinct plan coexists (two slots: interleaved builds
     # over two inputs must not evict each other's cache)
@@ -57,6 +91,78 @@ def test_cache_stage_recovers_from_external_clear(spark):
 
     spark.catalog.clearCache()
     _STAGE_CACHE.pop(key, None)
+
+
+# Every direct localCheckpoint in the package, by (module, enclosing
+# function), with the one reason a keyed cache_stage does not fit there.
+# Anything else with several consumers goes through cache_stage.
+_LOOP = "loop lineage cut"  # frame rebuilt or read inside a Python loop
+_IDS = "nondeterministic ids"  # values must freeze at one evaluation
+_STREAM = "streaming micro-batch"  # same plan, new rows every batch
+_FILES = "call-time file check"  # must see the files as they are now
+_SMALL = "materialize_small"
+_FLOAT = "float sum order"  # a cached plan runs uncoalesced: float sums reorder
+_CHECKPOINT_SITES = {
+    ("operators.graph", "hyperanf_reach"): _LOOP,
+    ("operators.graph", "connected_components"): _LOOP,
+    ("operators.materialize", "materialize_small"): _SMALL,
+    ("operators.similarity", "ivf_topk"): _FLOAT,
+    ("operators.rank", "two_pass_rank"): _IDS,
+    ("operators.rank", "two_pass_dense_rank"): _IDS,
+    ("operators.rank", "adjacent_pairs"): _IDS,
+    ("plans.curation_queries", "logreg_quality_train_docs"): _LOOP,
+    ("plans.graph_queries", "_khop_report"): _LOOP,
+    ("plans.text_queries", "_symbol_rows"): _LOOP,  # BPE merge rounds' seed
+    ("plans.text_queries", "_merge_top_pair"): _LOOP,
+    ("plans.text_queries", "text_kmeans_hashed_docs"): _LOOP,
+    ("plans.time_queries", "pagerank_event_types"): _LOOP,
+    ("plans.vector_queries", "kcenter_coreset_embeddings"): _LOOP,
+    ("plans.vector_queries", "_centered_gram"): _LOOP,  # the power iteration's matrix
+    ("plans.vector_queries", "pca_power_iteration_embeddings"): _LOOP,
+    ("plans.vector_queries", "_power_iterate"): _LOOP,
+    ("plans.vector_queries", "pca_deflation_top2_embeddings"): _LOOP,
+    ("sources.resilient", "read_parquet_resilient"): _FILES,
+    ("streaming.drift", "psi_from_histogram"): _STREAM,
+    ("streaming.sinks", "upsert_parquet_sink.apply_batch"): _STREAM,
+}
+
+
+def _checkpoint_sites() -> dict[tuple[str, str], int]:
+    """(module, dotted enclosing function) -> number of direct
+    ``.localCheckpoint(`` calls, over the whole package source."""
+    root = pathlib.Path(__file__).resolve().parent.parent / "etl_orders_spark"
+    found: dict[tuple[str, str], int] = {}
+
+    def walk(node, module: str, scope: list[str]) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                walk(child, module, [*scope, child.name])
+                continue
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "localCheckpoint"
+            ):
+                site = (module, ".".join(scope) or "<module>")
+                found[site] = found.get(site, 0) + 1
+            walk(child, module, scope)
+
+    for path in sorted(root.rglob("*.py")):
+        module = ".".join(path.relative_to(root).with_suffix("").parts)
+        walk(ast.parse(path.read_text()), module, [])
+    return found
+
+
+def test_every_checkpoint_site_is_allowlisted():
+    """A multi-consumer frame goes through cache_stage; a direct
+    localCheckpoint is allowed only where its (module, function) is
+    listed above with a reason. A new unlisted site fails here, and so
+    does a listed entry whose site is gone."""
+    found = _checkpoint_sites()
+    unlisted = sorted(set(found) - set(_CHECKPOINT_SITES))
+    assert not unlisted, f"localCheckpoint outside the allowlist (use cache_stage): {unlisted}"
+    stale = sorted(set(_CHECKPOINT_SITES) - set(found))
+    assert not stale, f"allowlist entries with no checkpoint left: {stale}"
 
 
 _SCAN = (

@@ -311,10 +311,11 @@ def test_multi_consumer_subtrees_are_cached(spark, sf_dir):
     materialize it once — without it, lazy lineage replays the subtree
     per consumer (measured: khop 38 lineitem scans / 65s at sf0.1 vs
     42s cached; prefix-filter jaccard 12s vs 2s). Two legitimate
-    forms, both visible in the physical plan: the keyed lazy cache
-    (InMemoryRelation/InMemoryTableScan — optimizer-transparent, used
-    where pruning/pushdown through the cache matters) and the eager
-    localCheckpoint (Scan ExistingRDD — lineage truncation, used for
+    forms, both visible in the physical plan: the keyed stage cache
+    (InMemoryRelation/InMemoryTableScan — cache_stage, filled once on
+    a miss and reused by warm re-runs; the rule for a frame built once
+    and read by several consumers) and the eager localCheckpoint (Scan
+    ExistingRDD — kept only where the lineage cut is the point, e.g.
     iterative expansion)."""
     from etl_orders_spark.plans.registry import query_map
 

@@ -91,6 +91,9 @@ def main() -> int:
             rows = [tuple(r) for r in df.collect()]
             rec["spark_rows"] = len(rows)
             rec["spark_cols"] = sorted(cols)
+            # recorded for every query, rows-only ones too, so two
+            # sweeps (e.g. before and after a change) diff value by value
+            rec["spark_hash"] = value_hash(cols, rows)
         except Exception as e:
             rec["error"] = f"spark: {type(e).__name__}: {e}"
             traceback.print_exc()
@@ -119,9 +122,7 @@ def main() -> int:
         rec["oracle_cols"] = sorted(ocols)
         rec["rows_match"] = rec["spark_rows"] == rec["oracle_rows"]
         rec["schema_match"] = rec["spark_cols"] == rec["oracle_cols"]
-        sh = value_hash(cols, rows)
-        oh = value_hash(ocols, orows)
-        rec["hash_match"] = sh == oh
+        rec["hash_match"] = rec["spark_hash"] == value_hash(ocols, orows)
         rec["ok"] = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
         results[name] = rec
         status = "ok   " if rec["ok"] else "FAIL "

@@ -10,9 +10,13 @@ Usage:
         [--explain-only]
 
 Prints per directory and lane: cold (first run, caches cleared), warm
-(best-of-reps after cold) and the output row count (one untimed
-count() after the timed runs). clearCache before the cold run keeps
-the stage caches honest, mirroring bench.py's recorded semantics.
+(best-of-reps after cold), the output row count (one untimed count()
+after the timed runs) and build_jobs=COLD/WARM, the Spark jobs run
+inside the builder on the cold rep and the last warm rep. Every rep
+runs under the job group ``LANE:PHASE`` (cold, warm0.., rows), so an
+event log of the run splits by lane and phase. clearCache before the
+cold run keeps the stage caches honest, mirroring bench.py's recorded
+semantics.
 """
 
 from __future__ import annotations
@@ -24,6 +28,29 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def _group_jobs(spark, group: str) -> int:
+    """Jobs recorded so far under a job group (the listener bus is
+    drained first, so every job already run is counted)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int]:
+    """One timed build + noop-sink run under job group ``group``:
+    (seconds, jobs the builder ran)."""
+    spark.sparkContext.setJobGroup(group, group)
+    before = _group_jobs(spark, group)
+    t0 = time.time()
+    df = builder(spark, sf_dir)
+    build_s = time.time() - t0
+    # counted outside the timed span: draining the bus is not lane work
+    build_jobs = _group_jobs(spark, group) - before
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return build_s + time.time() - t0, build_jobs
 
 
 def main() -> int:
@@ -60,22 +87,16 @@ def main() -> int:
             if args.explain_only:
                 continue
             spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"probe:{lane}:cold")
-            t0 = time.time()
-            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold = time.time() - t0
+            cold, cold_jobs = _rep(spark, builder, sf_dir, f"{lane}:cold")
             best = None
             for i in range(args.reps):
-                spark.sparkContext.setJobDescription(f"probe:{lane}:warm{i}")
-                t0 = time.time()
-                builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
+                dt, warm_jobs = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
                 best = dt if best is None else min(best, dt)
-            spark.sparkContext.setJobDescription(f"probe:{lane}:rows")
+            spark.sparkContext.setJobGroup(f"{lane}:rows", f"{lane}:rows")
             rows = builder(spark, sf_dir).count()
             print(
                 f"{os.path.basename(sf_dir)} {lane}: cold={cold:.3f}s warm={best:.3f}s"
-                f" rows={rows}",
+                f" rows={rows} build_jobs={cold_jobs}/{warm_jobs}",
                 flush=True,
             )
     return 0

@@ -40,21 +40,11 @@ def _node_indent(line: str) -> int:
     return i
 
 
-def live_scan_counts(plan: str) -> Counter:
-    """FileScan locations that EXECUTE, per table: a cached relation
-    (InMemoryRelation) embeds its child plan — including the child's
-    FileScan text — once per REFERENCE, but the cache fills once, so
-    every embedded copy after the first is display noise, not work.
-    We count scans outside any InMemoryRelation subtree, plus ONE fill
-    per distinct cached relation — dedup'd by the relation's text with
-    expression/plan ids normalized away, because each embedded copy of
-    the SAME cache re-renders with fresh ids (two genuinely different
-    caches of identical shape would collapse too; fine for an audit
-    whose job is surfacing candidates for a human decision)."""
-    # drop "== Initial Plan ==" subtrees outright: AQE prints the
-    # pre-adaptive plan beside the final one (recursively, inside
-    # every nested AdaptiveSparkPlan a cached relation embeds), and
-    # none of that text ever executed
+def drop_initial_plans(plan: str) -> str:
+    """Plan text without its "== Initial Plan ==" subtrees. AQE prints
+    the pre-adaptive plan beside the final one once a plan has run
+    (recursively, inside every nested AdaptiveSparkPlan a filled cached
+    relation embeds), and none of that text ever executes."""
     pruned: list[str] = []
     skip_deeper_than: int | None = None
     for line in plan.splitlines():
@@ -72,6 +62,21 @@ def live_scan_counts(plan: str) -> Counter:
             skip_deeper_than = d
             continue
         pruned.append(line)
+    return "\n".join(pruned)
+
+
+def live_scan_counts(plan: str) -> Counter:
+    """FileScan locations that EXECUTE, per table: a cached relation
+    (InMemoryRelation) embeds its child plan — including the child's
+    FileScan text — once per REFERENCE, but the cache fills once, so
+    every embedded copy after the first is display noise, not work.
+    We count scans outside any InMemoryRelation subtree, plus ONE fill
+    per distinct cached relation — dedup'd by the relation's text with
+    expression/plan ids normalized away, because each embedded copy of
+    the SAME cache re-renders with fresh ids (two genuinely different
+    caches of identical shape would collapse too; fine for an audit
+    whose job is surfacing candidates for a human decision)."""
+    pruned = drop_initial_plans(plan).splitlines()
 
     # recursive scope walk with a global seen-set: each DISTINCT cache
     # fills once, and a cache built from another cache contributes no

@@ -7,41 +7,49 @@ per-lane warm map:
     {"metric": "bench_total_sec", "value": N, "unit": "sec",
      "sf": 0.1, "lanes": 61, "queries": {"name": 0.35, ...}}
 
-Round 5 learned that a FULL-precision combined line outgrows the
-driver's ~2 KB tail capture and records ``parsed: null`` (VERDICT r5
-#1); rounds 7-11 kept the map on a preceding line instead, which left
-the driver unable to compare per-query round-over-round (PERF_r11
-per_query: {}, VERDICT r11 #2). The resolution: the final line folds
-the map back in at 2-DECIMAL precision with compact separators
-(61 lanes ≈ 1.86 KB < 2 KB) behind an explicit byte-budget guard that
-degrades precision, and as a last resort drops the map, rather than
-overflowing (``final_line``); full 3-decimal values
+Only a ~2 KB tail of the output is captured, so the map is written
+at 2-decimal precision with compact separators (61 lanes ≈ 1.86 KB)
+behind a byte-budget guard (``final_line``); full 3-decimal values
 stay on their own preceding line and in the ``bench_cold.json``
 sidecar. Existing queries are never removed or renamed.
 
 Each query is forced through the noop sink so the full plan executes
 (count() would let Catalyst prune the projected columns).
 
-Two timings per query: **cold** is the first execution in the session
-(plan compilation + codegen JIT + every stage cache empty — the number
-a fresh cluster pays), **warm** is best-of-N after that (steady state,
-shared caches populated — the number a long-lived session pays).
-Several plans share a keyed stage cache (operators/materialize.py), so
-warm alone would partially be a cache statement; reporting both keeps
-the 2x-of-baseline bound honest (VERDICT r4)."""
+Two timings per query (``time_lane``): **cold** is the first execution
+after clearCache (plan compilation + codegen JIT + every stage cache
+empty — the number a fresh cluster pays), **warm** is best-of-N after
+that (steady state, shared caches populated — the number a long-lived
+session pays). Several plans share a keyed stage cache
+(operators/materialize.py), so warm alone would partially be a cache
+statement; reporting both keeps the 2x-of-baseline bound honest.
+Every rep runs under the Spark job group ``LANE:cold`` / ``LANE:warmN``,
+so an event log of the run splits by lane and phase.
+
+``regressions`` is the one per-lane regression rule, shared with
+tools/cold_report.py; ``time_lane`` is shared with tools/probe_lane.py."""
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 
 # The final line is parsed from a 2000 B tail capture; it stays inside it.
 LINE_BUDGET = 1985
+
+# A lane regressed when it is more than THRESHOLD times slower than its
+# baseline after dividing by the box-speed ratio...
+THRESHOLD = 1.5
+# ...and it is not cheaper than this on both sides: lanes under it are
+# dominated by scheduler noise at sf0.1
+NOISE_FLOOR_SEC = 0.3
 
 # Lanes with a STANDING isolation record (VERDICT r8 #2): re-measured
 # in isolation at the end of every recorded run regardless of ratios,
@@ -54,42 +62,101 @@ def _calibration_probe(spark) -> float:
     """Fixed, DATA-INDEPENDENT box-speed probe (VERDICT r8 #2): a
     canned xxhash64 aggregation over an in-memory range — no parquet,
     no stage caches, same plan every round — timed before any lane so
-    round-over-round ratios can be normalized by box weather
-    (BENCH_r08 baked ~15% of a slow-window into the driver record).
-    Best-of-3 after one untimed JIT warmup; tools/cold_report.py
-    divides lane ratios by the calibration ratio when both sidecars
-    carry one."""
-    import time as _t
+    round-over-round ratios can be normalized by box weather.
+    Best-of-3 after one untimed JIT warmup; ``regressions`` divides
+    lane ratios by the calibration ratio when both sidecars carry one."""
 
     def run() -> float:
         # one wide codegen pass + one reduce: hash 67M longs, sum the
         # residues (raw hash sum overflows long under ANSI mode)
-        t0 = _t.time()
+        t0 = time.time()
         spark.range(0, 1 << 26, 1, 32).selectExpr(
             "sum(xxhash64(id, id * 31) % 1000000) AS s"
         ).write.format("noop").mode("overwrite").save()
-        return _t.time() - t0
+        return time.time() - t0
 
     run()  # untimed JIT warmup
     return round(min(run() for _ in range(3)), 3)
 
 
+def _group_jobs(spark, group: str) -> int:
+    """Jobs recorded so far under a job group (the listener bus is
+    drained first, so every job already run is counted)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int]:
+    """One timed build + noop-sink run under job group ``group``:
+    (seconds, jobs the builder ran)."""
+    spark.sparkContext.setJobGroup(group, group)
+    before = _group_jobs(spark, group)
+    t0 = time.time()
+    df = builder(spark, sf_dir)
+    build_s = time.time() - t0
+    # counted outside the timed span: draining the bus is not lane work
+    build_jobs = _group_jobs(spark, group) - before
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return build_s + time.time() - t0, build_jobs
+
+
+def time_lane(spark, lane: str, builder, sf_dir: str, reps: int) -> tuple[float, float, int, int]:
+    """(cold_s, warm_s, cold_build_jobs, warm_build_jobs) for one lane:
+    one cold rep after clearCache — keyed stage caches are shared
+    across lanes, so without the clear an earlier lane pre-fills this
+    one's inputs and cold silently measures cache reads — then the best
+    of ``reps`` warm reps; warm_build_jobs is the last warm rep's."""
+    spark.catalog.clearCache()
+    cold, cold_jobs = _rep(spark, builder, sf_dir, f"{lane}:cold")
+    best = None
+    for i in range(reps):
+        dt, warm_jobs = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
+        best = dt if best is None else min(best, dt)
+    return cold, best, cold_jobs, warm_jobs
+
+
+def regressions(
+    old: dict[str, float], new: dict[str, float], cal: float = 1.0
+) -> list[tuple[str, float, float, float]]:
+    """(lane, old_s, new_s, ratio) for every common lane slower than
+    THRESHOLD x its baseline and above the noise floor, by name. ``cal``
+    is the box-speed ratio (new calibration / old calibration): lane
+    ratios are divided by it, so a uniformly slow measurement window
+    does not read as a fleet of regressions. A 0 s baseline has an
+    infinite ratio, so it flags once the new time clears the floor."""
+    out = []
+    for name in sorted(set(old) & set(new)):
+        o, n = old[name], new[name]
+        ratio = (n / o if o > 0 else float("inf")) / cal
+        if ratio > THRESHOLD and max(o, n) > NOISE_FLOOR_SEC:
+            out.append((name, o, n, ratio))
+    return out
+
+
+def head_sidecar() -> dict | None:
+    """The last committed ``bench_cold.json`` (the regression baseline),
+    or None when there is no git, no checkout or no committed sidecar."""
+    try:
+        out = subprocess.run(
+            ["git", "-C", REPO, "show", "HEAD:bench_cold.json"],
+            capture_output=True, text=True,
+        )
+    except OSError:  # no git binary: the caller reports the missing baseline
+        return None
+    return json.loads(out.stdout) if out.returncode == 0 else None
+
+
 def final_line(timings: dict[str, float], total: float, sf: float) -> str:
-    """The FINAL line, parsed from the run's output tail. Its declared
-    contract is ONE JSON line {"metric", "value", "unit", "queries":
-    {name: sec}, "sf"} — round 11's layout kept the per-lane map on a
-    preceding line and the record came out per_query: {} / n_common: 0
-    (PERF_r11.json), so round-over-round per-lane comparison was
-    impossible (VERDICT r11 #2). Folded back in COMPACTLY: 2-decimal
-    values, ascending by time, compact separators — 61 lanes ≈ 1.86
-    KB, inside the ~2 KB tail capture that round 5's full-precision
-    combined line blew (VERDICT r5 #1). Budget-guarded: while the line
-    outgrows LINE_BUDGET, values >= 10 s, then >= 1 s, then all
-    degrade to 1 decimal; if even that does not fit, the last tier
-    drops the queries map and keeps the headline (metric, value, unit,
-    sf, lanes), warning loudly. Measurement semantics are unchanged —
-    the full 3-decimal values stay on the warm line and in
-    bench_cold.json."""
+    """The FINAL line, parsed from the run's output tail: ONE JSON line
+    {"metric", "value", "unit", "sf", "lanes", "queries": {name: sec}}
+    with 2-decimal values, ascending by time, compact separators.
+    Budget-guarded: while the line outgrows LINE_BUDGET, values >= 10 s,
+    then >= 1 s, then all degrade to 1 decimal; if even that does not
+    fit, the last tier drops the queries map and keeps the headline
+    (metric, value, unit, sf, lanes), warning loudly. The full 3-decimal
+    values stay on the warm line and in bench_cold.json."""
     head = {"metric": "bench_total_sec", "value": total, "unit": "sec", "sf": sf,
             "lanes": len(timings)}
     ordered = sorted(timings.items(), key=lambda kv: kv[1])
@@ -127,137 +194,74 @@ def main() -> int:
     calibration = _calibration_probe(spark)
     print(f"# calibration probe: {calibration}s", file=sys.stderr)
 
-    # the first run per query is TIMED as the cold column (plan
-    # compile + codegen JIT + empty stage caches); SPARK_GRAFT_BENCH_WARMUP=0
-    # skips it and leaves the cold column absent
-    warmup = os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-    # best-of-N timed runs (default 3): single-run times on a shared
-    # box carry ±20% scheduler/GC noise, and the xxhash64-heavy codegen
-    # plans need 3-4 executions to reach JIT steady state (SCALE.md,
-    # round 5) — the minimum of three post-warmup runs samples past the
-    # convergence tail that best-of-2 kept landing on
+    # best-of-N warm reps (default 3): single-run times on a shared box
+    # carry ±20% scheduler/GC noise, and the xxhash64-heavy codegen
+    # plans need 3-4 executions to reach JIT steady state (SCALE.md)
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
+    builders = bench_queries()
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
-    for name, builder in bench_queries().items():
-        if warmup:
-            # the cold column's contract is "every stage cache empty":
-            # keyed stage caches are now SHARED across lanes (the
-            # fan_out_narrow "documents" key), so without this clear an
-            # earlier lane pre-fills a later lane's input cache and the
-            # recorded cold silently measures warm-cache reads. Clearing
-            # here keeps cold honest; the warm reps below repopulate.
-            spark.catalog.clearCache()
-            t0 = time.time()
-            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            cold[name] = round(time.time() - t0, 3)
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
-        cold_note = f" (cold {cold[name]}s)" if name in cold else ""
-        print(f"# {name}: {timings[name]}s{cold_note}", file=sys.stderr)
+    for name, builder in builders.items():
+        cold_s, warm_s, _, _ = time_lane(spark, name, builder, sf_dir, reps)
+        cold[name], timings[name] = round(cold_s, 3), round(warm_s, 3)
+        print(f"# {name}: {timings[name]}s (cold {cold[name]}s)", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
 
     # Isolation re-measures (VERDICT r8 #2): lanes whose warm number
-    # regressed >1.5x vs the committed sidecar — plus the standing set
-    # — get one clean re-measure AFTER the full sweep, when the JIT
+    # regressed vs the committed sidecar — plus the standing set — get
+    # one clean re-measure AFTER the full sweep, when the JIT
     # neighborhood has settled; a flagged lane whose isolated number
     # sits at baseline is box/JIT weather, not a plan change.
+    flagged = {n for n in STANDING_ISOLATION if n in timings}
+    head = head_sidecar()
+    if head is None:
+        print("# no HEAD:bench_cold.json baseline: isolating the standing set only",
+              file=sys.stderr)
+    else:
+        head_cal = head.get("calibration_sec") or 0.0
+        box = (calibration / head_cal) if (calibration and head_cal) else 1.0
+        flagged |= {r[0] for r in regressions(head.get("queries_warm", {}), timings, box)}
     isolation: dict[str, float] = {}
-    if warmup:
-        flagged = set(n for n in STANDING_ISOLATION if n in timings)
-        try:
-            import subprocess
-
-            head_sidecar = json.loads(subprocess.run(
-                ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-                 "show", "HEAD:bench_cold.json"],
-                capture_output=True, text=True, check=True,
-            ).stdout)
-            head = head_sidecar.get("queries_warm", {})
-            # Calibrate the regression ratio by relative box speed
-            # (ADVICE r9 #4): divide t/head by calibration/head_cal so
-            # in-run flagging matches cold_report.py's normalized
-            # judgment — a uniformly slow box window no longer flags
-            # every lane into extra isolation reps.
-            head_cal = head_sidecar.get("calibration_sec") or 0.0
-            box = (calibration / head_cal) if (calibration and head_cal) else 1.0
-            flagged |= {
-                n for n, t in timings.items()
-                if n in head and head[n] > 0 and (t / head[n]) / box > 1.5
-                and max(t, head[n]) > 0.3
-            }
-        except Exception:  # noqa: BLE001 — no git/HEAD sidecar: standing set only
-            pass
-        builders = bench_queries()
-        for name in sorted(flagged):
-            spark.catalog.clearCache()
-            builders[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = None
-            for _ in range(reps):
-                t0 = time.time()
-                builders[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            isolation[name] = round(best, 3)
-            print(f"# isolation {name}: {isolation[name]}s (sweep {timings[name]}s)",
-                  file=sys.stderr)
+    for name in sorted(flagged):
+        isolation[name] = round(time_lane(spark, name, builders[name], sf_dir, reps)[1], 3)
+        print(f"# isolation {name}: {isolation[name]}s (sweep {timings[name]}s)",
+              file=sys.stderr)
 
     sidecar = {
         "metric": "bench_cold_total_sec",
-        "value": round(sum(cold.values()), 3) if cold else None,
+        "value": round(sum(cold.values()), 3),
         "unit": "sec",
         "calibration_sec": calibration,
         "isolation_warm": isolation,
         "queries_cold": cold,
-        # warm per-lane map rides the same sidecar so
-        # tools/cold_report.py can diff BOTH columns round-over-round
-        # (VERDICT r7 #3; r7's clearCache-per-lane change made warm
-        # comparisons meaningful for the first time)
+        # the warm map rides the same sidecar so tools/cold_report.py
+        # diffs BOTH columns round-over-round
         "queries_warm": timings,
         "warm_total_sec": total,
         "sf": sf,
     }
-    if cold:
-        # Preceding line, never the final line (the driver's tail
-        # capture is ~2 KB and parses only the last line).
-        print(json.dumps({k: v for k, v in sidecar.items()
-                          if k not in ("queries_warm", "warm_total_sec")}))
-    # the sidecar is the round-over-round regression BASELINE
-    # (tools/cold_report.py): only a recorded-semantics run may refresh
-    # it — a no-warmup run has no cold column, which would clobber the
-    # baseline and turn the >1.5x gate vacuous
-    if cold:
-        try:
-            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   "bench_cold.json"), "w") as f:
-                json.dump(sidecar, f)
-        except OSError:
-            pass
+    # Preceding line, never the final line (the tail capture is ~2 KB
+    # and only the last line is parsed).
+    print(json.dumps({k: v for k, v in sidecar.items()
+                      if k not in ("queries_warm", "warm_total_sec")}))
+    # the sidecar is the round-over-round regression baseline
+    # (tools/cold_report.py)
+    try:
+        with open(os.path.join(REPO, "bench_cold.json"), "w") as f:
+            json.dump(sidecar, f)
+    except OSError as e:
+        print(f"WARNING: bench_cold.json not written: {e}", file=sys.stderr)
     # Full-precision warm map on its OWN line (3 decimals, ascending by
-    # time) for humans/logs; the DRIVER-facing copy now rides the final
-    # line below (VERDICT r11 #2) — this one is allowed to fall out of
-    # the tail capture because the sidecar carries the same values.
-    warm_line = json.dumps(
+    # time) for humans/logs; it may fall out of the tail capture because
+    # the final line and the sidecar carry the same lanes.
+    print(json.dumps(
         {
             "metric": "bench_queries_warm_sec",
             "queries": dict(sorted(timings.items(), key=lambda kv: kv[1])),
             "sf": sf,
         }
-    )
-    print(warm_line)
-    # box-speed probe + isolated re-measures immediately before the
-    # final line so they stay inside whatever tail budget the final
-    # line leaves over (~20 B — calibration_sec is also in the sidecar)
-    print(json.dumps(
-        {"metric": "bench_meta", "calibration_sec": calibration,
-         "isolation_warm": isolation}
     ))
     print(final_line(timings, total, sf))
     return 0

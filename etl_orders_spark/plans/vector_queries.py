@@ -577,9 +577,9 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("c")
             )
         )
-        # K rows; caching truncates re-execution of the whole prior
-        # iteration's assignment every time this table is referenced
-        cent = cent.cache()
+        # K rows; the checkpoint cuts the lineage, so no round
+        # re-executes the prior iterations' assignments
+        cent = cent.localCheckpoint(eager=True)
     final = assign(cent)
     return (
         final.groupBy("cid")
@@ -1190,7 +1190,9 @@ def semantic_dedup_frame_fixture(
         rn = F.row_number().over(Window.partitionBy("vec_id").orderBy(F.round(d2, 6), "cid"))
         return j.withColumn("rn", rn).filter(F.col("rn") == 1).select("vec_id", "v", "cid")
 
-    cent1 = (
+    # K rows, read by both consumers of assign(cent1): staged once so
+    # assign0 does not re-run per reference
+    cent1 = cache_stage(
         assign(cent)
         .select("cid", F.posexplode("v").alias("i", "comp"))
         .groupBy("cid", "i")
@@ -1200,8 +1202,8 @@ def semantic_dedup_frame_fixture(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
             ).alias("c")
-        )
-        .cache()  # K rows; truncates re-running assign0 per reference
+        ),
+        f"semantic_dedup_frame_fixture.cent1.k{k}",
     )
     # assigned feeds two subtrees (the pair kernel and the final
     # rollup); uncached, the n-by-K assignment window replays per

@@ -1,11 +1,12 @@
-"""The bench's parsed final line stays inside the tail budget."""
+"""The bench's parsed final line stays inside the tail budget; its
+regression rule and lane timing behave as documented."""
 
 from __future__ import annotations
 
 import json
 import os
 
-from bench import LINE_BUDGET, final_line
+from bench import LINE_BUDGET, final_line, regressions, time_lane
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,3 +36,34 @@ def test_final_line_keeps_the_61_lane_map():
     assert out["queries"].keys() == timings.keys()
     assert all(abs(out["queries"][k] - v) <= 0.05 for k, v in timings.items())
     assert list(out["queries"].values()) == sorted(out["queries"].values())
+
+
+def test_regression_rule_is_calibrated_and_floored():
+    assert regressions({"lane": 1.0}, {"lane": 2.0}, 1.0) == [("lane", 1.0, 2.0, 2.0)]
+    # the same slowdown in a window where the box itself is 2x slower
+    assert regressions({"lane": 1.0}, {"lane": 2.0}, 2.0) == []
+    # 2.5x, but both sides under the noise floor
+    assert regressions({"lane": 0.1}, {"lane": 0.25}, 1.0) == []
+    # a 0 s baseline flags once the new time clears the floor
+    assert regressions({"lane": 0.0}, {"lane": 0.2}, 1.0) == []
+    assert [r[0] for r in regressions({"lane": 0.0}, {"lane": 0.4}, 1.0)] == ["lane"]
+
+
+def test_time_lane_tags_every_rep_and_counts_builder_jobs(spark):
+    def builder(spark, sf_dir):
+        spark.range(3).collect()  # one job while building
+        return spark.range(3)
+
+    sc = spark.sparkContext
+    try:
+        cold_s, warm_s, cold_jobs, warm_jobs = time_lane(
+            spark, "time_lane_probe", builder, "unused", reps=2
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    for phase in ("cold", "warm0", "warm1"):
+        assert tracker.getJobIdsForGroup(f"time_lane_probe:{phase}"), phase
+    assert cold_jobs == 1 and warm_jobs == 1
+    assert cold_s > 0 and warm_s > 0

@@ -1,7 +1,7 @@
 """Unit contract of the materialize-once helpers: cache_stage's
 fill-on-miss / warm reuse / invalidation / external-clear recovery,
-the allowlist of direct checkpoint sites, and the scan audit's
-live-scan counter on synthetic plan text."""
+the allowlist of direct checkpoint, cache and persist sites, and the
+scan audit's live-scan counter on synthetic plan text."""
 
 from __future__ import annotations
 
@@ -93,18 +93,22 @@ def test_cache_stage_recovers_from_external_clear(spark):
     _STAGE_CACHE.pop(key, None)
 
 
-# Every direct localCheckpoint in the package, by (module, enclosing
-# function), with the one reason a keyed cache_stage does not fit there.
-# Anything else with several consumers goes through cache_stage.
+# Every direct localCheckpoint, cache or persist in the package, by
+# (module, enclosing function), with the one reason a keyed cache_stage
+# does not fit there. Anything else with several consumers goes through
+# cache_stage.
 _LOOP = "loop lineage cut"  # frame rebuilt or read inside a Python loop
 _IDS = "nondeterministic ids"  # values must freeze at one evaluation
 _STREAM = "streaming micro-batch"  # same plan, new rows every batch
 _FILES = "call-time file check"  # must see the files as they are now
 _SMALL = "materialize_small"
 _FLOAT = "float sum order"  # a cached plan runs uncoalesced: float sums reorder
+_PRIMITIVE = "the staging primitive"  # cache_stage's own persist
+_CALLER = "caller-owned lifetime"  # the caller unpersists it
 _CHECKPOINT_SITES = {
     ("operators.graph", "hyperanf_reach"): _LOOP,
     ("operators.graph", "connected_components"): _LOOP,
+    ("operators.materialize", "cache_stage"): _PRIMITIVE,
     ("operators.materialize", "materialize_small"): _SMALL,
     ("operators.similarity", "ivf_topk"): _FLOAT,
     ("operators.rank", "two_pass_rank"): _IDS,
@@ -117,10 +121,12 @@ _CHECKPOINT_SITES = {
     ("plans.text_queries", "text_kmeans_hashed_docs"): _LOOP,
     ("plans.time_queries", "pagerank_event_types"): _LOOP,
     ("plans.vector_queries", "kcenter_coreset_embeddings"): _LOOP,
+    ("plans.vector_queries", "kmeans_embeddings"): _LOOP,
     ("plans.vector_queries", "_centered_gram"): _LOOP,  # the power iteration's matrix
     ("plans.vector_queries", "pca_power_iteration_embeddings"): _LOOP,
     ("plans.vector_queries", "_power_iterate"): _LOOP,
     ("plans.vector_queries", "pca_deflation_top2_embeddings"): _LOOP,
+    ("sources.readers", "_quarantine_split"): _CALLER,
     ("sources.resilient", "read_parquet_resilient"): _FILES,
     ("streaming.drift", "psi_from_histogram"): _STREAM,
     ("streaming.sinks", "upsert_parquet_sink.apply_batch"): _STREAM,
@@ -129,7 +135,8 @@ _CHECKPOINT_SITES = {
 
 def _checkpoint_sites() -> dict[tuple[str, str], int]:
     """(module, dotted enclosing function) -> number of direct
-    ``.localCheckpoint(`` calls, over the whole package source."""
+    ``.localCheckpoint(``, ``.cache(`` and ``.persist(`` calls, over the
+    whole package source."""
     root = pathlib.Path(__file__).resolve().parent.parent / "etl_orders_spark"
     found: dict[tuple[str, str], int] = {}
 
@@ -141,7 +148,7 @@ def _checkpoint_sites() -> dict[tuple[str, str], int]:
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr == "localCheckpoint"
+                and child.func.attr in ("localCheckpoint", "cache", "persist")
             ):
                 site = (module, ".".join(scope) or "<module>")
                 found[site] = found.get(site, 0) + 1
@@ -155,14 +162,14 @@ def _checkpoint_sites() -> dict[tuple[str, str], int]:
 
 def test_every_checkpoint_site_is_allowlisted():
     """A multi-consumer frame goes through cache_stage; a direct
-    localCheckpoint is allowed only where its (module, function) is
-    listed above with a reason. A new unlisted site fails here, and so
-    does a listed entry whose site is gone."""
+    localCheckpoint, cache or persist is allowed only where its
+    (module, function) is listed above with a reason. A new unlisted
+    site fails here, and so does a listed entry whose site is gone."""
     found = _checkpoint_sites()
     unlisted = sorted(set(found) - set(_CHECKPOINT_SITES))
-    assert not unlisted, f"localCheckpoint outside the allowlist (use cache_stage): {unlisted}"
+    assert not unlisted, f"materialize call outside the allowlist (use cache_stage): {unlisted}"
     stale = sorted(set(_CHECKPOINT_SITES) - set(found))
-    assert not stale, f"allowlist entries with no checkpoint left: {stale}"
+    assert not stale, f"allowlist entries with no materialize call left: {stale}"
 
 
 _SCAN = (

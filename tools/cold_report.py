@@ -1,27 +1,23 @@
 """Round-over-round bench regression report (VERDICT r6 #6, r7 #3).
 
-The driver-parsed bench line carries only the warm TOTAL; the per-lane
-columns live in the ``bench_cold.json`` sidecar — ``queries_cold``
-(first-execution cost: plan compile + codegen JIT + stage-cache fill)
-and, since round 8, ``queries_warm`` (best-of-N steady state). Nothing
-diffed cold round-over-round before round 7 (which is how round 5's
-llm_prep cold regression carried silently), and nothing diffed warm
-before round 8 (round 7's clearCache-per-lane change made warm
-comparisons meaningful for the first time — earlier warm numbers rode
-cross-lane caches). This script compares the current sidecar against a
-baseline (default: the last committed version, ``git show
-HEAD:bench_cold.json``) and fails loudly on >1.5x per-lane regressions
-in EITHER column.
+The parsed final bench line carries only 2-decimal warm values; the
+per-lane columns live in the ``bench_cold.json`` sidecar —
+``queries_cold`` (first-execution cost: plan compile + codegen JIT +
+stage-cache fill) and ``queries_warm`` (best-of-N steady state). This
+script compares the current sidecar against a baseline (default: the
+last committed version, ``git show HEAD:bench_cold.json``) and fails
+loudly on per-lane regressions in EITHER column, by bench.py's one
+rule (``regressions``: more than THRESHOLD x slower after box-speed
+calibration, above NOISE_FLOOR_SEC).
 
 Usage:
     python tools/cold_report.py                    # vs HEAD's sidecar
     python tools/cold_report.py old.json           # vs a file
     python tools/cold_report.py old.json new.json  # explicit pair
 
-Exit code 1 iff any common lane regressed past the threshold in either
-column. Wired into the round checklist
-(.claude/skills/verify/SKILL.md): run after ``python bench.py``
-refreshes the sidecar. Warm numbers on this box carry ±25-30% noise
+Exit code 1 iff any common lane regressed in either column, 2 when no
+baseline was given and HEAD has no sidecar. Run it after ``python
+bench.py`` refreshes the sidecar. Warm numbers carry ±25-30% noise
 between runs (SCALE.md) — re-run on a quiet box before believing a
 flagged warm regression, and decide optimizations by clearCache A/B
 probes, not single bench deltas.
@@ -31,15 +27,12 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
-THRESHOLD = 1.5
-# lanes cheaper than this are dominated by scheduler noise at sf0.1;
-# a ratio over one of these is not a regression signal
-NOISE_FLOOR_SEC = 0.3
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from bench import THRESHOLD, head_sidecar, regressions  # noqa: E402
 
 
 def _load(src: str) -> dict:
@@ -47,23 +40,13 @@ def _load(src: str) -> dict:
         return json.load(f)
 
 
-def _load_git_head() -> dict:
-    out = subprocess.run(
-        ["git", "-C", REPO, "show", "HEAD:bench_cold.json"],
-        capture_output=True, text=True, check=True,
-    )
-    return json.loads(out.stdout)
-
-
 def _diff_column(
     label: str, old: dict[str, float], new: dict[str, float], cal: float = 1.0
 ) -> int:
     """Print the regression report for one timing column; return the
-    number of >THRESHOLD regressions above the noise floor. ``cal`` is
-    the box-speed ratio (new calibration / old calibration) from the
-    sidecars' fixed data-independent probe (VERDICT r8 #2): lane
-    ratios are divided by it, so a uniformly slow measurement window
-    no longer reads as a fleet of regressions."""
+    number of lanes bench.regressions flags. ``cal`` is the box-speed
+    ratio (new calibration / old calibration) from the sidecars' fixed
+    data-independent probe."""
     if not old or not new:
         print(f"{label}: column absent on one side "
               f"(old {len(old)} lanes, new {len(new)}) — skipped")
@@ -71,15 +54,8 @@ def _diff_column(
     common = sorted(set(old) & set(new))
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
-    regressed: list[tuple[str, float, float, float]] = []
-    improved = 0
-    for name in common:
-        o, n = old[name], new[name]
-        ratio = (n / o if o > 0 else float("inf")) / cal
-        if ratio > THRESHOLD and max(o, n) > NOISE_FLOOR_SEC:
-            regressed.append((name, o, n, ratio))
-        elif ratio < 1 / THRESHOLD:
-            improved += 1
+    regressed = regressions(old, new, cal)
+    improved = sum(old[n] > 0 and new[n] / old[n] / cal < 1 / THRESHOLD for n in common)
 
     cal_note = f", calibrated /{cal:.2f}" if cal != 1.0 else ""
     print(f"{label}: {len(common)} common lanes, "
@@ -110,7 +86,11 @@ def main() -> int:
         new_doc = _load(os.path.join(REPO, "bench_cold.json"))
         old_src = args[0]
     else:
-        old_doc = _load_git_head()
+        old_doc = head_sidecar()
+        if old_doc is None:
+            print("no HEAD:bench_cold.json to diff against; pass a baseline file",
+                  file=sys.stderr)
+            return 2
         new_doc = _load(os.path.join(REPO, "bench_cold.json"))
         old_src = "HEAD:bench_cold.json"
 

@@ -14,9 +14,8 @@ Prints per directory and lane: cold (first run, caches cleared), warm
 after the timed runs) and build_jobs=COLD/WARM, the Spark jobs run
 inside the builder on the cold rep and the last warm rep. Every rep
 runs under the job group ``LANE:PHASE`` (cold, warm0.., rows), so an
-event log of the run splits by lane and phase. clearCache before the
-cold run keeps the stage caches honest, mirroring bench.py's recorded
-semantics.
+event log of the run splits by lane and phase. The timing is bench.py's
+``time_lane``, so a probe measures exactly what the bench records.
 """
 
 from __future__ import annotations
@@ -24,33 +23,9 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _group_jobs(spark, group: str) -> int:
-    """Jobs recorded so far under a job group (the listener bus is
-    drained first, so every job already run is counted)."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int]:
-    """One timed build + noop-sink run under job group ``group``:
-    (seconds, jobs the builder ran)."""
-    spark.sparkContext.setJobGroup(group, group)
-    before = _group_jobs(spark, group)
-    t0 = time.time()
-    df = builder(spark, sf_dir)
-    build_s = time.time() - t0
-    # counted outside the timed span: draining the bus is not lane work
-    build_jobs = _group_jobs(spark, group) - before
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    return build_s + time.time() - t0, build_jobs
 
 
 def main() -> int:
@@ -63,6 +38,7 @@ def main() -> int:
     ap.add_argument("--explain-only", action="store_true")
     args = ap.parse_args()
 
+    from bench import time_lane
     from etl_orders_spark.plans.registry import query_map
     from etl_orders_spark.session import get_spark
 
@@ -86,16 +62,13 @@ def main() -> int:
                 print(f"# explain -> {path}", file=sys.stderr)
             if args.explain_only:
                 continue
-            spark.catalog.clearCache()
-            cold, cold_jobs = _rep(spark, builder, sf_dir, f"{lane}:cold")
-            best = None
-            for i in range(args.reps):
-                dt, warm_jobs = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
-                best = dt if best is None else min(best, dt)
+            cold, warm, cold_jobs, warm_jobs = time_lane(
+                spark, lane, builder, sf_dir, args.reps
+            )
             spark.sparkContext.setJobGroup(f"{lane}:rows", f"{lane}:rows")
             rows = builder(spark, sf_dir).count()
             print(
-                f"{os.path.basename(sf_dir)} {lane}: cold={cold:.3f}s warm={best:.3f}s"
+                f"{os.path.basename(sf_dir)} {lane}: cold={cold:.3f}s warm={warm:.3f}s"
                 f" rows={rows} build_jobs={cold_jobs}/{warm_jobs}",
                 flush=True,
             )

@@ -36,6 +36,7 @@ import os
 import subprocess
 import sys
 import time
+from typing import NamedTuple
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -87,11 +88,20 @@ def _group_jobs(spark, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int]:
+def janino_compiles(spark) -> int:
+    """Classes Janino has compiled so far in this JVM (driver and, in
+    local mode, executors): a generated class the codegen cache still
+    holds is not compiled again."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int]:
     """One timed build + noop-sink run under job group ``group``:
-    (seconds, jobs the builder ran)."""
+    (seconds, jobs the builder ran, classes compiled)."""
     spark.sparkContext.setJobGroup(group, group)
     before = _group_jobs(spark, group)
+    compiled = janino_compiles(spark)
     t0 = time.time()
     df = builder(spark, sf_dir)
     build_s = time.time() - t0
@@ -99,22 +109,32 @@ def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int]:
     build_jobs = _group_jobs(spark, group) - before
     t0 = time.time()
     df.write.format("noop").mode("overwrite").save()
-    return build_s + time.time() - t0, build_jobs
+    return build_s + time.time() - t0, build_jobs, janino_compiles(spark) - compiled
 
 
-def time_lane(spark, lane: str, builder, sf_dir: str, reps: int) -> tuple[float, float, int, int]:
-    """(cold_s, warm_s, cold_build_jobs, warm_build_jobs) for one lane:
-    one cold rep after clearCache — keyed stage caches are shared
-    across lanes, so without the clear an earlier lane pre-fills this
-    one's inputs and cold silently measures cache reads — then the best
-    of ``reps`` warm reps; warm_build_jobs is the last warm rep's."""
+class LaneTiming(NamedTuple):
+    cold_s: float
+    warm_s: float  # best of the warm reps
+    cold_jobs: int  # jobs run inside the builder
+    warm_jobs: int  # last warm rep's
+    cold_compiles: int  # Janino compiles
+    warm_compiles: int  # last warm rep's
+
+
+def time_lane(spark, lane: str, builder, sf_dir: str, reps: int) -> LaneTiming:
+    """One lane's timing: one cold rep after clearCache — keyed stage
+    caches are shared across lanes, so without the clear an earlier
+    lane pre-fills this one's inputs and cold silently measures cache
+    reads — then the best of ``reps`` warm reps. Builder jobs and
+    compiles of the warm side are the last warm rep's, so a stage or a
+    generated class that is not kept shows there."""
     spark.catalog.clearCache()
-    cold, cold_jobs = _rep(spark, builder, sf_dir, f"{lane}:cold")
+    cold, cold_jobs, cold_compiles = _rep(spark, builder, sf_dir, f"{lane}:cold")
     best = None
     for i in range(reps):
-        dt, warm_jobs = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
+        dt, warm_jobs, warm_compiles = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
         best = dt if best is None else min(best, dt)
-    return cold, best, cold_jobs, warm_jobs
+    return LaneTiming(cold, best, cold_jobs, warm_jobs, cold_compiles, warm_compiles)
 
 
 def regressions(
@@ -203,9 +223,10 @@ def main() -> int:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name, builder in builders.items():
-        cold_s, warm_s, _, _ = time_lane(spark, name, builder, sf_dir, reps)
-        cold[name], timings[name] = round(cold_s, 3), round(warm_s, 3)
-        print(f"# {name}: {timings[name]}s (cold {cold[name]}s)", file=sys.stderr)
+        t = time_lane(spark, name, builder, sf_dir, reps)
+        cold[name], timings[name] = round(t.cold_s, 3), round(t.warm_s, 3)
+        print(f"# {name}: {timings[name]}s (cold {cold[name]}s)"
+              f" compiles={t.cold_compiles}/{t.warm_compiles}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
 
@@ -225,7 +246,7 @@ def main() -> int:
         flagged |= {r[0] for r in regressions(head.get("queries_warm", {}), timings, box)}
     isolation: dict[str, float] = {}
     for name in sorted(flagged):
-        isolation[name] = round(time_lane(spark, name, builders[name], sf_dir, reps)[1], 3)
+        isolation[name] = round(time_lane(spark, name, builders[name], sf_dir, reps).warm_s, 3)
         print(f"# isolation {name}: {isolation[name]}s (sweep {timings[name]}s)",
               file=sys.stderr)
 

@@ -46,7 +46,6 @@ other worker-side helpers closure-local; see sources/pysource.py).
 from __future__ import annotations
 
 import struct
-import sys as _sys
 
 import numpy as np
 
@@ -54,6 +53,7 @@ import numpy as np
 # where the package is not importable — a module-level binding lets
 # cloudpickle's by-value registration carry the jpeg/vp8l modules along
 from etl_orders_spark.multimodal.jpeg import decode_jpeg as _decode_jpeg_native
+from etl_orders_spark.multimodal.pickling import pickle_by_value
 from etl_orders_spark.multimodal.vp8l import decode_webp as _decode_webp_native
 
 # formats recognized but with NO native decoder at all (decode_image
@@ -1221,9 +1221,4 @@ def dhash64(gray: np.ndarray) -> tuple[int, int]:
     return hi, lo
 
 
-try:  # pragma: no cover — exercised implicitly by every worker-side decode
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # noqa: BLE001 — pickling registration is best-effort off-Spark
-    pass
+pickle_by_value(__name__)

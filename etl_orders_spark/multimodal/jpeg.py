@@ -65,9 +65,10 @@ is a first-class 100 TB pipeline stage.
 from __future__ import annotations
 
 import struct
-import sys as _sys
 
 import numpy as np
+
+from etl_orders_spark.multimodal.pickling import pickle_by_value
 
 # Guard against forged-header decompression bombs, same posture as PNG.
 # The cap is checked against the SUMMED coefficient-grid cells across all
@@ -1330,9 +1331,4 @@ def _encode_progressive_scan(
     return bytes(out)
 
 
-try:  # pragma: no cover — exercised implicitly by every worker-side decode
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # noqa: BLE001 — pickling registration is best-effort off-Spark
-    pass
+pickle_by_value(__name__)

@@ -33,6 +33,7 @@ from etl_orders_spark.multimodal.jpeg import encode_jpeg as _encode_jpeg
 from etl_orders_spark.multimodal.jpeg import (
     encode_jpeg_progressive as _encode_jpeg_progressive,
 )
+from etl_orders_spark.multimodal.pickling import pickle_by_value
 from etl_orders_spark.multimodal.vp8l import encode_webp_lossless
 from etl_orders_spark.operators.grouped_map import map_rows
 
@@ -660,15 +661,8 @@ def gen_silent_wav_media(spark: SparkSession, n: int = 10, start: int = 6000) ->
     return _media_rows(spark, start, n, "audio", row_for)
 
 
-try:  # pragma: no cover — exercised implicitly by worker-side generators
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cloudpickle
-
-    # jpeg_media_bytes is referenced by generator closures AND the
-    # binaryFile staging helper; by-value registration keeps every
-    # fixture closure runnable on bare-session workers that cannot
-    # import the package (same contract as codecs.py / jpeg.py).
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # noqa: BLE001 — pickling registration is best-effort off-Spark
-    pass
+# jpeg_media_bytes is referenced by generator closures AND the
+# binaryFile staging helper; by-value registration keeps every fixture
+# closure runnable on bare-session workers that cannot import the
+# package (same contract as codecs.py / jpeg.py).
+pickle_by_value(__name__)

@@ -45,9 +45,9 @@ decode is a first-class 100 TB pipeline stage.
 
 from __future__ import annotations
 
-import sys as _sys
-
 import numpy as np
+
+from etl_orders_spark.multimodal.pickling import pickle_by_value
 
 # decompression-bomb guard, same posture as PNG/JPEG: VP8L headers can
 # declare up to 16383x16383; cap what we will allocate from a header
@@ -960,9 +960,4 @@ def _encode_substream(
             emit(g_map, _NUM_LITERALS + _NUM_LENGTH_CODES + tok[1])
 
 
-try:  # pragma: no cover — exercised implicitly by every worker-side decode
-    from pyspark import cloudpickle as _cloudpickle
-
-    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # noqa: BLE001 — pickling registration is best-effort off-Spark
-    pass
+pickle_by_value(__name__)

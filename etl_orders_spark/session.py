@@ -13,6 +13,38 @@ Every config below is chosen for correctness-at-scale first:
   down, so erring high is safe).
 - session timezone pinned to UTC so timestamp semantics are stable
   across driver, executors, and external oracles.
+
+Three more settings keep a warm query from paying compile and worker
+set-up work again. They are fixed at launch, so they apply only to
+sessions ``get_spark`` launches: ``pin_session_defaults`` cannot set
+them on a session someone else started (the verification driver's),
+and a session that already runs keeps what it was launched with.
+Numbers are per warm pass of ``perfbench/run.py``'s corpus workload
+(4 cores; medians of 23 passes without the settings, 28 with), where
+executor tasks ran only ~1.7 of 15.5 CPU-s:
+
+- ``spark.sql.codegen.cache.maxEntries=1000``: the cold pass generates
+  ~155 classes and Spark's default cache holds 100, so each warm pass
+  compiled 56 of them again with Janino; with the setting, 5.
+- ``spark.python.daemon.module`` = ``etl_orders_spark.worker_daemon``:
+  every Arrow-UDF task paid ~0.25 Python CPU-s whatever its rows,
+  almost all of it re-reading pyspark.zip's directory (see that
+  module). Python workers went 2.2 -> 0.4 CPU-s per pass, and a
+  trivial ``mapInPandas`` task 0.24 -> 0.05 CPU-s.
+  ``spark.executorEnv.PYTHONPATH`` names the directory that holds the
+  package, so the daemon imports from any working directory.
+- ``spark.driver.defaultJavaOptions``: HotSpot's C2 thresholds at 4x
+  the JDK 17 defaults, for a short-lived local JVM whose compiler
+  threads took ~9 CPU-s per pass, mostly C2 compiling code that runs a
+  few times; hot loops still reach C2 through back-edge counters.
+  Compiler-thread CPU went ~9 -> ~5 s per pass, together with the
+  smaller number of fresh classes. ``defaultJavaOptions``, not
+  ``extraJavaOptions``, so a caller's ``--driver-java-options`` adds
+  to these flags instead of replacing them.
+
+Together they took the corpus warm pass from 16.3 to 9.4 CPU-s (median
+of 10 alternating run pairs, lower in all 10); the etl_load control's
+warm pass held (4.52 vs 4.40 CPU-s, 8 pairs).
 """
 
 from __future__ import annotations
@@ -22,6 +54,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# the directory that holds the package, for the Python worker daemon
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# 4x JDK 17's Tier4 invocation, minimum-invocation and compile thresholds
+C2_THRESHOLDS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400"
+    " -XX:Tier4CompileThreshold=60000"
+)
 
 
 def shuffle_partitions(cpus: str | int | None = None) -> str:
@@ -61,6 +102,11 @@ def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # launch-time only: see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.daemon.module", "etl_orders_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -70,7 +116,9 @@ def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None)
 def pin_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply the runtime-mutable engine defaults to an externally created
     session (e.g. the verification driver's). Only touches confs that are
-    settable after startup."""
+    settable after startup: the codegen cache size, the worker daemon
+    and the C2 thresholds are fixed at launch, so such a session runs
+    without them (module docstring)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

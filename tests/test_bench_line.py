@@ -56,14 +56,14 @@ def test_time_lane_tags_every_rep_and_counts_builder_jobs(spark):
 
     sc = spark.sparkContext
     try:
-        cold_s, warm_s, cold_jobs, warm_jobs = time_lane(
-            spark, "time_lane_probe", builder, "unused", reps=2
-        )
+        t = time_lane(spark, "time_lane_probe", builder, "unused", reps=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     tracker = sc.statusTracker()
     for phase in ("cold", "warm0", "warm1"):
         assert tracker.getJobIdsForGroup(f"time_lane_probe:{phase}"), phase
-    assert cold_jobs == 1 and warm_jobs == 1
-    assert cold_s > 0 and warm_s > 0
+    assert t.cold_jobs == 1 and t.warm_jobs == 1
+    assert t.cold_s > 0 and t.warm_s > 0
+    # the warm rep reuses every class the cold rep generated
+    assert t.warm_compiles == 0

@@ -11,8 +11,10 @@ Usage:
 
 Prints per directory and lane: cold (first run, caches cleared), warm
 (best-of-reps after cold), the output row count (one untimed count()
-after the timed runs) and build_jobs=COLD/WARM, the Spark jobs run
-inside the builder on the cold rep and the last warm rep. Every rep
+after the timed runs), build_jobs=COLD/WARM, the Spark jobs run
+inside the builder on the cold rep and the last warm rep, and
+compiles=COLD/WARM, the classes Janino compiled in the same two reps
+(a warm count above 0 means the codegen cache lost a class). Every rep
 runs under the job group ``LANE:PHASE`` (cold, warm0.., rows), so an
 event log of the run splits by lane and phase. The timing is bench.py's
 ``time_lane``, so a probe measures exactly what the bench records.
@@ -62,14 +64,13 @@ def main() -> int:
                 print(f"# explain -> {path}", file=sys.stderr)
             if args.explain_only:
                 continue
-            cold, warm, cold_jobs, warm_jobs = time_lane(
-                spark, lane, builder, sf_dir, args.reps
-            )
+            t = time_lane(spark, lane, builder, sf_dir, args.reps)
             spark.sparkContext.setJobGroup(f"{lane}:rows", f"{lane}:rows")
             rows = builder(spark, sf_dir).count()
             print(
-                f"{os.path.basename(sf_dir)} {lane}: cold={cold:.3f}s warm={warm:.3f}s"
-                f" rows={rows} build_jobs={cold_jobs}/{warm_jobs}",
+                f"{os.path.basename(sf_dir)} {lane}: cold={t.cold_s:.3f}s warm={t.warm_s:.3f}s"
+                f" rows={rows} build_jobs={t.cold_jobs}/{t.warm_jobs}"
+                f" compiles={t.cold_compiles}/{t.warm_compiles}",
                 flush=True,
             )
     return 0

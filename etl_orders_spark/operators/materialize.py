@@ -26,6 +26,7 @@ tests/test_materialize.py lists every checkpoint site with its reason.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -118,26 +119,27 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
     plan, so rewriting files under an sf_dir mid-session would serve
     stale data. After regenerating inputs in a live session, call
     ``spark.catalog.clearCache()`` (bench.py does per lane); the
-    handles detect it via storageLevel and refill."""
+    handles detect it via storageLevel and refill. A handle from a
+    stopped session (a stop and restart in one process) refills too."""
     slots = _STAGE_CACHE.setdefault(key, [])
     keep: list[DataFrame] = []
     hit: DataFrame | None = None
     for old in slots:
-        try:
-            # storageLevel guards against an external clearCache()/
-            # unpersist having dropped the entry while the handle
-            # survived (is_cached is a stale Python-side flag) — a
-            # stale handle must re-persist, not masquerade as cached
-            lvl = old.storageLevel
-            alive = lvl.useMemory or lvl.useDisk
-            if alive and hit is None and old._jdf.queryExecution().analyzed().sameResult(
-                df._jdf.queryExecution().analyzed()
-            ):
-                hit = old
-            if alive:
-                keep.append(old)
-        except Exception:  # noqa: BLE001 — dead session handle: drop it
-            pass
+        # a stale handle must re-persist, not masquerade as cached: a
+        # stopped session's handle still reports its storage level and
+        # matches a rebuilt plan, but no action runs on it; after an
+        # external clearCache()/unpersist, storageLevel reads NONE
+        # (is_cached is a stale Python-side flag)
+        if old._jdf.sparkSession().sparkContext().isStopped():
+            continue
+        lvl = old.storageLevel
+        if not (lvl.useMemory or lvl.useDisk):
+            continue
+        if hit is None and old._jdf.queryExecution().analyzed().sameResult(
+            df._jdf.queryExecution().analyzed()
+        ):
+            hit = old
+        keep.append(old)
     if hit is not None:
         # refresh recency: the hit moves to the back of the FIFO
         keep.remove(hit)
@@ -145,11 +147,7 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
         _STAGE_CACHE[key] = keep
         return hit
     while len(keep) >= _STAGE_SLOTS:
-        evicted = keep.pop(0)
-        try:
-            evicted.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — a dead session's handle is already free
-            pass
+        keep.pop(0).unpersist(blocking=False)
     out = df.persist()
     try:
         out.count()
@@ -196,7 +194,7 @@ def fan_out_narrow(df: DataFrame, key: str) -> DataFrame:
     target = sc.defaultParallelism
     try:
         parts = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — unconvertible plan: leave untouched
+    except AnalysisException:  # a plan with no RDD (a streaming source): leave untouched
         return df
     if parts * 2 >= target:
         return df
@@ -212,7 +210,7 @@ def fan_out_narrow(df: DataFrame, key: str) -> DataFrame:
             # silently disable the fan-out
             path = unquote(urlparse(uri).path) if "://" in uri or uri.startswith("file:") else uri
             total += os.path.getsize(path)
-    except Exception:  # noqa: BLE001 — non-local / unknown source: do not widen blind
+    except OSError:  # a file that cannot be stat'ed locally: do not widen blind
         return df
     if not files or total > _FAN_OUT_MAX_BYTES:
         return df

@@ -356,16 +356,9 @@ def ensure_bucketed_pair(
     Within a session, repeated calls (bench reps) hit the tableExists
     fast path. Concurrent FIRST writes share the staged-fixture race
     posture of the other /tmp layouts (last writer wins a consistent
-    copy; readers of a mid-overwrite copy retry on the next call)."""
-    # Spark 3+ ignores a bucketed table's sortBy order at read time by
-    # default (SPARK-28595: a bucket split across files has no global
-    # order); this helper guarantees one file per bucket via the
-    # repartition below, which is exactly the case the legacy conf
-    # exists for — with it set, the scan declares its sort order and
-    # the merge join elides the per-bucket Sort too. Session-global
-    # but only observable on sorted-bucketed catalog tables, which
-    # only this helper creates.
-    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    copy; readers of a mid-overwrite copy retry on the next call).
+    The scans declare their sort order through the pinned
+    ``bucketedTableScan.outputOrdering`` conf (session.py)."""
     out = []
     for name, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
         path = _staged_path(sf_dir, f"bkt_{name}", params=f"buckets={buckets}|v2")

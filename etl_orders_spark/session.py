@@ -1,50 +1,62 @@
-"""SparkSession factory with scale-aware defaults.
+"""SparkSession factory and the engine's one session-conf rule.
 
 The reference runs one pandas task at a time under Airflow's
 SequentialExecutor (reference: airflow.cfg:45); here a single lazy
 SparkSession replaces the whole DAG and the executor tier scales out.
-Every config below is chosen for correctness-at-scale first:
 
-- AQE on: runtime coalescing of small shuffle partitions, skew-join
-  splitting, and dynamic broadcast — the knobs that keep a fixed plan
-  viable when the data is 1000x bigger than the dev sample.
-- shuffle.partitions sized to the local core count for tests; on a
-  real cluster this would be ~2-3x total executor cores (AQE coalesces
-  down, so erring high is safe).
-- session timezone pinned to UTC so timestamp semantics are stable
-  across driver, executors, and external oracles.
+``pin_session_defaults(spark)`` is the only code that sets a runtime
+conf. ``get_spark`` gives the builder only launch-only confs and the
+broadcast threshold, then pins the session it gets, so a bare session
+(the verification driver's) and a ``get_spark`` session get the same
+runtime confs from the same code. Every registry build pins again; no
+builder writes a session conf.
 
-Three more settings keep a warm query from paying compile and worker
-set-up work again. They are fixed at launch, so they apply only to
-sessions ``get_spark`` launches: ``pin_session_defaults`` cannot set
-them on a session someone else started (the verification driver's),
-and a session that already runs keeps what it was launched with.
-Numbers are per warm pass of ``perfbench/run.py``'s corpus workload
-(4 cores; medians of 23 passes without the settings, 28 with), where
-executor tasks ran only ~1.7 of 15.5 CPU-s:
+Runtime confs, all ``spark.sql.*`` (``RUNTIME_CONFS`` plus one rule):
 
-- ``spark.sql.codegen.cache.maxEntries=1000``: the cold pass generates
-  ~155 classes and Spark's default cache holds 100, so each warm pass
-  compiled 56 of them again with Janino; with the setting, 5.
-- ``spark.python.daemon.module`` = ``etl_orders_spark.worker_daemon``:
-  every Arrow-UDF task paid ~0.25 Python CPU-s whatever its rows,
-  almost all of it re-reading pyspark.zip's directory (see that
-  module). Python workers went 2.2 -> 0.4 CPU-s per pass, and a
-  trivial ``mapInPandas`` task 0.24 -> 0.05 CPU-s.
-  ``spark.executorEnv.PYTHONPATH`` names the directory that holds the
-  package, so the daemon imports from any working directory.
-- ``spark.driver.defaultJavaOptions``: HotSpot's C2 thresholds at 4x
-  the JDK 17 defaults, for a short-lived local JVM whose compiler
-  threads took ~9 CPU-s per pass, mostly C2 compiling code that runs a
-  few times; hot loops still reach C2 through back-edge counters.
-  Compiler-thread CPU went ~9 -> ~5 s per pass, together with the
-  smaller number of fresh classes. ``defaultJavaOptions``, not
-  ``extraJavaOptions``, so a caller's ``--driver-java-options`` adds
-  to these flags instead of replacing them.
+- ``session.timeZone=UTC``: stable timestamp semantics across driver,
+  executors and external oracles.
+- ``legacy.parquet.nanosAsLong=true``: events.parquet may store ``ts``
+  as INT64 TIMESTAMP(NANOS), which Spark cannot read as a timestamp;
+  ``sources/readers.load_table`` converts the long.
+- ``execution.arrow.pyspark.enabled=true``: Arrow for any ``toPandas``.
+- ``legacy.bucketedTableScan.outputOrdering=true``: Spark 3+ ignores a
+  bucketed table's sortBy order at read time (SPARK-28595);
+  ``layout_queries.ensure_bucketed_pair`` writes one sorted file per
+  bucket, so the scan may declare its order and the merge join drops
+  its Sort. Only sorted bucketed tables observe it.
+- ``shuffle.partitions``: ``shuffle_partitions(spark)``.
 
-Together they took the corpus warm pass from 16.3 to 9.4 CPU-s (median
-of 10 alternating run pairs, lower in all 10); the etl_load control's
-warm pass held (4.52 vs 4.40 CPU-s, 8 pairs).
+Launch-only confs, fixed when a session starts (the pin cannot set
+them on a session someone else started):
+
+- ``spark.driver.memory`` (``SPARK_GRAFT_DRIVER_MEM``, default 8g) and
+  ``spark.ui.enabled=false``;
+- ``spark.sql.codegen.cache.maxEntries=1000``: the corpus cold pass
+  generates ~155 classes and the default cache holds 100, so each warm
+  pass recompiled 56 with Janino; with the setting, 5.
+- ``spark.python.daemon.module`` = ``etl_orders_spark.worker_daemon``,
+  with ``spark.executorEnv.PYTHONPATH`` naming the package's directory
+  so it imports from any cwd: each Arrow-UDF task paid ~0.25 Python
+  CPU-s re-reading pyspark.zip (see that module); 2.2 -> 0.4 CPU-s
+  per corpus warm pass.
+- ``spark.driver.defaultJavaOptions`` = ``C2_THRESHOLDS``, 4x the JDK
+  17 defaults: C2 compiled code that runs a few times in a short-lived
+  JVM; compiler-thread CPU ~9 -> ~5 s per pass. ``defaultJavaOptions``
+  so a caller's ``--driver-java-options`` adds to these flags.
+
+Together these three took perfbench's corpus warm pass from 16.3 to
+9.4 CPU-s (median of 10 alternating pairs, 4 cores); etl_load held.
+
+``BROADCAST_THRESHOLD`` (64 MB) is runtime-settable but stays at
+launch: the pin runs on every registry build and would undo callers
+that set the threshold around builds (tests forcing a sort-merge join,
+``tools/probe_r11_staged_knee.py``, the ``registry_plans`` fixture). A
+bare session keeps Spark's 10 MB.
+
+Deleted because they equal Spark 4.1.2's defaults (``SET`` on a bare
+session reads ``true``): ``spark.sql.adaptive.enabled``,
+``adaptive.coalescePartitions.enabled`` and
+``adaptive.skewJoin.enabled``.
 """
 
 from __future__ import annotations
@@ -64,67 +76,59 @@ C2_THRESHOLDS = (
     " -XX:Tier4CompileThreshold=60000"
 )
 
+# the engine's broadcast-join threshold, set at launch only (module docstring)
+BROADCAST_THRESHOLD = str(64 * 1024 * 1024)
 
-def shuffle_partitions(cpus: str | int | None = None) -> str:
-    """The one shuffle-partition rule, shared by ``get_spark`` and
-    ``pin_session_defaults``: ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` when
-    set, else the core count (``cpus``, else ``SPARK_GRAFT_CPUS``).
+RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
+}
 
-    Tracking cores keeps the c8/c32 scaling runs comparable at bench
-    scale (sf0.1, <100 MB of parquet), where every shuffle is
-    overhead-dominated and AQE coalesces small partitions anyway. On a
-    real cluster size it from DATA instead: shuffled bytes / ~128-256
-    MB target partition, e.g. SPARK_GRAFT_SHUFFLE_PARTITIONS=4000 for
-    a ~1 TB shuffle. Erring high is safe (AQE coalesces down)."""
-    return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or str(cpus or DEFAULT_CPUS)
+
+def shuffle_partitions(spark: SparkSession) -> str:
+    """The one shuffle-partition rule: ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
+    when set, else the session's own parallelism (its core count in
+    local mode), so the launch and every later pin agree.
+
+    A default-conf session carries 200, far too many tasks at local
+    test scales. Tracking cores keeps the c8/c32 scaling runs
+    comparable at bench scale (sf0.1, <100 MB of parquet), where every
+    shuffle is overhead-dominated and AQE coalesces small partitions
+    anyway. On a real cluster size it from DATA instead: shuffled
+    bytes / ~128-256 MB target partition, e.g.
+    SPARK_GRAFT_SHUFFLE_PARTITIONS=4000 for a ~1 TB shuffle. Erring
+    high is safe (AQE coalesces down)."""
+    return os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") or str(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    Local mode for tests; the same config block is what we'd submit to a
-    1000-executor cluster minus master/memory (cluster managers own those).
-    """
-    n = str(cpus or DEFAULT_CPUS)
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
+    """Build (or fetch) the engine's SparkSession: ``local[cpus]`` (else
+    ``SPARK_GRAFT_CPUS``, else 32) with the launch-only confs, then
+    pinned. On a cluster the same call minus master/memory applies."""
+    spark = (
+        SparkSession.builder.master(f"local[{cpus or DEFAULT_CPUS}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_partitions(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # testdata events.parquet stores ts as INT64 TIMESTAMP(NANOS); Spark
-        # cannot read that into TimestampType — read as long, convert in
-        # load_table (sources/readers.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # launch-time only: see the module docstring
+        .config("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.python.daemon.module", "etl_orders_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        .getOrCreate()
     )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return pin_session_defaults(spark)
 
 
 def pin_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-mutable engine defaults to an externally created
-    session (e.g. the verification driver's). Only touches confs that are
-    settable after startup: the codegen cache size, the worker daemon
-    and the C2 thresholds are fixed at launch, so such a session runs
-    without them (module docstring)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # a default-conf session carries 200 shuffle partitions — far too
-    # many tasks for local test scales (AQE coalesces, but task-launch
-    # overhead remains); arrow speeds any toPandas the caller does
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions())
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    """Set the engine's runtime confs on ``spark``, whoever launched it
+    (module docstring). Idempotent; every registry build calls it."""
+    for key, value in RUNTIME_CONFS.items():
+        spark.conf.set(key, value)
+    spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions(spark))
     return spark

@@ -18,26 +18,41 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+class RegistryPlans(dict):
+    """name -> (output fields, executed-plan string), plus the session
+    conf read after one pin and before the build (``conf_before``) and
+    again after it (``conf_after``)."""
+
+
 @pytest.fixture(scope="session")
 def registry_plans(spark, sf_dir):
-    """Every registered lane built once per session: name -> (output
-    fields, executed-plan string), for the registry-wide plan and
-    schema tests. Earlier tests may leave cached relations
-    (operator-internal .cache()/localCheckpoint) whose
+    """Every registered lane built once per session, for the
+    registry-wide plan and schema tests. Earlier tests may leave cached
+    relations (operator-internal .cache()/localCheckpoint) whose
     InMemoryRelation stats flip broadcast decisions, and may touch the
-    broadcast threshold — both are reset before the build so the
-    plans are deterministic. The plan string leaves out AQE's
-    "Initial Plan" copies: a stage cache is filled while the lane
-    builds, and a filled cache prints its already-run plan twice (final
-    and initial), so an operator inside it would count double."""
+    broadcast threshold — both are reset before the build so the plans
+    are deterministic, and the threshold is restored after it. The
+    plan string leaves out AQE's "Initial Plan" copies: a stage cache
+    is filled while the lane builds, and a filled cache prints its
+    already-run plan twice (final and initial), so an operator inside
+    it would count double."""
     from etl_orders_spark.plans.registry import query_map
+    from etl_orders_spark.session import pin_session_defaults
     from tools.scan_audit import drop_initial_plans
 
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
     spark.catalog.clearCache()
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    built = {}
-    for name, builder in query_map().items():
-        df = builder(spark, sf_dir)
-        plan = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
-        built[name] = (df.schema.fields, plan)
+    spark.conf.set(key, "10485760")
+    built = RegistryPlans()
+    pin_session_defaults(spark)
+    built.conf_before = dict(spark.conf.getAll)
+    try:
+        for name, builder in query_map().items():
+            df = builder(spark, sf_dir)
+            plan = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+            built[name] = (df.schema.fields, plan)
+        built.conf_after = dict(spark.conf.getAll)
+    finally:
+        spark.conf.set(key, threshold)
     yield built

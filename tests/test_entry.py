@@ -31,21 +31,21 @@ def test_one_query_through_contract(spark, sf_dir):
 
 def test_shuffle_partition_precedence_is_shared(spark, monkeypatch):
     """get_spark and pin_session_defaults size shuffle partitions by
-    the same rule: the env override when set, else the core count."""
-    from etl_orders_spark.session import DEFAULT_CPUS, pin_session_defaults, shuffle_partitions
+    the same rule: the env override when set, else the session's own
+    parallelism (tests/test_session_launch.py launches one)."""
+    from etl_orders_spark.session import pin_session_defaults, shuffle_partitions
 
     key = "spark.sql.shuffle.partitions"
+    cores = str(spark.sparkContext.defaultParallelism)
     before = spark.conf.get(key)
     try:
         monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
-        assert shuffle_partitions(8) == "8"  # get_spark(cpus=8)
-        assert shuffle_partitions() == DEFAULT_CPUS  # get_spark() and the pin
+        assert shuffle_partitions(spark) == cores
         pin_session_defaults(spark)
-        assert spark.conf.get(key) == DEFAULT_CPUS
+        assert spark.conf.get(key) == cores
 
         monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "7")
-        assert shuffle_partitions(8) == "7"
-        assert shuffle_partitions() == "7"
+        assert shuffle_partitions(spark) == "7"
         pin_session_defaults(spark)
         assert spark.conf.get(key) == "7"
     finally:

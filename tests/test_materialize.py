@@ -1,16 +1,20 @@
 """Unit contract of the materialize-once helpers: cache_stage's
-fill-on-miss / warm reuse / invalidation / external-clear recovery,
+fill-on-miss / warm reuse / invalidation / external-clear and
+session-restart recovery, fan_out_narrow's two untouched fallbacks,
 the allowlist of direct checkpoint, cache and persist sites, and the
 scan audit's live-scan counter on synthetic plan text."""
 
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
+import subprocess
+import sys
 
 import pytest
 
-from etl_orders_spark.operators.materialize import _STAGE_CACHE, cache_stage
+from etl_orders_spark.operators.materialize import _STAGE_CACHE, cache_stage, fan_out_narrow
 
 
 def _is_cached(df) -> bool:
@@ -91,6 +95,56 @@ def test_cache_stage_recovers_from_external_clear(spark):
 
     spark.catalog.clearCache()
     _STAGE_CACHE.pop(key, None)
+
+
+RESTART = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from etl_orders_spark.operators.materialize import cache_stage
+
+def session():
+    return SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+
+spark = session()
+a = cache_stage(spark.range(5).selectExpr("id * 2 AS x"), "restart")
+spark.stop()
+spark = session()
+b = cache_stage(spark.range(5).selectExpr("id * 2 AS x"), "restart")
+print(b is a, b.count())
+spark.stop()
+"""
+
+
+def test_cache_stage_refills_after_a_session_restart(tmp_path):
+    """A stopped session's handle still reports a storage level and
+    matches the rebuilt plan; it must refill, not come back as a hit
+    that fails on its first action. Needs its own process: the test
+    session cannot be stopped."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", RESTART, repo],
+        cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "False 5"
+
+
+def test_fan_out_narrow_leaves_a_streaming_frame_untouched(spark):
+    # a streaming plan has no RDD to count partitions on
+    stream = spark.readStream.format("rate").load()
+    assert fan_out_narrow(stream, "test.fan_out.stream") is stream
+
+
+def test_fan_out_narrow_leaves_unstatable_files_untouched(spark, tmp_path):
+    # one narrow file, listed at read time and gone before the size gate
+    path = str(tmp_path / "narrow")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    for name in os.listdir(path):
+        os.remove(os.path.join(path, name))
+    assert df.rdd.getNumPartitions() * 2 < spark.sparkContext.defaultParallelism
+    assert fan_out_narrow(df, "test.fan_out.gone") is df
 
 
 # Every direct localCheckpoint, cache or persist in the package, by

@@ -17,12 +17,15 @@ from etl_orders_spark.plans.registry import query_map
 def plans(spark, sf_dir):
     q = query_map()
     # default metadata truncation hides the tail of PushedFilters lists
-    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    key = "spark.sql.maxMetadataStringLength"
+    length = spark.conf.get(key)
+    spark.conf.set(key, "1000")
 
     def plan_of(name: str) -> str:
         return q[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
-    return plan_of
+    yield plan_of
+    spark.conf.set(key, length)
 
 
 def test_flagship_broadcasts_dims_prunes_columns(plans):

@@ -113,6 +113,12 @@ def test_no_duplicate_output_columns(registry_plans):
     assert not dupes, f"ambiguous output columns: {dupes}"
 
 
+def test_no_lane_changes_the_session(registry_plans):
+    """Building all lanes leaves every session conf as one pin set it:
+    runtime confs are pinned in session.py, never by a builder."""
+    assert registry_plans.conf_after == registry_plans.conf_before
+
+
 def test_readme_inventory_counts_in_lockstep():
     """README.md is the coverage inventory SURVEY §2.8 points at; its
     registry counts drifted twice (VERDICT r6 #4) — pin them to the

@@ -1,6 +1,7 @@
 """Sessions that ``get_spark`` launches keep their compiled work: the
 zip guard of the Python worker daemon, the codegen cache size, and the
-launch-time settings of a session started outside the repo."""
+launch-time settings of a session started outside the repo, whose
+runtime confs are pinned from the start and keep its own core count."""
 
 from __future__ import annotations
 
@@ -74,9 +75,11 @@ def test_codegen_cache_outlives_a_lane_sized_burst(spark):
 LAUNCH = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
-from etl_orders_spark.session import get_spark
+from etl_orders_spark.session import get_spark, pin_session_defaults
 
 spark = get_spark("launch_check", cpus=2)
+ordering = spark.conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering")
+pin_session_defaults(spark)
 
 def double(batches):
     for pdf in batches:
@@ -88,14 +91,19 @@ print(json.dumps({
     "rows": sorted([r.id, r.v] for r in rows),
     "daemon": spark.sparkContext.getConf().get("spark.python.daemon.module"),
     "jvm_args": list(args),
+    "ordering": ordering,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
 }))
 spark.stop()
 """
 
 
 def test_a_session_launched_outside_the_repo_runs_python_workers(tmp_path):
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    drop = ("PYTHONPATH", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    env = {k: v for k, v in os.environ.items() if k not in drop}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    # the pin follows the session's 2 cores, not this env var
+    env["SPARK_GRAFT_CPUS"] = "4"
     out = subprocess.run(
         [sys.executable, "-c", LAUNCH, REPO],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
@@ -105,3 +113,5 @@ def test_a_session_launched_outside_the_repo_runs_python_workers(tmp_path):
     assert got["rows"] == [[i, 2 * i] for i in range(6)]
     assert got["daemon"] == "etl_orders_spark.worker_daemon"
     assert set(C2_THRESHOLDS.split()) <= set(got["jvm_args"])
+    assert got["ordering"] == "true"
+    assert got["shuffle_partitions"] == "2"

@@ -31,8 +31,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-DEFAULT_THRESHOLD = str(64 * 1024 * 1024)  # session.get_spark's default
-
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -45,7 +43,7 @@ def _dir_bytes(path: str) -> int:
 def main() -> int:
     from etl_orders_spark.plans.registry import query_map
     from etl_orders_spark.plans.text_queries import stage_dedup_index
-    from etl_orders_spark.session import get_spark
+    from etl_orders_spark.session import BROADCAST_THRESHOLD, get_spark
 
     spark = get_spark("probe_r11_staged_knee")
     dirs = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf1", "/tmp/sf10"]
@@ -61,7 +59,7 @@ def main() -> int:
             f"fingerprints {fp_mb:6.1f} MB (stage/reuse {stage_s:.1f}s)",
             flush=True,
         )
-        for mode, thresh in (("broadcast-default", DEFAULT_THRESHOLD), ("forced-shuffle", "-1")):
+        for mode, thresh in (("broadcast-default", BROADCAST_THRESHOLD), ("forced-shuffle", "-1")):
             best, rows, joins = None, None, ""
             for _ in range(2):
                 spark.catalog.clearCache()
@@ -85,7 +83,7 @@ def main() -> int:
                 f"rows={rows} {joins}",
                 flush=True,
             )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", DEFAULT_THRESHOLD)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", BROADCAST_THRESHOLD)
     return 0
 
 

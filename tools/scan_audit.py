@@ -193,10 +193,10 @@ def main() -> int:
     from etl_orders_spark.session import DEFAULT_CPUS, get_spark
 
     # the graph counter reads the SQL UI store; create the session
-    # with the UI on BEFORE get_spark (spark.ui.enabled is static —
-    # get_spark's copy of the conf is ignored on the live session,
-    # every runtime-settable engine conf still lands via get_spark /
-    # pin_session_defaults)
+    # with the UI on BEFORE get_spark (spark.ui.enabled is launch-only:
+    # get_spark's launch-only confs are ignored on the live session,
+    # while its pin_session_defaults call and broadcast threshold
+    # still land)
     SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").appName("scan-audit").config(
         "spark.ui.enabled", "true"
     ).getOrCreate()

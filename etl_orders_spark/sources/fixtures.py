@@ -25,6 +25,8 @@ import json
 import os
 import random
 
+from etl_orders_spark.sources.generator import _CATEGORIES, _FIRST, _GENDERS, _LAST
+
 _FIXTURE_VERSION = "1"
 
 FIXTURE_DIR = os.path.join(
@@ -37,11 +39,6 @@ ORDERS_CSV = os.path.join(FIXTURE_DIR, "orders.csv")
 PRODUCTS_CSV = os.path.join(FIXTURE_DIR, "products.csv")
 USERS_CSV = os.path.join(FIXTURE_DIR, "users.csv")
 USER_INFO_JSON = os.path.join(FIXTURE_DIR, "user_info.json")
-
-_CATEGORIES = ("Home", "Beauty", "Clothing", "Grocery", "Movies", "Games", "Garden")
-_FIRST = ("Ana", "Luis", "Maria", "Juan", "Sofia", "Carlos", "Lucia", "Pedro", "Elena", "Diego")
-_LAST = ("Garcia", "Lopez", "Martinez", "Rodriguez", "Perez", "Sanchez", "Romero", "Torres")
-_GENDERS = ("M", "F", "Male", "f", "Other")  # dirty domain, reference cell 9
 
 
 def ensure_ingest_fixtures() -> dict[str, str]:

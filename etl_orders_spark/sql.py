@@ -50,6 +50,7 @@ def plan_summary(df: DataFrame) -> dict:
         "reused_exchanges": p.count("ReusedExchange"),
         "broadcast_hash_joins": p.count("BroadcastHashJoin"),
         "sort_merge_joins": p.count("SortMergeJoin"),
+        "shuffled_hash_joins": p.count("ShuffledHashJoin"),
         "nested_loop_joins": p.count("BroadcastNestedLoopJoin"),
         "cartesian_products": p.count("CartesianProduct"),
         "scans": p.count("FileScan"),

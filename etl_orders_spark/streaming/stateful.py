@@ -76,82 +76,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """The same per-user running stats on the `transformWithState`
-    API (Spark 4.x): state is typed handle-managed ValueState in the
-    state store (RocksDB provider required) instead of the single
-    opaque tuple of applyInPandasWithState — the forward path for
-    custom stateful operators (composable state variables, timers,
-    TTL). Semantics here are identical to running_user_stats, which
-    is exactly the point: the test pins new-API == old-API == batch.
-
-    Runtime dependency: the transformWithState state-server protocol
-    needs `google.protobuf` (ships with `pyspark[connect]`); absent
-    that, streaming input raises ImportError here — loudly, at plan
-    time — while batch input still works (plain aggregate fallback).
-    The processor class is a closure so it pickles by value."""
-    from pyspark.sql import functions as F
-
-    if not events.isStreaming:
-        return events.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").cast("double").alias("total_value"),
-            F.max("value").cast("double").alias("max_value"),
-        )
-
-    try:  # the state-server wire protocol is protobuf-encoded
-        import google.protobuf  # noqa: F401
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf at runtime "
-            "(the TWS state server speaks protobuf); install protobuf or "
-            "use running_user_stats (applyInPandasWithState) instead"
-        ) from e
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            if self._agg.exists():
-                n, nv, total, mx = self._agg.get()
-            else:
-                n, nv, total, mx = 0, 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                nv += int(pdf["value"].count())
-                total += float(pdf["value"].sum())
-                if pdf["value"].count():
-                    mx = max(mx, float(pdf["value"].max()))
-            self._agg.update((n, nv, total, mx))
-            # batch-parity NULL semantics (see running_user_stats)
-            yield pd.DataFrame(
-                [(key[0], n, total if nv else None, mx if nv else None)],
-                columns=["user_id", "n_events", "total_value", "max_value"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningStats(),
-            outputStructType=RUNNING_STATS_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 FIRST_SEEN_SCHEMA = "fp string, doc_id long, first_ts timestamp"
 _SEEN_STATE_SCHEMA = "seen int"
 

@@ -2,7 +2,7 @@
 fill-on-miss / warm reuse / invalidation / external-clear and
 session-restart recovery, fan_out_narrow's two untouched fallbacks,
 the allowlist of direct checkpoint, cache and persist sites, and the
-scan audit's live-scan counter on synthetic plan text."""
+scan audit's executed-scan counter on frames with known scan counts."""
 
 from __future__ import annotations
 
@@ -226,67 +226,63 @@ def test_every_checkpoint_site_is_allowlisted():
     assert not stale, f"allowlist entries with no materialize call left: {stale}"
 
 
-_SCAN = (
-    "FileScan parquet [a] Batched: true, Location: InMemoryFileIndex(1 paths)"
-    "[file:/data/{t}.parquet], ReadSchema: struct<a:bigint>"
-)
+@pytest.fixture
+def scans(spark):
+    """Executed scans per table of a noop write of ``build()``. The
+    frame is built inside the counter, so a builder's stage fills
+    count too; the cache is cleared first so no earlier test's cached
+    relation serves a read."""
+    from tools.scan_audit import scan_counts
+
+    def count(build):
+        spark.catalog.clearCache()
+        return scan_counts(spark, lambda: build().write.format("noop").mode("overwrite").save())
+
+    return count
 
 
-def _plan(lines: list[str]) -> str:
-    return "\n".join(lines)
+def test_scan_counts_union_of_two_filtered_scans(spark, tmp_path, scans):
+    path = str(tmp_path / "t.parquet")
+    spark.range(100).write.parquet(path)
+    t = spark.read.parquet(path)
+    counts = scans(lambda: t.where("id < 10").unionByName(t.where("id > 90")))
+    # one table, read twice (its key is abbreviated: Spark shortens a
+    # location longer than spark.sql.maxMetadataStringLength)
+    assert list(counts.values()) == [2]
 
 
-def test_live_scan_counts_on_synthetic_plans():
-    from tools.scan_audit import live_scan_counts
+def test_scan_counts_a_staged_frame_fills_once(spark, tmp_path, scans):
+    path = str(tmp_path / "s.parquet")
+    spark.range(100).selectExpr("id % 7 AS k", "id").write.parquet(path)
 
-    # two live scans of one table -> counted twice
-    p = _plan(["*(1) Join", f"   :- {_SCAN.format(t='orders')}", f"   +- {_SCAN.format(t='orders')}"])
-    assert live_scan_counts(p)["orders.parquet"] == 2
+    def build():
+        staged = cache_stage(
+            spark.read.parquet(path).groupBy("k").count(), "test_scan_counts.staged"
+        )
+        return staged.where("k < 3").unionByName(staged.where("k > 4"))
 
-    # the same cache embedded twice (fresh ids, different tree prefix)
-    # -> ONE fill
-    block = [
-        "+- InMemoryTableScan [a#{i}]",
-        "      +- InMemoryRelation [a#{i}], StorageLevel(disk, memory)",
-        "            +- " + _SCAN.format(t="docs") + " #{i}",
-    ]
-    p = _plan(
-        ["*(1) Join"]
-        + ["   :- " + ln.format(i=1) for ln in block]
-        + ["   +- " + ln.format(i=2) for ln in block]
-    )
-    assert live_scan_counts(p)["docs.parquet"] == 1
+    assert list(scans(build).values()) == [1]
 
-    # "== Initial Plan ==" subtrees never executed -> not counted
-    p = _plan(
-        [
-            "AdaptiveSparkPlan isFinalPlan=true",
-            "+- == Final Plan ==",
-            f"   {_SCAN.format(t='part')}",
-            "+- == Initial Plan ==",
-            f"   {_SCAN.format(t='part')}",
-            f"   {_SCAN.format(t='part')}",
-        ]
-    )
-    assert live_scan_counts(p)["part.parquet"] == 1
 
-    # a cache built FROM another cache: inner fill counted once, not
-    # re-counted inside the outer block's embedded copy
-    inner = [
-        "+- InMemoryRelation [b#{i}], StorageLevel(disk, memory)",
-        "      +- " + _SCAN.format(t="events") + " #{i}",
-    ]
-    outer = (
-        ["+- InMemoryRelation [c#{j}], StorageLevel(disk, memory)"]
-        + ["      +- Project [c#{j}]"]
-        + ["         " + ln.format(i="{j}9") for ln in inner]
-    )
-    p = _plan(
-        ["*(1) Join"]
-        + ["   :- " + ln.format(i=5) for ln in inner]
-        + ["   +- " + ln.format(j=7) for ln in outer]
-    )
-    assert live_scan_counts(p)["events.parquet"] == 1
+def test_scan_counts_flagship_reads_each_table_once(spark, sf_dir, scans):
+    from etl_orders_spark.plans.registry import query_map
+
+    counts = scans(lambda: query_map()["flagship_enriched_lineitems"](spark, sf_dir))
+    assert counts == {
+        "lineitem.parquet": 1,
+        "orders.parquet": 1,
+        "customer.parquet": 1,
+        "part.parquet": 1,
+    }
+
+
+def test_scan_counts_kneser_ney_reads_documents_twice(spark, sf_dir, scans):
+    """The stage fill plus the deliberate vocabulary pass, spread over
+    the builder's fill executions and the final write."""
+    from etl_orders_spark.plans.registry import query_map
+
+    counts = scans(lambda: query_map()["kneser_ney_trigram_docs"](spark, sf_dir))
+    assert counts == {"documents.parquet": 2}
 
 
 def test_const_rows_values_and_sameresult_stability(spark):

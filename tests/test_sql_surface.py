@@ -39,11 +39,13 @@ def test_sql_events_view_has_converted_timestamp(spark, sf_dir):
 
 def test_plan_summary_reports_scale_facts(spark, sf_dir):
     from etl_orders_spark.plans.registry import query_map
+    from etl_orders_spark.sources.readers import load_table
     from etl_orders_spark.sql import plan_summary
 
     s = plan_summary(query_map()["q5_region_revenue"](spark, sf_dir))
     assert s["broadcast_hash_joins"] == 5
     assert s["sort_merge_joins"] == 0
+    assert s["shuffled_hash_joins"] == 0
     assert s["nested_loop_joins"] == 0
     # all five dim joins broadcast: every exchange is a broadcast, the
     # fact side never shuffles (the counts exclude ReusedExchange)
@@ -51,3 +53,8 @@ def test_plan_summary_reports_scale_facts(spark, sf_dir):
     assert s["global_windows"] == 0
     t = plan_summary(query_map()["orderby_limit"](spark, sf_dir))
     assert t["take_ordered"]
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").hint("shuffle_hash")
+    h = plan_summary(li.join(orders, li.l_orderkey == orders.o_orderkey))
+    assert h["shuffled_hash_joins"] == 1
+    assert h["sort_merge_joins"] == 0 and h["broadcast_hash_joins"] == 0

@@ -107,87 +107,6 @@ def test_running_user_stats_batch_fallback(spark):
     assert math.isclose(got[1], 15.0) and math.isclose(got[2], 7.0)
 
 
-def test_transform_with_state_matches_old_api_and_batch(spark, events_dir):
-    """transformWithState (Spark 4 API, RocksDB state store) produces
-    the same accumulated per-user stats as applyInPandasWithState and
-    the batch aggregate.
-
-    Documented decision (no skip either way): applyInPandasWithState
-    is the SUPPORTED stateful path of this engine — it needs nothing
-    beyond pyspark and is covered unconditionally above.
-    transformWithState is its Spark-4 twin whose state-server wire
-    format needs google.protobuf; where protobuf exists this test runs
-    the full three-way equivalence, and where it doesn't the streaming
-    path must refuse loudly at plan time (asserted here, so the
-    behavior contract is pinned in every environment)."""
-    from etl_orders_spark.streaming.stateful import running_user_stats_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        stream = spark.readStream.format("rate").load().selectExpr(
-            "value AS user_id", "CAST(value AS DOUBLE) AS value"
-        )
-        with pytest.raises(ImportError, match="protobuf"):
-            running_user_stats_tws(stream)
-        return
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(events_dir)
-        )
-        out = running_user_stats_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-        last = {}
-        for r in spark.table("t_tws").collect():
-            last[r["user_id"]] = (r["n_events"], r["total_value"], r["max_value"])
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-    batch = spark.createDataFrame(BATCH1 + BATCH2, SCHEMA)
-    want = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["max_value"])
-        for r in running_user_stats(batch).collect()
-    }
-    assert last == want
-    assert want[1] == (3, 35.0, 20.0) and want[2] == (2, 8.0, 7.0)
-
-
-def test_transform_with_state_batch_fallback_and_gate(spark):
-    from etl_orders_spark.streaming.stateful import running_user_stats_tws
-
-    df = spark.createDataFrame([(1, 2.0), (1, 3.0), (2, 7.0)], "user_id long, value double")
-    got = {r["user_id"]: (r["n_events"], r["total_value"]) for r in running_user_stats_tws(df).collect()}
-    assert got == {1: (2, 5.0), 2: (1, 7.0)}
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        # streaming input must fail loudly at plan time, not crash a worker
-        stream = spark.readStream.format("rate").load().selectExpr(
-            "value AS user_id", "CAST(value AS DOUBLE) AS value"
-        )
-        with pytest.raises(ImportError, match="protobuf"):
-            running_user_stats_tws(stream)
-
-
 def test_cap_group_fanout_bounds_mega_groups_deterministically(spark):
     """The mega-basket cap keeps the `cap` smallest items per group
     (deterministic) and leaves narrow groups byte-identical."""

@@ -14,11 +14,15 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+_JOINS = ("broadcast_hash_joins", "sort_merge_joins", "shuffled_hash_joins",
+          "nested_loop_joins", "cartesian_products")
+
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from etl_orders_spark.plans.registry import QUERIES, query_map
     from etl_orders_spark.session import get_spark
+    from etl_orders_spark.sql import plan_summary
 
     spark = get_spark("plan_report", cpus=8)
     spark.conf.set("spark.sql.maxMetadataStringLength", "400")
@@ -42,26 +46,16 @@ def main() -> int:
     for name in sorted(bench):
         df = qmap[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        joins = {
-            k: plan.count(k)
-            for k in (
-                "BroadcastHashJoin",
-                "SortMergeJoin",
-                "ShuffledHashJoin",
-                "BroadcastNestedLoopJoin",
-                "CartesianProduct",
-            )
-            if plan.count(k)
-        }
-        n_exchange = len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)", plan))
+        s = plan_summary(df)
+        joins = {k: s[k] for k in _JOINS if s[k]}
         pushed = [
             m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if m.strip()
         ]
         schemas = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
         lines.append(f"## {name}")
         lines.append("")
-        lines.append(f"- joins: {joins if joins else 'none'}; exchanges: {n_exchange}")
-        if "TakeOrderedAndProject" in plan:
+        lines.append(f"- joins: {joins or 'none'}; exchanges: {s['shuffle_exchanges']}")
+        if s["take_ordered"]:
             lines.append("- global top-k via TakeOrderedAndProject (no full sort)")
         for pf in pushed[:6]:
             lines.append(f"- pushed: `[{pf.strip()[:150]}]`")

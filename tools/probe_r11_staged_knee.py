@@ -44,6 +44,7 @@ def main() -> int:
     from etl_orders_spark.plans.registry import query_map
     from etl_orders_spark.plans.text_queries import stage_dedup_index
     from etl_orders_spark.session import BROADCAST_THRESHOLD, get_spark
+    from etl_orders_spark.sql import plan_summary
 
     spark = get_spark("probe_r11_staged_knee")
     dirs = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf1", "/tmp/sf10"]
@@ -72,11 +73,10 @@ def main() -> int:
                 dt = time.time() - t0
                 if best is None or dt < best:
                     best = dt
-                plan = df._jdf.queryExecution().executedPlan().toString()
+                s = plan_summary(df)
                 joins = (
-                    f"BHJ={plan.count('BroadcastHashJoin')} "
-                    f"SMJ={plan.count('SortMergeJoin')} "
-                    f"SHJ={plan.count('ShuffledHashJoin')}"
+                    f"BHJ={s['broadcast_hash_joins']} SMJ={s['sort_merge_joins']} "
+                    f"SHJ={s['shuffled_hash_joins']}"
                 )
             print(
                 f"{os.path.basename(sf_dir):>8} {mode:<18} {best:7.2f}s "

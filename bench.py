@@ -96,9 +96,10 @@ def janino_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int]:
+def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int, int]:
     """One timed build + noop-sink run under job group ``group``:
-    (seconds, jobs the builder ran, classes compiled)."""
+    (seconds, jobs the builder ran, jobs the whole rep ran, classes
+    compiled)."""
     spark.sparkContext.setJobGroup(group, group)
     before = _group_jobs(spark, group)
     compiled = janino_compiles(spark)
@@ -109,7 +110,9 @@ def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int]:
     build_jobs = _group_jobs(spark, group) - before
     t0 = time.time()
     df.write.format("noop").mode("overwrite").save()
-    return build_s + time.time() - t0, build_jobs, janino_compiles(spark) - compiled
+    rep_s = build_s + time.time() - t0
+    rep_jobs = _group_jobs(spark, group) - before
+    return rep_s, build_jobs, rep_jobs, janino_compiles(spark) - compiled
 
 
 class LaneTiming(NamedTuple):
@@ -119,22 +122,29 @@ class LaneTiming(NamedTuple):
     warm_jobs: int  # last warm rep's
     cold_compiles: int  # Janino compiles
     warm_compiles: int  # last warm rep's
+    cold_rep_jobs: int  # every job of the rep: the builder's plus the sink's
+    warm_rep_jobs: int  # last warm rep's
 
 
 def time_lane(spark, lane: str, builder, sf_dir: str, reps: int) -> LaneTiming:
     """One lane's timing: one cold rep after clearCache — keyed stage
     caches are shared across lanes, so without the clear an earlier
     lane pre-fills this one's inputs and cold silently measures cache
-    reads — then the best of ``reps`` warm reps. Builder jobs and
+    reads — then the best of ``reps`` warm reps. Job counts and
     compiles of the warm side are the last warm rep's, so a stage or a
     generated class that is not kept shows there."""
     spark.catalog.clearCache()
-    cold, cold_jobs, cold_compiles = _rep(spark, builder, sf_dir, f"{lane}:cold")
+    cold, cold_jobs, cold_rep_jobs, cold_compiles = _rep(spark, builder, sf_dir, f"{lane}:cold")
     best = None
     for i in range(reps):
-        dt, warm_jobs, warm_compiles = _rep(spark, builder, sf_dir, f"{lane}:warm{i}")
+        dt, warm_jobs, warm_rep_jobs, warm_compiles = _rep(
+            spark, builder, sf_dir, f"{lane}:warm{i}"
+        )
         best = dt if best is None else min(best, dt)
-    return LaneTiming(cold, best, cold_jobs, warm_jobs, cold_compiles, warm_compiles)
+    return LaneTiming(
+        cold, best, cold_jobs, warm_jobs, cold_compiles, warm_compiles,
+        cold_rep_jobs, warm_rep_jobs,
+    )
 
 
 def regressions(
@@ -226,6 +236,7 @@ def main() -> int:
         t = time_lane(spark, name, builder, sf_dir, reps)
         cold[name], timings[name] = round(t.cold_s, 3), round(t.warm_s, 3)
         print(f"# {name}: {timings[name]}s (cold {cold[name]}s)"
+              f" jobs={t.cold_rep_jobs}/{t.warm_rep_jobs}"
               f" compiles={t.cold_compiles}/{t.warm_compiles}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)

@@ -12,7 +12,13 @@ fact scans this way.
 One rule: a frame built once per builder call and read by several
 consumers goes through ``cache_stage(df, key)``, which fills it on a
 miss and hands back the live cache on a hit, so a warm re-run of the
-same plan runs no job for it.
+same plan runs no job for it. A *model table* goes through it too,
+even with one consumer: a small aggregate of a stage that the scoring
+pass joins back (DSIR's bucket log-ratio table, Kneser-Ney's scored
+trigrams). Staging it lets a warm re-run of the plan run only the
+scoring query instead of rebuilding the model from the staged
+features every time. A lane's output is never staged: the caller
+consumes it once.
 
 A direct ``localCheckpoint(eager=True)`` is used only where the lineage
 cut or per-call freshness is the point: frames rebuilt or read inside
@@ -97,11 +103,15 @@ _STAGE_CACHE: dict[str, list[DataFrame]] = {}
 
 
 def cache_stage(df: DataFrame, key: str) -> DataFrame:
-    """Materialize a multi-consumer stage exactly once under ``key``.
+    """Materialize a multi-consumer stage or a model table exactly once
+    under ``key``.
 
-    Miss: the frame is persisted and filled with one action before it
-    is returned, so every stage is filled once before its consumers
-    fork, whatever schedules them. Hit: the same call site rebuilt a
+    Miss: the frame is persisted and filled with one ``noop`` write
+    before it is returned, so every stage is filled once before its
+    consumers fork, whatever schedules them. The write adds nothing
+    to the frame's own plan (a shuffle-free frame fills in one job);
+    ``count()`` would add a single-partition exchange, and under AQE
+    one more job, to every fill. Hit: the same call site rebuilt a
     ``sameResult``-equal plan (a re-run in one session: the bench's
     reps, an analyst iterating), and the live cached frame comes back
     with no job run. A checkpoint can never hit: each one is unique to
@@ -150,7 +160,7 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
         keep.pop(0).unpersist(blocking=False)
     out = df.persist()
     try:
-        out.count()
+        out.write.format("noop").mode("overwrite").save()
     except BaseException:
         out.unpersist()  # a failed fill leaves no registered cache behind
         raise

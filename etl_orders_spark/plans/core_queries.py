@@ -1653,7 +1653,9 @@ def customer_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranked = two_pass_rank(c, [F.col("rev_cents").desc(), F.col("o_custkey")], rank_col="rk")
-    n = c.agg(F.count(F.lit(1)).cast("long").alias("_n"))
+    # counted off the ranked frame, which reads two_pass_rank's
+    # checkpoint: counting `c` would scan and aggregate orders again
+    n = ranked.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     return (
         ranked.crossJoin(F.broadcast(n))
         .withColumn("decile", ntile_from_rank(F.col("rk"), F.col("_n"), 10))
@@ -1765,15 +1767,17 @@ def pareto_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("rev_cents")
         )
     )
-    total = c.agg(F.sum("rev_cents").cast("long").alias("_total"))
+    ranked = two_pass_rank(
+        c,
+        [F.col("rev_cents").desc(), F.col("o_custkey")],
+        rank_col="rk",
+        cumsum={"cum_cents": F.col("rev_cents")},
+    )
+    # summed off the ranked frame, which reads two_pass_rank's
+    # checkpoint: summing `c` would scan and aggregate orders again
+    total = ranked.agg(F.sum("rev_cents").cast("long").alias("_total"))
     return (
-        two_pass_rank(
-            c,
-            [F.col("rev_cents").desc(), F.col("o_custkey")],
-            rank_col="rk",
-            cumsum={"cum_cents": F.col("rev_cents")},
-        )
-        .filter(F.col("rk") <= 100)
+        ranked.filter(F.col("rk") <= 100)
         .crossJoin(F.broadcast(total))
         .select(
             "rk",

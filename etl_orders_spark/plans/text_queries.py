@@ -4653,26 +4653,27 @@ def kneser_ney_trigram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression shape so the floor lands on the same integer.
 
     Plan shape: one explode into positional trigrams, one (doc, gram)
-    partial aggregate; every model table (trigram counts, context
-    totals, continuation counts at two levels, the three scalar
-    totals) derives from THAT aggregate's tiny distinct-trigram
-    rollup, never from a corpus re-scan. Runtime-verified (round 11,
-    VERDICT r10 watch #2): the executed plan runs exactly TWO
-    documents scans — the cached (doc, gram) aggregate's single fill
-    (AQE additionally reuses its shuffle stage across the four model
-    branches; the static plan's 6 scans / 31 exchanges are render
-    copies of that one stage) plus one deliberate column-pruned pass
-    for the vocabulary size |V|, which needs tokens outside trigram
-    positions and so cannot derive from the gram aggregate — the
-    continuation counts
+    partial aggregate, staged once (``kn_trigram.per_pair``: the model
+    fill and the scoring pass both read it); every model table
+    (trigram counts, context totals, continuation counts at two
+    levels, the three scalar totals) derives from THAT stage's tiny
+    distinct-trigram rollup, never from a corpus re-scan. The five
+    model joins run at distinct-trigram grain, keyed on vocab-bounded
+    gram fragments, and the scored-gram table they produce is itself
+    a keyed stage (``kn_trigram.gram_nll``), so a warm rerun of the
+    plan runs only the scoring join and the per-document aggregate.
+    Runtime-verified (tests/test_materialize.py, ``scan_counts``): a
+    cold build runs exactly TWO documents scans — the per_pair fill
+    plus one deliberate column-pruned pass for the vocabulary size
+    |V| inside the model fill, which needs tokens outside trigram
+    positions and so cannot derive from the gram aggregate; the
+    scoring pass reads only the two stages. The continuation counts
     need COUNT(DISTINCT) so they are groupBy tables (Spark windows
     cannot COUNT DISTINCT), exactly the materialize-the-model-tables
-    form the bigram lane's docstring names as the 100 TB move; the
-    scoring pass is five model joins keyed on vocab-bounded gram
-    fragments, with AQE free to broadcast them. Docs under 3 tokens
-    have no trigram positions and drop out. Public algorithm: Kneser
-    & Ney 1995; Chen & Goodman 1999. No counterpart in the reference
-    (manliot/ETL-orders dags/etl.py)."""
+    form the bigram lane's docstring names as the 100 TB move. Docs
+    under 3 tokens have no trigram positions and drop out. Public
+    algorithm: Kneser & Ney 1995; Chen & Goodman 1999. No counterpart
+    in the reference (manliot/ETL-orders dags/etl.py)."""
     from etl_orders_spark.operators.dedup import ordered_shingles
 
     docs = T(spark, sf_dir, "documents")
@@ -4686,7 +4687,7 @@ def kneser_ney_trigram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_pos")),
         "kn_trigram.per_pair",
     )
-    tri = cache_stage(
+    tri = (
         per_pair.groupBy("g")
         .agg(F.sum("n_pos").cast("long").alias("c"))
         .select(
@@ -4695,8 +4696,7 @@ def kneser_ney_trigram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.split("g", " "), 2).alias("w2"),
             F.substring_index("g", " ", -1).alias("w3"),
             "c",
-        ),
-        "kn_trigram.tri",
+        )
     )
     ctx2 = tri.groupBy("w1", "w2").agg(
         F.sum("c").cast("long").alias("c_ctx2"),
@@ -4711,20 +4711,14 @@ def kneser_ney_trigram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expand + two-exchange distinct-aggregate form — same longs,
     # materially smaller static plan (VERDICT r11 #4: the 31
     # vocab-bounded exchanges made the COLD path plan-compile-heavy).
-    cont2 = cache_stage(
-        tri.groupBy("w2", "w3").agg(
-            F.count(F.lit(1)).cast("long").alias("n1_cont2")
-        ),
-        "kn_trigram.cont2",
+    cont2 = tri.groupBy("w2", "w3").agg(
+        F.count(F.lit(1)).cast("long").alias("n1_cont2")
     )
     mid = cont2.groupBy("w2").agg(
         F.sum("n1_cont2").cast("long").alias("n1_mid"),
         F.count(F.lit(1)).cast("long").alias("nt_mid"),
     )
-    cont1 = cache_stage(
-        cont2.groupBy("w3").agg(F.count(F.lit(1)).cast("long").alias("n1_w3")),
-        "kn_trigram.cont1",
-    )
+    cont1 = cont2.groupBy("w3").agg(F.count(F.lit(1)).cast("long").alias("n1_w3"))
     tot = (
         cont1.agg(
             F.sum("n1_w3").cast("long").alias("bt"),
@@ -4756,13 +4750,14 @@ def kneser_ney_trigram_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-gram nll double expression is deterministic, so scoring a
     # gram once and fanning the value out is bit-identical to scoring
     # it per (doc, gram) row.
-    gram_nll = (
+    gram_nll = cache_stage(  # the model: a warm rerun runs only the scoring pass
         tri.join(ctx2, ["w1", "w2"])
         .join(cont2, ["w2", "w3"])
         .join(mid, "w2")
         .join(cont1, "w3")
         .crossJoin(F.broadcast(tot))
-        .select("g", nll.alias("_nll"))
+        .select("g", nll.alias("_nll")),
+        "kn_trigram.gram_nll",
     )
     scored = per_pair.join(gram_nll, "g")
     return (

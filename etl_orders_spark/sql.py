@@ -40,8 +40,10 @@ def plan_summary(df: DataFrame) -> dict:
     """Scale-audit summary of a DataFrame's physical plan: the facts
     that must stay true at 100 TB, as data instead of a wall of text.
     Used by the plan-regression tests and handy interactively
-    (`plan_summary(q(spark, sf))["nested_loop_joins"] == 0`)."""
-    p = df._jdf.queryExecution().executedPlan().toString()
+    (`plan_summary(q(spark, sf))["nested_loop_joins"] == 0`). Reads
+    the plan without its "== Initial Plan ==" copies, so a consumer
+    of a filled stage counts each operator once."""
+    p = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
     return {
         # lookbehinds: a ReusedExchange is a shuffle AVOIDED, not paid —
         # don't let it inflate the exchange counts it points at
@@ -63,6 +65,40 @@ def plan_summary(df: DataFrame) -> dict:
         "take_ordered": "TakeOrderedAndProject" in p,
         "global_windows": count_global_windows(p),
     }
+
+
+def _node_indent(line: str) -> int:
+    """Depth of a plan-tree line = offset of its first payload char
+    (Spark renders tree structure with a ' :+-*' prefix alphabet)."""
+    i = 0
+    while i < len(line) and line[i] in " :+-*(0123456789)":
+        i += 1
+    return i
+
+
+def drop_initial_plans(plan: str) -> str:
+    """Plan text without its "== Initial Plan ==" subtrees. AQE prints
+    the pre-adaptive plan beside the final one once a plan has run
+    (recursively, inside every nested AdaptiveSparkPlan a filled cached
+    relation embeds), and none of that text ever executes."""
+    pruned: list[str] = []
+    skip_deeper_than: int | None = None
+    for line in plan.splitlines():
+        d = _node_indent(line)
+        if skip_deeper_than is not None:
+            # the section's children render at indent >= the marker
+            # (its first child sits EQUAL to it), and the marker is
+            # always the last child of its AdaptiveSparkPlan — so the
+            # section ends at the first strictly-shallower line
+            if line.strip() and d < skip_deeper_than:
+                skip_deeper_than = None
+            else:
+                continue
+        if "== Initial Plan ==" in line:
+            skip_deeper_than = d
+            continue
+        pruned.append(line)
+    return "\n".join(pruned)
 
 
 # In plan text, a window spec lists partition columns BARE before the

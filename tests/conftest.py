@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 
 from etl_orders_spark.session import get_spark
+from etl_orders_spark.sql import drop_initial_plans
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -16,40 +17,6 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
-
-
-def _node_indent(line: str) -> int:
-    """Depth of a plan-tree line = offset of its first payload char
-    (Spark renders tree structure with a ' :+-*' prefix alphabet)."""
-    i = 0
-    while i < len(line) and line[i] in " :+-*(0123456789)":
-        i += 1
-    return i
-
-
-def drop_initial_plans(plan: str) -> str:
-    """Plan text without its "== Initial Plan ==" subtrees. AQE prints
-    the pre-adaptive plan beside the final one once a plan has run
-    (recursively, inside every nested AdaptiveSparkPlan a filled cached
-    relation embeds), and none of that text ever executes."""
-    pruned: list[str] = []
-    skip_deeper_than: int | None = None
-    for line in plan.splitlines():
-        d = _node_indent(line)
-        if skip_deeper_than is not None:
-            # the section's children render at indent >= the marker
-            # (its first child sits EQUAL to it), and the marker is
-            # always the last child of its AdaptiveSparkPlan — so the
-            # section ends at the first strictly-shallower line
-            if line.strip() and d < skip_deeper_than:
-                skip_deeper_than = None
-            else:
-                continue
-        if "== Initial Plan ==" in line:
-            skip_deeper_than = d
-            continue
-        pruned.append(line)
-    return "\n".join(pruned)
 
 
 class RegistryPlans(dict):

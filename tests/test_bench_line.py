@@ -64,6 +64,8 @@ def test_time_lane_tags_every_rep_and_counts_builder_jobs(spark):
     for phase in ("cold", "warm0", "warm1"):
         assert tracker.getJobIdsForGroup(f"time_lane_probe:{phase}"), phase
     assert t.cold_jobs == 1 and t.warm_jobs == 1
+    # the rep's own jobs add the sink's one job to the builder's
+    assert t.cold_rep_jobs == 2 and t.warm_rep_jobs == 2
     assert t.cold_s > 0 and t.warm_s > 0
     # the warm rep reuses every class the cold rep generated
     assert t.warm_compiles == 0

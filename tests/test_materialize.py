@@ -1,8 +1,10 @@
 """Unit contract of the materialize-once helpers: cache_stage's
 fill-on-miss / warm reuse / invalidation / external-clear and
 session-restart recovery, fan_out_narrow's two untouched fallbacks,
-the allowlist of direct checkpoint, cache and persist sites, and the
-scan audit's executed-scan counter on frames with known scan counts."""
+the allowlist of direct checkpoint, cache and persist sites, the
+scan audit's executed-scan counter on frames with known scan counts,
+and the staged model tables (a warm DSIR or Kneser-Ney rebuild runs
+only its scoring query)."""
 
 from __future__ import annotations
 
@@ -46,12 +48,13 @@ def test_cache_stage_warm_reuse_and_bounded_eviction(spark):
     _STAGE_CACHE.pop(key, None)
 
     # a miss persists AND fills: jobs run inside the call, and the
-    # frame is cached before any action on it
+    # frame is cached before any action on it. A shuffle-free frame
+    # fills in exactly one job: the fill adds no exchange of its own
     a, jobs = _jobs_under(
         spark, "test.cache_stage.miss",
         lambda: cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key),
     )
-    assert jobs >= 1
+    assert jobs == 1
     assert _is_cached(a) and _is_filled(spark, a)
     assert a.count() == 10
 
@@ -283,6 +286,61 @@ def test_scan_counts_kneser_ney_reads_documents_twice(spark, sf_dir, scans):
 
     counts = scans(lambda: query_map()["kneser_ney_trigram_docs"](spark, sf_dir))
     assert counts == {"documents.parquet": 2}
+
+
+@pytest.mark.parametrize("lane", ["customer_revenue_deciles", "pareto_customer_revenue"])
+def test_scan_counts_ranked_revenue_lanes_read_orders_once(spark, sf_dir, scans, lane):
+    """The grand total (count or revenue sum) comes off the ranked
+    frame, which reads two_pass_rank's checkpoint, not a second orders
+    aggregate."""
+    from etl_orders_spark.plans.registry import query_map
+
+    assert scans(lambda: query_map()[lane](spark, sf_dir)) == {"orders.parquet": 1}
+
+
+@pytest.fixture
+def stage_hits(monkeypatch):
+    """Keys of the ``cache_stage`` calls that returned a live handle
+    (a hit), recorded while the test runs. The plan modules import
+    ``cache_stage`` inside their builders, so the patched one is seen."""
+    import etl_orders_spark.operators.materialize as M
+
+    hits: list[str] = []
+    real = M.cache_stage
+
+    def recording(df, key):
+        prior = list(M._STAGE_CACHE.get(key, ()))
+        out = real(df, key)
+        if any(out is h for h in prior):
+            hits.append(key)
+        return out
+
+    monkeypatch.setattr(M, "cache_stage", recording)
+    return hits
+
+
+@pytest.mark.parametrize("lane", ["dsir_importance_resample", "kneser_ney_trigram_docs"])
+def test_warm_rebuild_runs_only_the_scoring_query(spark, sf_dir, stage_hits, lane):
+    """The model table is a stage: a warm rebuild runs no builder job,
+    and its collect() runs only the scoring query. After clearCache()
+    every stage is cold again: the rebuild hits none and fills them."""
+    from etl_orders_spark.plans.registry import query_map
+
+    builder = query_map()[lane]
+    spark.catalog.clearCache()
+    builder(spark, sf_dir).collect()
+    stage_hits.clear()
+
+    df, build_jobs = _jobs_under(spark, f"test.warm.{lane}.build", lambda: builder(spark, sf_dir))
+    _, collect_jobs = _jobs_under(spark, f"test.warm.{lane}.collect", df.collect)
+    assert build_jobs == 0 and stage_hits
+    assert collect_jobs <= 3
+
+    spark.catalog.clearCache()
+    stage_hits.clear()
+    _, build_jobs = _jobs_under(spark, f"test.cleared.{lane}.build", lambda: builder(spark, sf_dir))
+    assert stage_hits == [] and build_jobs > 0
+    spark.catalog.clearCache()
 
 
 def test_const_rows_values_and_sameresult_stability(spark):

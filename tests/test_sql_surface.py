@@ -58,3 +58,25 @@ def test_plan_summary_reports_scale_facts(spark, sf_dir):
     h = plan_summary(li.join(orders, li.l_orderkey == orders.o_orderkey))
     assert h["shuffled_hash_joins"] == 1
     assert h["sort_merge_joins"] == 0 and h["broadcast_hash_joins"] == 0
+
+
+def test_plan_summary_counts_a_filled_stage_once(spark):
+    """A consumer of a filled stage prints the stage's already-run plan
+    twice (AQE's final and initial plans); only the final one counts."""
+    import re
+
+    from etl_orders_spark.operators.materialize import _STAGE_CACHE, cache_stage
+    from etl_orders_spark.sql import plan_summary
+
+    key = "test.plan_summary.filled"
+    _STAGE_CACHE.pop(key, None)
+    staged = cache_stage(spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count(), key)
+    consumer = staged.where("k < 3")
+    raw = consumer._jdf.queryExecution().executedPlan().toString()
+    assert "== Initial Plan ==" in raw
+    assert len(re.findall(r"(?<!Reused)(?<!Broadcast)Exchange", raw)) == 2
+    assert plan_summary(consumer)["shuffle_exchanges"] == 1
+    consumer.collect()  # the consumer's own run adds a third copy
+    assert plan_summary(consumer)["shuffle_exchanges"] == 1
+    staged.unpersist()
+    _STAGE_CACHE.pop(key, None)

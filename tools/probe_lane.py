@@ -11,8 +11,9 @@ Usage:
 
 Prints per directory and lane: cold (first run, caches cleared), warm
 (best-of-reps after cold), the output row count (one untimed count()
-after the timed runs), build_jobs=COLD/WARM, the Spark jobs run
-inside the builder on the cold rep and the last warm rep, and
+after the timed runs), jobs=COLD/WARM, every Spark job of the cold rep
+and of the last warm rep (the builder's plus the sink's),
+build_jobs=COLD/WARM, the part of those run inside the builder, and
 compiles=COLD/WARM, the classes Janino compiled in the same two reps
 (a warm count above 0 means the codegen cache lost a class). Every rep
 runs under the job group ``LANE:PHASE`` (cold, warm0.., rows), so an
@@ -69,7 +70,8 @@ def main() -> int:
             rows = builder(spark, sf_dir).count()
             print(
                 f"{os.path.basename(sf_dir)} {lane}: cold={t.cold_s:.3f}s warm={t.warm_s:.3f}s"
-                f" rows={rows} build_jobs={t.cold_jobs}/{t.warm_jobs}"
+                f" rows={rows} jobs={t.cold_rep_jobs}/{t.warm_rep_jobs}"
+                f" build_jobs={t.cold_jobs}/{t.warm_jobs}"
                 f" compiles={t.cold_compiles}/{t.warm_compiles}",
                 flush=True,
             )

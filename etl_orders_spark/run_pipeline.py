@@ -12,10 +12,10 @@ exactly as SURVEY.md §2.7/O3 scopes it:
 Reads the reference-shaped inputs (users.csv, user_info.json,
 orders.csv, products.csv), runs the star denormalization as one lazy
 Catalyst plan, and loads the result: USERS (enriched users) and ORDERS
-(final load projection) as parquet under --out, plus optional JDBC
-overwrite when --jdbc-url is given (S4/S5). --generate first writes
-the S7 synthetic fixtures into --data-dir, mirroring the reference's
-create_data_source notebook.
+(final load projection) as parquet under --out, each counted as it is
+written, plus a JDBC overwrite from that parquet when --jdbc-url is
+given (S4/S5). --generate first writes the S7 synthetic fixtures into
+--data-dir, mirroring the reference's create_data_source notebook.
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ from __future__ import annotations
 import argparse
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from etl_orders_spark.plans.reference_pipeline import (
     final_orders_for_load,
@@ -61,14 +62,13 @@ def run(
     counts: dict[str, int] = {}
     for table, df in (("USERS", enriched_users), ("ORDERS", final_orders)):
         out_path = os.path.join(out_dir, table)
-        write_parquet(df, out_path)
-        # the parquet just written is the materialized lineage: the JDBC
-        # load and the count read IT back instead of re-executing the
-        # CSV/JSON scans + joins once per consumer (2-3x the job cost)
-        staged = spark.read.parquet(out_path)
+        # the write observes its own row count; only the JDBC load reads
+        # the table back, from the parquet just written
+        written = Observation()
+        write_parquet(df.observe(written, F.count(F.lit(1)).alias("rows")), out_path)
+        counts[table] = written.get["rows"]
         if jdbc_url:
-            write_jdbc(staged, jdbc_url, table, mode="overwrite")
-        counts[table] = staged.count()
+            write_jdbc(spark.read.parquet(out_path), jdbc_url, table, mode="overwrite")
     return counts
 
 

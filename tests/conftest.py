@@ -19,6 +19,25 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session")
+def jobs_under(spark):
+    """``jobs_under(group, call)`` runs ``call`` under Spark job group
+    ``group`` and returns (its result, the jobs it ran)."""
+    sc = spark.sparkContext
+
+    def run(group: str, call):
+        sc.setJobGroup(group, group)
+        try:
+            out = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 class RegistryPlans(dict):
     """name -> (output fields, executed-plan string), plus the session
     conf read after one pin and before the build (``conf_before``) and

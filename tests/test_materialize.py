@@ -30,28 +30,15 @@ def _is_filled(spark, df) -> bool:
     return cached.isDefined() and cached.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
 
 
-def _jobs_under(spark, group: str, call):
-    """Run ``call`` under job group ``group``: (its result, jobs run)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_cache_stage_warm_reuse_and_bounded_eviction(spark):
+def test_cache_stage_warm_reuse_and_bounded_eviction(spark, jobs_under):
     key = "test.cache_stage.unit"
     _STAGE_CACHE.pop(key, None)
 
     # a miss persists AND fills: jobs run inside the call, and the
     # frame is cached before any action on it. A shuffle-free frame
     # fills in exactly one job: the fill adds no exchange of its own
-    a, jobs = _jobs_under(
-        spark, "test.cache_stage.miss",
+    a, jobs = jobs_under(
+        "test.cache_stage.miss",
         lambda: cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key),
     )
     assert jobs == 1
@@ -60,8 +47,8 @@ def test_cache_stage_warm_reuse_and_bounded_eviction(spark):
 
     # identical plan -> the SAME cached frame comes back (warm reuse),
     # and no job runs
-    b, jobs = _jobs_under(
-        spark, "test.cache_stage.hit",
+    b, jobs = jobs_under(
+        "test.cache_stage.hit",
         lambda: cache_stage(spark.range(10).selectExpr("id * 2 AS x"), key),
     )
     assert b is a and jobs == 0
@@ -320,7 +307,7 @@ def stage_hits(monkeypatch):
 
 
 @pytest.mark.parametrize("lane", ["dsir_importance_resample", "kneser_ney_trigram_docs"])
-def test_warm_rebuild_runs_only_the_scoring_query(spark, sf_dir, stage_hits, lane):
+def test_warm_rebuild_runs_only_the_scoring_query(spark, sf_dir, stage_hits, jobs_under, lane):
     """The model table is a stage: a warm rebuild runs no builder job,
     and its collect() runs only the scoring query. After clearCache()
     every stage is cold again: the rebuild hits none and fills them."""
@@ -331,14 +318,14 @@ def test_warm_rebuild_runs_only_the_scoring_query(spark, sf_dir, stage_hits, lan
     builder(spark, sf_dir).collect()
     stage_hits.clear()
 
-    df, build_jobs = _jobs_under(spark, f"test.warm.{lane}.build", lambda: builder(spark, sf_dir))
-    _, collect_jobs = _jobs_under(spark, f"test.warm.{lane}.collect", df.collect)
+    df, build_jobs = jobs_under(f"test.warm.{lane}.build", lambda: builder(spark, sf_dir))
+    _, collect_jobs = jobs_under(f"test.warm.{lane}.collect", df.collect)
     assert build_jobs == 0 and stage_hits
     assert collect_jobs <= 3
 
     spark.catalog.clearCache()
     stage_hits.clear()
-    _, build_jobs = _jobs_under(spark, f"test.cleared.{lane}.build", lambda: builder(spark, sf_dir))
+    _, build_jobs = jobs_under(f"test.cleared.{lane}.build", lambda: builder(spark, sf_dir))
     assert stage_hits == [] and build_jobs > 0
     spark.catalog.clearCache()
 

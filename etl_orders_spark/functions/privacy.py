@@ -30,12 +30,12 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def redact_emails(col: Column | str, token: str = "<EMAIL>") -> Column:
-    return F.regexp_replace(_c(col), EMAIL_RE, token)
+def redact_emails(col: Column | str) -> Column:
+    return F.regexp_replace(_c(col), EMAIL_RE, "<EMAIL>")
 
 
-def redact_phones(col: Column | str, token: str = "<PHONE>") -> Column:
-    return F.regexp_replace(_c(col), PHONE_RE, token)
+def redact_phones(col: Column | str) -> Column:
+    return F.regexp_replace(_c(col), PHONE_RE, "<PHONE>")
 
 
 def redact_pii(col: Column | str) -> Column:
@@ -58,10 +58,10 @@ def pseudonym(col: Column | str, salt: str) -> Column:
     return F.md5(F.concat(F.lit(f"{salt}|"), _c(col).cast("string")))
 
 
-def mask_digits(col: Column | str, mask: str = "#") -> Column:
-    """Replace every digit — kills embedded ids/account numbers while
-    keeping the string's shape for debugging."""
-    return F.regexp_replace(_c(col), r"[0-9]", mask)
+def mask_digits(col: Column | str) -> Column:
+    """Replace every digit with ``#`` — kills embedded ids/account
+    numbers while keeping the string's shape for debugging."""
+    return F.regexp_replace(_c(col), r"[0-9]", "#")
 
 
 def generalize_numeric(col: Column | str, width: float) -> Column:

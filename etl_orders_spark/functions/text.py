@@ -129,25 +129,6 @@ def quality_features(col: Column | str) -> dict[str, Column]:
     }
 
 
-def _marker_hits(markers: tuple[str, ...]):
-    """Closure factory keeping the F.filter lambda single-argument: a
-    2-param lambda (even with a default) is treated by PySpark as the
-    (element, index) form, binding the default to the index Column."""
-    return lambda t: t.isin(*markers)
-
-
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    """Per-language marker hit counts (token-exact, not substring).
-    NULL text counts as empty (all-zero hits → lang_id 'und'): a NULL
-    size comparison is never-true in a when-chain, so an unguarded
-    NULL would fall through every branch to the last language."""
-    toks = tokens(F.lower(F.coalesce(_c(col), F.lit(""))))
-    return {
-        lang: F.size(F.filter(toks, _marker_hits(markers))).cast("long")
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def lang_id(col: Column | str) -> Column:
     """Pick the language with the most marker hits; 'und' when all zero.
     Ties break by fixed language order (en > es > fr > de) so the

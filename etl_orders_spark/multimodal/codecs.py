@@ -56,11 +56,6 @@ from etl_orders_spark.multimodal.jpeg import decode_jpeg as _decode_jpeg_native
 from etl_orders_spark.multimodal.pickling import pickle_by_value
 from etl_orders_spark.multimodal.vp8l import decode_webp as _decode_webp_native
 
-# formats recognized but with NO native decoder at all (decode_image
-# routes them straight to PIL-or-gate); lossless WebP decodes natively
-# as of round 9 — only lossy VP8 / animation fall through now
-_GATED: dict[str, str] = {}
-
 
 def sniff_format(content: bytes) -> str | None:
     """Identify an image container from its magic bytes.
@@ -256,8 +251,6 @@ def decode_image(content: bytes) -> np.ndarray:
                 return _decode_via_pil(content, fmt.upper())
             except NotImplementedError:
                 raise  # PIL absent: surface the gate, not a ValueError
-    if fmt in _GATED:
-        return _decode_via_pil(content, _GATED[fmt])
     raise ValueError("content is not a decodable image (no known container magic)")
 
 

@@ -97,16 +97,20 @@ _KINDS = ("image", "audio", "video")
 _FORMATS = {"image": "png", "audio": "wav", "video": "mp4"}
 
 
-def gen_media(spark: SparkSession, n: int = 100, payload_bytes: int = 256) -> DataFrame:
-    """Deterministic synthetic media rows: content = repeated sha2 of
-    the id (opaque but reproducible bytes), metadata consistent with
-    the kind. Pure Spark plan — scales like any range source."""
+_PAYLOAD_BYTES = 256
+
+
+def gen_media(spark: SparkSession, n: int = 100) -> DataFrame:
+    """Deterministic synthetic media rows: content = _PAYLOAD_BYTES of
+    repeated sha2 of the id (opaque but reproducible bytes), metadata
+    consistent with the kind. Pure Spark plan — scales like any range
+    source."""
     # one shared cycling index: kind and format MUST stay consistent
     # per row, so format indexes with the same expression, never a copy
     kind_idx = (F.col("id") % 3 + 1).cast("int")
     kind = F.element_at(F.array(*[F.lit(k) for k in _KINDS]), kind_idx)
     payload_hex = F.concat(
-        *[F.sha2(F.concat(F.col("id").cast("string"), F.lit(f"|{i}")), 256) for i in range((payload_bytes + 31) // 32)]
+        *[F.sha2(F.concat(F.col("id").cast("string"), F.lit(f"|{i}")), 256) for i in range((_PAYLOAD_BYTES + 31) // 32)]
     )
     meta = F.struct(
         F.element_at(
@@ -128,7 +132,7 @@ def gen_media(spark: SparkSession, n: int = 100, payload_bytes: int = 256) -> Da
     return spark.range(n).select(
         F.col("id").alias("media_id"),
         kind.alias("kind"),
-        F.unhex(F.substring(payload_hex, 1, payload_bytes * 2)).alias("content"),
+        F.unhex(F.substring(payload_hex, 1, _PAYLOAD_BYTES * 2)).alias("content"),
         meta.alias("meta"),
     )
 
@@ -502,7 +506,7 @@ def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
     return _media_rows(spark, start, n, "image", row_for)
 
 
-def gen_adpcm_wav_media(spark: SparkSession, n: int = 40, start: int = 0) -> DataFrame:
+def gen_adpcm_wav_media(spark: SparkSession, n: int = 40) -> DataFrame:
     """Deterministic REAL IMA-ADPCM WAV rows (format tag 0x11, mono):
     the fixture law chooses the 4-bit CODE stream directly —
 
@@ -529,7 +533,7 @@ def gen_adpcm_wav_media(spark: SparkSession, n: int = 40, start: int = 0) -> Dat
         )
         return content, "wav", None, None, 8000, (nn + 1) * 1000 // 8000
 
-    return _media_rows(spark, start, n, "audio", row_for)
+    return _media_rows(spark, 0, n, "audio", row_for)
 
 
 def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:

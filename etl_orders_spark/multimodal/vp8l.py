@@ -914,9 +914,9 @@ def _encode_substream(
 
     green_alpha = _NUM_LITERALS + _NUM_LENGTH_CODES + cache_size
 
-    def lengths_for(vals: list[int], alpha_size: int, fallback: int = 0) -> list[int]:
+    def lengths_for(vals: list[int], alpha_size: int) -> list[int]:
         if not vals:
-            vals = [fallback]
+            vals = [0]
         uniq = set(vals)
         if len(uniq) == 1:
             sym = vals[0]

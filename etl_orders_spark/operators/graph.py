@@ -27,13 +27,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# HLL sketch size of hyperanf_reach: 2^_LG_K registers per node
+_LG_K = 10
+# connected_components raises if labels still move after this many rounds
+_MAX_ITER = 25
+
 
 def hyperanf_reach(
     edges: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
     hops: int = 3,
-    lg_k: int = 10,
 ) -> DataFrame:
     """Approximate cumulative k-hop reach per node via HyperANF
     (Boldi-Rosa-Vigna, WWW'11): each node carries a mergeable HLL
@@ -44,7 +48,7 @@ def hyperanf_reach(
     — a single keyed join (edges ⋈ state on the neighbor id) plus an
     `hll_union_agg` group-by per round. This is the scale form of
     exact bounded reachability: per-node state is a fixed-size sketch
-    (2^lg_k registers) instead of the frontier pair set, so total
+    (2^_LG_K registers) instead of the frontier pair set, so total
     state is |V| × sketch bytes no matter how dense the graph — the
     exact form's (source, reached) pairs grow toward |V|² on dense
     co-purchase graphs (see `khop_reachability_parts`, whose 3-hop
@@ -52,11 +56,11 @@ def hyperanf_reach(
 
     Output: node (long), est_1hop .. est_{hops}hop (long) — estimated
     neighborhood sizes EXCLUDING self (estimate − 1, mirroring the
-    exact query's `dst != src`). Standard error ≈ 1.04/√2^lg_k —
-    lg_k=10 is the measured accuracy/merge-cost knee (≈3.3% RSE,
-    mean observed error ~2.6% at sf0.01; lg_k=9 degrades to ~8%
-    while each merge costs 4× less than lg_k=12 — per-hop work is
-    O(|E| · 2^lg_k) register-max bytes; exact in HLL sparse mode for
+    exact query's `dst != src`). Standard error ≈ 1.04/√2^_LG_K —
+    _LG_K=10 is the measured accuracy/merge-cost knee (≈3.3% RSE,
+    mean observed error ~2.6% at sf0.01; 9 degrades to ~8%,
+    while 12 makes each merge 4× dearer — per-hop work is
+    O(|E| · 2^_LG_K) register-max bytes; exact in HLL sparse mode for
     small neighborhoods). Lineage is truncated every round (localCheckpoint)
     so the plan doesn't grow with the hop count; at 100 TB the state
     table stages to parquet per round instead.
@@ -84,7 +88,7 @@ def hyperanf_reach(
     # singleton sketches: nodes are distinct, so the group-by aggregates
     # exactly one element per sketch
     state = nodes.groupBy("_v").agg(
-        F.hll_sketch_agg(F.col("_v").cast("string"), F.lit(lg_k)).alias("_sk")
+        F.hll_sketch_agg(F.col("_v").cast("string"), F.lit(_LG_K)).alias("_sk")
     ).localCheckpoint(eager=True)
     ests = []
     for t in range(1, hops + 1):
@@ -131,18 +135,16 @@ def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Label every vertex with the MINIMUM vertex id reachable from it
-    (undirected). Edge endpoints must be drawn from `vertices`.
+    (undirected), over edges ``(id_a, id_b)``. Edge endpoints must be
+    drawn from `vertices`.
 
     Output: id_col, component (long) — singletons label themselves.
     """
     sym = (
-        edges.select(F.col(src_col).cast("long").alias("_s"), F.col(dst_col).cast("long").alias("_d"))
-        .union(edges.select(F.col(dst_col).cast("long").alias("_s"), F.col(src_col).cast("long").alias("_d")))
+        edges.select(F.col("id_a").cast("long").alias("_s"), F.col("id_b").cast("long").alias("_d"))
+        .union(edges.select(F.col("id_b").cast("long").alias("_s"), F.col("id_a").cast("long").alias("_d")))
         .distinct()
         # edges are consumed once per round: materialize them eagerly or the
         # whole upstream pair-generation plan (e.g. MinHash-LSH) re-executes
@@ -153,7 +155,7 @@ def connected_components(
         F.col(id_col).cast("long").alias("_v"), F.col(id_col).cast("long").alias("_lbl")
     ).localCheckpoint(eager=True)
     prev_sum = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # labels only ever decrease, so a stable sum IS the fixpoint
         cur_sum = labels.agg(F.sum("_lbl")).first()[0]
         if cur_sum == prev_sum:
@@ -181,4 +183,4 @@ def connected_components(
     # as non-converged with the correct answer in hand
     if labels.agg(F.sum("_lbl")).first()[0] == prev_sum:
         return labels.select(F.col("_v").alias(id_col), F.col("_lbl").alias("component"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
+    raise RuntimeError(f"connected_components did not converge in {_MAX_ITER} iterations")

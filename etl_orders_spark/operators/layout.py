@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _Z_COL = "_zval"
+# zorder_by's buckets per dimension: 2^12 = 4096
+_Z_BITS = 12
 
 
 def _bucketize(col: str, mn: Column, mx: Column, levels: int) -> Column:
@@ -59,7 +61,7 @@ def zorder_value(bucket_cols: list[Column], bits: int) -> Column:
     return z
 
 
-def zorder_by(df: DataFrame, cols: list[str], n_files: int, bits: int = 12) -> DataFrame:
+def zorder_by(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """Return `df` re-clustered so a `.write.parquet(...)` produces
     `n_files` files whose row-group min/max stats are tight on EVERY
     column in `cols`.
@@ -67,7 +69,7 @@ def zorder_by(df: DataFrame, cols: list[str], n_files: int, bits: int = 12) -> D
     One extra pass computes global min/max per column (broadcast back
     as a literal-free crossJoin — at 100 TB this is a metadata-cheap
     scan of just those columns); the rewrite itself is the range
-    shuffle any compaction pays. `bits`=12 gives 4096 buckets per
+    shuffle any compaction pays. ``_Z_BITS``=12 gives 4096 buckets per
     dimension — finer than any realistic file count, so the key order
     is effectively continuous."""
     aggs = []
@@ -79,9 +81,9 @@ def zorder_by(df: DataFrame, cols: list[str], n_files: int, bits: int = 12) -> D
     stats = df.agg(*aggs)
     with_stats = df.crossJoin(F.broadcast(stats))
     buckets = [
-        _bucketize(c, F.col(f"_mn_{c}"), F.col(f"_mx_{c}"), 1 << bits) for c in cols
+        _bucketize(c, F.col(f"_mn_{c}"), F.col(f"_mx_{c}"), 1 << _Z_BITS) for c in cols
     ]
-    keyed = with_stats.withColumn(_Z_COL, zorder_value(buckets, bits)).drop(
+    keyed = with_stats.withColumn(_Z_COL, zorder_value(buckets, _Z_BITS)).drop(
         *[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols]
     )
     return (

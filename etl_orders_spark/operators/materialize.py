@@ -23,9 +23,9 @@ consumes it once.
 A direct ``localCheckpoint(eager=True)`` is used only where the lineage
 cut or per-call freshness is the point: frames rebuilt or read inside
 a Python loop (the plan would otherwise grow with the rounds),
-nondeterministic ids, streaming micro-batches, call-time file checks,
-and float sums a cached plan would reorder (a cache keeps its shuffle
-partitioning; AQE does not coalesce it). ``materialize_small`` is that
+streaming micro-batches, call-time file checks, and float sums a
+cached plan would reorder (a cache keeps its shuffle partitioning;
+AQE does not coalesce it). ``materialize_small`` is that
 checkpoint for frames that are provably small at any scale.
 tests/test_materialize.py lists every checkpoint site with its reason.
 """
@@ -92,12 +92,16 @@ def const_rows(
     )
 
 
-# Per call site: a tiny FIFO of live cache handles (newest last).
-# Two slots, not one: a generic operator invoked over two DIFFERENT
-# inputs in alternation (e.g. ngram_jaccard_pairs on two corpora in
-# one session) would otherwise evict the other input's cache on every
-# build and silently lose the materialize-once property both plans
-# paid for. Bounded at _STAGE_SLOTS per site either way.
+# Per key: a tiny FIFO of live cache handles (newest last). A key
+# names one call site, or one operator that all its callers share
+# (two_pass_rank's and adjacent_pairs' ranged frames, one key per
+# operator across the 14 lanes that call them). Two slots, not one: a
+# generic operator invoked over two DIFFERENT inputs in alternation
+# (e.g. ngram_jaccard_pairs on two corpora in one session) would
+# otherwise evict the other input's cache on every build and silently
+# lose the materialize-once property both plans paid for. Three or
+# more inputs in rotation under one key never hit, and each build pays
+# the fill. Bounded at _STAGE_SLOTS per key either way.
 _STAGE_SLOTS = 2
 _STAGE_CACHE: dict[str, list[DataFrame]] = {}
 
@@ -111,11 +115,11 @@ def cache_stage(df: DataFrame, key: str) -> DataFrame:
     consumers fork, whatever schedules them. The write adds nothing
     to the frame's own plan (a shuffle-free frame fills in one job);
     ``count()`` would add a single-partition exchange, and under AQE
-    one more job, to every fill. Hit: the same call site rebuilt a
-    ``sameResult``-equal plan (a re-run in one session: the bench's
-    reps, an analyst iterating), and the live cached frame comes back
-    with no job run. A checkpoint can never hit: each one is unique to
-    its call.
+    one more job, to every fill. Hit: a caller of the same key
+    rebuilt a ``sameResult``-equal plan (a re-run in one session: the
+    bench's reps, an analyst iterating), and the live cached frame
+    comes back with no job run. A checkpoint can never hit: each one
+    is unique to its call.
 
     Bounded: a cache is held by the CacheManager, not by the Python
     handle, so it is not freed when the handle drops (a checkpoint's

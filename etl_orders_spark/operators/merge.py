@@ -28,16 +28,14 @@ def scd2_apply(
     updates: DataFrame,
     keys: list[str],
     effective_ts,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    is_current: str = "is_current",
 ) -> DataFrame:
     """Slowly-changing-dimension type 2: close the current version of
     each updated key (valid_to = effective_ts, is_current = false) and
     append the update as the new current version.
 
-    `dim` must carry the three SCD columns; `updates` carries the
-    business columns only. History rows pass through untouched.
+    `dim` must carry the three SCD columns (``valid_from``,
+    ``valid_to``, ``is_current``); `updates` carries the business
+    columns only. History rows pass through untouched.
 
     PRECONDITION (enforced): `updates` has at most one row per key —
     duplicates in one batch would each open an is_current version with
@@ -69,28 +67,23 @@ def scd2_apply(
     upd_keys = updates.select(*keys).distinct()
     # current rows being superseded -> closed
     closing = (
-        dim.filter(F.col(is_current))
+        dim.filter(F.col("is_current"))
         .join(upd_keys, keys, "left_semi")
-        .withColumn(valid_to, eff)
-        .withColumn(is_current, F.lit(False))
+        .withColumn("valid_to", eff)
+        .withColumn("is_current", F.lit(False))
     )
     # everything else (history + current rows without an update) passes through
-    untouched_current = dim.filter(F.col(is_current)).join(upd_keys, keys, "left_anti")
-    history = dim.filter(~F.col(is_current))
+    untouched_current = dim.filter(F.col("is_current")).join(upd_keys, keys, "left_anti")
+    history = dim.filter(~F.col("is_current"))
     fresh = (
-        updates.withColumn(valid_from, eff)
-        .withColumn(valid_to, F.lit(None).cast("timestamp"))
-        .withColumn(is_current, F.lit(True))
+        updates.withColumn("valid_from", eff)
+        .withColumn("valid_to", F.lit(None).cast("timestamp"))
+        .withColumn("is_current", F.lit(True))
     )
     return history.unionByName(untouched_current).unionByName(closing).unionByName(fresh)
 
 
-def snapshot_as_of(
-    dim: DataFrame,
-    ts,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-) -> DataFrame:
+def snapshot_as_of(dim: DataFrame, ts) -> DataFrame:
     """Point-in-time (time-travel) read over an SCD2 history: the
     version of each key visible at ``ts`` is the one whose validity
     interval contains it — ``valid_from <= ts < valid_to`` with an open
@@ -104,16 +97,17 @@ def snapshot_as_of(
     written time-ordered), no join and no shuffle."""
     t = F.lit(ts).cast("timestamp")
     return dim.filter(
-        (F.col(valid_from) <= t) & (F.col(valid_to).isNull() | (F.col(valid_to) > t))
+        (F.col("valid_from") <= t) & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
     )
 
 
 _LATEST_POINTER = "_LATEST"
+# publish_parquet_versioned: age past which an uncommitted version
+# directory counts as a crashed publish's garbage
+_GC_GRACE_SEC = 3600.0
 
 
-def publish_parquet_versioned(
-    df: DataFrame, table_root: str, keep: int = 2, gc_grace_sec: float = 3600.0
-) -> str:
+def publish_parquet_versioned(df: DataFrame, table_root: str, keep: int = 2) -> str:
     """Atomically publish ``df`` as the new version of a parquet
     serving table. ``mode("overwrite").parquet(dir)`` is delete-then-
     write: a reader (or a kill — a stopped streaming query, a
@@ -152,12 +146,11 @@ def publish_parquet_versioned(
     reorder "latest" but can never silently destroy a committed
     version. Dangling claims (no marker: a crash, or a concurrent
     publish mid-write) are collected only once older than
-    ``gc_grace_sec`` (mtime). CONTRACT: a publish must land its data
-    within ``gc_grace_sec`` of claiming its version directory — a
+    ``_GC_GRACE_SEC`` (mtime, one hour). CONTRACT: a publish must land
+    its data within that grace of claiming its version directory — a
     slower write risks a faster concurrent publisher GC'ing the still-
     empty claim, after which the late rename would resurrect an old
-    version number. Callers with multi-hour writes pass a larger
-    grace (it is a keyword parameter precisely for that; ADVICE r5). The pointer keeps a bounded history
+    version number. The pointer keeps a bounded history
     window (``keep + 8`` lines, advisory — GC no longer depends on it)
     so a long-lived foreachBatch sink never grows the file without
     bound."""
@@ -239,7 +232,7 @@ def publish_parquet_versioned(
             # Dangling (never committed): a crashed publish OR a
             # concurrent one mid-write — only collect once stale.
             try:
-                if now - os.path.getmtime(path) < gc_grace_sec:
+                if now - os.path.getmtime(path) < _GC_GRACE_SEC:
                     continue
             except OSError:
                 continue

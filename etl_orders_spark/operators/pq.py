@@ -18,7 +18,7 @@ true vectors for the tiny top-R candidate set.
 Distribution of work:
 - TRAIN (driver, bounded): k-means for the coarse router and the M
   sub-codebooks runs on a deterministic hash-ordered sample capped at
-  `train_n` rows — the standard practice (codebook quality saturates
+  `_TRAIN_N` rows — the standard practice (codebook quality saturates
   long before the corpus does), and the one deliberate driver-side
   step. Deterministic: sample order is (xxhash64(id), id), numpy
   RandomState(0), fixed Lloyd iterations — no partition-seeded RNG.
@@ -78,6 +78,12 @@ def _normalize(m):
     return m / norms
 
 
+# train_pq_model collects at most this many rows, whatever the corpus size
+_TRAIN_N = 16384
+# Lloyd iterations per k-means (coarse router and each sub-codebook)
+_ITERS = 8
+
+
 def train_pq_model(
     df: DataFrame,
     id_col: str,
@@ -85,11 +91,9 @@ def train_pq_model(
     n_cells: int = 16,
     m_sub: int = 8,
     ksub: int = 64,
-    train_n: int = 16384,
-    iters: int = 8,
 ):
     """Train the coarse router + M sub-codebooks on a deterministic
-    hash-ordered sample (≤ train_n rows collected — bounded regardless
+    hash-ordered sample (≤ _TRAIN_N rows collected — bounded regardless
     of corpus size). Vectors are L2-normalized first so inner product
     == cosine everywhere downstream. Returns (coarse, codebooks) numpy
     float32 arrays of shape (n_cells, D) and (M, ksub, D/M)."""
@@ -98,7 +102,7 @@ def train_pq_model(
     sample = (
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy(F.xxhash64(F.col("_id").cast("string")), F.col("_id"))
-        .limit(train_n)
+        .limit(_TRAIN_N)
         .collect()
     )
     x = _normalize(np.array([r["_v"] for r in sample], dtype=np.float64))
@@ -106,9 +110,9 @@ def train_pq_model(
     if dim % m_sub:
         raise ValueError(f"pq: dim {dim} not divisible by m_sub {m_sub}")
     dsub = dim // m_sub
-    coarse = _kmeans(x, n_cells, iters, seed=0)
+    coarse = _kmeans(x, n_cells, _ITERS, seed=0)
     books = np.stack(
-        [_kmeans(x[:, m * dsub : (m + 1) * dsub], ksub, iters, seed=1 + m) for m in range(m_sub)]
+        [_kmeans(x[:, m * dsub : (m + 1) * dsub], ksub, _ITERS, seed=1 + m) for m in range(m_sub)]
     )
     return coarse, books
 
@@ -163,7 +167,6 @@ def pq_topk(
     ksub: int = 64,
     nprobe: int = 4,
     rerank: int = 4,
-    train_n: int = 16384,
 ) -> DataFrame:
     """IVF-PQ top-k cosine: train (bounded sample) → encode corpus
     (map-only) → probe nprobe cells per query → ADC-score candidates in
@@ -177,9 +180,7 @@ def pq_topk(
 
     from etl_orders_spark.functions.vectors import cosine_batch
 
-    coarse, books = train_pq_model(
-        corpus, id_col, vec_col, n_cells=n_cells, m_sub=m_sub, ksub=ksub, train_n=train_n
-    )
+    coarse, books = train_pq_model(corpus, id_col, vec_col, n_cells=n_cells, m_sub=m_sub, ksub=ksub)
     m_books, _, dsub = books.shape
     r_local = max(rerank * k, k)
 

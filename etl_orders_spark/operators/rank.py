@@ -49,13 +49,16 @@ def two_pass_rank(
 
     ``order_by``: sort expressions forming a TOTAL order (include a
     unique tiebreaker — ties split across range partitions would
-    otherwise make ranks partition-dependent).
+    otherwise make ranks partition-dependent, and a staged partition
+    that Spark recomputes would number its rows differently).
     ``rank_col``: name for the 1-based global rank (None to skip).
     ``cumsum``: {out_col: value column} inclusive running sums in the
     same order.
     ``partitions``: range-partition count; defaults to the session's
     ``spark.sql.shuffle.partitions``.
     """
+    from etl_orders_spark.operators.materialize import cache_stage
+
     cumsum = dict(cumsum or {})
     if rank_col is None and not cumsum:
         raise ValueError("nothing to compute: rank_col is None and cumsum is empty")
@@ -83,8 +86,15 @@ def two_pass_rank(
         #     layout since Spark 1.6);
         #   - a nondeterministic projection is a reorder barrier, so
         #     the id is assigned in post-sortWithinPartitions row
-        #     order, and the EAGER localCheckpoint freezes that
-        #     assignment before any downstream re-optimization.
+        #     order. The stage (filled once, before any consumer runs)
+        #     does not freeze the ids: if a cached block is evicted or
+        #     lost, Spark recomputes its partition and assigns the ids
+        #     again. They come out the same only because ``order_by``
+        #     is total (the range bounds are fixed once sampled, and a
+        #     total order fixes each row's partition and its position
+        #     there), so the offsets pass and the final join always
+        #     agree, and a warm rebuild of the same plan reads the
+        #     stage without a job.
         # A range partition holding >= 2^33 rows would overflow the
         # sequence into the PID bits and corrupt ranks SILENTLY, so
         # the offsets pass carries a runtime guard built from the
@@ -97,8 +107,8 @@ def two_pass_rank(
             .sortWithinPartitions(*order_by)
             .withColumn(mid, F.monotonically_increasing_id())
             .withColumn(PID, F.shiftright(F.col(mid), 33).cast("int"))
-            .localCheckpoint(eager=True)
         )
+        ranged = cache_stage(ranged, "two_pass_rank.ranged")
         sizes = ranged.groupBy(PID).agg(F.count(F.lit(1)).alias("_tpr_cnt"))
         w_off = (
             Window.partitionBy(one_bucket(F.col(PID)))
@@ -135,21 +145,20 @@ def two_pass_rank(
             .drop(PID, mid, "_tpr_off")
         )
 
-    # Materialize the ranged frame ONCE (eager local checkpoint): the
-    # local pass and the offsets pass both consume it, but
-    # spark_partition_id() is nondeterministic, which disqualifies the
-    # shared subtree from Catalyst's exchange reuse — without the
-    # checkpoint the plan provably re-scans the input and pays the
-    # range exchange twice (2 FileScans, 0 ReusedExchange at runtime).
-    # One materialized narrow projection vs a second full scan is the
-    # right trade at any scale; production form is the same handoff
-    # staged to parquet. (Both evaluations WOULD agree — the range
-    # sampler is seeded deterministically — so this is a cost fix, not
-    # a correctness fix.)
-    ranged = (
-        df.repartitionByRange(n_part, *order_by)
-        .withColumn(PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    # Stage the ranged frame ONCE: the local pass and the offsets
+    # pass both consume it, but spark_partition_id() is
+    # nondeterministic, which disqualifies the shared subtree from
+    # Catalyst's exchange reuse — unstaged, the plan provably re-scans
+    # the input and pays the range exchange twice (2 FileScans, 0
+    # ReusedExchange at runtime). One materialized narrow projection
+    # vs a second full scan is the right trade at any scale;
+    # production form is the same handoff staged to parquet. (Both
+    # evaluations WOULD agree — the range sampler is seeded
+    # deterministically — so this is a cost fix, not a correctness
+    # fix, and a keyed stage that a warm rebuild hits is enough.)
+    ranged = cache_stage(
+        df.repartitionByRange(n_part, *order_by).withColumn(PID, F.spark_partition_id()),
+        "two_pass_rank.ranged",
     )
 
     # local pass — parallel per range partition
@@ -160,7 +169,7 @@ def two_pass_rank(
         local = local.withColumn(f"_tpr_run_{out}", F.sum(col).over(w_run))
 
     # offsets pass — P rows total (bounded by partition count, not
-    # data); reads the checkpointed ranged frame, not a second scan
+    # data); reads the staged ranged frame, not a second scan
     sizes = ranged.groupBy(PID).agg(
         F.count(F.lit(1)).alias("_tpr_cnt"),
         *[F.sum(col).alias(f"_tpr_tot_{out}") for out, col in cumsum.items()],
@@ -228,7 +237,8 @@ def two_pass_dense_rank(
 
     # same materialize-once rationale as two_pass_rank: both passes
     # consume the ranged frame, and spark_partition_id() disqualifies
-    # the shared subtree from exchange reuse
+    # the shared subtree from exchange reuse. A checkpoint, not a keyed
+    # stage: prefix-doubling callers rank a new frame every round.
     ranged = (
         df.repartitionByRange(n_part, *order_by)
         .withColumn(PID, F.spark_partition_id())
@@ -261,7 +271,6 @@ def adjacent_pairs(
     df: DataFrame,
     order_by: Sequence[Column],
     cols: Sequence[str],
-    next_suffix: str = "_next",
     partitions: int | None = None,
 ) -> DataFrame:
     """Every row paired with its SUCCESSOR in the total order given by
@@ -273,7 +282,7 @@ def adjacent_pairs(
     rank output), and the only rows whose successor lives elsewhere are
     the P partition-boundary rows, stitched back with a P-row broadcast.
 
-    Output: ``cols`` plus ``{col}{next_suffix}`` for each — one row per
+    Output: ``cols`` plus ``{col}_next`` for each — one row per
     input row that HAS a successor (the global last row emits nothing),
     exactly the self-join's contract.
 
@@ -295,20 +304,21 @@ def adjacent_pairs(
     partials, bounded by cluster layout, not data). Same
     materialize-once rationale as two_pass_rank:
     spark_partition_id() disqualifies the ranged subtree from
-    exchange reuse, so it is checkpointed eagerly."""
+    exchange reuse, so it is staged once."""
+    from etl_orders_spark.operators.materialize import cache_stage
+
     spark = df.sparkSession
     n_part = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        df.repartitionByRange(n_part, *order_by)
-        .withColumn(PID, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranged = cache_stage(
+        df.repartitionByRange(n_part, *order_by).withColumn(PID, F.spark_partition_id()),
+        "adjacent_pairs.ranged",
     )
     # in-partition successors: ONE lead() window (its PID exchange is
     # this operator's only data-sized shuffle); lead(lit(1)) is null
     # exactly on each partition's last row — a payload-null-safe
     # "has successor" marker
     w = Window.partitionBy(PID).orderBy(*order_by)
-    nxt = [F.lead(c).over(w).alias(f"{c}{next_suffix}") for c in cols]
+    nxt = [F.lead(c).over(w).alias(f"{c}_next") for c in cols]
     inner = (
         ranged.select(
             *cols, *nxt, F.lead(F.lit(1)).over(w).alias("_adj_has_next")
@@ -317,7 +327,7 @@ def adjacent_pairs(
         .drop("_adj_has_next")
     )
     # boundary stitching: per-partition first/last rows from one P-row
-    # aggregate over the checkpointed frame (NOT a second window pass)
+    # aggregate over the staged frame (NOT a second window pass)
     key = F.struct(*order_by)
     ends = ranged.groupBy(PID).agg(
         F.min_by(F.struct(*[F.col(c) for c in cols]), key).alias("_adj_first"),
@@ -329,7 +339,7 @@ def adjacent_pairs(
     succ = (
         ends.select(
             PID,
-            *[F.col(f"_adj_first.{c}").alias(f"{c}{next_suffix}") for c in cols],
+            *[F.col(f"_adj_first.{c}").alias(f"{c}_next") for c in cols],
         )
         .withColumn("_adj_prev_pid", F.lag(PID).over(w_pid))
         .filter(F.col("_adj_prev_pid").isNotNull())
@@ -338,7 +348,7 @@ def adjacent_pairs(
     lasts = ends.select(PID, *[F.col(f"_adj_last.{c}").alias(c) for c in cols])
     boundary = lasts.join(
         F.broadcast(succ), lasts[PID] == succ["_adj_prev_pid"]
-    ).select(*cols, *[f"{c}{next_suffix}" for c in cols])
+    ).select(*cols, *[f"{c}_next" for c in cols])
     return inner.unionByName(boundary)
 
 

@@ -28,6 +28,19 @@ from pyspark.sql import functions as F
 from etl_orders_spark.operators.rank import one_bucket
 from etl_orders_spark.operators.topk import topk_per_group
 
+# seed of the first LSH table's hyperplanes (table t uses seed + t)
+_LSH_SEED = 7
+# _assign_nearest's corpus blocks, each scored against every centroid
+_ASSIGN_BLOCKS = 32
+# near_dup_lsh_params: target vectors per bucket, and the bound on a
+# true pair's overall miss probability the table count is sized for
+_LSH_TARGET_BUCKET = 2048
+_LSH_MISS_TARGET = 1e-5
+# semdedup_k's bounds: the fixture-scale floor, and the most centroids a
+# worker holds for the vectorized assignment
+_SEMDEDUP_FLOOR_K = 4
+_SEMDEDUP_CAP = 65536
+
 
 def brute_force_topk(
     queries: DataFrame,
@@ -191,22 +204,22 @@ def _gemm_topk_cogrouped(
 
 
 def _assign_nearest(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, n: int = 1, n_blocks: int = 32
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, n: int = 1
 ) -> DataFrame:
     """Nearest-`n` centroid per vector (by cosine, ties to lower cluster
-    id). The corpus hash-partitions into `n_blocks` blocks; the tiny
+    id). The corpus hash-partitions into `_ASSIGN_BLOCKS` blocks; the tiny
     centroid set replicates into every block (the relational analog of a
     broadcast), and each block scores with one GEMM — the corpus never
     shuffles on anything but its block id."""
     v = vectors.select(
         F.col(id_col).cast("long").alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_blocks)).alias("_blk"),
+        F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(_ASSIGN_BLOCKS)).alias("_blk"),
     )
     c = centroids.select(
         F.col("cluster").cast("long").alias("neighbor_id"),
         F.col("cvec").alias("c_vec"),
-        F.explode(F.array(*[F.lit(i) for i in range(n_blocks)])).alias("_blk"),
+        F.explode(F.array(*[F.lit(i) for i in range(_ASSIGN_BLOCKS)])).alias("_blk"),
     )
     return _gemm_topk_cogrouped(v, c, ["_blk"], n, exclude_self=False).select(
         F.col("query_id").alias("_vid"),
@@ -222,15 +235,14 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
-    refine: bool = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate all-pairs top-k: a coarse
     quantizer partitions the corpus into `n_centroids` cells; each
     query scores only vectors in its `nprobe` nearest cells.
 
     Deterministic construction: seed centroids are a stride sample of
-    the corpus (no RNG), optionally refined by one relational Lloyd
-    iteration (posexplode → per-dimension mean → rebuild). At scale
+    the corpus (no RNG), refined by one relational Lloyd iteration
+    (posexplode → per-dimension mean → rebuild). At scale
     this is the classic IVF layout — centroids broadcast, the corpus
     partitioned by cell id, probes shuffle only (cell, query) pairs.
 
@@ -252,25 +264,24 @@ def ivf_topk(
         .filter(F.col("_rn") < n_centroids)
         .select(F.col("_rn").alias("cluster"), F.col("_cv").alias("cvec"))
     )
-    if refine:
-        assigned = _assign_nearest(df, seeds, id_col, vec_col, 1).join(vecs, "_vid")
-        dims = assigned.select("cluster", F.posexplode("_v").alias("d", "x"))
-        means = dims.groupBy("cluster", "d").agg(F.avg("x").alias("m"))
-        seeds = (
-            means.groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("d", "m"))).alias("_pairs"))
-            .select(
-                "cluster",
-                F.transform("_pairs", lambda p: p["m"].cast("float")).alias("cvec"),
-            )
+    assigned = _assign_nearest(df, seeds, id_col, vec_col, 1).join(vecs, "_vid")
+    dims = assigned.select("cluster", F.posexplode("_v").alias("d", "x"))
+    means = dims.groupBy("cluster", "d").agg(F.avg("x").alias("m"))
+    centroids = (
+        means.groupBy("cluster")
+        .agg(F.array_sort(F.collect_list(F.struct("d", "m"))).alias("_pairs"))
+        .select(
+            "cluster",
+            F.transform("_pairs", lambda p: p["m"].cast("float")).alias("cvec"),
         )
+    )
     # one assignment pass: every vector's nprobe nearest cells; its top-1
     # cell is its inverted-file home, so `cells` is a rank-1 filter of the
     # same result rather than a second scoring job. A checkpoint, not a
     # stage: a cached plan keeps its shuffle partitioning (AQE does not
     # coalesce it), which reorders the float sums of the refined
     # centroids above and moves the rounded cosines
-    near = _assign_nearest(df, seeds, id_col, vec_col, nprobe).localCheckpoint(eager=True)
+    near = _assign_nearest(df, centroids, id_col, vec_col, nprobe).localCheckpoint(eager=True)
     home = topk_per_group(near, ["_vid"], [F.desc("_cos"), F.asc("cluster")], 1)
     # toDF re-aliases every column (fresh exprIds) so the probes/cells
     # self-join out of the same assignment table isn't flagged ambiguous
@@ -290,12 +301,7 @@ def ivf_topk(
     return topk_per_group(scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k)
 
 
-def near_dup_lsh_params(
-    n: int,
-    tau: float,
-    target_bucket: int = 2048,
-    miss_target: float = 1e-5,
-) -> tuple[int, int]:
+def near_dup_lsh_params(n: int, tau: float) -> tuple[int, int]:
     """Corpus-size-aware (num_planes, num_tables) for the bucketed
     near-dup join.
 
@@ -305,21 +311,25 @@ def near_dup_lsh_params(
     work constant. More planes cut a true pair's per-table collision
     probability p = (1-θ/π)^planes (θ = arccos τ, random-hyperplane
     LSH, Charikar STOC'02), so tables are recomputed from the target
-    overall miss bound (1-p)^tables ≤ miss_target. Returned planes are
+    overall miss bound (1-p)^tables ≤ _LSH_MISS_TARGET, with planes
+    sized for ~_LSH_TARGET_BUCKET vectors per bucket. Returned planes are
     clamped to [4, 24]; callers with a measured workload can always
     pin both knobs explicitly (the oracle-checked registered query
     does, for fixture-scale determinism).
     """
     theta = math.acos(max(-1.0, min(1.0, tau)))
-    planes = max(4, min(24, math.ceil(math.log2(max(n, 1) / target_bucket)) if n > target_bucket else 4))
+    planes = max(
+        4,
+        min(24, math.ceil(math.log2(max(n, 1) / _LSH_TARGET_BUCKET)) if n > _LSH_TARGET_BUCKET else 4),
+    )
     p_table = (1.0 - theta / math.pi) ** planes
     if p_table >= 1.0:  # tau == 1 ⇒ every table collides
         return planes, 1
-    tables = max(1, math.ceil(math.log(miss_target) / math.log(1.0 - p_table)))
+    tables = max(1, math.ceil(math.log(_LSH_MISS_TARGET) / math.log(1.0 - p_table)))
     return planes, tables
 
 
-def semdedup_k(n: int, floor_k: int = 4, cap: int = 65536) -> int:
+def semdedup_k(n: int) -> int:
     """Corpus-size-aware cluster count for SemDeDup (VERDICT r7 #2),
     mirroring what :func:`near_dup_lsh_params` does for the LSH family.
 
@@ -333,14 +343,15 @@ def semdedup_k(n: int, floor_k: int = 4, cap: int = 65536) -> int:
     2023 run ~50k clusters over ~100M-doc corpora, i.e. K scaled with
     corpus, clusters of a few thousand).
 
-    ``cap`` bounds the centroid matrix a worker must hold for the
-    vectorized assignment (65536 x dim doubles = 32 MB at dim 64); a
-    corpus past cap² vectors (~4.3B) should shard centroids
+    ``_SEMDEDUP_CAP`` bounds the centroid matrix a worker must hold
+    for the vectorized assignment (65536 x dim doubles = 32 MB at dim
+    64); a corpus past cap² vectors (~4.3B) should shard centroids
     relationally (the `_assign_nearest` block-replicate pattern)
-    instead of raising the cap. ``floor_k`` pins the fixture scale:
-    the registered oracle lane uses an explicit K=4 and stays
+    instead of raising the cap. ``_SEMDEDUP_FLOOR_K`` pins the fixture
+    scale: the registered oracle lane uses an explicit K=4 and stays
     byte-stable regardless of this derivation."""
-    return min(cap, max(floor_k, math.isqrt(max(n, 0) - 1) + 1 if n > 1 else floor_k))
+    ceil_sqrt = math.isqrt(n - 1) + 1 if n > 1 else 0
+    return min(_SEMDEDUP_CAP, max(_SEMDEDUP_FLOOR_K, ceil_sqrt))
 
 
 def kmeans_assign_euclidean(
@@ -410,7 +421,6 @@ def near_dup_pairs_bucketed(
     dim: int = 64,
     num_planes: int | None = 4,
     num_tables: int | None = 16,
-    seed: int = 7,
 ) -> DataFrame:
     """All pairs with cosine ≥ τ via LSH-bucketed candidates + exact
     rescore — the scale-safe form of the O(n²) all-pairs join (which
@@ -442,7 +452,7 @@ def near_dup_pairs_bucketed(
         num_planes, num_tables = near_dup_lsh_params(df.count(), tau)
     elif num_tables is None:
         raise ValueError("num_tables must be set when num_planes is pinned")
-    buckets = _bucket_assign(df, id_col, vec_col, num_planes, num_tables, seed, dim)
+    buckets = _bucket_assign(df, id_col, vec_col, num_planes, num_tables, _LSH_SEED, dim)
     return (
         buckets.groupBy("_table", "_bucket")
         .applyInPandas(
@@ -628,7 +638,6 @@ def lsh_bucketed_topk(
     dim: int = 64,
     num_planes: int = 8,
     num_tables: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
     """Approximate all-pairs top-k: vectors meet only when some hash
     table buckets them together. Candidate pairs then score exactly.
@@ -641,7 +650,7 @@ def lsh_bucketed_topk(
     # both cogroup sides read the assignment table: materialize it once
     # or the Arrow bucket-id pass runs twice
     buckets = cache_stage(
-        _bucket_assign(df, id_col, vec_col, num_planes, num_tables, seed, dim),
+        _bucket_assign(df, id_col, vec_col, num_planes, num_tables, _LSH_SEED, dim),
         "lsh_bucketed_topk.buckets",
     )
     # one GEMM per (table, bucket) cogroup replaces the pair-explosion

@@ -12,7 +12,7 @@ n_salts-ways instead of landing on one reducer.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -22,18 +22,15 @@ def salted_join(
     big_key: str,
     small_key: str,
     n_salts: int = 8,
-    salt_source: Column | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the big side salted `n_salts` ways.
 
-    `salt_source` should be an expression over the big side's columns
-    that varies per row (default: hash of the key and a per-row
-    monotonic id — pass an explicit unique column when a fully
-    deterministic plan matters; any salt value yields the same join
-    result). Output columns = big ∪ small minus the helper salt
-    columns; semantics identical to the unsalted join for the
-    supported how modes (inner/left — see the guard below).
+    Each big-side row's salt is a hash of its key and a per-row
+    monotonic id; any salt value yields the same join result. Output
+    columns = big ∪ small minus the helper salt columns; semantics
+    identical to the unsalted join for the supported how modes
+    (inner/left — see the guard below).
     """
     # replicating the small side means its UNMATCHED rows would emit
     # once per salt — right/full outer semantics cannot survive salting
@@ -43,9 +40,8 @@ def salted_join(
             "the small side is replicated n_salts times, so outer-"
             "preserving the small side would duplicate unmatched rows"
         )
-    if salt_source is None:
-        salt_source = F.xxhash64(F.col(big_key), F.monotonically_increasing_id())
-    b = big.withColumn("_salt", F.pmod(salt_source, F.lit(n_salts)).cast("int"))
+    salt = F.xxhash64(F.col(big_key), F.monotonically_increasing_id())
+    b = big.withColumn("_salt", F.pmod(salt, F.lit(n_salts)).cast("int"))
     s = small.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
     joined = b.join(s, (b[big_key] == s[small_key]) & (b["_salt"] == s["_salt"]), how)
     return joined.drop("_salt")

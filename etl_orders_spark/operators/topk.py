@@ -22,16 +22,15 @@ def topk_per_group_salted(
     order: list[Column],
     k: int,
     salt_on: str,
-    buckets: int = 32,
 ) -> DataFrame:
     """Top-k per group when the group column has FEW distinct values
     (e.g. language): a plain window would run one task per group no
     matter how large the input. Two phases, identical result: a local
-    top-k within (group, hash(salt_on) % buckets) — `buckets`-way
-    parallel — then the exact top-k over the ≤ k*buckets survivors.
+    top-k within (group, hash(salt_on) % 32) — 32-way parallel — then
+    the exact top-k over the ≤ k*32 survivors.
     The global top-k is always a subset of the per-salt top-k union, so
     no candidate is lost. The salt hash never reaches the output, so
     cross-engine portability of xxhash64 doesn't matter."""
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_on)), F.lit(buckets)))
+    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(salt_on)), F.lit(32)))
     local = topk_per_group(salted, [*group, "_salt"], order, k).drop("_salt")
     return topk_per_group(local, group, order, k)

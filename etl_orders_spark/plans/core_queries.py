@@ -1654,7 +1654,7 @@ def customer_revenue_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = two_pass_rank(c, [F.col("rev_cents").desc(), F.col("o_custkey")], rank_col="rk")
     # counted off the ranked frame, which reads two_pass_rank's
-    # checkpoint: counting `c` would scan and aggregate orders again
+    # stage: counting `c` would scan and aggregate orders again
     n = ranked.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     return (
         ranked.crossJoin(F.broadcast(n))
@@ -1774,7 +1774,7 @@ def pareto_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumsum={"cum_cents": F.col("rev_cents")},
     )
     # summed off the ranked frame, which reads two_pass_rank's
-    # checkpoint: summing `c` would scan and aggregate orders again
+    # stage: summing `c` would scan and aggregate orders again
     total = ranked.agg(F.sum("rev_cents").cast("long").alias("_total"))
     return (
         ranked.filter(F.col("rk") <= 100)

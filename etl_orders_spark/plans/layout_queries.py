@@ -332,9 +332,7 @@ def resilient_scan_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BKT_BUCKETS = 8
 
 
-def ensure_bucketed_pair(
-    spark: SparkSession, sf_dir: str, buckets: int = _BKT_BUCKETS
-) -> tuple[DataFrame, DataFrame]:
+def ensure_bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Stage orders + lineitem as BUCKETED catalog tables (bucketBy the
     join key, sortBy it, same bucket count both sides) and return them
     as table reads. Bucketing is THE co-located-join layout at 100 TB:
@@ -347,7 +345,7 @@ def ensure_bucketed_pair(
 
     Staging: content-addressed under /tmp (same `_staged_path` +
     mtime-freshness contract as the other layout fixtures — ONE copy
-    per (sf_dir, buckets), reused across sessions, never one per
+    per (sf_dir, _BKT_BUCKETS), reused across sessions, never one per
     applicationId). The bucket SPEC lives only in the session catalog,
     so a fresh session re-attaches it over the existing files with a
     CREATE TABLE ... CLUSTERED BY DDL (bucket ids are encoded in the
@@ -361,7 +359,7 @@ def ensure_bucketed_pair(
     ``bucketedTableScan.outputOrdering`` conf (session.py)."""
     out = []
     for name, bucket_col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        path = _staged_path(sf_dir, f"bkt_{name}", params=f"buckets={buckets}|v2")
+        path = _staged_path(sf_dir, f"bkt_{name}", params=f"buckets={_BKT_BUCKETS}|v2")
         tbl = f"bkt_{name}_{os.path.basename(path).rsplit('_', 1)[1]}"
         fresh = _staging_is_fresh(path, sf_dir, name)
         if spark.catalog.tableExists(tbl):
@@ -383,7 +381,7 @@ def ensure_bucketed_pair(
             spark.sql(
                 f"CREATE TABLE {tbl} ({cols}) USING parquet "
                 f"CLUSTERED BY ({bucket_col}) SORTED BY ({bucket_col}) "
-                f"INTO {buckets} BUCKETS LOCATION '{path}'"
+                f"INTO {_BKT_BUCKETS} BUCKETS LOCATION '{path}'"
             )
         else:
             (
@@ -394,10 +392,10 @@ def ensure_bucketed_pair(
                 # per bucket the scan's output ordering feeds the merge
                 # join directly
                 T(spark, sf_dir, name)
-                .repartition(buckets, F.col(bucket_col))
+                .repartition(_BKT_BUCKETS, F.col(bucket_col))
                 .write.mode("overwrite")
                 .option("path", path)
-                .bucketBy(buckets, bucket_col)
+                .bucketBy(_BKT_BUCKETS, bucket_col)
                 .sortBy(bucket_col)
                 .saveAsTable(tbl)
             )

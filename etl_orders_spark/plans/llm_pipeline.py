@@ -42,8 +42,7 @@ _LANG = "en"
 _TAU = 0.5
 
 
-def prep_corpus(docs: DataFrame, min_quality: float = _MIN_QUALITY, lang: str = _LANG,
-                tau: float = _TAU, portable: bool = True) -> DataFrame:
+def prep_corpus(docs: DataFrame, portable: bool = True) -> DataFrame:
     """The prep chain over a documents-shaped DataFrame. Returns the
     surviving corpus: doc_id, n_tokens."""
     from etl_orders_spark.operators.materialize import fan_out_narrow
@@ -68,7 +67,7 @@ def prep_corpus(docs: DataFrame, min_quality: float = _MIN_QUALITY, lang: str = 
     #   floor(quality_score*10000) >= minq*10000 AND lang_id == lang
     # (bit-identical — see its docstring; the composed form paid two
     # tokenize passes per doc, guide §4.1)
-    kept = docs.filter(quality_lang_gate("text", min_quality, lang))
+    kept = docs.filter(quality_lang_gate("text", _MIN_QUALITY, _LANG))
     # exact dedup: keep the lowest doc_id per normalized fingerprint
     canon = (
         kept.select("doc_id", "text", fingerprint("text").alias("_fp"))
@@ -88,7 +87,7 @@ def prep_corpus(docs: DataFrame, min_quality: float = _MIN_QUALITY, lang: str = 
         minhash_signatures(uniq, "doc_id", "text", 16, 3, portable=portable),
         f"llm_prep.sigs.{portable}",
     )
-    pairs = verify_jaccard(minhash_lsh_candidates(sigs, "doc_id", 4, 4), sigs, "doc_id", tau)
+    pairs = verify_jaccard(minhash_lsh_candidates(sigs, "doc_id", 4, 4), sigs, "doc_id", _TAU)
     drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     survivors = uniq.join(drop, "doc_id", "left_anti")
     return survivors.select("doc_id", token_count("text").alias("n_tokens"))

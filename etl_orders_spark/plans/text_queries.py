@@ -993,13 +993,13 @@ incremental_dedup_verdicts_docs.__doc__ = incremental_dedup_verdicts_docs.__doc_
 )
 
 
-def _simhash_inner(num_bits: int = 32) -> str:
-    """CTE body computing (doc_id, simhash) — shared by the fingerprint
-    query and the near-pairs query."""
+def _simhash_inner() -> str:
+    """CTE body computing (doc_id, 32-bit simhash) — shared by the
+    fingerprint query and the near-pairs query."""
     bit_aggs = ", ".join(
-        f"SUM(CASE WHEN (th >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}" for j in range(num_bits)
+        f"SUM(CASE WHEN (th >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}" for j in range(32)
     )
-    packed = " + ".join(f"CASE WHEN b{j} > 0 THEN {2**j} ELSE 0 END" for j in range(num_bits))
+    packed = " + ".join(f"CASE WHEN b{j} > 0 THEN {2**j} ELSE 0 END" for j in range(32))
     return f"""
     tok AS (
       SELECT doc_id, UNNEST({_NORM_TOKENS}) AS tok FROM documents
@@ -1012,8 +1012,8 @@ def _simhash_inner(num_bits: int = 32) -> str:
     )"""
 
 
-def _simhash_oracle(num_bits: int = 32) -> str:
-    return f"WITH {_simhash_inner(num_bits)} SELECT doc_id, simhash FROM sh"
+def _simhash_oracle() -> str:
+    return f"WITH {_simhash_inner()} SELECT doc_id, simhash FROM sh"
 
 
 @register(

@@ -1171,7 +1171,7 @@ def return_latency_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ranked = two_pass_rank(gaps, [F.col("gap_ms"), F.col("user_id")], rank_col="rk")
     # count from the RANKED output (row-preserving): it reads
-    # two_pass_rank's internal checkpoint, where counting `gaps`
+    # two_pass_rank's internal stage, where counting `gaps`
     # directly would replay the whole sessionization lineage a
     # second time (the multi-consumer re-scan the audit hunts)
     nn = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))

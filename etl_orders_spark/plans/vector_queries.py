@@ -1125,7 +1125,7 @@ def semantic_dedup_assign_auto(x: DataFrame, k: int | None = None) -> DataFrame:
 
 
 def semantic_dedup_frame(
-    spark: SparkSession, sf_dir: str, k: int | None = _SD_K, tau: float = _SD_TAU
+    spark: SparkSession, sf_dir: str, k: int | None = _SD_K
 ) -> DataFrame:
     """SemDeDup over the planted corpus through the PRODUCTION
     assignment path (semantic_dedup_assign_auto: vectorized per-batch
@@ -1147,11 +1147,11 @@ def semantic_dedup_frame(
     # vec_id % 25 pushdown) — the audit's remaining 2-scan count is
     # that union, not an uncached replay.
     x = cache_stage(_planted_corpus(spark, sf_dir), "semantic_dedup.corpus")
-    return _semdedup_rollup(semantic_dedup_assign_auto(x, k=k), tau)
+    return _semdedup_rollup(semantic_dedup_assign_auto(x, k=k), _SD_TAU)
 
 
 def semantic_dedup_frame_fixture(
-    spark: SparkSession, sf_dir: str, k: int = _SD_K, tau: float = _SD_TAU
+    spark: SparkSession, sf_dir: str, k: int = _SD_K
 ) -> DataFrame:
     """The SQL-expressed fixture form of the SemDeDup assignment: a
     K-way broadcast crossJoin folding the d² lambda per (row, centroid)
@@ -1210,7 +1210,7 @@ def semantic_dedup_frame_fixture(
     # consumer — the multi-consumer recompute trap cache_stage exists
     # for (operators/materialize.py)
     assigned = cache_stage(assign(cent1), f"semantic_dedup.assigned.k{k}")
-    return _semdedup_rollup(assigned, tau)
+    return _semdedup_rollup(assigned, _SD_TAU)
 
 
 @register(

@@ -63,15 +63,15 @@ def gen_products(spark: SparkSession, seed: int = 23) -> DataFrame:
     )
 
 
-def gen_users(spark: SparkSession, n: int = 300) -> DataFrame:
-    """Key-mapping dimension: Id 1..n ↔ Document 300000.. (reference cell 7)."""
-    return spark.range(1, n + 1, 1, _N_PARTS).select(
+def gen_users(spark: SparkSession) -> DataFrame:
+    """Key-mapping dimension: Id 1..300 ↔ Document 300000.. (reference cell 7)."""
+    return spark.range(1, 301, 1, _N_PARTS).select(
         F.col("id").cast("long").alias("Id"),
         (F.col("id") + 299999).cast("long").alias("Document"),
     )
 
 
-def gen_user_info(spark: SparkSession, n: int = 500, seed: int = 37) -> DataFrame:
+def gen_user_info(spark: SparkSession, seed: int = 37) -> DataFrame:
     """Enrichment dimension keyed by document, superset of users'
     (reference cell 9): dirty gender, ISO birthday, synthetic PII."""
     doc = (F.col("id") + 300000).cast("long")
@@ -80,7 +80,7 @@ def gen_user_info(spark: SparkSession, n: int = 500, seed: int = 37) -> DataFram
     bday = F.date_add(
         F.lit("1964-01-01").cast("date"), (F.rand(seed + 2) * 15687).cast("int")
     ).cast("string")
-    return spark.range(0, n, 1, _N_PARTS).select(
+    return spark.range(0, 500, 1, _N_PARTS).select(
         doc.alias("document"),
         F.concat_ws(" ", first, last).alias("name"),
         F.concat(bday, F.lit("T00:00:00")).alias("birthday"),

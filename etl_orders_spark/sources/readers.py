@@ -177,30 +177,21 @@ def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None)
     return reader.orc(path)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    **options: str,
-) -> DataFrame:
-    """S1 — CSV scan with explicit schema (reference: dags/etl.py:41-43).
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S1 — scan of a headed CSV with explicit schema (reference:
+    dags/etl.py:41-43).
 
     `inferSchema` is deliberately unsupported: at scale it is an extra
     full pass and a nondeterminism source; the reference's
     positional-header overwrite (dags/etl.py:55) is replaced by the
     declared StructType.
     """
-    return spark.read.options(header=str(header).lower(), **options).schema(schema).csv(path)
+    return spark.read.option("header", "true").schema(schema).csv(path)
 
 
 def read_csv_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    header: bool = True,
-    **options: str,
-) -> tuple[DataFrame, DataFrame]:
+    spark: SparkSession, path: str, schema: T.StructType
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """S1 hardened for production ingestion: CSV scan with a
     quarantine lane. Malformed rows (arity mismatch, unparseable
     values) land in ``_corrupt_record`` under PERMISSIVE mode instead
@@ -223,7 +214,7 @@ def read_csv_quarantine(
     rather than holding a 100 TB cache interactively."""
     return _quarantine_split(
         schema,
-        lambda reader: reader.option("header", header).options(**options).csv(path),
+        lambda reader: reader.option("header", True).csv(path),
         spark,
     )
 
@@ -257,7 +248,6 @@ def read_json_envelope(
     spark: SparkSession,
     path: str,
     envelope_schema: T.StructType,
-    array_field: str = "data",
 ) -> DataFrame:
     """S2 — JSON scan + envelope flatten (reference: dags/etl.py:34-40).
 
@@ -268,7 +258,7 @@ def read_json_envelope(
     payload.
     """
     raw = spark.read.schema(envelope_schema).option("multiLine", "true").json(path)
-    return raw.select(F.explode(F.col(array_field)).alias("_rec")).select("_rec.*")
+    return raw.select(F.explode(F.col("data")).alias("_rec")).select("_rec.*")
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -288,10 +278,7 @@ def from_json_strings(df: DataFrame, column: str, schema: T.StructType | str) ->
 
 
 def read_jsonl_quarantine(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    **options: str,
+    spark: SparkSession, path: str, schema: T.StructType
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """S2 hardened for production ingestion: JSONL scan with the same
     quarantine contract as read_csv_quarantine — malformed lines
@@ -305,6 +292,4 @@ def read_jsonl_quarantine(
     lane makes the loss measured and replayable (raw_line preserves
     the original bytes for a dead-letter sink) instead of a crashed
     task or a silent null row."""
-    return _quarantine_split(
-        schema, lambda reader: reader.options(**options).json(path), spark
-    )
+    return _quarantine_split(schema, lambda reader: reader.json(path), spark)

@@ -18,21 +18,18 @@ from etl_orders_spark.session import pin_session_defaults
 from etl_orders_spark.sources.readers import TABLES, load_table
 
 
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> list[str]:
-    """Register every testdata table as `{prefix}{name}` temp views.
+def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register every testdata table as a temp view of its own name.
     Returns the registered view names."""
     pin_session_defaults(spark)
-    names = []
     for t in TABLES:
-        name = f"{prefix}{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return list(TABLES)
 
 
-def sql(spark: SparkSession, sf_dir: str, query: str, prefix: str = "") -> DataFrame:
+def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """One-shot: register views, run the query, return the DataFrame."""
-    register_views(spark, sf_dir, prefix)
+    register_views(spark, sf_dir)
     return spark.sql(query)
 
 
@@ -41,9 +38,9 @@ def plan_summary(df: DataFrame) -> dict:
     that must stay true at 100 TB, as data instead of a wall of text.
     Used by the plan-regression tests and handy interactively
     (`plan_summary(q(spark, sf))["nested_loop_joins"] == 0`). Reads
-    the plan without its "== Initial Plan ==" copies, so a consumer
-    of a filled stage counts each operator once."""
-    p = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+    ``plan_text``, so a consumer of a filled stage counts each
+    operator once."""
+    p = plan_text(df)
     return {
         # lookbehinds: a ReusedExchange is a shuffle AVOIDED, not paid —
         # don't let it inflate the exchange counts it points at
@@ -67,38 +64,49 @@ def plan_summary(df: DataFrame) -> dict:
     }
 
 
-def _node_indent(line: str) -> int:
-    """Depth of a plan-tree line = offset of its first payload char
-    (Spark renders tree structure with a ' :+-*' prefix alphabet)."""
-    i = 0
-    while i < len(line) and line[i] in " :+-*(0123456789)":
-        i += 1
-    return i
+def plan_text(df: DataFrame) -> str:
+    """The executed plan as text, one line per operator, each operator
+    printed once. Spark's own plan string prints AQE's pre-adaptive
+    "Initial Plan" beside the final one, and a cache's whole plan under
+    every scan of it, though neither copy ever runs; nested, those
+    copies are indented out of tree order, so the plan is walked as a
+    tree instead of parsed as text. A line is the operator's own
+    ``verboseString``, the text Spark prints for it."""
+    jdf = df._jdf
+    jvm = df.sparkSession._jvm
+    max_fields = jdf.sparkSession().sessionState().conf().maxToStringFields()
+    seen_caches: set[int] = set()
+    lines: list[str] = []
 
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
 
-def drop_initial_plans(plan: str) -> str:
-    """Plan text without its "== Initial Plan ==" subtrees. AQE prints
-    the pre-adaptive plan beside the final one once a plan has run
-    (recursively, inside every nested AdaptiveSparkPlan a filled cached
-    relation embeds), and none of that text ever executes."""
-    pruned: list[str] = []
-    skip_deeper_than: int | None = None
-    for line in plan.splitlines():
-        d = _node_indent(line)
-        if skip_deeper_than is not None:
-            # the section's children render at indent >= the marker
-            # (its first child sits EQUAL to it), and the marker is
-            # always the last child of its AdaptiveSparkPlan — so the
-            # section ends at the first strictly-shallower line
-            if line.strip() and d < skip_deeper_than:
-                skip_deeper_than = None
-            else:
-                continue
-        if "== Initial Plan ==" in line:
-            skip_deeper_than = d
-            continue
-        pruned.append(line)
-    return "\n".join(pruned)
+    def walk(node, depth: int, prefix: str = "") -> None:
+        kind = node.getClass().getSimpleName()
+        if kind == "WholeStageCodegenExec":  # printed as its child's "*(n) "
+            walk(node.child(), depth, f"*({node.codegenStageId()}) ")
+            return
+        if kind == "InputAdapter":
+            walk(node.child(), depth, prefix)
+            return
+        lines.append("  " * depth + prefix + node.verboseString(max_fields))
+        if kind == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]  # the final plan, not the initial
+        elif kind.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif kind == "InMemoryRelation":
+            # one cache, many scans: each scan's relation is a copy with
+            # its own output ids around the same builder
+            key = jvm.System.identityHashCode(node.cacheBuilder())
+            kids = [] if key in seen_caches else [node.cachedPlan()]
+            seen_caches.add(key)
+        else:
+            kids = seq(node.innerChildren()) + seq(node.children())
+        for kid in kids:
+            walk(kid, depth + 1)
+
+    walk(jdf.queryExecution().executedPlan(), 0)
+    return "\n".join(lines)
 
 
 # In plan text, a window spec lists partition columns BARE before the
@@ -110,17 +118,17 @@ _GLOBAL_WINDOW = re.compile(
 )
 
 
-def count_global_windows(plan: str, exempt_marker: str = "_tpr_pid") -> int:
+def count_global_windows(plan: str) -> int:
     """Count single-partition Window specs in a physical-plan string —
     each is a scale ceiling unless its input is provably bounded.
 
-    Specs ordered by ``exempt_marker`` are excluded: that column is
-    the two-pass rank's partition-id (operators/rank.py), whose
-    offsets window runs over exactly one row per range partition —
-    bounded by cluster layout, not data."""
+    Specs ordered by ``_tpr_pid`` are excluded: that column is the
+    two-pass rank's partition-id (operators/rank.py), whose offsets
+    window runs over exactly one row per range partition — bounded by
+    cluster layout, not data."""
     n = 0
     for m in _GLOBAL_WINDOW.finditer(plan):
         head = plan[m.start() : m.start() + 120]
-        if exempt_marker not in head:
+        if "_tpr_pid" not in head:
             n += 1
     return n

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_orders_spark.streaming.windows import WATERMARK, _with_watermark
+
 
 def windowed_value_histogram(
     events: DataFrame,
@@ -36,16 +38,12 @@ def windowed_value_histogram(
     bin_width: float = 5.0,
     n_bins: int = 8,
     window: str = "1 hour",
-    watermark: str | None = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Per event-time window, the histogram of ``value_col`` over
     ``n_bins`` fixed-width bins (last bin is open-ended). Works on a
     stream (watermarked, append-legal) and on a batch frame
     identically — the equivalence test runs both."""
-    df = events
-    if df.isStreaming and watermark is not None:
-        df = df.withWatermark(ts_col, watermark)
+    df = _with_watermark(events, WATERMARK)
     # clamp BOTH ends: floor of a negative value would otherwise emit
     # bin < 0 — mass the bin spine never sees, counted in the live
     # total but dropped from the reference's, biasing PSI upward
@@ -57,7 +55,7 @@ def windowed_value_histogram(
         ),
     )
     return (
-        df.groupBy(F.window(ts_col, window).alias("win"), bin_col.alias("bin"))
+        df.groupBy(F.window("ts", window).alias("win"), bin_col.alias("bin"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .select(F.col("win.start").alias("win_start"), "bin", "n")
     )

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame
 
 from etl_orders_spark.operators.merge import merge_upsert
+from etl_orders_spark.streaming.windows import DRAIN_TIMEOUT_S
 
 
 def upsert_parquet_sink(
@@ -26,7 +27,6 @@ def upsert_parquet_sink(
     path: str,
     keys: list[str],
     checkpoint: str,
-    timeout_s: float = 120.0,
     seq_col: str | None = None,
 ) -> None:
     """Drain all available input into a keyed parquet table: new keys
@@ -115,7 +115,7 @@ def upsert_parquet_sink(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(DRAIN_TIMEOUT_S)
     if q.isActive:
         q.stop()
-        raise TimeoutError(f"upsert sink did not drain in {timeout_s}s")
+        raise TimeoutError(f"upsert sink did not drain in {DRAIN_TIMEOUT_S}s")

@@ -13,27 +13,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# How late an event may arrive, in event time, and still count: the
+# state bound of every stateful builder below.
+WATERMARK = "2 hours"
+# How long a drain of all available input may take before it is an error.
+DRAIN_TIMEOUT_S = 120.0
 
-def _with_watermark(df: DataFrame, ts_col: str, watermark: str | None) -> DataFrame:
+
+def _with_watermark(df: DataFrame, watermark: str) -> DataFrame:
     """Watermarks only apply to streaming relations; on batch input they
     are a no-op guard so one builder serves both modes."""
-    if watermark is not None and df.isStreaming:
-        return df.withWatermark(ts_col, watermark)
+    if df.isStreaming:
+        return df.withWatermark("ts", watermark)
     return df
 
 
 def tumbling_agg(
     events: DataFrame,
     width: str = "1 hour",
-    watermark: str | None = "2 hours",
-    ts_col: str = "ts",
+    watermark: str = WATERMARK,
 ) -> DataFrame:
     """Tumbling window per event_type: count + rounded value sum.
     Epoch-aligned windows, so batch output equals date_trunc semantics
     for round widths."""
-    df = _with_watermark(events, ts_col, watermark)
+    df = _with_watermark(events, watermark)
     return (
-        df.groupBy(F.window(ts_col, width).alias("w"), "event_type")
+        df.groupBy(F.window("ts", width).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "total_value")
     )
@@ -43,40 +48,32 @@ def sliding_counts(
     events: DataFrame,
     width: str = "30 minutes",
     slide: str = "10 minutes",
-    watermark: str | None = "2 hours",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Sliding window counts (each event lands in width/slide windows)."""
-    df = _with_watermark(events, ts_col, watermark)
+    df = _with_watermark(events, WATERMARK)
     return (
-        df.groupBy(F.window(ts_col, width, slide).alias("w"))
+        df.groupBy(F.window("ts", width, slide).alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("long").alias("win_start_s"), "n")
     )
 
 
-def session_window_stats(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = "2 hours",
-    key: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Native session windows (`F.session_window`): a session extends
-    while successive events arrive within `gap`.
+def session_window_stats(events: DataFrame) -> DataFrame:
+    """Native session windows (`F.session_window`) per user: a session
+    extends while successive events arrive within a 30-minute gap.
 
     Boundary semantics vs the batch lag-based sessionize
-    (operators/sessionize.py): an event exactly `gap` after the
+    (operators/sessionize.py): an event exactly one gap after the
     previous one starts a NEW session here (windows are half-open
     [start, last+gap)), while the batch form keeps it (`> gap` test) —
     equivalence holds for data without exact-boundary gaps.
     """
-    df = _with_watermark(events, ts_col, watermark)
+    df = _with_watermark(events, WATERMARK)
     return (
-        df.groupBy(F.session_window(F.col(ts_col), gap).alias("w"), key)
+        df.groupBy(F.session_window(F.col("ts"), "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -84,12 +81,7 @@ def session_window_stats(
     )
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
+def dedup_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
     """Stateful streaming dedup with bounded state:
     `dropDuplicatesWithinWatermark` expires dedup state past the
     watermark — the only dedup form whose state survives an unbounded
@@ -99,7 +91,7 @@ def dedup_within_watermark(
     the stream (its state for the key has expired — the price of
     bounded state) but collapsed by the batch form."""
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+        return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(keys)
     return events.dropDuplicates(keys)
 
 
@@ -107,14 +99,11 @@ def attribute_conversions(
     clicks: DataFrame,
     conversions: DataFrame,
     horizon: str = "1 hour",
-    key: str = "user_id",
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join: attribute each conversion to every
     click by the same user within `horizon` BEFORE it. The equality
-    conjunct on `key` keeps the join hash-partitioned; the event-time
+    conjunct on `user_id` keeps the join hash-partitioned; the event-time
     band both bounds the physical join AND (with the two watermarks)
     lets the state store expire rows — the pair of constraints that
     makes an unbounded stream⋈stream join run in finite state. Inner
@@ -132,11 +121,11 @@ def attribute_conversions(
     to one data-carrying run late (exactly when depends on how the
     source packs files into micro-batches); tests/test_streaming.py
     pins the choreography."""
-    c = _with_watermark(clicks, ts_col, watermark).select(
-        F.col(key).alias("c_key"), F.col(ts_col).alias("click_ts")
+    c = _with_watermark(clicks, WATERMARK).select(
+        F.col("user_id").alias("c_key"), F.col("ts").alias("click_ts")
     )
-    v = _with_watermark(conversions, ts_col, watermark).select(
-        F.col(key).alias("v_key"), F.col(ts_col).alias("conv_ts")
+    v = _with_watermark(conversions, WATERMARK).select(
+        F.col("user_id").alias("v_key"), F.col("ts").alias("conv_ts")
     )
     cond = (
         (F.col("c_key") == F.col("v_key"))
@@ -144,7 +133,7 @@ def attribute_conversions(
         & (F.col("click_ts") >= F.col("conv_ts") - F.expr(f"INTERVAL {horizon}"))
     )
     return c.join(v, cond, how).select(
-        F.col("c_key").alias(key), "click_ts", "conv_ts"
+        F.col("c_key").alias("user_id"), "click_ts", "conv_ts"
     )
 
 
@@ -152,7 +141,6 @@ def run_available_now_to_memory(
     stream_df: DataFrame,
     query_name: str,
     output_mode: str = "complete",
-    timeout_s: float = 120.0,
 ) -> None:
     """Execute a streaming plan over all currently-available input
     (Trigger.AvailableNow) into an in-memory table named `query_name`,
@@ -166,7 +154,7 @@ def run_available_now_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(DRAIN_TIMEOUT_S)
     if q.isActive:
         q.stop()
-        raise TimeoutError(f"streaming query {query_name!r} did not drain in {timeout_s}s")
+        raise TimeoutError(f"streaming query {query_name!r} did not drain in {DRAIN_TIMEOUT_S}s")

@@ -3,7 +3,7 @@ from __future__ import annotations
 import pytest
 
 from etl_orders_spark.session import get_spark
-from etl_orders_spark.sql import drop_initial_plans
+from etl_orders_spark.sql import plan_text
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -52,10 +52,10 @@ def registry_plans(spark, sf_dir):
     InMemoryRelation stats flip broadcast decisions, and may touch the
     broadcast threshold — both are reset before the build so the plans
     are deterministic, and the threshold is restored after it. The
-    plan string leaves out AQE's "Initial Plan" copies: a stage cache
-    is filled while the lane builds, and a filled cache prints its
-    already-run plan twice (final and initial), so an operator inside
-    it would count double."""
+    plan string is ``sql.plan_text``: a stage cache is filled while the
+    lane builds, and a filled cache prints its already-run plan twice
+    (final and initial) under every scan of it, so an operator inside
+    it would count once per copy."""
     from etl_orders_spark.plans.registry import query_map
     from etl_orders_spark.session import pin_session_defaults
 
@@ -69,7 +69,7 @@ def registry_plans(spark, sf_dir):
     try:
         for name, builder in query_map().items():
             df = builder(spark, sf_dir)
-            plan = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+            plan = plan_text(df)
             built[name] = (df.schema.fields, plan)
         built.conf_after = dict(spark.conf.getAll)
     finally:

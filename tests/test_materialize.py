@@ -142,7 +142,6 @@ def test_fan_out_narrow_leaves_unstatable_files_untouched(spark, tmp_path):
 # does not fit there. Anything else with several consumers goes through
 # cache_stage.
 _LOOP = "loop lineage cut"  # frame rebuilt or read inside a Python loop
-_IDS = "nondeterministic ids"  # values must freeze at one evaluation
 _STREAM = "streaming micro-batch"  # same plan, new rows every batch
 _FILES = "call-time file check"  # must see the files as they are now
 _SMALL = "materialize_small"
@@ -155,9 +154,7 @@ _CHECKPOINT_SITES = {
     ("operators.materialize", "cache_stage"): _PRIMITIVE,
     ("operators.materialize", "materialize_small"): _SMALL,
     ("operators.similarity", "ivf_topk"): _FLOAT,
-    ("operators.rank", "two_pass_rank"): _IDS,
-    ("operators.rank", "two_pass_dense_rank"): _IDS,
-    ("operators.rank", "adjacent_pairs"): _IDS,
+    ("operators.rank", "two_pass_dense_rank"): _LOOP,  # a suffix-doubling round
     ("plans.curation_queries", "logreg_quality_train_docs"): _LOOP,
     ("plans.graph_queries", "_khop_report"): _LOOP,
     ("plans.text_queries", "_symbol_rows"): _LOOP,  # BPE merge rounds' seed
@@ -278,7 +275,7 @@ def test_scan_counts_kneser_ney_reads_documents_twice(spark, sf_dir, scans):
 @pytest.mark.parametrize("lane", ["customer_revenue_deciles", "pareto_customer_revenue"])
 def test_scan_counts_ranked_revenue_lanes_read_orders_once(spark, sf_dir, scans, lane):
     """The grand total (count or revenue sum) comes off the ranked
-    frame, which reads two_pass_rank's checkpoint, not a second orders
+    frame, which reads two_pass_rank's stage, not a second orders
     aggregate."""
     from etl_orders_spark.plans.registry import query_map
 

@@ -148,7 +148,9 @@ _BNLJ_ALLOWED = {
     "bpe_train_merges_docs": 3,  # 1-row top-pair x 1-row checksum per round
     "unigram_lm_train_docs": 6,  # 1-row vocab-stat x cost-checksum x seg-stat assembly per EM round (2 rounds x 3)
     "wordpiece_train_merges_docs": 3,  # same shape: 1-row top x 1-row checksum per round
-    "ccnet_perplexity_buckets_docs": 1,  # 1-row corpus-count broadcast for ntile_from_rank
+    # 1-row corpus-count broadcast for ntile_from_rank, plus bigram's
+    # 1-row vocab-size broadcast inside two_pass_rank's stage
+    "ccnet_perplexity_buckets_docs": 2,
     "chi2_status_priority": 1,
     "contrastive_negatives": 1,  # one broadcast query batch, single scoring pass
     "cramers_v_status_priority": 1,
@@ -171,7 +173,7 @@ _BNLJ_ALLOWED = {
     "semantic_dedup_embeddings": 4,  # K-row centroid broadcasts (fixture-form budget; the r9 production GEMM builder plans fewer)
     "semantic_dedup_embeddings_autok": 1,  # 1-row rollup x 1-row corpus-total invariant join
     "ks_price_urgent_vs_low": 1,
-    "margin_knn_mining_embeddings": 3,  # bounded probe batch broadcast: the scored pass + the two sum joins it feeds
+    "margin_knn_mining_embeddings": 1,  # bounded probe batch broadcast into the staged scored pass
     "mmr_diverse_topk": 1,  # broadcast query batch (candidate generator)
     "ols_daily_revenue_trend": 1,
     "pareto_customer_revenue": 1,

@@ -11,13 +11,17 @@ from pyspark.sql import functions as F
 from etl_orders_spark.operators.rank import adjacent_pairs, ntile_from_rank, two_pass_rank
 
 
-@pytest.fixture(scope="module")
-def scattered(spark):
+def _scattered(spark):
     # 997 rows, values deliberately collide (v has ~100 distinct) so
     # range boundaries land mid-run of equal v; id breaks ties.
     return spark.range(997).select(
         F.col("id"), (F.pmod(F.col("id") * 7919, F.lit(100))).alias("v")
     )
+
+
+@pytest.fixture(scope="module")
+def scattered(spark):
+    return _scattered(spark)
 
 
 def test_rank_matches_global_window(spark, scattered):
@@ -121,3 +125,27 @@ def test_plan_has_no_unvetted_global_window(spark, scattered):
     # recognized (and exempted) by its _tpr_pid ordering
     assert count_global_windows(plan) == 0
     assert "windowspecdefinition" in plan
+
+
+def _order():
+    return [F.col("v"), F.col("id")]
+
+
+_BUILDS = {
+    "rank": lambda df: two_pass_rank(df, _order(), partitions=7),
+    "cumsum": lambda df: two_pass_rank(df, _order(), cumsum={"cs": F.col("v")}, partitions=7),
+    "adjacent": lambda df: adjacent_pairs(df, _order(), ["id", "v"], partitions=7),
+}
+
+
+@pytest.mark.parametrize("name", list(_BUILDS))
+def test_rebuild_reuses_the_ranged_stage(spark, jobs_under, name):
+    """The ranged frame is a keyed stage: building the operator again
+    over a rebuilt, identical input runs no job, and the result is the
+    first build's."""
+    call = _BUILDS[name]
+    spark.catalog.clearCache()
+    first, _ = jobs_under(f"rank.{name}.first", lambda: call(_scattered(spark)))
+    again, jobs = jobs_under(f"rank.{name}.again", lambda: call(_scattered(spark)))
+    assert jobs == 0
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, first.collect()))

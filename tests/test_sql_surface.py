@@ -80,3 +80,25 @@ def test_plan_summary_counts_a_filled_stage_once(spark):
     assert plan_summary(consumer)["shuffle_exchanges"] == 1
     staged.unpersist()
     _STAGE_CACHE.pop(key, None)
+
+
+def test_plan_summary_counts_a_stage_read_three_times_once(spark):
+    """Each scan of a stage prints the stage's plan below it, but that
+    plan ran once, when the stage was filled."""
+    from etl_orders_spark.operators.materialize import _STAGE_CACHE, cache_stage
+    from etl_orders_spark.sql import plan_summary, plan_text
+
+    key = "test.plan_summary.three_scans"
+    _STAGE_CACHE.pop(key, None)
+    staged = cache_stage(spark.range(100).selectExpr("id % 7 AS k").groupBy("k").count(), key)
+    consumer = (
+        staged.where("k < 3")
+        .unionByName(staged.where("k > 4"))
+        .unionByName(staged.where("k = 3"))
+    )
+    text = plan_text(consumer)
+    assert text.count("InMemoryTableScan") == 3
+    assert text.count("InMemoryRelation") == 3
+    assert plan_summary(consumer)["shuffle_exchanges"] == 1
+    staged.unpersist()
+    _STAGE_CACHE.pop(key, None)

@@ -14,9 +14,7 @@ queries.
 
 from __future__ import annotations
 
-import hashlib
 import json
-import math
 import os
 import sys
 import time
@@ -27,34 +25,11 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench.checks import value_hash  # noqa: E402  (the one value-hash law)
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def _canon(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # repr round-trips doubles; canonical across engines for equal bits
-        return repr(v)
-    if isinstance(v, bool):
-        return str(v)
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(_canon(x) for x in v) + "]"
-    return str(v)
-
-
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("\x1f".join(_canon(r[i]) for i in order) for r in rows)
-    h = hashlib.md5()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 def main() -> int:

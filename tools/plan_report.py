@@ -22,7 +22,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from etl_orders_spark.plans.registry import QUERIES, query_map
     from etl_orders_spark.session import get_spark
-    from etl_orders_spark.sql import drop_initial_plans, plan_summary
+    from etl_orders_spark.sql import plan_summary, plan_text
 
     spark = get_spark("plan_report", cpus=8)
     spark.conf.set("spark.sql.maxMetadataStringLength", "400")
@@ -45,7 +45,7 @@ def main() -> int:
     ]
     for name in sorted(bench):
         df = qmap[name](spark, sf_dir)
-        plan = drop_initial_plans(df._jdf.queryExecution().executedPlan().toString())
+        plan = plan_text(df)
         s = plan_summary(df)
         joins = {k: s[k] for k in _JOINS if s[k]}
         pushed = [

@@ -96,13 +96,22 @@ def janino_compiles(spark) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int, int]:
+def jit_ms(spark) -> int:
+    """Milliseconds HotSpot's JIT compilers (C1 and C2, summed over
+    their threads) have spent so far in the driver JVM, which in local
+    mode also runs the executors."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return mx.getTotalCompilationTime()
+
+
+def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int, int, int]:
     """One timed build + noop-sink run under job group ``group``:
     (seconds, jobs the builder ran, jobs the whole rep ran, classes
-    compiled)."""
+    compiled, JIT milliseconds)."""
     spark.sparkContext.setJobGroup(group, group)
     before = _group_jobs(spark, group)
     compiled = janino_compiles(spark)
+    jit = jit_ms(spark)
     t0 = time.time()
     df = builder(spark, sf_dir)
     build_s = time.time() - t0
@@ -112,7 +121,7 @@ def _rep(spark, builder, sf_dir: str, group: str) -> tuple[float, int, int, int]
     df.write.format("noop").mode("overwrite").save()
     rep_s = build_s + time.time() - t0
     rep_jobs = _group_jobs(spark, group) - before
-    return rep_s, build_jobs, rep_jobs, janino_compiles(spark) - compiled
+    return rep_s, build_jobs, rep_jobs, janino_compiles(spark) - compiled, jit_ms(spark) - jit
 
 
 class LaneTiming(NamedTuple):
@@ -124,26 +133,30 @@ class LaneTiming(NamedTuple):
     warm_compiles: int  # last warm rep's
     cold_rep_jobs: int  # every job of the rep: the builder's plus the sink's
     warm_rep_jobs: int  # last warm rep's
+    cold_jit_ms: int  # HotSpot JIT compile time
+    warm_jit_ms: int  # last warm rep's
 
 
 def time_lane(spark, lane: str, builder, sf_dir: str, reps: int) -> LaneTiming:
     """One lane's timing: one cold rep after clearCache — keyed stage
     caches are shared across lanes, so without the clear an earlier
     lane pre-fills this one's inputs and cold silently measures cache
-    reads — then the best of ``reps`` warm reps. Job counts and
-    compiles of the warm side are the last warm rep's, so a stage or a
-    generated class that is not kept shows there."""
+    reads — then the best of ``reps`` warm reps. Job counts, compiles
+    and JIT time of the warm side are the last warm rep's, so a stage
+    or a generated class that is not kept shows there."""
     spark.catalog.clearCache()
-    cold, cold_jobs, cold_rep_jobs, cold_compiles = _rep(spark, builder, sf_dir, f"{lane}:cold")
+    cold, cold_jobs, cold_rep_jobs, cold_compiles, cold_jit = _rep(
+        spark, builder, sf_dir, f"{lane}:cold"
+    )
     best = None
     for i in range(reps):
-        dt, warm_jobs, warm_rep_jobs, warm_compiles = _rep(
+        dt, warm_jobs, warm_rep_jobs, warm_compiles, warm_jit = _rep(
             spark, builder, sf_dir, f"{lane}:warm{i}"
         )
         best = dt if best is None else min(best, dt)
     return LaneTiming(
         cold, best, cold_jobs, warm_jobs, cold_compiles, warm_compiles,
-        cold_rep_jobs, warm_rep_jobs,
+        cold_rep_jobs, warm_rep_jobs, cold_jit, warm_jit,
     )
 
 

@@ -111,13 +111,9 @@ class _Prefix:
     get increasing codes, DEFLATE-style. A single-symbol code consumes
     ZERO bits per decode (the spec's degenerate tree)."""
 
-    def __init__(self, lengths: list[int] | None = None):
+    def __init__(self, lengths: list[int]):
         self.single: int | None = None
         self.lookup: dict[tuple[int, int], int] = {}
-        if lengths is not None:
-            self._build(lengths)
-
-    def _build(self, lengths: list[int]) -> None:
         used = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
         if not used:
             raise ValueError("vp8l: empty prefix code")
@@ -144,8 +140,10 @@ class _Prefix:
     def explicit(cls, symbols: list[int]) -> "_Prefix":
         """The simple-code form: 1 symbol (zero-bit) or 2 symbols where
         the FIRST-read symbol takes bit 0 — explicitly NOT canonical
-        order (the spec assigns by transmission order here)."""
-        p = cls()
+        order (the spec assigns by transmission order here), so it
+        skips the canonical build of ``__init__``."""
+        p = cls.__new__(cls)
+        p.single, p.lookup = None, {}
         if len(symbols) == 1:
             p.single = symbols[0]
         else:

@@ -39,13 +39,37 @@ them on a session someone else started):
   so it imports from any cwd: each Arrow-UDF task paid ~0.25 Python
   CPU-s re-reading pyspark.zip (see that module); 2.2 -> 0.4 CPU-s
   per corpus warm pass.
-- ``spark.driver.defaultJavaOptions`` = ``C2_THRESHOLDS``, 4x the JDK
-  17 defaults: C2 compiled code that runs a few times in a short-lived
-  JVM; compiler-thread CPU ~9 -> ~5 s per pass. ``defaultJavaOptions``
-  so a caller's ``--driver-java-options`` adds to these flags.
+- ``spark.driver.defaultJavaOptions`` = ``JIT_OPTIONS``, two parts.
+  ``defaultJavaOptions`` so a caller's ``--driver-java-options`` adds
+  to these flags.
 
-Together these three took perfbench's corpus warm pass from 16.3 to
-9.4 CPU-s (median of 10 alternating pairs, 4 cores); etl_load held.
+  - Tier4 thresholds at 4x the JDK 17 defaults: C2 compiled code that
+    runs a few times in a short-lived JVM; compiler-thread CPU ~9 ->
+    ~5 s per pass.
+  - ``-XX:CompilerDirectivesFile`` = ``jit_directives.json`` (next to
+    this module; its path must hold no whitespace, because Spark splits
+    the option string on spaces). It keeps C2 off code that parses SQL
+    and turns plans into classes and tasks, not code rows flow through:
+    Janino (``org/codehaus``), the two ASM copies (xbean's for the
+    closure cleaner, the JDK's for lambda spinning) and ANTLR. Those
+    methods stop at tier 1 (C1, no profiling). Janino-generated classes,
+    ``UnsafeRow``/``UTF8String``, the CSV and Parquet readers and
+    writers, the shuffle, serialization and py4j keep C2. In a compile
+    log of one corpus run the cold pass's C2 time fell from 25.5 to
+    17.0 s (Janino 8.3, ASM 1.9, ANTLR 0.7 -> 0) and setup's from 8.0
+    to 4.6 s.
+
+Together the first three took perfbench's corpus warm pass from 16.3
+to 9.4 CPU-s (median of 10 alternating pairs, 4 cores); etl_load held.
+The directives then took corpus ``cold_pass_cpu_s`` from 43.5 to 36.3
+(median of 12 alternating pairs, each won by the change) and its warm
+pass from 5.0 to 4.6; etl_load's cold pass went 11.3 -> 9.8 and its
+warm pass 3.2 -> 2.9 (10 pairs). Adding ICU and ``java/io/Object*``,
+which also run per task or per row, cut corpus cold as much but left
+etl_load's warm pass at 3.2 -> 3.4 (8 pairs), so they stay on C2. C1
+only (``-XX:TieredStopAtLevel=1``) cuts corpus cold further but makes
+etl_load's warm pass ~1.6x dearer, and the directives without the 4x
+thresholds were worse on both workloads, so both parts stay.
 
 ``BROADCAST_THRESHOLD`` (64 MB) is runtime-settable but stays at
 launch: the pin runs on every registry build and would undo callers
@@ -70,10 +94,15 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # the directory that holds the package, for the Python worker daemon
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# 4x JDK 17's Tier4 invocation, minimum-invocation and compile thresholds
-C2_THRESHOLDS = (
+# HotSpot directives that keep C2 off Spark's code generators (module docstring)
+JIT_DIRECTIVES = os.path.join(PACKAGE_ROOT, "etl_orders_spark", "jit_directives.json")
+
+# 4x JDK 17's Tier4 invocation, minimum-invocation and compile
+# thresholds, plus the directives file
+JIT_OPTIONS = (
     "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400"
     " -XX:Tier4CompileThreshold=60000"
+    f" -XX:+UnlockDiagnosticVMOptions -XX:CompilerDirectivesFile={JIT_DIRECTIVES}"
 )
 
 # the engine's broadcast-join threshold, set at launch only (module docstring)
@@ -118,7 +147,7 @@ def get_spark(app_name: str = "etl_orders_spark", cpus: str | int | None = None)
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.python.daemon.module", "etl_orders_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
-        .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        .config("spark.driver.defaultJavaOptions", JIT_OPTIONS)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

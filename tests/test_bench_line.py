@@ -6,7 +6,7 @@ from __future__ import annotations
 import json
 import os
 
-from bench import LINE_BUDGET, final_line, regressions, time_lane
+from bench import LINE_BUDGET, final_line, jit_ms, regressions, time_lane
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -69,3 +69,6 @@ def test_time_lane_tags_every_rep_and_counts_builder_jobs(spark):
     assert t.cold_s > 0 and t.warm_s > 0
     # the warm rep reuses every class the cold rep generated
     assert t.warm_compiles == 0
+    # JIT time is a per-rep delta of a counter that only grows
+    assert t.cold_jit_ms >= 0 and t.warm_jit_ms >= 0
+    assert jit_ms(spark) > 0

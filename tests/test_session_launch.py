@@ -1,13 +1,15 @@
 """Sessions that ``get_spark`` launches keep their compiled work: the
-zip guard of the Python worker daemon, the codegen cache size, and the
-launch-time settings of a session started outside the repo, whose
-runtime confs are pinned from the start and keep its own core count."""
+zip guard of the Python worker daemon, the codegen cache size, the
+HotSpot compiler directives, and the launch-time settings of a session
+started outside the repo, whose runtime confs are pinned from the start
+and keep its own core count."""
 
 from __future__ import annotations
 
 import importlib
 import json
 import os
+import re
 import subprocess
 import sys
 import zipfile
@@ -15,7 +17,7 @@ import zipimport
 
 from bench import janino_compiles
 from etl_orders_spark import worker_daemon
-from etl_orders_spark.session import C2_THRESHOLDS
+from etl_orders_spark.session import JIT_DIRECTIVES, JIT_OPTIONS
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -72,6 +74,55 @@ def test_codegen_cache_outlives_a_lane_sized_burst(spark):
     assert janino_compiles(spark) - before == 0
 
 
+def _printed_directives(flags: list[str]) -> list[dict]:
+    """``java FLAGS -XX:+CompilerDirectivesPrint -version``, parsed into
+    one dict per directive: its patterns, whether it is the default one,
+    and the text of its c1 and c2 blocks."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else "java"
+    out = subprocess.run(
+        [java, *flags, "-XX:+UnlockDiagnosticVMOptions", "-XX:+CompilerDirectivesPrint", "-version"],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
+    directives = []
+    for block in out.stdout.split("Directive:")[1:]:
+        c1, c2 = block.split("c1 directives:")[1].split("c2 directives:")
+        directives.append({
+            "default": block.startswith(" (default)"),
+            "match": re.search(r"matching: (.*)", block).group(1).split(", "),
+            "c1": c1,
+            "c2": c2,
+        })
+    return directives
+
+
+# Janino, the two ASM copies and ANTLR
+C2_EXCLUDED = [
+    "org/codehaus/*.*",
+    "org/apache/xbean/asm9/*.*",
+    "jdk/internal/org/objectweb/*.*",
+    "org/antlr/*.*",
+]
+
+
+def test_jit_directives_keep_c2_off_the_code_generators_only():
+    # Spark splits defaultJavaOptions on spaces
+    assert not re.search(r"\s", JIT_DIRECTIVES)
+    # HotSpot takes some mistyped keys without a word, and a mistyped
+    # pattern matches nothing: check what the JVM read, not the file
+    directives = _printed_directives(JIT_OPTIONS.split())
+    (excluded,) = [d for d in directives if not d["default"]]
+    assert sorted(excluded["match"]) == sorted(C2_EXCLUDED)
+    assert "Enable:true Exclude:true" in excluded["c2"]
+    # C1 falls through to the default directive and still compiles them
+    assert "Enable:false" in excluded["c1"]
+    (default,) = [d for d in directives if d["default"]]
+    (stock,) = _printed_directives([])
+    assert default == stock and default["match"] == ["*.*"]
+    assert "Exclude:false" in default["c2"]
+
+
 LAUNCH = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
@@ -112,6 +163,6 @@ def test_a_session_launched_outside_the_repo_runs_python_workers(tmp_path):
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert got["rows"] == [[i, 2 * i] for i in range(6)]
     assert got["daemon"] == "etl_orders_spark.worker_daemon"
-    assert set(C2_THRESHOLDS.split()) <= set(got["jvm_args"])
+    assert set(JIT_OPTIONS.split()) <= set(got["jvm_args"])
     assert got["ordering"] == "true"
     assert got["shuffle_partitions"] == "2"

@@ -15,7 +15,9 @@ after the timed runs), jobs=COLD/WARM, every Spark job of the cold rep
 and of the last warm rep (the builder's plus the sink's),
 build_jobs=COLD/WARM, the part of those run inside the builder, and
 compiles=COLD/WARM, the classes Janino compiled in the same two reps
-(a warm count above 0 means the codegen cache lost a class). Every rep
+(a warm count above 0 means the codegen cache lost a class), and
+jit_ms=COLD/WARM, the milliseconds HotSpot's JIT compilers spent in
+them, so a compile-layer change shows which lanes it moved. Every rep
 runs under the job group ``LANE:PHASE`` (cold, warm0.., rows), so an
 event log of the run splits by lane and phase. The timing is bench.py's
 ``time_lane``, so a probe measures exactly what the bench records.
@@ -72,7 +74,8 @@ def main() -> int:
                 f"{os.path.basename(sf_dir)} {lane}: cold={t.cold_s:.3f}s warm={t.warm_s:.3f}s"
                 f" rows={rows} jobs={t.cold_rep_jobs}/{t.warm_rep_jobs}"
                 f" build_jobs={t.cold_jobs}/{t.warm_jobs}"
-                f" compiles={t.cold_compiles}/{t.warm_compiles}",
+                f" compiles={t.cold_compiles}/{t.warm_compiles}"
+                f" jit_ms={t.cold_jit_ms}/{t.warm_jit_ms}",
                 flush=True,
             )
     return 0

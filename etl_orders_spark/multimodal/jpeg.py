@@ -896,8 +896,52 @@ def _plane_blocks(plane: np.ndarray, quant: np.ndarray) -> np.ndarray:
     blocks = shifted.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
     coeff = np.einsum("ij,byjk,kl->byil", _A, blocks, _A.T)
     coeff = coeff.reshape(ph // 8, pw // 8, 64)
+    if (quant == 1).all():
+        flat = _within_one_count(
+            np.round(coeff).reshape(-1, 64), blocks.reshape(-1, 64)
+        )
+        return flat.reshape(coeff.shape)[:, :, ZIGZAG].astype(np.int64)
     zz = coeff[:, :, ZIGZAG]
     return np.round(zz / quant[None, None, :]).astype(np.int64)
+
+
+# _BASIS[k] is the spatial block (row-major) that a unit coefficient at
+# natural-order index k decodes to: IDCT = A.T @ S @ A.
+_BASIS = np.einsum("ui,vj->uvij", _A, _A).reshape(64, 64)
+# a sample decodes within one count while its IDCT error stays under
+# 1.5; the margin keeps float-order noise between encoder and decoder
+# from deciding a round
+_ONE_COUNT = 1.5 - 1e-6
+
+
+def _within_one_count(coeff: np.ndarray, shifted: np.ndarray) -> np.ndarray:
+    """Identity-quant coefficients (n, 64, natural order) stepped by +-1
+    until every sample of each block decodes within one count of
+    ``shifted`` (n, 64, level-shifted samples).
+
+    Rounding each coefficient loses at most 0.5, but the losses can line
+    up on one sample (an edge-replicated corner block puts a lone pixel
+    where every basis image peaks) and push it two counts off. Blocks
+    where that happens take greedy +-1 steps, each the one that most
+    lowers the squared error above one count, until no sample is left
+    at 1.5 or more or no step helps."""
+    err = coeff @ _BASIS - shifted
+    bad = np.flatnonzero((np.abs(err) >= _ONE_COUNT).any(axis=1))
+    steps = np.concatenate([np.eye(64), -np.eye(64)])
+    moves = np.concatenate([_BASIS, -_BASIS])
+    for _ in range(64):
+        if bad.size == 0:
+            break
+        cand = err[bad, None, :] + moves[None, :, :]
+        cost = (np.maximum(np.abs(cand) - 1.0, 0.0) ** 2).sum(axis=2)
+        now = (np.maximum(np.abs(err[bad]) - 1.0, 0.0) ** 2).sum(axis=1)
+        best = cost.argmin(axis=1)
+        helps = cost[np.arange(bad.size), best] < now
+        bad, best = bad[helps], best[helps]
+        coeff[bad] += steps[best]
+        err[bad] = cand[helps, best]
+        bad = bad[(np.abs(err[bad]) >= _ONE_COUNT).any(axis=1)]
+    return coeff
 
 
 def _seg(marker: int, body: bytes) -> bytes:
@@ -919,7 +963,8 @@ def encode_jpeg(
 
     ``quant=None`` writes ALL-ONES quantization tables — the exactness
     default the fixture oracles rely on (block-constant inputs then
-    round-trip bit-exactly; see module docstring). ``color_input=
+    round-trip bit-exactly; see module docstring; any other input
+    decodes within one count per plane sample). ``color_input=
     "ycbcr"`` treats the input's channels as Y/Cb/Cr directly, which
     is how fixtures pin the decoder's color-convert law without the
     lossy RGB->YCbCr forward step. ``subsampling``: 444 | 422 | 420

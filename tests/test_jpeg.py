@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from etl_orders_spark.multimodal.codecs import decode_image, sniff_format
@@ -181,9 +181,13 @@ def test_flat_blocks_roundtrip_exact(bw, bh, seed, sub, ri):
     h=st.integers(8, 40),
     seed=st.integers(0, 2**31 - 1),
 )
+# rounding alone put the lone corner pixel of the edge-padded bottom-right
+# block two counts off here, before the encoder stepped such blocks back
+@example(w=10, h=10, seed=26)
 def test_random_gray_identity_quant_near_exact(w, h, seed):
     """Arbitrary content, identity quant: FDCT rounding is the only
-    loss, so every sample is within 1 count."""
+    loss, and the encoder steps coefficients until every sample is
+    within 1 count."""
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, (h, w)).astype(np.uint8)
     out = decode_jpeg(encode_jpeg(img))

@@ -236,7 +236,7 @@ def fingerprint(col: Column | str) -> Column:
     return F.md5(normalize_text(col))
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
+def shingles(col: Column | str, k: int) -> Column:
     """Word k-gram shingle array (distinct), the unit for MinHash /
     Jaccard near-dup. JVM-side, no UDF.
 

@@ -52,8 +52,8 @@ def _build():
 ChunkDocsUDTF = _build()
 
 
-def register_chunk_udtf(spark, name: str = "chunk_docs") -> None:
-    """Install the UDTF for SQL lateral use:
+def register_chunk_udtf(spark) -> None:
+    """Install the UDTF as ``chunk_docs`` for SQL lateral use:
     SELECT c.* FROM docs d, LATERAL chunk_docs(d.doc_id, d.text, 32, 24) c
     """
-    spark.udtf.register(name, ChunkDocsUDTF)
+    spark.udtf.register("chunk_docs", ChunkDocsUDTF)

@@ -31,7 +31,18 @@ from etl_orders_spark.multimodal.codecs import decode_y4m as _decode_y4m
 from etl_orders_spark.multimodal.codecs import dhash64 as _dhash64
 from etl_orders_spark.multimodal.codecs import resize_nearest as _resize_nearest
 from etl_orders_spark.multimodal.codecs import sniff_format as _sniff_format
+from etl_orders_spark.multimodal.schemas import TONE_N_FFT
 from etl_orders_spark.operators.grouped_map import map_rows
+
+# video frame sampling law, shared with the SQL oracles: keep frame i
+# iff i % VIDEO_EVERY_N == 0 AND i < VIDEO_EVERY_N * VIDEO_MAX_FRAMES —
+# the same set as range(0, nf, VIDEO_EVERY_N)[:VIDEO_MAX_FRAMES]. The
+# oracles derive their predicate from these constants, so changing
+# either one, or the fixture frame-count law, cannot drift the pair.
+VIDEO_EVERY_N = 2
+VIDEO_MAX_FRAMES = 8
+# sample_frames: one fake frame per second of duration
+_SAMPLE_EVERY_MS = 1000
 
 
 MEDIA_STATS_SCHEMA = (
@@ -158,13 +169,13 @@ FRAME_STATS_SCHEMA = (
 )
 
 
-def video_frame_stats(media: DataFrame, every_n: int = 2, max_frames: int = 8) -> DataFrame:
+def video_frame_stats(media: DataFrame) -> DataFrame:
     """REAL video frame sampling: decode the uncompressed stream
-    (codecs.decode_y4m), keep every ``every_n``-th frame up to
-    ``max_frames``, and emit exact integer luma features per sampled
-    frame. This is the fan-out stage a 100 TB video pipeline runs
-    before any model sees pixels — one input row becomes
-    ceil(n_frames / every_n) output rows, streamed through Arrow
+    (codecs.decode_y4m), keep every ``VIDEO_EVERY_N``-th frame up to
+    ``VIDEO_MAX_FRAMES``, and emit exact integer luma features per
+    sampled frame. This is the fan-out stage a 100 TB video pipeline
+    runs before any model sees pixels — one input row becomes
+    ceil(n_frames / VIDEO_EVERY_N) output rows, streamed through Arrow
     batches, never the driver. Compressed containers raise the honest
     codec gate from decode_y4m."""
 
@@ -172,7 +183,7 @@ def video_frame_stats(media: DataFrame, every_n: int = 2, max_frames: int = 8) -
         frames, _ = _decode_y4m(bytes(content))
         nf, h, w = frames.shape
         rows = []
-        for idx in list(range(0, nf, every_n))[:max_frames]:
+        for idx in list(range(0, nf, VIDEO_EVERY_N))[:VIDEO_MAX_FRAMES]:
             s = int(frames[idx].astype("int64").sum())
             rows.append((mid, idx, nf, w, h, s, s * 1000 // (w * h)))
         return rows
@@ -239,9 +250,7 @@ FRAME_DHASH_STATS_SCHEMA = (
 )
 
 
-def video_frame_dhash_stats(
-    media: DataFrame, every_n: int = 2, max_frames: int = 8
-) -> DataFrame:
+def video_frame_dhash_stats(media: DataFrame) -> DataFrame:
     """ONE decode pass emitting BOTH the per-sampled-frame perceptual
     dHash and the exact integer full-resolution luma stats (sum, sum
     of squares) — the video twin of dhash_pixel_stats: decode
@@ -255,7 +264,7 @@ def video_frame_dhash_stats(
     def row(mid, content):
         frames, _ = _decode_y4m(bytes(content))
         rows = []
-        for idx in list(range(0, frames.shape[0], every_n))[:max_frames]:
+        for idx in list(range(0, frames.shape[0], VIDEO_EVERY_N))[:VIDEO_MAX_FRAMES]:
             luma = frames[idx].astype("int64")
             hi, lo = _dhash64(luma)
             rows.append(
@@ -267,12 +276,10 @@ def video_frame_dhash_stats(
     return map_rows(vids, row, FRAME_DHASH_STATS_SCHEMA)
 
 
-def video_frame_dhash(
-    media: DataFrame, every_n: int = 2, max_frames: int = 8
-) -> DataFrame:
+def video_frame_dhash(media: DataFrame) -> DataFrame:
     """Per-frame perceptual dHash for video rows: decode the
-    uncompressed stream (codecs.decode_y4m), keep every ``every_n``-th
-    frame up to ``max_frames``, and dHash each sampled LUMA frame with
+    uncompressed stream (codecs.decode_y4m), keep every
+    ``VIDEO_EVERY_N``-th frame up to ``VIDEO_MAX_FRAMES``, and dHash each sampled LUMA frame with
     exactly the image convention (floor-map resize to 9x8, right-
     neighbor bits, two 32-bit halves in longs; dhash_images). Luma is
     already gray, so the gray step is identity. This is the fan-out
@@ -284,7 +291,7 @@ def video_frame_dhash(
         frames, _ = _decode_y4m(bytes(content))
         return [
             (mid, idx, *_dhash64(frames[idx].astype("int64")))
-            for idx in list(range(0, frames.shape[0], every_n))[:max_frames]
+            for idx in list(range(0, frames.shape[0], VIDEO_EVERY_N))[:VIDEO_MAX_FRAMES]
         ]
 
     vids = media.filter(F.col("kind") == "video").select("media_id", "content")
@@ -294,19 +301,19 @@ def video_frame_dhash(
 FRAME_SCHEMA = "media_id long, frame_idx int, frame_ms long, frame_bytes binary"
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, max_frames: int = 32) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video rows: one output row per sampled
-    timestamp. Without a codec the frame payload is a deterministic
+    timestamp, one per ``_SAMPLE_EVERY_MS`` up to ``VIDEO_MAX_FRAMES``. Without a codec the frame payload is a deterministic
     byte slice keyed by the frame index (clearly fake pixels, real
     fan-out shape: this is the explode that multiplies row counts at
     scale, so it must stream through Arrow batches, never the driver).
     """
 
     def row(mid, content, dur):
-        n = min(int(dur) // every_ms + 1, max_frames) if pd.notna(dur) else 0
+        n = min(int(dur) // _SAMPLE_EVERY_MS + 1, VIDEO_MAX_FRAMES) if pd.notna(dur) else 0
         step = max(1, len(content) // max(n, 1))
         return [
-            (mid, i, i * every_ms, bytes(content[i * step : i * step + 16])) for i in range(n)
+            (mid, i, i * _SAMPLE_EVERY_MS, bytes(content[i * step : i * step + 16])) for i in range(n)
         ]
 
     vids = media.filter(F.col("kind") == "video").select(
@@ -320,7 +327,7 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_images(media: DataFrame, max_side: int = 64, strict: bool = False) -> DataFrame:
+def resize_images(media: DataFrame, max_side: int, strict: bool = False) -> DataFrame:
     """Thumbnail resize for image rows: scale so the longer side equals
     ``max_side`` (never upscale), exact integer aspect-ratio
     arithmetic throughout.
@@ -378,9 +385,9 @@ def resize_images(media: DataFrame, max_side: int = 64, strict: bool = False) ->
 SPECTRAL_SCHEMA = "media_id long, n_fft long, n_frames long, dominant_bin long"
 
 
-def audio_spectral_features(media: DataFrame, n_fft: int = 256) -> DataFrame:
+def audio_spectral_features(media: DataFrame) -> DataFrame:
     """Frequency-domain feature extraction from REAL decoded PCM: frame
-    channel 0 into non-overlapping ``n_fft`` windows, rFFT each, sum
+    channel 0 into non-overlapping ``TONE_N_FFT`` windows, rFFT each, sum
     magnitudes across frames, and emit the dominant frequency bin —
     the minimal spectral fingerprint (tuning detection, tone/DTMF
     classification, bandwidth audits) a media pipeline extracts before
@@ -395,12 +402,12 @@ def audio_spectral_features(media: DataFrame, n_fft: int = 256) -> DataFrame:
     def row(mid, content):
         samples, _ = _decode_wav(bytes(content))  # (n, channels)
         ch0 = samples[:, 0].astype(np.float64)
-        n_frames = ch0.size // n_fft
+        n_frames = ch0.size // TONE_N_FFT
         if n_frames == 0:
-            return [(mid, n_fft, 0, -1)]
-        frames = ch0[: n_frames * n_fft].reshape(n_frames, n_fft)
+            return [(mid, TONE_N_FFT, 0, -1)]
+        frames = ch0[: n_frames * TONE_N_FFT].reshape(n_frames, TONE_N_FFT)
         mag = np.abs(np.fft.rfft(frames, axis=1)).sum(axis=0)
-        return [(mid, n_fft, n_frames, int(mag.argmax()))]
+        return [(mid, TONE_N_FFT, n_frames, int(mag.argmax()))]
 
     clips = media.filter(F.col("kind") == "audio").select("media_id", "content")
     return map_rows(clips, row, SPECTRAL_SCHEMA)

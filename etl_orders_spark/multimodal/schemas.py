@@ -100,7 +100,7 @@ _FORMATS = {"image": "png", "audio": "wav", "video": "mp4"}
 _PAYLOAD_BYTES = 256
 
 
-def gen_media(spark: SparkSession, n: int = 100) -> DataFrame:
+def gen_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic synthetic media rows: content = _PAYLOAD_BYTES of
     repeated sha2 of the id (opaque but reproducible bytes), metadata
     consistent with the kind. Pure Spark plan — scales like any range
@@ -161,7 +161,7 @@ def _law_rgb(v: np.ndarray) -> np.ndarray:
     return np.stack([v, (v + 85) % 256, (v + 170) % 256], axis=-1).astype(np.uint8)
 
 
-def gen_pixel_media(spark: SparkSession, n: int = 120) -> DataFrame:
+def gen_pixel_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic DECODABLE media rows: real encoded images rotating
     through the three pure-Python containers (PPM / PGM / BMP,
     multimodal/codecs.py), with every pixel a closed-form function of
@@ -197,7 +197,7 @@ def gen_pixel_media(spark: SparkSession, n: int = 120) -> DataFrame:
 WAV_RATE = 16000  # fixed sample rate shared with the SQL oracle
 
 
-def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
+def gen_wav_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic REAL 16-bit PCM WAV rows: every sample is a
     closed-form function of (media_id, t) —
 
@@ -223,7 +223,10 @@ def gen_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
 Y4M_W, Y4M_H, Y4M_FPS = 16, 12, 10  # fixed geometry shared with the SQL oracle
 
 
-def gen_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
+N_Y4M = 60  # video fixture rows
+
+
+def gen_y4m_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL uncompressed video rows (YUV4MPEG2, mono
     luma): every luma sample is a closed-form function of
     (media_id, frame, x, y) —
@@ -246,14 +249,14 @@ def gen_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
         content = encode_y4m(v.astype(np.uint8), (Y4M_FPS, 1))
         return content, "y4m", Y4M_W, Y4M_H, None, nf * 1000 // Y4M_FPS
 
-    return _media_rows(spark, 0, n, "video", row_for)
+    return _media_rows(spark, 0, N_Y4M, "video", row_for)
 
 
 NOISE_W, NOISE_H = 32, 24  # fixed dims shared with the SQL oracle
 NOISE_CLONE_EVERY = 5  # id % 5 == 4 clones id-1 with one perturbed pixel
 
 
-def gen_noise_media(spark: SparkSession, n: int = 100) -> DataFrame:
+def gen_noise_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic 'noisy' gray images for perceptual-hash tests: a
     multiplicative-hash pixel law makes neighbor comparisons behave
     like coin flips (so distinct images sit ~32 bits apart in dHash
@@ -284,7 +287,10 @@ def gen_noise_media(spark: SparkSession, n: int = 100) -> DataFrame:
 
     return _media_rows(spark, 0, n, "image", row_for)
 
-def gen_png_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
+N_PNG = 100  # PNG fixture rows
+
+
+def gen_png_media(spark: SparkSession, start: int = 0) -> DataFrame:
     """Deterministic REAL PNG rows: the gen_pixel_media RGB law
 
         v = (7*id + 3*x + 5*y) % 256
@@ -343,7 +349,7 @@ def gen_png_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFram
             png = encode_png(_law_rgb(v), depth=depth, interlace=interlace)
         return png, "png", w, h, None, None
 
-    return _media_rows(spark, start, n, "image", row_for)
+    return _media_rows(spark, start, N_PNG, "image", row_for)
 
 
 def jpeg_media_bytes(mid: int) -> tuple[bytes, int, int]:
@@ -369,7 +375,11 @@ def jpeg_media_bytes(mid: int) -> tuple[bytes, int, int]:
     return encode_jpeg(ycc, subsampling=sub, color_input="ycbcr"), w, h
 
 
-def gen_flat_media(spark: SparkSession, n: int = 10, start: int = 5000) -> DataFrame:
+# blank-image fixture ids
+FLAT_ID_START, N_FLAT = 5000, 10
+
+
+def gen_flat_media(spark: SparkSession) -> DataFrame:
     """Deterministic BLANK images for quality-gate fixtures: flat gray
     PPMs (every pixel c = (id * 37) % 256, 32x24) whose pixel variance
     is exactly zero — the degenerate scrape artifacts a media-prep
@@ -382,10 +392,14 @@ def gen_flat_media(spark: SparkSession, n: int = 10, start: int = 5000) -> DataF
         content = encode_ppm(np.repeat(g[:, :, None], 3, axis=2))
         return content, "ppm", NOISE_W, NOISE_H, None, None
 
-    return _media_rows(spark, start, n, "image", row_for)
+    return _media_rows(spark, FLAT_ID_START, N_FLAT, "image", row_for)
 
 
-def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
+# baseline-JPEG fixtures pool at their own id range
+JPEG_ID_START, N_JPEG = 2000, 100
+
+
+def gen_jpeg_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL baseline-JPEG rows with a closed-form pixel
     law a LOSSY codec can still satisfy exactly: all-ones quantization
     tables + BLOCK-CONSTANT pixels make the whole entropy/DCT pipeline
@@ -418,7 +432,7 @@ def gen_jpeg_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
         content, w, h = jpeg_media_bytes(mid)
         return content, "jpeg", w, h, None, None
 
-    return _media_rows(spark, start, n, "image", row_for)
+    return _media_rows(spark, JPEG_ID_START, N_JPEG, "image", row_for)
 
 
 def jpeg_progressive_media_bytes(mid: int) -> tuple[bytes, int, int]:
@@ -445,9 +459,12 @@ def jpeg_progressive_media_bytes(mid: int) -> tuple[bytes, int, int]:
     return encode(ycc, subsampling=sub, color_input="ycbcr"), w, h
 
 
-def gen_jpeg_progressive_media(
-    spark: SparkSession, n: int = 100, start: int = 0
-) -> DataFrame:
+# progressive-JPEG fixtures pool at their own id range; SAME pixel law
+# as the baseline JPEG range, so one oracle CTE serves both lanes
+PJPEG_ID_START, N_PJPEG = 3500, 100
+
+
+def gen_jpeg_progressive_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL progressive-JPEG (SOF2) rows: identical pixel
     law + shape cycle to gen_jpeg_media (all-ones quant +
     block-constant pixels keep the lossy pipeline bit-exact), so the
@@ -464,10 +481,14 @@ def gen_jpeg_progressive_media(
         content, w, h = jpeg_progressive_media_bytes(mid)
         return content, "jpeg", w, h, None, None
 
-    return _media_rows(spark, start, n, "image", row_for)
+    return _media_rows(spark, PJPEG_ID_START, N_PJPEG, "image", row_for)
 
 
-def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFrame:
+# lossless-WebP fixtures pool at their own id range
+WEBP_ID_START, N_WEBP = 3000, 100
+
+
+def gen_webp_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL lossless-WebP (VP8L) rows: the gen_pixel_media
     RGB law verbatim —
 
@@ -503,10 +524,13 @@ def gen_webp_media(spark: SparkSession, n: int = 100, start: int = 0) -> DataFra
         ][mid % 6]
         return encode_webp_lossless(_law_rgb(v), **kw), "webp", w, h, None, None
 
-    return _media_rows(spark, start, n, "image", row_for)
+    return _media_rows(spark, WEBP_ID_START, N_WEBP, "image", row_for)
 
 
-def gen_adpcm_wav_media(spark: SparkSession, n: int = 40) -> DataFrame:
+N_ADPCM = 40  # IMA-ADPCM fixture rows
+
+
+def gen_adpcm_wav_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL IMA-ADPCM WAV rows (format tag 0x11, mono):
     the fixture law chooses the 4-bit CODE stream directly —
 
@@ -533,10 +557,13 @@ def gen_adpcm_wav_media(spark: SparkSession, n: int = 40) -> DataFrame:
         )
         return content, "wav", None, None, 8000, (nn + 1) * 1000 // 8000
 
-    return _media_rows(spark, 0, n, "audio", row_for)
+    return _media_rows(spark, 0, N_ADPCM, "audio", row_for)
 
 
-def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
+N_WAV = 100  # mu-law fixture rows, as many as the PCM lane's
+
+
+def gen_mulaw_wav_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL mu-law (G.711, WAVE format tag 7) rows: the
     fixture generates the 8-bit CODEWORDS from a closed-form law —
 
@@ -557,13 +584,13 @@ def gen_mulaw_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
         content = encode_wav_mulaw(b.astype(np.uint8), WAV_RATE)
         return content, "wav", None, None, WAV_RATE, ns * 1000 // WAV_RATE
 
-    return _media_rows(spark, 0, n, "audio", row_for)
+    return _media_rows(spark, 0, N_WAV, "audio", row_for)
 
 
 VNOISE_FRAMES = 6  # frames per clip, shared with the SQL oracle
 
 
-def gen_noise_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
+def gen_noise_y4m_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic 'noisy' Y4M clips for video near-dup tests: the
     gen_noise_media pixel law extended with a frame term,
 
@@ -593,7 +620,11 @@ def gen_noise_y4m_media(spark: SparkSession, n: int = 60) -> DataFrame:
     return _media_rows(spark, 0, n, "video", row_for)
 
 
-def gen_flat_y4m_media(spark: SparkSession, n: int = 10, start: int = 6100) -> DataFrame:
+# static-clip fixture ids, past the noise clips'
+FLAT_Y4M_ID_START, N_FLAT_Y4M = 6100, 10
+
+
+def gen_flat_y4m_media(spark: SparkSession) -> DataFrame:
     """Constant-luma ('dead air') Y4M clips for the video curation
     pipeline's quality gate: every frame of clip ``id`` is the single
     value (id*37) % 256 over VNOISE_FRAMES frames of NOISE_W x NOISE_H
@@ -605,10 +636,13 @@ def gen_flat_y4m_media(spark: SparkSession, n: int = 10, start: int = 6100) -> D
         v = np.full((VNOISE_FRAMES, NOISE_H, NOISE_W), (mid * 37) % 256, np.uint8)
         return encode_y4m(v), "y4m", NOISE_W, NOISE_H, None, VNOISE_FRAMES * 1000 // 30
 
-    return _media_rows(spark, start, n, "video", row_for)
+    return _media_rows(spark, FLAT_Y4M_ID_START, N_FLAT_Y4M, "video", row_for)
 
 
-def gen_gif_media(spark: SparkSession, n: int = 100) -> DataFrame:
+N_GIF = 100  # GIF fixture rows
+
+
+def gen_gif_media(spark: SparkSession) -> DataFrame:
     """Deterministic REAL GIF rows: the pixel law's gray form
 
         v = (7*id + 3*x + 5*y) % 256   (decodes to r = g = b = v)
@@ -624,13 +658,13 @@ def gen_gif_media(spark: SparkSession, n: int = 100) -> DataFrame:
         content = encode_gif(v.astype(np.uint8), interlaced=bool(mid % 2))
         return content, "gif", w, h, None, None
 
-    return _media_rows(spark, 0, n, "image", row_for)
+    return _media_rows(spark, 0, N_GIF, "image", row_for)
 
 TONE_N_FFT = 256  # analysis window, shared with the SQL oracle
 TONE_N_SAMPLES = 1024  # 4 full windows per clip
 
 
-def gen_tone_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
+def gen_tone_wav_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic pure-tone WAV clips for spectral-feature tests:
 
         k(id) = 3 + id % 40          (cycles per analysis window)
@@ -652,7 +686,11 @@ def gen_tone_wav_media(spark: SparkSession, n: int = 100) -> DataFrame:
     return _media_rows(spark, 0, n, "audio", row_for)
 
 
-def gen_silent_wav_media(spark: SparkSession, n: int = 10, start: int = 6000) -> DataFrame:
+# silent-clip fixture ids
+SILENT_ID_START, N_SILENT = 6000, 10
+
+
+def gen_silent_wav_media(spark: SparkSession) -> DataFrame:
     """Deterministic SILENT clips for the audio quality gate: all-zero
     16-bit PCM (800 samples, mono 16 kHz) — the dead-air artifacts an
     audio-prep pipeline drops before spectral fingerprinting (a silent
@@ -662,7 +700,7 @@ def gen_silent_wav_media(spark: SparkSession, n: int = 10, start: int = 6000) ->
         content = encode_wav(np.zeros(800, np.int16), WAV_RATE)
         return content, "wav", None, None, WAV_RATE, 800 * 1000 // WAV_RATE
 
-    return _media_rows(spark, start, n, "audio", row_for)
+    return _media_rows(spark, SILENT_ID_START, N_SILENT, "audio", row_for)
 
 
 # jpeg_media_bytes is referenced by generator closures AND the

@@ -38,8 +38,9 @@ def countmin_build(
     df: DataFrame,
     key_col: str,
     weight_col: str | None = None,
-    depth: int = 4,
-    width: int = 256,
+    *,
+    depth: int,
+    width: int,
 ) -> DataFrame:
     """Fold keys (optionally pre-weighted counts) into the d×w matrix.
 
@@ -63,8 +64,8 @@ def countmin_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = 4,
-    width: int = 256,
+    depth: int,
+    width: int,
 ) -> DataFrame:
     """Point-estimate each key in `keys` from the sketch: min over the
     d (row, bucket) cells the key hashes to. Missing cells count 0.

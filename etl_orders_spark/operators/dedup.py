@@ -24,6 +24,13 @@ from pyspark.sql import functions as F
 
 from etl_orders_spark.functions.text import fingerprint, normalize_text, shingles, tokens
 
+# word k-gram width of every shingle-set, minhash and winnowing operator
+K_SHINGLE = 3
+# LSH banding of the 16-minhash signature: 4 bands of 4 rows each
+LSH_BANDS, LSH_ROWS_PER_BAND = 4, 4
+# winnowing: the minimum of every 4 consecutive k-gram hashes
+WINNOW_WINDOW = 4
+
 
 def _parallelism_floor(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the input has fewer partitions
@@ -66,8 +73,7 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    k_shingle: int = 3,
+    num_hashes: int,
     portable: bool = False,
 ) -> DataFrame:
     """MinHash signature per document: for each of `num_hashes` seeds,
@@ -90,7 +96,7 @@ def minhash_signatures(
     an external SQL oracle can reproduce signatures bit-for-bit.
     """
     if portable:
-        sh = shingles(text_col, k_shingle)
+        sh = shingles(text_col, K_SHINGLE)
 
         def _min_hash(seed: int) -> Column:
             # closure factory: the transform lambda must stay single-argument
@@ -115,7 +121,7 @@ def minhash_signatures(
         df.withColumn("_t", tokens(normalize_text(F.col(text_col))))
         .select(
             F.col(id_col),
-            F.array_distinct(hashed_ordered_shingles("_t", k_shingle)).alias("shingles"),
+            F.array_distinct(hashed_ordered_shingles("_t", K_SHINGLE)).alias("shingles"),
         )
         .withColumn("signature", F.when(F.size("shingles") > 0, sig))
     )
@@ -124,12 +130,10 @@ def minhash_signatures(
 def minhash_lsh_candidates(
     sig_df: DataFrame,
     id_col: str,
-    num_bands: int = 4,
-    rows_per_band: int = 4,
     bucket_cap: int | None = None,
 ) -> DataFrame:
-    """LSH banding: split each signature into `num_bands` bands of
-    `rows_per_band` minhashes; documents sharing any full band become a
+    """LSH banding: split each signature into `LSH_BANDS` bands of
+    `LSH_ROWS_PER_BAND` minhashes; documents sharing any full band become a
     candidate pair. The only shuffle is the equi-join on
     (band_idx, band_key); a hot bucket means near-identical docs —
     exactly what we're hunting, and also where pair OUTPUT goes
@@ -160,12 +164,12 @@ def minhash_lsh_candidates(
                         F.concat_ws(
                             ",",
                             *[
-                                F.element_at("signature", b * rows_per_band + r + 1).cast("string")
-                                for r in range(rows_per_band)
+                                F.element_at("signature", b * LSH_ROWS_PER_BAND + r + 1).cast("string")
+                                for r in range(LSH_ROWS_PER_BAND)
                             ],
                         ).alias("band_key"),
                     )
-                    for b in range(num_bands)
+                    for b in range(LSH_BANDS)
                 ]
             )
         ).alias("band"),
@@ -213,8 +217,7 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k_shingle: int = 3,
-    threshold: float = 0.5,
+    threshold: float,
     df_cap: int | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard via inverted index: explode shingles,
@@ -241,9 +244,9 @@ def ngram_jaccard_pairs(
 
     sh = cache_stage(
         _parallelism_floor(df).select(
-            F.col(id_col).alias("_id"), F.explode(shingles(text_col, k_shingle)).alias("sh")
+            F.col(id_col).alias("_id"), F.explode(shingles(text_col, K_SHINGLE)).alias("sh")
         ),
-        f"ngram_jaccard.sh.{k_shingle}",
+        f"ngram_jaccard.sh.{K_SHINGLE}",
     )
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("n_sh"))  # shingles are distinct already
     joinable = sh
@@ -281,8 +284,7 @@ def prefix_filter_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k_shingle: int = 3,
-    threshold: float = 0.5,
+    threshold: float,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard ≥ τ via PREFIX FILTERING (Chaudhuri et
     al. ICDE'06 / Bayardo et al. WWW'07 "Scaling Up All Pairs"): order
@@ -316,9 +318,9 @@ def prefix_filter_jaccard_pairs(
 
     docs = cache_stage(
         _parallelism_floor(df).select(
-            F.col(id_col).alias("_id"), shingles(text_col, k_shingle).alias("sh_set")
+            F.col(id_col).alias("_id"), shingles(text_col, K_SHINGLE).alias("sh_set")
         ),
-        f"prefix_filter.docs.{k_shingle}",
+        f"prefix_filter.docs.{K_SHINGLE}",
     )
     ex = docs.select("_id", F.size("sh_set").alias("n_sh"), F.explode("sh_set").alias("sh"))
     dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("_df"))
@@ -328,7 +330,7 @@ def prefix_filter_jaccard_pairs(
     prefix_len = F.col("n_sh") - F.ceil(F.col("n_sh") * F.lit(threshold)) + 1
     prefix = cache_stage(
         ranked.filter(F.col("rn") <= prefix_len).select("_id", "sh"),
-        f"prefix_filter.prefix.{k_shingle}",
+        f"prefix_filter.prefix.{K_SHINGLE}",
     )
     cand = (
         prefix.toDF("id_a", "sh")
@@ -345,7 +347,7 @@ def prefix_filter_jaccard_pairs(
     return joined.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
 
 
-def ordered_shingles(col: Column | str, k: int = 3) -> Column:
+def ordered_shingles(col: Column | str, k: int) -> Column:
     """Positional (non-distinct) word k-grams — winnowing needs document
     order preserved, unlike the set-semantics `shingles`."""
 
@@ -358,7 +360,7 @@ def ordered_shingles(col: Column | str, k: int = 3) -> Column:
     return gram
 
 
-def hashed_ordered_shingles(tok_col: Column | str, k: int = 3) -> Column:
+def hashed_ordered_shingles(tok_col: Column | str, k: int) -> Column:
     """xxhash64 of each positional k-token window → array<long>, the
     shuffle-thin twin of ``ordered_shingles``: grams travel as 8-byte
     longs instead of ~k-word strings (measured 3.4× on the dup-gram
@@ -391,15 +393,13 @@ def winnow_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k_shingle: int = 3,
-    window: int = 4,
     portable: bool = False,
 ) -> DataFrame:
     """Winnowing (rolling-hash document fingerprinting, Schleimer et
     al. SIGMOD'03 scheme expressed relationally): hash the ordered
-    k-gram stream, take the minimum of every sliding window of
-    `window` consecutive hashes, emit the distinct minima per doc.
-    Guarantees any shared run of ≥ k+window-1 tokens between two
+    `K_SHINGLE`-gram stream, take the minimum of every sliding window
+    of `WINNOW_WINDOW` consecutive hashes, emit the distinct minima per
+    doc. Guarantees any shared run of ≥ k+window-1 tokens between two
     documents produces a shared fingerprint.
 
     Built as posexplode + a ROWS-frame window min — one shuffle on the
@@ -424,18 +424,18 @@ def winnow_fingerprints(
     if portable:
         grams = df.select(
             F.col(id_col),
-            F.posexplode(ordered_shingles(text_col, k_shingle)).alias("pos", "gram"),
+            F.posexplode(ordered_shingles(text_col, K_SHINGLE)).alias("pos", "gram"),
         )
         hashed = grams.select(F.col(id_col), "pos", _hash(F.col("gram"), 0, portable).alias("h"))
     else:
         hashed = df.withColumn("_toks", tokens(normalize_text(F.col(text_col)))).select(
             F.col(id_col),
-            F.posexplode(hashed_ordered_shingles("_toks", k_shingle)).alias("pos", "h"),
+            F.posexplode(hashed_ordered_shingles("_toks", K_SHINGLE)).alias("pos", "h"),
         )
     w = (
         W.partitionBy(id_col)
         .orderBy("pos")
-        .rowsBetween(W.currentRow, window - 1)
+        .rowsBetween(W.currentRow, WINNOW_WINDOW - 1)
     )
     n = W.partitionBy(id_col)
     windowed = hashed.select(
@@ -446,7 +446,7 @@ def winnow_fingerprints(
     )
     # only full windows: pos in [0, n_grams - window]
     return (
-        windowed.filter(F.col("pos") <= F.col("_n") - window)
+        windowed.filter(F.col("pos") <= F.col("_n") - WINNOW_WINDOW)
         .select(F.col(id_col), "fp")
         .distinct()
     )
@@ -456,7 +456,7 @@ def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
+    max_hamming: int,
     num_bits: int = 32,
     portable: bool = False,
 ) -> DataFrame:

@@ -29,16 +29,13 @@ from pyspark.sql import functions as F
 
 # HLL sketch size of hyperanf_reach: 2^_LG_K registers per node
 _LG_K = 10
+# hyperanf_reach's reach depth: est_1hop .. est_3hop
+_HOPS = 3
 # connected_components raises if labels still move after this many rounds
 _MAX_ITER = 25
 
 
-def hyperanf_reach(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    hops: int = 3,
-) -> DataFrame:
+def hyperanf_reach(edges: DataFrame) -> DataFrame:
     """Approximate cumulative k-hop reach per node via HyperANF
     (Boldi-Rosa-Vigna, WWW'11): each node carries a mergeable HLL
     sketch of the vertex set it reaches in ≤ t hops, and one round is
@@ -54,7 +51,9 @@ def hyperanf_reach(
     co-purchase graphs (see `khop_reachability_parts`, whose 3-hop
     expansion dominates its runtime).
 
-    Output: node (long), est_1hop .. est_{hops}hop (long) — estimated
+    Edges come as (src, dst) columns.
+
+    Output: node (long), est_1hop .. est_{_HOPS}hop (long) — estimated
     neighborhood sizes EXCLUDING self (estimate − 1, mirroring the
     exact query's `dst != src`). Standard error ≈ 1.04/√2^_LG_K —
     _LG_K=10 is the measured accuracy/merge-cost knee (≈3.3% RSE,
@@ -78,7 +77,7 @@ def hyperanf_reach(
     par = edges.sparkSession.sparkContext.defaultParallelism * 8
     e = (
         edges.select(
-            F.col(src_col).cast("long").alias("_s"), F.col(dst_col).cast("long").alias("_d")
+            F.col("src").cast("long").alias("_s"), F.col("dst").cast("long").alias("_d")
         )
         .distinct()
         .repartition(par, "_d")
@@ -91,7 +90,7 @@ def hyperanf_reach(
         F.hll_sketch_agg(F.col("_v").cast("string"), F.lit(_LG_K)).alias("_sk")
     ).localCheckpoint(eager=True)
     ests = []
-    for t in range(1, hops + 1):
+    for t in range(1, _HOPS + 1):
         nbr = (
             e.join(state.select(F.col("_v").alias("_d"), "_sk").repartition(par, "_d"), "_d")
             .groupBy("_s")

@@ -98,10 +98,9 @@ def compact_parquet_dir(
     src: str,
     dst: str,
     target_bytes: int,
-    cluster_by: list[str] | None = None,
 ) -> dict:
     """Small-files compaction: rewrite a fragmented parquet directory
-    into size-targeted, optionally range-clustered files.
+    of events into size-targeted files range-clustered on ``ts``.
 
     The small-files problem is the steady state of incremental
     ingest — every micro-batch lands a file per task, and a year
@@ -110,10 +109,10 @@ def compact_parquet_dir(
     query: the planner here lists the fragment files driver-side
     (bounded by file count — exactly the metadata a real table
     format keeps in its manifest), sizes the output file count from
-    the REAL byte total, and rewrites once. ``cluster_by`` routes
-    the rewrite through ``repartitionByRange`` so compacted files
-    are key-clustered — min/max row-group stats then prune scans on
-    that key, which plain round-robin ``repartition`` would destroy.
+    the REAL byte total, and rewrites once. The rewrite goes through
+    ``repartitionByRange`` so compacted files are key-clustered —
+    min/max row-group stats then prune scans on ``ts``, which plain
+    round-robin ``repartition`` would destroy.
 
     At 100 TB the same operator runs per partition-directory (each
     date partition compacts independently — embarrassingly parallel
@@ -130,11 +129,7 @@ def compact_parquet_dir(
     files = glob.glob(os.path.join(src, "*.parquet"))
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.parquet(src)
-    if cluster_by:
-        df = df.repartitionByRange(n_out, *[F.col(c) for c in cluster_by])
-    else:
-        df = df.repartition(n_out)
+    df = spark.read.parquet(src).repartitionByRange(n_out, F.col("ts"))
     from etl_orders_spark.sources.writers import write_parquet
 
     write_parquet(df, dst, mode="overwrite")

@@ -47,7 +47,7 @@ if TYPE_CHECKING:  # pragma: no cover
     import numpy as np
 
 
-def _kmeans(x, k: int, iters: int, seed: int = 0):
+def _kmeans(x, k: int, iters: int, seed: int):
     """Plain Lloyd k-means on a small numpy sample (driver-side train
     step). Deterministic: seeded init by sampling distinct rows, empty
     clusters re-seeded from the farthest points."""
@@ -82,21 +82,21 @@ def _normalize(m):
 _TRAIN_N = 16384
 # Lloyd iterations per k-means (coarse router and each sub-codebook)
 _ITERS = 8
+# the index: 16 coarse cells, 8 sub-quantizers of 64 codes each (a
+# 64-dim float32 vector becomes 8 small ints)
+_N_CELLS, _M_SUB, _KSUB = 16, 8, 64
+# search: probe 8 of the 16 cells, re-rank the ADC top 8·k exactly.
+# Recall vs brute force measured 0.68 at 500 vectors and ~0.8 at 5k
+# (routing on near-uniform vectors is the documented hard case)
+_NPROBE, _RERANK = 8, 8
 
 
-def train_pq_model(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_cells: int = 16,
-    m_sub: int = 8,
-    ksub: int = 64,
-):
+def train_pq_model(df: DataFrame, id_col: str, vec_col: str):
     """Train the coarse router + M sub-codebooks on a deterministic
     hash-ordered sample (≤ _TRAIN_N rows collected — bounded regardless
     of corpus size). Vectors are L2-normalized first so inner product
     == cosine everywhere downstream. Returns (coarse, codebooks) numpy
-    float32 arrays of shape (n_cells, D) and (M, ksub, D/M)."""
+    float32 arrays of shape (_N_CELLS, D) and (_M_SUB, _KSUB, D/_M_SUB)."""
     import numpy as np
 
     sample = (
@@ -107,12 +107,12 @@ def train_pq_model(
     )
     x = _normalize(np.array([r["_v"] for r in sample], dtype=np.float64))
     dim = x.shape[1]
-    if dim % m_sub:
-        raise ValueError(f"pq: dim {dim} not divisible by m_sub {m_sub}")
-    dsub = dim // m_sub
-    coarse = _kmeans(x, n_cells, _ITERS, seed=0)
+    if dim % _M_SUB:
+        raise ValueError(f"pq: dim {dim} not divisible by {_M_SUB} sub-quantizers")
+    dsub = dim // _M_SUB
+    coarse = _kmeans(x, _N_CELLS, _ITERS, seed=0)
     books = np.stack(
-        [_kmeans(x[:, m * dsub : (m + 1) * dsub], ksub, _ITERS, seed=1 + m) for m in range(m_sub)]
+        [_kmeans(x[:, m * dsub : (m + 1) * dsub], _KSUB, _ITERS, seed=1 + m) for m in range(_M_SUB)]
     )
     return coarse, books
 
@@ -161,17 +161,12 @@ def pq_topk(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    n_cells: int = 16,
-    m_sub: int = 8,
-    ksub: int = 64,
-    nprobe: int = 4,
-    rerank: int = 4,
+    k: int,
 ) -> DataFrame:
     """IVF-PQ top-k cosine: train (bounded sample) → encode corpus
-    (map-only) → probe nprobe cells per query → ADC-score candidates in
-    the compressed domain (LUT gathers, no float vectors) → exact
-    cosine re-rank of the global top `rerank·k` per query.
+    (map-only) → probe _NPROBE cells per query → ADC-score candidates
+    in the compressed domain (LUT gathers, no float vectors) → exact
+    cosine re-rank of the global top `_RERANK·k` per query.
 
     Output: query_id, neighbor_id, cos (exact, rounded 6) — same
     contract as brute_force_topk; self-pairs excluded.
@@ -180,9 +175,9 @@ def pq_topk(
 
     from etl_orders_spark.functions.vectors import cosine_batch
 
-    coarse, books = train_pq_model(corpus, id_col, vec_col, n_cells=n_cells, m_sub=m_sub, ksub=ksub)
+    coarse, books = train_pq_model(corpus, id_col, vec_col)
     m_books, _, dsub = books.shape
-    r_local = max(rerank * k, k)
+    r_local = max(_RERANK * k, k)
 
     encoded = encode_pq(corpus, coarse, books, id_col, vec_col).toDF(
         "neighbor_id", "cell", "codes"
@@ -200,7 +195,7 @@ def pq_topk(
         n[n == 0.0] = 1.0
         x = x / n
         sims = x @ coarse.T.astype(np.float64)
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
+        order = np.argsort(-sims, axis=1, kind="stable")[:, :_NPROBE]
         return pd.Series(list(order.astype("int32")))
 
     probes = (

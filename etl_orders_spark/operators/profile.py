@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 def profile_columns(
     df: DataFrame,
-    numeric_cols: list[str] = (),
+    numeric_cols: list[str],
     string_cols: list[str] = (),
 ) -> DataFrame:
     """Profile the named columns in ONE aggregate pass.

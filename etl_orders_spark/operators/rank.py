@@ -207,7 +207,7 @@ def two_pass_rank(
 def two_pass_dense_rank(
     df: DataFrame,
     order_by: Sequence[Column],
-    rank_col: str = "drk",
+    rank_col: str,
     partitions: int | None = None,
 ) -> DataFrame:
     """Exact global ``dense_rank`` over ``order_by`` without a

@@ -12,25 +12,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# a session ends after a gap of more than 30 minutes (exact integer ms)
+SESSION_GAP_MS = 30 * 60_000
+
 
 def sessionize(
     df: DataFrame,
     key: str,
     ts: str,
     tie_break: str,
-    gap_minutes: float = 30.0,
 ) -> DataFrame:
     """Assign a session index per `key`: a new session starts when the
-    gap from the previous event exceeds `gap_minutes`. Millisecond
+    gap from the previous event exceeds `SESSION_GAP_MS`. Millisecond
     precision (exact integer math; no float epoch drift across engines).
 
     Output: input columns + `session_idx` (1-based per key).
     """
-    gap_ms = int(gap_minutes * 60_000)
     w = Window.partitionBy(key).orderBy(ts, tie_break)
     prev_ms = F.lag(F.unix_millis(F.col(ts))).over(w)
     is_new = F.when(
-        prev_ms.isNull() | ((F.unix_millis(F.col(ts)) - prev_ms) > gap_ms), F.lit(1)
+        prev_ms.isNull() | ((F.unix_millis(F.col(ts)) - prev_ms) > SESSION_GAP_MS), F.lit(1)
     ).otherwise(F.lit(0))
     running = Window.partitionBy(key).orderBy(ts, tie_break).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("session_idx", F.sum(is_new).over(running).cast("long"))
@@ -41,10 +42,9 @@ def session_stats(
     key: str,
     ts: str,
     tie_break: str,
-    gap_minutes: float = 30.0,
 ) -> DataFrame:
     """Collapse sessions to one row each: start/end/duration/event count."""
-    s = sessionize(df, key, ts, tie_break, gap_minutes)
+    s = sessionize(df, key, ts, tie_break)
     return s.groupBy(key, "session_idx").agg(
         F.min(ts).alias("session_start"),
         F.max(ts).alias("session_end"),

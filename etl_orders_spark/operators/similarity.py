@@ -28,8 +28,16 @@ from pyspark.sql import functions as F
 from etl_orders_spark.operators.rank import one_bucket
 from etl_orders_spark.operators.topk import topk_per_group
 
+# width of the embeddings table's vectors, which the LSH hyperplanes span
+_DIM = 64
 # seed of the first LSH table's hyperplanes (table t uses seed + t)
 _LSH_SEED = 7
+# lsh_bucketed_topk's tables: 4 planes x 8 tables, tuned on the driver
+# embeddings (near-uniform vectors): recall 0.68 vs brute force at ~2%
+# of the pair space, vs 0.08 for 8 planes x 4 tables at equal cost
+_TOPK_PLANES, _TOPK_TABLES = 4, 8
+# ivf_topk: top 5 per vector, 16 coarse cells, each query probes 4
+_IVF_K, _IVF_CELLS, _IVF_NPROBE = 5, 16, 4
 # _assign_nearest's corpus blocks, each scored against every centroid
 _ASSIGN_BLOCKS = 32
 # near_dup_lsh_params: target vectors per bucket, and the bound on a
@@ -47,7 +55,7 @@ def brute_force_topk(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
+    k: int,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -204,7 +212,7 @@ def _gemm_topk_cogrouped(
 
 
 def _assign_nearest(
-    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, n: int = 1
+    vectors: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, n: int
 ) -> DataFrame:
     """Nearest-`n` centroid per vector (by cosine, ties to lower cluster
     id). The corpus hash-partitions into `_ASSIGN_BLOCKS` blocks; the tiny
@@ -228,17 +236,10 @@ def _assign_nearest(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF (inverted-file) approximate all-pairs top-k: a coarse
-    quantizer partitions the corpus into `n_centroids` cells; each
-    query scores only vectors in its `nprobe` nearest cells.
+def ivf_topk(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """IVF (inverted-file) approximate all-pairs top-`_IVF_K`: a
+    coarse quantizer partitions the corpus into `_IVF_CELLS` cells;
+    each query scores only vectors in its `_IVF_NPROBE` nearest cells.
 
     Deterministic construction: seed centroids are a stride sample of
     the corpus (no RNG), refined by one relational Lloyd iteration
@@ -249,9 +250,9 @@ def ivf_topk(
     Output: query_id, neighbor_id, cos (rounded 6).
     """
     total = df.count()
-    stride = max(total // n_centroids, 1)
+    stride = max(total // _IVF_CELLS, 1)
     vecs = df.select(F.col(id_col).cast("long").alias("_vid"), F.col(vec_col).alias("_v"))
-    # deterministic hash-stride sample (~n_centroids rows) — the window
+    # deterministic hash-stride sample (~_IVF_CELLS rows) — the window
     # numbering runs over the tiny sample only, never the full corpus
     sample = df.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")).filter(
         F.abs(F.xxhash64(F.col("_cid").cast("string"))) % stride == 0
@@ -261,7 +262,7 @@ def ivf_topk(
             "_rn",
             F.row_number().over(Window.partitionBy(one_bucket("_cid")).orderBy("_cid")) - 1,
         )
-        .filter(F.col("_rn") < n_centroids)
+        .filter(F.col("_rn") < _IVF_CELLS)
         .select(F.col("_rn").alias("cluster"), F.col("_cv").alias("cvec"))
     )
     assigned = _assign_nearest(df, seeds, id_col, vec_col, 1).join(vecs, "_vid")
@@ -281,7 +282,7 @@ def ivf_topk(
     # stage: a cached plan keeps its shuffle partitioning (AQE does not
     # coalesce it), which reorders the float sums of the refined
     # centroids above and moves the rounded cosines
-    near = _assign_nearest(df, centroids, id_col, vec_col, nprobe).localCheckpoint(eager=True)
+    near = _assign_nearest(df, centroids, id_col, vec_col, _IVF_NPROBE).localCheckpoint(eager=True)
     home = topk_per_group(near, ["_vid"], [F.desc("_cos"), F.asc("cluster")], 1)
     # toDF re-aliases every column (fresh exprIds) so the probes/cells
     # self-join out of the same assignment table isn't flagged ambiguous
@@ -295,10 +296,10 @@ def ivf_topk(
         .select("_vid", "_v", "cluster")
         .toDF("query_id", "q_vec", "cluster")
     )
-    scored = _gemm_topk_cogrouped(probes, cells, ["cluster"], k).dropDuplicates(
+    scored = _gemm_topk_cogrouped(probes, cells, ["cluster"], _IVF_K).dropDuplicates(
         ["query_id", "neighbor_id"]
     )
-    return topk_per_group(scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], k)
+    return topk_per_group(scored, ["query_id"], [F.desc("cos"), F.asc("neighbor_id")], _IVF_K)
 
 
 def near_dup_lsh_params(n: int, tau: float) -> tuple[int, int]:
@@ -418,7 +419,6 @@ def near_dup_pairs_bucketed(
     id_col: str,
     vec_col: str,
     tau: float,
-    dim: int = 64,
     num_planes: int | None = 4,
     num_tables: int | None = 16,
 ) -> DataFrame:
@@ -452,7 +452,7 @@ def near_dup_pairs_bucketed(
         num_planes, num_tables = near_dup_lsh_params(df.count(), tau)
     elif num_tables is None:
         raise ValueError("num_tables must be set when num_planes is pinned")
-    buckets = _bucket_assign(df, id_col, vec_col, num_planes, num_tables, _LSH_SEED, dim)
+    buckets = _bucket_assign(df, id_col, vec_col, num_planes, num_tables, _LSH_SEED, _DIM)
     return (
         buckets.groupBy("_table", "_bucket")
         .applyInPandas(
@@ -542,7 +542,7 @@ def near_dup_pairs_blocked(
     id_col: str,
     vec_col: str,
     tau: float,
-    n_blocks: int = 8,
+    n_blocks: int,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ τ via block-partitioned GEMM.
 
@@ -634,10 +634,7 @@ def lsh_bucketed_topk(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    dim: int = 64,
-    num_planes: int = 8,
-    num_tables: int = 4,
+    k: int,
 ) -> DataFrame:
     """Approximate all-pairs top-k: vectors meet only when some hash
     table buckets them together. Candidate pairs then score exactly.
@@ -650,7 +647,7 @@ def lsh_bucketed_topk(
     # both cogroup sides read the assignment table: materialize it once
     # or the Arrow bucket-id pass runs twice
     buckets = cache_stage(
-        _bucket_assign(df, id_col, vec_col, num_planes, num_tables, _LSH_SEED, dim),
+        _bucket_assign(df, id_col, vec_col, _TOPK_PLANES, _TOPK_TABLES, _LSH_SEED, _DIM),
         "lsh_bucketed_topk.buckets",
     )
     # one GEMM per (table, bucket) cogroup replaces the pair-explosion
@@ -673,9 +670,9 @@ def mmr_topk(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
-    pool: int = 50,
-    lam: float = 0.7,
+    k: int,
+    pool: int,
+    lam: float,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversified top-k: greedy selection
     maximizing λ·sim(q,d) − (1−λ)·max_{s∈selected} sim(d,s) — the

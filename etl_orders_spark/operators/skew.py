@@ -21,7 +21,7 @@ def salted_join(
     small: DataFrame,
     big_key: str,
     small_key: str,
-    n_salts: int = 8,
+    n_salts: int,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the big side salted `n_salts` ways.

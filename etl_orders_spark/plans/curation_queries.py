@@ -191,7 +191,7 @@ def near_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     10⁻⁴-units before ranking/output — per-row ROUND(double, n) is
     HALF_UP in Spark but half-even in DuckDB."""
     docs = T(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k_shingle=3, threshold=_JACCARD_THRESHOLD)
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=_JACCARD_THRESHOLD)
     clusters = connected_components(docs.select("doc_id"), pairs, "doc_id")
     scored = clusters.join(docs, "doc_id").select(
         F.col("component").alias("cluster_id"),

@@ -20,6 +20,7 @@ from etl_orders_spark.operators.expectations import (
     run_row_checks,
 )
 from etl_orders_spark.plans.registry import register
+from etl_orders_spark.streaming.drift import N_BINS as _EPSI_BINS
 from etl_orders_spark.sources.readers import load_table as T
 
 
@@ -310,7 +311,7 @@ def dq_psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _EPSI_SPLIT = "2024-01-08 00:00:00"  # reference week | live remainder
-_EPSI_W, _EPSI_BINS = 25.0, 8
+_EPSI_W = 25.0
 
 
 @register(
@@ -379,14 +380,6 @@ def psi_event_value_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = T(spark, sf_dir, "events")
     split = F.lit(_EPSI_SPLIT).cast("timestamp")
-    reference = reference_histogram_ppm(
-        ev.filter(F.col("ts") < split), "value", _EPSI_W, _EPSI_BINS
-    )
-    hist = windowed_value_histogram(
-        ev.filter(F.col("ts") >= split),
-        "value",
-        _EPSI_W,
-        _EPSI_BINS,
-        window="1 day",
-    )
-    return psi_from_histogram(hist, reference, _EPSI_BINS)
+    reference = reference_histogram_ppm(ev.filter(F.col("ts") < split), _EPSI_W)
+    hist = windowed_value_histogram(ev.filter(F.col("ts") >= split), _EPSI_W, window="1 day")
+    return psi_from_histogram(hist, reference)

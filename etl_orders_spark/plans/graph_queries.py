@@ -212,7 +212,7 @@ def khop_reachability_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_orders_spark.operators.graph import hyperanf_reach
 
-    reach = hyperanf_reach(_edges(spark, sf_dir), "src", "dst", hops=3)
+    reach = hyperanf_reach(_edges(spark, sf_dir))
     return (
         reach.filter(F.col("node") % _KHOP_SAMPLE_MOD == 0)
         .select(

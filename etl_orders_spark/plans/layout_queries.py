@@ -489,9 +489,7 @@ def stage_compacted_events(spark: SparkSession, sf_dir: str) -> tuple[str, dict]
     path = staged_compacted_events_path(sf_dir)
     if _staging_is_fresh(path, sf_dir, "events"):
         return path, {}
-    stats = compact_parquet_dir(
-        spark, frag, path, _CMP_TARGET_BYTES, cluster_by=["ts"]
-    )
+    stats = compact_parquet_dir(spark, frag, path, _CMP_TARGET_BYTES)
     return path, stats
 
 

@@ -84,10 +84,10 @@ def prep_corpus(docs: DataFrame, portable: bool = True) -> DataFrame:
     )
     # near-dup removal: MinHash-LSH pairs at jaccard >= tau; drop id_b
     sigs = cache_stage(
-        minhash_signatures(uniq, "doc_id", "text", 16, 3, portable=portable),
+        minhash_signatures(uniq, "doc_id", "text", 16, portable=portable),
         f"llm_prep.sigs.{portable}",
     )
-    pairs = verify_jaccard(minhash_lsh_candidates(sigs, "doc_id", 4, 4), sigs, "doc_id", _TAU)
+    pairs = verify_jaccard(minhash_lsh_candidates(sigs, "doc_id"), sigs, "doc_id", _TAU)
     drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     survivors = uniq.join(drop, "doc_id", "left_anti")
     return survivors.select("doc_id", token_count("text").alias("n_tokens"))

@@ -22,6 +22,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_orders_spark.multimodal.ops import VIDEO_EVERY_N as _VIDEO_EVERY_N
+from etl_orders_spark.multimodal.ops import VIDEO_MAX_FRAMES as _VIDEO_MAX_FRAMES
 from etl_orders_spark.multimodal.ops import (
     media_fingerprints,
     media_stats,
@@ -29,6 +31,23 @@ from etl_orders_spark.multimodal.ops import (
     resize_images,
     sample_frames,
 )
+from etl_orders_spark.multimodal.schemas import FLAT_ID_START as _FLAT_ID_START
+from etl_orders_spark.multimodal.schemas import FLAT_Y4M_ID_START as _VPREP_FLAT_START
+from etl_orders_spark.multimodal.schemas import JPEG_ID_START as _JPEG_ID_START
+from etl_orders_spark.multimodal.schemas import N_ADPCM as _N_ADPCM
+from etl_orders_spark.multimodal.schemas import N_FLAT as _N_FLAT
+from etl_orders_spark.multimodal.schemas import N_FLAT_Y4M as _VPREP_N_FLAT
+from etl_orders_spark.multimodal.schemas import N_GIF as _N_GIF
+from etl_orders_spark.multimodal.schemas import N_JPEG as _N_JPEG
+from etl_orders_spark.multimodal.schemas import N_PJPEG as _N_PJPEG
+from etl_orders_spark.multimodal.schemas import N_PNG as _N_PNG
+from etl_orders_spark.multimodal.schemas import N_SILENT as _N_SILENT
+from etl_orders_spark.multimodal.schemas import N_WAV as _N_WAV
+from etl_orders_spark.multimodal.schemas import N_WEBP as _N_WEBP
+from etl_orders_spark.multimodal.schemas import N_Y4M as _N_Y4M
+from etl_orders_spark.multimodal.schemas import PJPEG_ID_START as _PJPEG_ID_START
+from etl_orders_spark.multimodal.schemas import SILENT_ID_START as _SILENT_ID_START
+from etl_orders_spark.multimodal.schemas import WEBP_ID_START as _WEBP_ID_START
 from etl_orders_spark.multimodal.schemas import gen_media, gen_pixel_media
 from etl_orders_spark.operators.grouped_map import map_rows
 from etl_orders_spark.plans.registry import register
@@ -88,20 +107,6 @@ def media_stats_synthetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PNG fixture ids offset so the family pools with gen_pixel_media's
 # 0..119 range without key collisions (gen_png_media(start=...))
 _PNG_ID_START = 1000
-_N_PNG = 100
-
-# JPEG fixtures pool at their own id range (schemas.gen_jpeg_media)
-_JPEG_ID_START = 2000
-_N_JPEG = 100
-
-# lossless-WebP fixtures pool at their own id range (gen_webp_media)
-_WEBP_ID_START = 3000
-_N_WEBP = 100
-# progressive-JPEG fixtures pool at their own id range
-# (schemas.gen_jpeg_progressive_media); SAME pixel law as the baseline
-# JPEG range, so _jpeg_law_sql serves both lanes
-_PJPEG_ID_START = 3500
-_N_PJPEG = 100
 
 
 def _webp_law_sql(start: int, n: int) -> str:
@@ -200,7 +205,7 @@ def media_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Benched so the decode cost tracks round over round."""
     from etl_orders_spark.multimodal.schemas import gen_jpeg_media
 
-    return pixel_features(gen_jpeg_media(spark, _N_JPEG, start=_JPEG_ID_START))
+    return pixel_features(gen_jpeg_media(spark))
 
 
 @register(
@@ -238,7 +243,7 @@ def media_jpeg_progressive_pixel_stats(spark: SparkSession, sf_dir: str) -> Data
     round over round."""
     from etl_orders_spark.multimodal.schemas import gen_jpeg_progressive_media
 
-    return pixel_features(gen_jpeg_progressive_media(spark, _N_PJPEG, start=_PJPEG_ID_START))
+    return pixel_features(gen_jpeg_progressive_media(spark))
 
 
 @register(
@@ -275,7 +280,7 @@ def media_webp_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     round."""
     from etl_orders_spark.multimodal.schemas import gen_webp_media
 
-    return pixel_features(gen_webp_media(spark, _N_WEBP, start=_WEBP_ID_START))
+    return pixel_features(gen_webp_media(spark))
 
 
 def _png_law_sql(start: int, n: int) -> str:
@@ -397,9 +402,9 @@ def media_decode_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fam = (
         gen_pixel_media(spark, _N_PIXEL_MEDIA)
-        .unionByName(gen_png_media(spark, _N_PNG, start=_PNG_ID_START))
-        .unionByName(gen_jpeg_media(spark, _N_JPEG, start=_JPEG_ID_START))
-        .unionByName(gen_webp_media(spark, _N_WEBP, start=_WEBP_ID_START))
+        .unionByName(gen_png_media(spark, start=_PNG_ID_START))
+        .unionByName(gen_jpeg_media(spark))
+        .unionByName(gen_webp_media(spark))
     )
     return pixel_features(fam)
 
@@ -439,7 +444,7 @@ def media_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pools baseline JPEG — see media_jpeg_pixel_stats)."""
     from etl_orders_spark.multimodal.schemas import gen_png_media
 
-    return pixel_features(gen_png_media(spark, _N_PNG))
+    return pixel_features(gen_png_media(spark))
 
 
 # --- file-based media ingestion (binaryFile) --------------------------------
@@ -508,9 +513,6 @@ def media_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pixel_features(media)
 
 
-_N_GIF = 100
-
-
 @register(
     "media_gif_pixel_stats",
     f"""
@@ -555,7 +557,7 @@ def media_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference-compressor round trip in tests/test_codecs.py."""
     from etl_orders_spark.multimodal.schemas import gen_gif_media
 
-    return pixel_features(gen_gif_media(spark, _N_GIF))
+    return pixel_features(gen_gif_media(spark))
 
 
 _THUMB_SIDE = 8
@@ -619,7 +621,6 @@ def media_thumbnail_pixel_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_N_WAV = 100
 # clip ids and sample counts of the WAV fixture law, and the feature
 # select over its decoded samples s(media_id, t, v)
 _WAV_DIMS_SQL = f"""WITH ids AS (SELECT UNNEST(generate_series(0, {_N_WAV - 1})) AS media_id),
@@ -713,10 +714,7 @@ def media_mulaw_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.ops import audio_features
     from etl_orders_spark.multimodal.schemas import gen_mulaw_wav_media
 
-    return audio_features(gen_mulaw_wav_media(spark, _N_WAV))
-
-
-_N_ADPCM = 40
+    return audio_features(gen_mulaw_wav_media(spark))
 
 
 def _adpcm_oracle() -> str:
@@ -814,17 +812,8 @@ def media_adpcm_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.ops import audio_features
     from etl_orders_spark.multimodal.schemas import gen_adpcm_wav_media
 
-    return audio_features(gen_adpcm_wav_media(spark, _N_ADPCM))
+    return audio_features(gen_adpcm_wav_media(spark))
 
-
-_N_Y4M = 60
-# sampling law shared by the Spark call and the oracle predicate: keep
-# frame i iff i % every_n == 0 AND i < every_n * max_frames — the same
-# set as range(0, nf, every_n)[:max_frames]. Deriving the SQL from
-# these constants (ADVICE r4) means changing either knob, or the
-# fixture frame-count law, can never silently drift the pair.
-_VIDEO_EVERY_N = 2
-_VIDEO_MAX_FRAMES = 8
 
 
 @register(
@@ -872,9 +861,7 @@ def media_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.ops import video_frame_stats
     from etl_orders_spark.multimodal.schemas import gen_y4m_media
 
-    return video_frame_stats(
-        gen_y4m_media(spark, _N_Y4M), every_n=_VIDEO_EVERY_N, max_frames=_VIDEO_MAX_FRAMES
-    )
+    return video_frame_stats(gen_y4m_media(spark))
 
 
 _N_NOISE = 100
@@ -1023,7 +1010,7 @@ _VND_MAJORITY = 2  # of the 3 sampled frames (0, 2, 4)
       SELECT media_id, 768 AS n,
              768 * ((media_id * 37) % 256) AS s,
              768 * ((media_id * 37) % 256) * ((media_id * 37) % 256) AS ss
-      FROM (SELECT UNNEST(generate_series(5000, 5009)) AS media_id)
+      FROM (SELECT UNNEST(generate_series({_FLAT_ID_START}, {_FLAT_ID_START + _N_FLAT - 1})) AS media_id)
     ),
     allstat AS (SELECT * FROM nstat UNION ALL SELECT * FROM fstat),
     q AS (SELECT * FROM allstat WHERE n * ss - s * s > 0),
@@ -1069,9 +1056,7 @@ def media_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.schemas import gen_flat_media, gen_noise_media
     from etl_orders_spark.operators.materialize import cache_stage
 
-    pool = gen_noise_media(spark, _N_NOISE).unionByName(
-        gen_flat_media(spark, 10, start=5000)
-    )
+    pool = gen_noise_media(spark, _N_NOISE).unionByName(gen_flat_media(spark))
     st = cache_stage(dhash_pixel_stats(pool), "media_prep.st")
     var_num = (
         F.col("n_pixels") * F.col("sumsq_gray")
@@ -1252,14 +1237,7 @@ def media_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.materialize import cache_stage
 
     # frame-grain hashes feed the band join AND both verify sides
-    h = cache_stage(
-        video_frame_dhash(
-            gen_noise_y4m_media(spark, _N_VNOISE),
-            every_n=_VIDEO_EVERY_N,
-            max_frames=_VIDEO_MAX_FRAMES,
-        ),
-        "media_video_near_dup.h",
-    )
+    h = cache_stage(video_frame_dhash(gen_noise_y4m_media(spark, _N_VNOISE)), "media_video_near_dup.h")
     hamming = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)").cast("long")
     return (
         _frame_band_pairs(h)
@@ -1278,7 +1256,7 @@ def media_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame sampling fan-out (1 row per sampled frame)."""
-    frames = sample_frames(gen_media(spark, 300), every_ms=1000, max_frames=8)
+    frames = sample_frames(gen_media(spark, 300))
     return frames.select("media_id", "frame_idx", "frame_ms", F.length("frame_bytes").alias("n"))
 
 
@@ -1314,7 +1292,7 @@ def media_audio_dominant_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.ops import audio_spectral_features
     from etl_orders_spark.multimodal.schemas import gen_tone_wav_media
 
-    return audio_spectral_features(gen_tone_wav_media(spark, _N_TONE), n_fft=_TONE_N_FFT)
+    return audio_spectral_features(gen_tone_wav_media(spark, _N_TONE))
 
 
 @register(
@@ -1333,7 +1311,7 @@ def media_audio_dominant_tone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     sstat AS (
       SELECT media_id, 800 AS n_samples, 0 AS sum_abs
-      FROM (SELECT UNNEST(generate_series(6000, 6009)) AS media_id)
+      FROM (SELECT UNNEST(generate_series({_SILENT_ID_START}, {_SILENT_ID_START + _N_SILENT - 1})) AS media_id)
     ),
     allstat AS (SELECT * FROM tstat UNION ALL SELECT * FROM sstat),
     q AS (SELECT * FROM allstat WHERE sum_abs > 0),
@@ -1372,14 +1350,10 @@ def audio_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.multimodal.schemas import gen_silent_wav_media, gen_tone_wav_media
     from pyspark.sql import Window as W
 
-    pool = gen_tone_wav_media(spark, _N_TONE).unionByName(
-        gen_silent_wav_media(spark, 10, start=6000)
-    )
+    pool = gen_tone_wav_media(spark, _N_TONE).unionByName(gen_silent_wav_media(spark))
     feats = audio_features(pool).select("media_id", "n_samples", "sum_abs")
     q = feats.filter(F.col("sum_abs") > 0)
-    spec = audio_spectral_features(pool, n_fft=_TONE_N_FFT).select(
-        "media_id", F.col("dominant_bin").alias("bin")
-    )
+    spec = audio_spectral_features(pool).select("media_id", F.col("dominant_bin").alias("bin"))
     sq = q.join(spec, "media_id")
     keep = sq.withColumn(
         "rn", F.row_number().over(W.partitionBy("bin").orderBy("media_id"))
@@ -1390,9 +1364,6 @@ def audio_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_samples").cast("long").alias("n_samples"),
         F.col("sum_abs").cast("long").alias("sum_abs"),
     )
-
-
-_VPREP_FLAT_START, _VPREP_N_FLAT = 6100, 10
 
 
 @register(
@@ -1513,15 +1484,8 @@ def video_prep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from etl_orders_spark.operators.materialize import cache_stage
 
-    pool = gen_noise_y4m_media(spark, _N_VNOISE).unionByName(
-        gen_flat_y4m_media(spark, _VPREP_N_FLAT, start=_VPREP_FLAT_START)
-    )
-    st = cache_stage(
-        video_frame_dhash_stats(
-            pool, every_n=_VIDEO_EVERY_N, max_frames=_VIDEO_MAX_FRAMES
-        ),
-        "video_prep.st",
-    )
+    pool = gen_noise_y4m_media(spark, _N_VNOISE).unionByName(gen_flat_y4m_media(spark))
+    st = cache_stage(video_frame_dhash_stats(pool), "video_prep.st")
     var_num = (
         F.col("n_pixels") * F.col("sumsq_luma")
         - F.col("sum_luma") * F.col("sum_luma")

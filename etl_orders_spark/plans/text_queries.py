@@ -29,6 +29,9 @@ from etl_orders_spark.functions.text import (
 )
 from etl_orders_spark.operators.graph import connected_components
 from etl_orders_spark.operators.dedup import (
+    LSH_BANDS as _BANDS,
+    LSH_ROWS_PER_BAND as _ROWS_PER_BAND,
+    WINNOW_WINDOW as _WINNOW_W,
     exact_dedup,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -523,7 +526,7 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs 3-gram Jaccard ≥ τ via inverted shingle index — only
     docs sharing a shingle ever meet in the join."""
     return ngram_jaccard_pairs(
-        T(spark, sf_dir, "documents"), "doc_id", "text", k_shingle=3, threshold=_JACCARD_THRESHOLD
+        T(spark, sf_dir, "documents"), "doc_id", "text", threshold=_JACCARD_THRESHOLD
     )
 
 
@@ -542,7 +545,7 @@ def ngram_jaccard_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return prefix_filter_jaccard_pairs(
         T(spark, sf_dir, "documents"), "doc_id", "text",
-        k_shingle=3, threshold=_JACCARD_THRESHOLD,
+        threshold=_JACCARD_THRESHOLD,
     )
 
 
@@ -559,7 +562,7 @@ def ngram_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle, so surviving pairs keep near-exact scores."""
     return ngram_jaccard_pairs(
         T(spark, sf_dir, "documents"), "doc_id", "text",
-        k_shingle=3, threshold=_JACCARD_THRESHOLD, df_cap=50,
+        threshold=_JACCARD_THRESHOLD, df_cap=50,
     )
 
 
@@ -586,14 +589,13 @@ def dedup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncated per round. The oracle is the transitive-closure
     recursive CTE over the same pair SQL."""
     docs = T(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k_shingle=3, threshold=_JACCARD_THRESHOLD)
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=_JACCARD_THRESHOLD)
     return connected_components(docs.select("doc_id"), pairs, "doc_id").select(
         "doc_id", F.col("component").alias("cluster_id")
     )
 
 
 _MINHASH_N = 16
-_BANDS, _ROWS_PER_BAND = 4, 4
 _MINHASH_TAU = 0.2
 # the portable-hash MinHash signature as DuckDB list elements
 _SQL_SIG_EXPRS = ", ".join(
@@ -655,10 +657,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.materialize import cache_stage
 
     sigs = cache_stage(
-        minhash_signatures(docs, "doc_id", "text", _MINHASH_N, 3, portable=True),
+        minhash_signatures(docs, "doc_id", "text", _MINHASH_N, portable=True),
         "minhash_lsh_pairs.sigs",
     )
-    cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
+    cands = minhash_lsh_candidates(sigs, "doc_id")
     return verify_jaccard(cands, sigs, "doc_id", _MINHASH_TAU)
 
 
@@ -678,10 +680,10 @@ def minhash_lsh_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.materialize import cache_stage
 
     sigs = cache_stage(
-        minhash_signatures(docs, "doc_id", "text", _MINHASH_N, 3, portable=False),
+        minhash_signatures(docs, "doc_id", "text", _MINHASH_N, portable=False),
         "minhash_lsh_pairs_fast.sigs",
     )
-    cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
+    cands = minhash_lsh_candidates(sigs, "doc_id")
     return verify_jaccard(cands, sigs, "doc_id", _MINHASH_TAU)
 
 
@@ -786,7 +788,7 @@ def _inc_inplan(spark: SparkSession, sf_dir: str, portable: bool) -> DataFrame:
     hist, inc = _inc_split(spark, sf_dir)
     hist_fp = hist.select(_inc_fingerprint("text", portable).alias("f")).distinct()
     hsig = cache_stage(
-        minhash_signatures(hist, "doc_id", "text", _MINHASH_N, 3, portable=portable),
+        minhash_signatures(hist, "doc_id", "text", _MINHASH_N, portable=portable),
         "incremental_dedup.hsig" if portable else "incremental_dedup.hsig_fast",
     )
     hb = _inc_band_table(hsig).toDF("h_id", "h_sh", "band_idx", "band_key")
@@ -895,7 +897,7 @@ def _inc_verdicts(
         .select("doc_id", F.col("_hit").isNotNull().alias("is_exact_dup"))
     )
     isig = cache_stage(
-        minhash_signatures(inc, "doc_id", "text", _MINHASH_N, 3, portable=portable),
+        minhash_signatures(inc, "doc_id", "text", _MINHASH_N, portable=portable),
         "incremental_dedup.isig" if portable else "incremental_dedup.isig_fast",
     )
     ib = _inc_band_table(isig).toDF("i_id", "i_sh", "band_idx", "band_key")
@@ -946,7 +948,7 @@ def stage_dedup_index(spark: SparkSession, sf_dir: str) -> str:
     hist = docs.filter(F.col("doc_id") % 10 != 0).select("doc_id", "text")
     hist_fp = hist.select(fingerprint("text").alias("f")).distinct()
     hist_fp.write.mode("overwrite").parquet(os.path.join(path, "fingerprints"))
-    hsig = minhash_signatures(hist, "doc_id", "text", _MINHASH_N, 3, portable=True)
+    hsig = minhash_signatures(hist, "doc_id", "text", _MINHASH_N, portable=True)
     (
         _inc_band_table(hsig)
         .toDF("h_id", "h_sh", "band_idx", "band_key")
@@ -1069,8 +1071,6 @@ def simhash_near_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_K, _WINNOW_W = 3, 4
-
 # ordered (positional, non-distinct) k-gram structs for the winnow oracle;
 # pos is 0-based to mirror Spark's posexplode
 _ORDERED_GRAMS = (
@@ -1104,7 +1104,7 @@ def winnow_fingerprints_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint. Relational form: posexplode + ROWS-frame window min."""
     return winnow_fingerprints(
         T(spark, sf_dir, "documents"), "doc_id", "text",
-        k_shingle=_WINNOW_K, window=_WINNOW_W, portable=True,
+        portable=True,
     )
 
 
@@ -1125,7 +1125,7 @@ def winnow_fingerprints_docs_fast(spark: SparkSession, sf_dir: str) -> DataFrame
     one is what the bench grades and production runs."""
     return winnow_fingerprints(
         TW(spark, sf_dir, "documents"), "doc_id", "text",
-        k_shingle=_WINNOW_K, window=_WINNOW_W, portable=False,
+        portable=False,
     )
 
 
@@ -2109,7 +2109,7 @@ def chunk_docs_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoders)."""
     from etl_orders_spark.functions.udtf import register_chunk_udtf
 
-    register_chunk_udtf(spark, "chunk_docs")
+    register_chunk_udtf(spark)
     T(spark, sf_dir, "documents").createOrReplaceTempView("_docs_for_udtf")
     return spark.sql(
         f"""
@@ -4326,10 +4326,10 @@ def editdist_verified_near_dup_docs(spark: SparkSession, sf_dir: str) -> DataFra
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = _planted_corpus(docs, "editdist_near_dup.corpus")
     sigs = cache_stage(
-        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=True),
+        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, portable=True),
         "editdist_near_dup.sigs",
     )
-    cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
+    cands = minhash_lsh_candidates(sigs, "doc_id")
     return _verify_edit_sim(cands, corpus)
 
 
@@ -4360,10 +4360,10 @@ def editdist_verified_near_dup_fast(spark: SparkSession, sf_dir: str) -> DataFra
     docs = TW(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = _planted_corpus(docs, "editdist_near_dup_fast.corpus")
     sigs = cache_stage(
-        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=False),
+        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, portable=False),
         "editdist_near_dup_fast.sigs",
     )
-    cands = minhash_lsh_candidates(sigs, "doc_id", _BANDS, _ROWS_PER_BAND)
+    cands = minhash_lsh_candidates(sigs, "doc_id")
     return _verify_edit_sim(cands, corpus)
 
 
@@ -4912,12 +4912,10 @@ def editdist_verified_near_dup_capped(spark: SparkSession, sf_dir: str) -> DataF
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = _planted_corpus(docs, "editdist_capped.corpus")
     sigs = cache_stage(
-        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, 3, portable=True),
+        minhash_signatures(corpus, "doc_id", "text", _MINHASH_N, portable=True),
         "editdist_capped.sigs",
     )
-    cands = minhash_lsh_candidates(
-        sigs, "doc_id", _BANDS, _ROWS_PER_BAND, bucket_cap=_ED_BUCKET_CAP
-    )
+    cands = minhash_lsh_candidates(sigs, "doc_id", bucket_cap=_ED_BUCKET_CAP)
     return _verify_edit_sim(cands, corpus)
 
 

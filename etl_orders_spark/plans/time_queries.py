@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_orders_spark.operators.asof import asof_join, range_join
-from etl_orders_spark.operators.sessionize import session_stats
+from etl_orders_spark.operators.sessionize import SESSION_GAP_MS, session_stats
 from etl_orders_spark.plans.registry import register
 from etl_orders_spark.sources.readers import load_table as T
 
@@ -72,7 +72,7 @@ def tumbling_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition, two execution modes."""
     from etl_orders_spark.streaming.windows import tumbling_agg
 
-    return tumbling_agg(T(spark, sf_dir, "events"), "1 hour").withColumnRenamed(
+    return tumbling_agg(T(spark, sf_dir, "events")).withColumnRenamed(
         "win_start", "hour_start"
     )
 
@@ -94,18 +94,18 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shared builder with the streaming twin (streaming/windows.py)."""
     from etl_orders_spark.streaming.windows import sliding_counts
 
-    return sliding_counts(T(spark, sf_dir, "events"), "30 minutes", "10 minutes")
+    return sliding_counts(T(spark, sf_dir, "events"))
 
 
 # events flagged is_new where a user's session starts (first event, or
 # a gap over 30 minutes), ordered by (ts, event_id)
-_SESSION_FLAG_SQL = """
+_SESSION_FLAG_SQL = f"""
     WITH ev AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
     ), flagged AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
+                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > {SESSION_GAP_MS}
                   THEN 1 ELSE 0 END AS is_new
       FROM ev
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -134,7 +134,7 @@ _SESSION_FLAG_SQL = """
 def session_stats_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap) collapsed to session rows —
     the batch twin of streaming session windows."""
-    return session_stats(T(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0)
+    return session_stats(T(spark, sf_dir, "events"), "user_id", "ts", "event_id")
 
 
 @register(
@@ -460,7 +460,7 @@ def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     sess = session_stats(
-        T(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        T(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     )
     day = F.to_date("session_start").alias("day")
     pts = sess.select(day, F.col("session_start").alias("ts"), F.lit(1).alias("delta")).unionAll(
@@ -586,7 +586,7 @@ _PATHS_TOP = 10
     ), flagged AS (
       SELECT user_id, ts, event_id, event_type,
              CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
+                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > {SESSION_GAP_MS}
                   THEN 1 ELSE 0 END AS is_new
       FROM ev
       WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -620,7 +620,7 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.sessionize import sessionize
     from pyspark.sql import Window as W
 
-    s = sessionize(T(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0)
+    s = sessionize(T(spark, sf_dir, "events"), "user_id", "ts", "event_id")
     w2 = W.partitionBy("user_id", "session_idx").orderBy("ts", "event_id")
     tri = s.select(
         F.col("event_type").alias("e1"),
@@ -801,13 +801,13 @@ def signup_to_purchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bounce_rate_daily",
-    """
+    f"""
     WITH ev AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
     ), flagged AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
+                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > {SESSION_GAP_MS}
                   THEN 1 ELSE 0 END AS is_new
       FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), sess AS (
@@ -839,7 +839,7 @@ def bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_orders_spark.operators.sessionize import session_stats
 
     per = session_stats(
-        T(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        T(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     ).select(F.to_date("session_start").alias("day"), "n_events")
     bounce = F.when(F.col("n_events") == 1, 1).otherwise(0)
     return per.groupBy("day").agg(
@@ -855,13 +855,13 @@ def bounce_rate_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "session_entry_exit_flows",
-    """
+    f"""
     WITH ev AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type FROM events
     ), flagged AS (
       SELECT user_id, ts, event_id, event_type,
              CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
+                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > {SESSION_GAP_MS}
                   THEN 1 ELSE 0 END AS is_new
       FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), sess AS (
@@ -904,7 +904,6 @@ def session_entry_exit_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "event_id",
-        gap_minutes=30.0,
     )
     ws = Window.partitionBy("user_id", "session_idx")
     numbered = sess.select(
@@ -1111,13 +1110,13 @@ def activity_heatmap_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "return_latency_median",
-    """
+    f"""
     WITH ev AS (
       SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id FROM events
     ), flagged AS (
       SELECT user_id, ts, event_id,
              CASE WHEN LAG(epoch_ms(ts)) OVER w IS NULL
-                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > 1800000
+                       OR epoch_ms(ts) - LAG(epoch_ms(ts)) OVER w > {SESSION_GAP_MS}
                   THEN 1 ELSE 0 END AS is_new
       FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     ), starts AS (
@@ -1157,7 +1156,7 @@ def return_latency_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the two-pass range-partitioned rank (operators/rank.py)
     — no single-partition window even though gaps grow with users."""
     starts = session_stats(
-        T(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        T(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     ).select("user_id", "session_idx", "session_start")
     wg = Window.partitionBy("user_id").orderBy("session_start")
     gaps = starts.select(

@@ -222,7 +222,7 @@ def near_dup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return near_dup_pairs_bucketed(
         T(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        tau=_NEAR_DUP_TAU, dim=64, num_planes=4, num_tables=16,
+        tau=_NEAR_DUP_TAU, num_planes=4, num_tables=16,
     )
 
 
@@ -287,7 +287,7 @@ def near_dup_embeddings_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     τ=0.9 — and far lower at cos 0.996)."""
     return near_dup_pairs_bucketed(
         _planted_corpus(spark, sf_dir), "vec_id", "v",
-        tau=_NEAR_DUP_TAU, dim=64, num_planes=4, num_tables=16,
+        tau=_NEAR_DUP_TAU, num_planes=4, num_tables=16,
     )
 
 
@@ -408,12 +408,9 @@ def quantize_embeddings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH ANN: bucketed candidates, exact rescoring,
     top-k per vector. Sub-linear candidate generation — the similarity
-    plan that survives 100 TB. planes=4/tables=8 tuned on the driver
-    embeddings (near-uniform vectors): recall 0.68 vs brute force at
-    ~2% of the pair space, vs 0.08 for planes=8/tables=4 at equal cost."""
-    return lsh_bucketed_topk(
-        T(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=_ANN_K, dim=64, num_planes=4, num_tables=8
-    )
+    plan that survives 100 TB (table sizing and its recall: see
+    operators/similarity._TOPK_PLANES)."""
+    return lsh_bucketed_topk(T(spark, sf_dir, "embeddings"), "vec_id", "embedding", k=_ANN_K)
 
 
 @register(
@@ -426,10 +423,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational Lloyd refinement), nprobe-cell probing, exact rescore.
     The partition-by-cluster inverted-file layout — centroids
     broadcast, probes shuffle on cell id only."""
-    return ivf_topk(
-        T(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        k=_ANN_K, n_centroids=16, nprobe=4,
-    )
+    return ivf_topk(T(spark, sf_dir, "embeddings"), "vec_id", "embedding")
 
 
 @register(
@@ -454,10 +448,7 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (persists encode_pq's codes) and amortizes across queries."""
     emb = T(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES)
-    return pq_topk(
-        queries, emb, "vec_id", "embedding",
-        k=_ANN_K, n_cells=16, m_sub=8, ksub=64, nprobe=8, rerank=8,
-    )
+    return pq_topk(queries, emb, "vec_id", "embedding", k=_ANN_K)
 
 
 _KM_K, _KM_ITERS, _KM_DIM = 4, 2, 64
@@ -1124,9 +1115,7 @@ def semantic_dedup_assign_auto(x: DataFrame, k: int | None = None) -> DataFrame:
     )
 
 
-def semantic_dedup_frame(
-    spark: SparkSession, sf_dir: str, k: int | None = _SD_K
-) -> DataFrame:
+def semantic_dedup_frame(spark: SparkSession, sf_dir: str, k: int | None) -> DataFrame:
     """SemDeDup over the planted corpus through the PRODUCTION
     assignment path (semantic_dedup_assign_auto: vectorized per-batch
     GEMM, one Lloyd refinement) — for pinned AND derived K alike, per
@@ -1150,11 +1139,9 @@ def semantic_dedup_frame(
     return _semdedup_rollup(semantic_dedup_assign_auto(x, k=k), _SD_TAU)
 
 
-def semantic_dedup_frame_fixture(
-    spark: SparkSession, sf_dir: str, k: int = _SD_K
-) -> DataFrame:
-    """The SQL-expressed fixture form of the SemDeDup assignment: a
-    K-way broadcast crossJoin folding the d² lambda per (row, centroid)
+def semantic_dedup_frame_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SQL-expressed fixture form of the SemDeDup assignment at
+    K = _SD_K: a K-way broadcast crossJoin folding the d² lambda per (row, centroid)
     pair — byte-stable against the unrolled-Lloyd DuckDB oracle, and
     kept as the cross-check reference the production GEMM path is
     probed against (tests/test_vectors.py, tools/probe_semdedup_autok).
@@ -1170,7 +1157,7 @@ def semantic_dedup_frame_fixture(
 
     cent = (
         x.orderBy("vec_id")
-        .limit(k)
+        .limit(_SD_K)
         .select(
             (
                 F.row_number().over(
@@ -1203,13 +1190,13 @@ def semantic_dedup_frame_fixture(
                 F.array_sort(F.collect_list(F.struct("i", "m"))), lambda s: s["m"]
             ).alias("c")
         ),
-        f"semantic_dedup_frame_fixture.cent1.k{k}",
+        f"semantic_dedup_frame_fixture.cent1.k{_SD_K}",
     )
     # assigned feeds two subtrees (the pair kernel and the final
     # rollup); uncached, the n-by-K assignment window replays per
     # consumer — the multi-consumer recompute trap cache_stage exists
     # for (operators/materialize.py)
-    assigned = cache_stage(assign(cent1), f"semantic_dedup.assigned.k{k}")
+    assigned = cache_stage(assign(cent1), f"semantic_dedup.assigned.k{_SD_K}")
     return _semdedup_rollup(assigned, _SD_TAU)
 
 

@@ -12,6 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# compact_parquet's output file size
+_TARGET_FILE_MB = 256
+
 
 def write_parquet(
     df: DataFrame,
@@ -28,8 +31,7 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_overwrite_table(df: DataFrame, table: str, select_cols: list[str] | None = None,
-                          target_cols: list[str] | None = None) -> None:
+def write_overwrite_table(df: DataFrame, table: str, select_cols: list[str], target_cols: list[str]) -> None:
     """S4+S5+S6 — full-refresh load into a catalog table.
 
     `select_cols`/`target_cols` reproduce the reference's
@@ -39,22 +41,12 @@ def write_overwrite_table(df: DataFrame, table: str, select_cols: list[str] | No
     DDL + insert happen in one atomic `saveAsTable`, replacing the
     reference's drop/create + INSERT-text pair.
     """
-    out = df
-    if select_cols:
-        out = out.select(*select_cols)
-    if target_cols:
-        out = out.toDF(*target_cols)
-    out.write.mode("overwrite").saveAsTable(table)
+    df.select(*select_cols).toDF(*target_cols).write.mode("overwrite").saveAsTable(table)
 
 
-def compact_parquet(
-    spark,
-    src: str,
-    dst: str,
-    target_file_mb: int = 256,
-) -> int:
+def compact_parquet(spark, src: str, dst: str) -> int:
     """Small-files compaction: rewrite a parquet dataset into files of
-    roughly `target_file_mb`. The operational chore every long-lived
+    roughly `_TARGET_FILE_MB`. The operational chore every long-lived
     100 TB dataset needs — streaming sinks and incremental loads leave
     thousands of KB-sized files, and scan cost is dominated by file
     count once files drop below a rowgroup.
@@ -79,13 +71,13 @@ def compact_parquet(
             "listing; for remote filesystems size via the Hadoop FileSystem "
             "API and pass an explicit target layout"
         )
-    n_files = max(1, round(total / (target_file_mb * 1024 * 1024)))
+    n_files = max(1, round(total / (_TARGET_FILE_MB * 1024 * 1024)))
     df = spark.read.parquet(src)
     df.repartition(n_files).write.mode("overwrite").parquet(dst)
     return n_files
 
 
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "overwrite", **options: str) -> None:
+def write_jdbc(df: DataFrame, url: str, table: str, mode: str, **options: str) -> None:
     """S5 — JDBC sink (batched prepared statements; no SQL-text building).
 
     Kept thin and untested-by-default: the test environment has no

@@ -31,16 +31,17 @@ from pyspark.sql import functions as F
 
 from etl_orders_spark.streaming.windows import WATERMARK, _with_watermark
 
+# fixed-width bins of the ``value`` column; the last bin is open-ended
+N_BINS = 8
+
 
 def windowed_value_histogram(
     events: DataFrame,
-    value_col: str = "value",
     bin_width: float = 5.0,
-    n_bins: int = 8,
     window: str = "1 hour",
 ) -> DataFrame:
-    """Per event-time window, the histogram of ``value_col`` over
-    ``n_bins`` fixed-width bins (last bin is open-ended). Works on a
+    """Per event-time window, the histogram of ``value`` over
+    ``N_BINS`` fixed-width bins (last bin is open-ended). Works on a
     stream (watermarked, append-legal) and on a batch frame
     identically — the equivalence test runs both."""
     df = _with_watermark(events, WATERMARK)
@@ -50,8 +51,8 @@ def windowed_value_histogram(
     bin_col = F.greatest(
         F.lit(0).cast("long"),
         F.least(
-            F.floor(F.col(value_col) / F.lit(bin_width)).cast("long"),
-            F.lit(n_bins - 1),
+            F.floor(F.col("value") / F.lit(bin_width)).cast("long"),
+            F.lit(N_BINS - 1),
         ),
     )
     return (
@@ -61,14 +62,9 @@ def windowed_value_histogram(
     )
 
 
-def reference_histogram_ppm(
-    reference_events: DataFrame,
-    value_col: str = "value",
-    bin_width: float = 5.0,
-    n_bins: int = 8,
-) -> DataFrame:
+def reference_histogram_ppm(reference_events: DataFrame, bin_width: float = 5.0) -> DataFrame:
     """Freeze a reference period into per-bin floor-ppm shares with
-    add-one smoothing — the broadcast-size model table (n_bins rows)
+    add-one smoothing — the broadcast-size model table (N_BINS rows)
     every live window compares against."""
     # clamp BOTH ends: floor of a negative value would otherwise emit
     # bin < 0 — mass the bin spine never sees, counted in the live
@@ -76,15 +72,15 @@ def reference_histogram_ppm(
     bin_col = F.greatest(
         F.lit(0).cast("long"),
         F.least(
-            F.floor(F.col(value_col) / F.lit(bin_width)).cast("long"),
-            F.lit(n_bins - 1),
+            F.floor(F.col("value") / F.lit(bin_width)).cast("long"),
+            F.lit(N_BINS - 1),
         ),
     )
     counts = reference_events.groupBy(bin_col.alias("bin")).agg(
         F.count(F.lit(1)).cast("long").alias("n_ref")
     )
     # make every bin present so an empty live bin still scores
-    spine = reference_events.sparkSession.range(n_bins).select(
+    spine = reference_events.sparkSession.range(N_BINS).select(
         F.col("id").cast("long").alias("bin")
     )
     counts = spine.join(counts, "bin", "left").fillna(0, subset=["n_ref"])
@@ -93,19 +89,15 @@ def reference_histogram_ppm(
         "bin",
         "n_ref",
         "t_ref",
-        F.expr(f"(n_ref + 1) * 1000000 div (t_ref + {n_bins})").cast("long").alias("p_ppm"),
+        F.expr(f"(n_ref + 1) * 1000000 div (t_ref + {N_BINS})").cast("long").alias("p_ppm"),
     )
 
 
-def psi_from_histogram(
-    hist: DataFrame,
-    reference_ppm: DataFrame,
-    n_bins: int = 8,
-) -> DataFrame:
+def psi_from_histogram(hist: DataFrame, reference_ppm: DataFrame) -> DataFrame:
     """Stateless finisher: join each window's histogram to the frozen
     reference and emit per-(window, bin) PSI contributions plus the
     per-window total — all exact integer math (ppm × micro-nats =
-    pico units). The reference broadcasts (n_bins rows); per-window
+    pico units). The reference broadcasts (N_BINS rows); per-window
     totals come from a window-keyed COUNT window over the histogram
     itself (windows × bins rows — trivially small)."""
     # Three Spark sharp edges shape this function:
@@ -124,7 +116,7 @@ def psi_from_histogram(
     tot = hist.groupBy(F.col("win_start").alias("_ws")).agg(
         F.sum("n").cast("long").alias("t_cur")
     )
-    bins = hist.sparkSession.range(n_bins).select(F.col("id").cast("long").alias("_bin"))
+    bins = hist.sparkSession.range(N_BINS).select(F.col("id").cast("long").alias("_bin"))
     full = (
         tot.crossJoin(F.broadcast(bins))
         .join(
@@ -144,11 +136,11 @@ def psi_from_histogram(
         "bin",
         F.col("n").alias("n_cur"),
         "p_ppm",
-        F.expr(f"(n + 1) * 1000000 div (t_cur + {n_bins})").cast("long").alias("q_ppm"),
+        F.expr(f"(n + 1) * 1000000 div (t_cur + {N_BINS})").cast("long").alias("q_ppm"),
         F.floor(
             F.log(
-                ((F.col("n_ref") + 1) * (F.col("t_cur") + n_bins)).cast("double")
-                / ((F.col("n") + 1) * (F.col("t_ref") + n_bins)).cast("double")
+                ((F.col("n_ref") + 1) * (F.col("t_cur") + N_BINS)).cast("double")
+                / ((F.col("n") + 1) * (F.col("t_ref") + N_BINS)).cast("double")
             )
             * F.lit(1000000.0)
         )

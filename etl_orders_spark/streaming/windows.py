@@ -28,31 +28,24 @@ def _with_watermark(df: DataFrame, watermark: str) -> DataFrame:
     return df
 
 
-def tumbling_agg(
-    events: DataFrame,
-    width: str = "1 hour",
-    watermark: str = WATERMARK,
-) -> DataFrame:
-    """Tumbling window per event_type: count + rounded value sum.
-    Epoch-aligned windows, so batch output equals date_trunc semantics
-    for round widths."""
+def tumbling_agg(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """Hourly tumbling window per event_type: count + rounded value
+    sum. Epoch-aligned windows, so batch output equals date_trunc
+    semantics."""
     df = _with_watermark(events, watermark)
     return (
-        df.groupBy(F.window("ts", width).alias("w"), "event_type")
+        df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "total_value")
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    width: str = "30 minutes",
-    slide: str = "10 minutes",
-) -> DataFrame:
-    """Sliding window counts (each event lands in width/slide windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Sliding window counts: 30-minute windows every 10 minutes, so
+    each event lands in 3 windows."""
     df = _with_watermark(events, WATERMARK)
     return (
-        df.groupBy(F.window("ts", width, slide).alias("w"))
+        df.groupBy(F.window("ts", "30 minutes", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").cast("long").alias("win_start_s"), "n")
     )

@@ -93,12 +93,12 @@ def test_sessionize_gap_splits(spark):
         ],
         "eid long, uid long, t timestamp",
     )
-    out = {r["eid"]: r["session_idx"] for r in sessionize(ev, "uid", "t", "eid", 30.0).collect()}
+    out = {r["eid"]: r["session_idx"] for r in sessionize(ev, "uid", "t", "eid").collect()}
     assert out == {1: 1, 2: 1, 3: 2, 4: 1}
 
     stats = {
         (r["uid"], r["session_idx"]): (r["n_events"], r["duration_ms"])
-        for r in session_stats(ev, "uid", "t", "eid", 30.0).collect()
+        for r in session_stats(ev, "uid", "t", "eid").collect()
     }
     assert stats[(1, 1)] == (2, 600_000)
     assert stats[(1, 2)] == (1, 0)
@@ -111,7 +111,7 @@ def test_sessionize_gap_boundary_is_exclusive(spark):
         [(1, 1, ts("2024-01-01 10:00:00")), (2, 1, ts("2024-01-01 10:30:00"))],
         "eid long, uid long, t timestamp",
     )
-    out = {r["eid"]: r["session_idx"] for r in sessionize(ev, "uid", "t", "eid", 30.0).collect()}
+    out = {r["eid"]: r["session_idx"] for r in sessionize(ev, "uid", "t", "eid").collect()}
     assert out == {1: 1, 2: 1}
 
 

@@ -105,7 +105,7 @@ def test_near_dedup_keep_best_picks_quality_survivor(spark):
         (3, "completely different words entirely unrelated to anything else " * 6),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k_shingle=3, threshold=0.2)
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.2)
     clusters = connected_components(docs.select("doc_id"), pairs, "doc_id")
     got = {r["doc_id"]: r["component"] for r in clusters.collect()}
     assert got[1] == got[2] != got[3]

@@ -39,7 +39,7 @@ def test_exact_dedup_groups_normalized_duplicates(docs):
 def test_minhash_signature_shape_and_seed_diversity(docs, portable):
     sigs = {
         r["doc_id"]: r["signature"]
-        for r in minhash_signatures(docs, "doc_id", "text", 8, 3, portable=portable).collect()
+        for r in minhash_signatures(docs, "doc_id", "text", 8, portable=portable).collect()
     }
     assert sigs[5] is None  # too short -> null signature
     assert len(sigs[1]) == 8
@@ -55,9 +55,9 @@ def test_minhash_signature_shape_and_seed_diversity(docs, portable):
 
 
 def test_lsh_candidates_find_near_dups_not_disjoint(docs):
-    sigs = minhash_signatures(docs, "doc_id", "text", 16, 3)
+    sigs = minhash_signatures(docs, "doc_id", "text", 16)
     pairs = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(sigs, "doc_id", 4, 4).collect()
+        (r["id_a"], r["id_b"]) for r in minhash_lsh_candidates(sigs, "doc_id").collect()
     }
     assert (1, 4) in pairs  # exact dup always collides
     assert (1, 2) in pairs  # near-dup shares a full band w.h.p. at jaccard ~0.8
@@ -65,8 +65,8 @@ def test_lsh_candidates_find_near_dups_not_disjoint(docs):
 
 
 def test_verify_jaccard_scores_and_threshold(docs):
-    sigs = minhash_signatures(docs, "doc_id", "text", 16, 3)
-    cands = minhash_lsh_candidates(sigs, "doc_id", 4, 4)
+    sigs = minhash_signatures(docs, "doc_id", "text", 16)
+    cands = minhash_lsh_candidates(sigs, "doc_id")
     out = {(r["id_a"], r["id_b"]): r["jaccard"] for r in verify_jaccard(cands, sigs, "doc_id", 0.5).collect()}
     assert out[(1, 4)] == 1.0
     assert 0.5 <= out[(1, 2)] < 1.0
@@ -75,7 +75,7 @@ def test_verify_jaccard_scores_and_threshold(docs):
 def test_ngram_jaccard_pairs_matches_verify_scores(docs):
     out = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5).collect()
+        for r in ngram_jaccard_pairs(docs, "doc_id", "text", 0.5).collect()
     }
     assert out[(1, 4)] == 1.0
     assert (1, 2) in out
@@ -85,9 +85,9 @@ def test_ngram_jaccard_pairs_matches_verify_scores(docs):
 def test_ngram_df_cap_identical_on_fixture_corpus(docs, spark):
     """With a cap above every shingle's document frequency, the capped
     variant must equal the exact form bit-for-bit."""
-    exact = sorted(map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.2).collect()))
+    exact = sorted(map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", 0.2).collect()))
     capped = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.2, df_cap=10).collect())
+        map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", 0.2, df_cap=10).collect())
     )
     assert exact == capped and exact
 
@@ -101,10 +101,10 @@ def test_ngram_df_cap_drops_hot_shingles_only(spark):
         (3, "common filler prefix alpha beta gamma"),  # true dup of 1
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.1).collect()}
+    exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, "doc_id", "text", 0.1).collect()}
     capped = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.1, df_cap=2).collect()
+        for r in ngram_jaccard_pairs(df, "doc_id", "text", 0.1, df_cap=2).collect()
     }
     assert (1, 2) in exact  # related only via the universal prefix
     assert (1, 2) not in capped  # capped out: shingle df=3 > 2
@@ -149,7 +149,7 @@ def test_winnow_shared_run_guarantee(spark):
         (3, "totally disjoint vocabulary nothing matches anything here at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = winnow_fingerprints(df, "doc_id", "text", k_shingle=3, window=4)
+    fps = winnow_fingerprints(df, "doc_id", "text")
     by_doc = {
         i: {r["fp"] for r in fps.filter(f"doc_id = {i}").collect()} for i in (1, 2, 3)
     }
@@ -161,7 +161,7 @@ def test_winnow_shared_run_guarantee(spark):
 def test_winnow_short_doc_yields_no_fingerprints(spark):
     # fewer than k+window-1 tokens -> no full window -> empty output
     df = spark.createDataFrame([(1, "only five little tokens here")], "doc_id long, text string")
-    assert winnow_fingerprints(df, "doc_id", "text", 3, 4).count() == 0
+    assert winnow_fingerprints(df, "doc_id", "text").count() == 0
 
 
 def test_connected_components_chain_and_singleton(spark):
@@ -198,12 +198,12 @@ def test_prefix_filter_equals_exact_all_pairs(docs):
     from etl_orders_spark.operators.dedup import prefix_filter_jaccard_pairs
 
     for tau in (0.1, 0.2, 0.5, 0.9):
-        exact = sorted(map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", 3, tau).collect()))
+        exact = sorted(map(tuple, ngram_jaccard_pairs(docs, "doc_id", "text", tau).collect()))
         pref = sorted(
-            map(tuple, prefix_filter_jaccard_pairs(docs, "doc_id", "text", 3, tau).collect())
+            map(tuple, prefix_filter_jaccard_pairs(docs, "doc_id", "text", tau).collect())
         )
         assert exact == pref, f"tau={tau}"
-    assert ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.1).count() > 0
+    assert ngram_jaccard_pairs(docs, "doc_id", "text", 0.1).count() > 0
 
 
 def test_prefix_filter_indexes_fewer_postings(spark):
@@ -417,9 +417,9 @@ def test_editdist_capped_equals_uncapped_below_cap_and_bounds_above(spark, sf_di
         (100 + i, " ".join(f"w{i}x{j}" for j in range(10))) for i in range(5)
     ]  # fully distinct token streams: no cross-noise shingles
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(df, "doc_id", "text", 16, 3, portable=False)
-    full = minhash_lsh_candidates(sigs, "doc_id", 4, 4)
-    capped_c = minhash_lsh_candidates(sigs, "doc_id", 4, 4, bucket_cap=_ED_BUCKET_CAP)
+    sigs = minhash_signatures(df, "doc_id", "text", 16, portable=False)
+    full = minhash_lsh_candidates(sigs, "doc_id")
+    capped_c = minhash_lsh_candidates(sigs, "doc_id", bucket_cap=_ED_BUCKET_CAP)
     n_full, n_capped = full.count(), capped_c.count()
     assert n_full == 30 * 29 // 2  # identical docs: all in one bucket per band
     assert n_capped == _ED_BUCKET_CAP * (_ED_BUCKET_CAP - 1) // 2

@@ -167,7 +167,7 @@ def test_bounce_rate_consistent_with_sessionizer(spark, sf_dir):
     rows = query_map()["bounce_rate_daily"](spark, sf_dir).collect()
     n_sessions = sum(r.n_sessions for r in rows)
     want = session_stats(
-        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     ).count()
     assert n_sessions == want
     for r in rows:
@@ -183,7 +183,7 @@ def test_session_flows_conserve_sessions(spark, sf_dir):
     rows = query_map()["session_entry_exit_flows"](spark, sf_dir).collect()
     total = sum(r.n_sessions for r in rows)
     want = session_stats(
-        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     ).count()
     assert total == want
     assert all(r.entry_type and r.exit_type for r in rows)
@@ -200,7 +200,7 @@ def test_gap_sensitivity_monotone_and_consistent_with_sessionizer(spark, sf_dir)
     assert rows[5] >= rows[15] >= rows[30] >= rows[60]
     # the 30-minute point must equal the real sessionizer's count
     want = session_stats(
-        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id", gap_minutes=30.0
+        load_table(spark, sf_dir, "events"), "user_id", "ts", "event_id"
     ).count()
     assert rows[30] == want
 
@@ -232,7 +232,7 @@ def test_return_latency_consistent_with_session_counts(spark, sf_dir):
 
     r = query_map()["return_latency_median"](spark, sf_dir).collect()[0]
     ev = load_table(spark, sf_dir, "events")
-    n_sessions = session_stats(ev, "user_id", "ts", "event_id", gap_minutes=30.0).count()
+    n_sessions = session_stats(ev, "user_id", "ts", "event_id").count()
     n_users = ev.select("user_id").distinct().count()
     # one inter-session gap per session beyond a user's first
     assert r.n_gaps == n_sessions - n_users

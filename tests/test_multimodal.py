@@ -124,7 +124,7 @@ def test_decode_images_strict_real_pixels(spark):
 
 
 def test_sample_frames_fanout(media):
-    frames = sample_frames(media, every_ms=1000, max_frames=8)
+    frames = sample_frames(media)
     got = frames.groupBy("media_id").agg(F.count(F.lit(1)).alias("n")).collect()
     vids = media.filter("kind = 'video'")
     assert len(got) == vids.count()
@@ -259,13 +259,13 @@ def test_video_near_dup_majority_vote_matches_brute_force(spark):
 
     n = 60
     media = gen_noise_y4m_media(spark, n)
-    fh = video_frame_dhash(media, every_n=2, max_frames=8)
+    fh = video_frame_dhash(media)
     rows = fh.collect()
     assert sorted(set(r["frame_idx"] for r in rows)) == [0, 2, 4]
     hashes = {(r["media_id"], r["frame_idx"]): (r["dhash_hi"], r["dhash_lo"]) for r in rows}
     assert len(hashes) == 3 * n
     # partition invariance
-    rows2 = video_frame_dhash(media.repartition(7), every_n=2, max_frames=8).collect()
+    rows2 = video_frame_dhash(media.repartition(7)).collect()
     assert {(r["media_id"], r["frame_idx"]): (r["dhash_hi"], r["dhash_lo"]) for r in rows2} == hashes
 
     def ham(a, b):
@@ -370,17 +370,17 @@ def test_audio_spectral_dominant_bin_matches_tone_law(spark):
 
     from etl_orders_spark.multimodal.codecs import encode_wav
     from etl_orders_spark.multimodal.ops import audio_spectral_features
-    from etl_orders_spark.multimodal.schemas import TONE_N_FFT, gen_tone_wav_media
+    from etl_orders_spark.multimodal.schemas import gen_tone_wav_media
 
     media = gen_tone_wav_media(spark, 50)
-    rows = {r["media_id"]: r for r in audio_spectral_features(media, n_fft=TONE_N_FFT).collect()}
+    rows = {r["media_id"]: r for r in audio_spectral_features(media).collect()}
     assert len(rows) == 50
     for mid, r in rows.items():
         assert r["dominant_bin"] == 3 + mid % 40
         assert r["n_frames"] == 4
     again = {
         r["media_id"]: r["dominant_bin"]
-        for r in audio_spectral_features(media.repartition(7), n_fft=TONE_N_FFT).collect()
+        for r in audio_spectral_features(media.repartition(7)).collect()
     }
     assert again == {m: r["dominant_bin"] for m, r in rows.items()}
 
@@ -388,7 +388,7 @@ def test_audio_spectral_dominant_bin_matches_tone_law(spark):
         [(9, "audio", bytearray(encode_wav(np.zeros(10, np.int16), 8000)))],
         "media_id long, kind string, content binary",
     )
-    r = audio_spectral_features(short, n_fft=TONE_N_FFT).collect()[0]
+    r = audio_spectral_features(short).collect()[0]
     assert (r["n_frames"], r["dominant_bin"]) == (0, -1)
 
 

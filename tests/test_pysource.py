@@ -48,7 +48,7 @@ def test_firehose_feeds_the_events_operators(synth):
     from etl_orders_spark.operators.sessionize import sessionize
 
     df = _read(synth, rows=2000, numPartitions=8, users=20, spanDays=2)
-    sessions = sessionize(df, key="user_id", ts="ts", tie_break="event_id", gap_minutes=30)
+    sessions = sessionize(df, key="user_id", ts="ts", tie_break="event_id")
     assert sessions.count() == 2000  # every event lands in a session
     assert "user_id" in sessions.columns
 

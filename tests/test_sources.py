@@ -122,7 +122,7 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     n_src = len([f for f in os.listdir(src) if f.endswith(".parquet")])
     assert n_src == 40
     dst = str(tmp_path / "compacted")
-    n_out = compact_parquet(spark, src, dst, target_file_mb=256)
+    n_out = compact_parquet(spark, src, dst)
     assert n_out == 1  # tiny dataset -> one file
     files = [f for f in os.listdir(dst) if f.endswith(".parquet")]
     assert len(files) == 1

@@ -93,7 +93,7 @@ def test_watermark_drops_late_data_across_restarts(spark, tmp_path_factory):
     def run(batch_rows):
         spark.createDataFrame(batch_rows, SCHEMA).coalesce(1).write.mode("append").parquet(src)
         stream = spark.readStream.schema(SCHEMA).parquet(src)
-        agg = tumbling_agg(stream, width="1 hour", watermark="30 minutes")
+        agg = tumbling_agg(stream, watermark="30 minutes")
         q = (
             agg.writeStream.format("parquet")
             .option("path", out)

@@ -54,7 +54,7 @@ def test_lsh_recall_vs_brute_force(spark, embeddings):
     hard case for hyperplane LSH; 4 planes × 8 tables measured 0.68)."""
     k = 5
     exact = brute_force_topk(embeddings, embeddings, "vec_id", "embedding", k=k)
-    approx = lsh_bucketed_topk(embeddings, "vec_id", "embedding", k=k, dim=64, num_planes=4, num_tables=8)
+    approx = lsh_bucketed_topk(embeddings, "vec_id", "embedding", k=k)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -75,7 +75,7 @@ def test_ivf_recall_vs_brute_force(spark, embeddings):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivf_topk(embeddings, "vec_id", "embedding", k=5, n_centroids=16, nprobe=4).collect()
+        for r in ivf_topk(embeddings, "vec_id", "embedding").collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.4, f"IVF recall {recall:.2f} below floor"
@@ -301,7 +301,7 @@ def test_near_dup_bucketed_pair_recall_at_sf001():
     approx = {
         (r["id_a"], r["id_b"])
         for r in near_dup_pairs_bucketed(
-            emb, "vec_id", "embedding", tau=0.9, dim=64, num_planes=4, num_tables=16
+            emb, "vec_id", "embedding", tau=0.9, num_planes=4, num_tables=16
         ).collect()
     }
     assert len(exact) > 0, "vacuous: no true near-dup pairs at sf0.01"
@@ -380,7 +380,7 @@ def test_pq_recall_vs_brute_force(spark, embeddings):
     exact = {(r["query_id"], r["neighbor_id"]): r["cos"] for r in exact_df.collect()}
     approx = {
         (r["query_id"], r["neighbor_id"]): r["cos"]
-        for r in pq_topk(q, embeddings, "vec_id", "embedding", k=k, nprobe=8, rerank=8).collect()
+        for r in pq_topk(q, embeddings, "vec_id", "embedding", k=k).collect()
     }
     hits = set(exact) & set(approx)
     recall = len(hits) / len(exact)
@@ -397,12 +397,12 @@ def test_pq_encode_is_compact_and_deterministic(spark, embeddings):
     sample, no partition-seeded RNG)."""
     from etl_orders_spark.operators.pq import encode_pq, train_pq_model
 
-    coarse, books = train_pq_model(embeddings, "vec_id", "embedding", m_sub=8, ksub=64)
+    coarse, books = train_pq_model(embeddings, "vec_id", "embedding")
     assert coarse.shape[1] == 64 and books.shape == (8, 64, 8)
     enc = encode_pq(embeddings, coarse, books, "vec_id", "embedding")
     rows = {r["_id"]: (r["cell"], tuple(r["codes"])) for r in enc.collect()}
     assert all(len(c[1]) == 8 for c in rows.values())
-    coarse2, books2 = train_pq_model(embeddings, "vec_id", "embedding", m_sub=8, ksub=64)
+    coarse2, books2 = train_pq_model(embeddings, "vec_id", "embedding")
     rows2 = {
         r["_id"]: (r["cell"], tuple(r["codes"]))
         for r in encode_pq(embeddings, coarse2, books2, "vec_id", "embedding").collect()
@@ -563,7 +563,7 @@ def test_semantic_dedup_auto_path(spark, sf_dir):
         semantic_dedup_frame_fixture,
     )
 
-    fix = sorted(map(tuple, semantic_dedup_frame_fixture(spark, sf_dir, k=_SD_K).collect()))
+    fix = sorted(map(tuple, semantic_dedup_frame_fixture(spark, sf_dir).collect()))
     # the GRADED lane now runs the production GEMM assignment (VERDICT
     # r8 #3) — this cross-check is what licenses that swap
     lane = sorted(map(tuple, semantic_dedup_frame(spark, sf_dir, k=_SD_K).collect()))

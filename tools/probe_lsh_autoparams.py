@@ -77,8 +77,7 @@ def main() -> int:
 
         t0 = time.time()
         pairs = near_dup_pairs_bucketed(
-            corpus, "vec_id", "v", tau=tau, dim=64,
-            num_planes=None, num_tables=None,
+            corpus, "vec_id", "v", tau=tau, num_planes=None, num_tables=None,
         )
         found = pairs.filter(
             (F.col("id_b") - F.col("id_a") == 1_000_000)

@@ -69,7 +69,7 @@ def main() -> int:
     # 1x sanity gate: vectorized path == oracle-certified SQL path at
     # the fixture K (row-for-row rollup equality)
     base = dirs[0]
-    fix = sorted(map(tuple, semantic_dedup_frame_fixture(spark, base, k=_SD_K).collect()))
+    fix = sorted(map(tuple, semantic_dedup_frame_fixture(spark, base).collect()))
     x0 = cache_stage(_planted_corpus(spark, base), "semantic_dedup.corpus")
     gemm = sorted(
         map(tuple, _semdedup_rollup(semantic_dedup_assign_auto(x0, k=_SD_K), _SD_TAU).collect())

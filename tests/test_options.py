@@ -33,6 +33,7 @@ _EXEMPT = {
 }
 
 _UNKNOWN = object()
+_OMITTED = object()
 
 
 def _module_name(path: pathlib.Path) -> str:
@@ -184,30 +185,46 @@ class _Scan:
         return out
 
 
-def _bind(fn: ast.FunctionDef, skip_self: bool, module: str, call, scan: _Scan):
-    """param -> value for one call, or None when the call cannot bind."""
+def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """param -> default expression, for every defaulted parameter."""
     a = fn.args
+    positional = a.posonlyargs + a.args
+    out = {p.arg: d for p, d in zip(positional[len(positional) - len(a.defaults) :], a.defaults)}
+    out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _bind(fn: ast.FunctionDef, skip_self: bool, module: str, call, scan: _Scan):
+    """param -> the value one use gives each defaulted parameter
+    (_OMITTED where the call leaves it out), or None when the call
+    cannot be to ``fn``. ``call`` None is a use as a value."""
+    a = fn.args
+    defaults = _defaults(fn)
+    if call is None or any(isinstance(x, ast.Starred) for x in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return dict.fromkeys(defaults, _UNKNOWN)
     positional = [p.arg for p in a.posonlyargs + a.args][1 if skip_self else 0 :]
-    names = set(positional) | {p.arg for p in a.kwonlyargs}
-    defaults = dict(zip([p.arg for p in a.posonlyargs + a.args][len(a.posonlyargs + a.args) - len(a.defaults) :], a.defaults))
-    defaults.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
-    if call is None:
-        return {p: _UNKNOWN for p in defaults}
-    star = any(isinstance(x, ast.Starred) for x in call.args) or any(k.arg is None for k in call.keywords)
-    if star:
-        return {p: _UNKNOWN for p in defaults}
     if len(call.args) > len(positional) and a.vararg is None:
         return None
-    given = {}
-    for p, x in zip(positional, call.args):
-        given[p] = scan.value(module, x)
+    given = {p: scan.value(module, x) for p, x in zip(positional, call.args)}
     for k in call.keywords:
-        if k.arg not in names:
-            if a.kwarg is None:
-                return None
-            continue
-        given[k.arg] = scan.value(module, k.value)
-    return {p: given.get(p, ("default", d)) for p, d in defaults.items()}
+        if k.arg in positional or k.arg in {p.arg for p in a.kwonlyargs}:
+            given[k.arg] = scan.value(module, k.value)
+        elif a.kwarg is None:
+            return None
+    return {p: given.get(p, _OMITTED) for p in defaults}
+
+
+def _same(values: list) -> bool:
+    """All values known and equal (1 == 1.0, but True != 1)."""
+    if _UNKNOWN in values:
+        return False
+    keys = {
+        ("num", float(v)) if isinstance(v, (int, float)) and not isinstance(v, bool) else (type(v), v)
+        for v in values
+    }
+    return len(keys) == 1
 
 
 def scan():
@@ -219,33 +236,25 @@ def scan():
     uses = s.uses()
     defaulted, settable, one_valued, always_passed = [], 0, [], []
     for module, qual, fn, method in s.defs():
-        name = fn.name
-        sites = uses.get(name, [])
-        if name == "__init__":
-            sites = uses.get(qual.split(".")[-2], [])
+        home = f"{PACKAGE}.{module}"
+        # a class's __init__ is called through the class name
+        sites = uses.get(qual.split(".")[-2] if fn.name == "__init__" else fn.name, [])
         settable += fn.args.kwarg is not None
         bound = []
         for m, call in sites:
-            skip = method and (name == "__init__" or call is None or isinstance(call.func, ast.Attribute))
+            skip = method and (fn.name == "__init__" or call is None or isinstance(call.func, ast.Attribute))
             b = _bind(fn, skip, m, call, s)
             if b is not None:
                 bound.append(b)
-        for p, d in _bind(fn, False, PACKAGE + "." + module, None, s).items():
-            defaulted.append((module, qual, p))
+        for p, default in _defaults(fn).items():
+            key = (module, qual, p)
+            defaulted.append(key)
             if not bound:
                 continue
-            vals = []
-            for b in bound:
-                v = b[p]
-                if isinstance(v, tuple) and len(v) == 2 and v[0] == "default" and isinstance(v[1], ast.expr):
-                    v = s.value(PACKAGE + "." + module, v[1])
-                vals.append(v)
-            if all(not (isinstance(b[p], tuple) and b[p][:1] == ("default",)) for b in bound):
-                always_passed.append((module, qual, p))
-            if _UNKNOWN not in vals and all(v == vals[0] and type(v) is type(vals[0]) or
-                                            isinstance(v, (int, float)) and isinstance(vals[0], (int, float))
-                                            and not isinstance(v, bool) and v == vals[0] for v in vals):
-                one_valued.append((module, qual, p))
+            if all(b[p] is not _OMITTED for b in bound):
+                always_passed.append(key)
+            if _same([s.value(home, default) if b[p] is _OMITTED else b[p] for b in bound]):
+                one_valued.append(key)
     settable += len(defaulted)
     return defaulted, settable, one_valued, always_passed
 
